@@ -150,13 +150,26 @@ final class Dp3Http(svc: Dp3Service, spark: SparkSession,
     strField(body, "database").map(n => dbFor(n).svc).getOrElse(svc)
 
   private val server = HttpServer.create(new InetSocketAddress(host, port), 0)
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+
+  /** Request handler threads, named after this server's bound port
+    * (`dp3-http-<port>-<n>`) so a thread dump tells servers apart. */
+  private[graft] val threadPrefix = s"dp3-http-${server.getAddress.getPort}-"
+  private val pool = java.util.concurrent.Executors.newFixedThreadPool(4,
+    new java.util.concurrent.ThreadFactory {
+      private val n = new java.util.concurrent.atomic.AtomicInteger()
+      def newThread(r: Runnable): Thread =
+        new Thread(r, threadPrefix + n.incrementAndGet())
+    })
+  server.setExecutor(pool)
 
   /** Bound port (after construction; useful with port = 0). */
   def boundPort: Int = server.getAddress.getPort
 
   def start(): Dp3Http = { server.start(); this }
-  def stop(): Unit = server.stop(0)
+
+  /** Stops accepting requests and shuts the handler pool down (its
+    * threads would otherwise outlive the server and keep the JVM up). */
+  def stop(): Unit = { server.stop(0); pool.shutdown() }
 
   // --- request parsing ---------------------------------------------------
 
@@ -272,9 +285,27 @@ final class Dp3Http(svc: Dp3Service, spark: SparkSession,
 
   // --- routing -----------------------------------------------------------
 
+  /** The route a request path names, with its parameters elided — the
+    * `http:<route>` job description of the Spark jobs it launches. */
+  private def routeOf(segs: Seq[String]): String = segs match {
+    case Seq("databases", _, "producers", _, "import") => "producer_import"
+    case Seq("databases", _, "schemas", _)             => "schemas"
+    case Seq("databases", _, rest @ _*) if rest.nonEmpty =>
+      rest.mkString("/")
+    case Seq()  => "root"
+    case other  => other.mkString("/")
+  }
+
   private def handle(ex: HttpExchange): Unit = {
     val path = ex.getRequestURI.getPath.stripSuffix("/")
     val segs = path.split("/").filter(_.nonEmpty).toSeq
+    graft.util.JobDesc(spark.sparkContext, s"http:${routeOf(segs)}") {
+      route(ex, path, segs)
+    }
+  }
+
+  private def route(ex: HttpExchange, path: String,
+      segs: Seq[String]): Unit = {
     // The reference's router-level middleware chain (routes.go:39-42):
     // WithRequestID tags every request with a fresh uuid (echoed in a
     // response header so clients can quote it in bug reports), and

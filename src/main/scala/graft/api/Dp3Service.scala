@@ -6,25 +6,18 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, max}
 
 import graft.export.Export
-import graft.model.MessageCatalog
+import graft.model.{IngestedCatalog, MessageCatalog}
 import graft.plan.Planner
 import graft.ql.{Parser, Query, TruncateStmt}
 import graft.stats.StatTiers
 import graft.streaming.Lifecycle
+import graft.util.{ControlCache, JobDesc}
 
 /** The maintained stats + control tables of an ingested layout
   * (`Ingest.startWithStats`) — dp3's inner-node statistics and rootmap
-  * re-expressed as two small append-only parquet tables. */
-final case class IngestStore(
-    stats: SparkSession => DataFrame,
-    control: SparkSession => DataFrame,
-    fieldStats: Option[SparkSession => DataFrame] = None)
-
-object IngestStore {
-  def apply(cat: graft.model.IngestedCatalog): IngestStore =
-    IngestStore(s => cat.stats(s), s => cat.control(s),
-      fieldStats = cat.fieldStats)
-}
+  * re-expressed as small append-only parquet tables, read through the
+  * catalog that names their directories. */
+final case class IngestStore(catalog: IngestedCatalog)
 
 /** The reference's complete user-facing verb set as one typed facade —
   * a dp3 user maps each HTTP endpoint (reference: server/routes/
@@ -132,12 +125,10 @@ final class Dp3Service(underlying: MessageCatalog,
     * tier's `value` min/max is adapted. Version masks apply either way
     * so truncated batches stop vouching for their buckets. */
   private def statSource: Option[Planner.StatSource] = store.map { st =>
-    val partialsOf: SparkSession => DataFrame =
-      st.fieldStats.getOrElse(st.stats)
     Planner.StatSource(
-      st.fieldStats match {
+      st.catalog.fieldStats match {
         case Some(fs) => s => maskVersions(fs(s))
-        case None => s => maskVersions(st.stats(s)).select(
+        case None => s => maskVersions(st.catalog.stats(s)).select(
           col("producer"), col("topic"), col("bucket"),
           col("num_min").as("value__min"),
           col("num_max").as("value__max"))
@@ -145,30 +136,59 @@ final class Dp3Service(underlying: MessageCatalog,
       StatTiers.BaseWidthNs,
       // StatSource's coverage contract, verified rather than assumed:
       // the tier vouches for a scan only if EVERY unmasked ingest
-      // version that wrote data also wrote partials into THIS stats
-      // table. That breaks in reachable ways — fieldStats enabled on a
-      // store with pre-existing versions, or an /import that appends a
-      // version without per-field partials — and a tier missing a
-      // version would prune buckets containing that version's rows
-      // (the reference keeps chunks with missing stats; so must we).
-      // The check compares (producer, topic, ingest_version) triples
-      // of the control table against the stats table — two
-      // kilobyte-scale reads, once per statement (the Planner samples
-      // the witness once per instance). Unprovable (no version column,
-      // unreadable table) => false => pruning off, results exact.
-      coverage = s => {
-        val ctl = maskVersions(st.control(s))
-        val parts = maskVersions(partialsOf(s))
-        val key = Seq("producer", "topic", "ingest_version")
-        key.forall(ctl.columns.contains) &&
-          key.forall(parts.columns.contains) && {
-            import org.apache.spark.sql.functions.broadcast
-            ctl.select(key.map(col): _*)
-              .join(broadcast(parts.select(key.map(col): _*).distinct()),
-                key, "left_anti")
-              .isEmpty
+      // version of the scanned tables that wrote data also wrote
+      // partials into THIS stats table. That breaks in reachable ways
+      // — fieldStats enabled on a store with pre-existing versions, or
+      // an /import that appends a version without per-field partials —
+      // and a tier missing a version would prune buckets containing
+      // that version's rows (the reference keeps chunks with missing
+      // stats; so must we). The gaps are cached per on-disk state of
+      // the two tables, so the check is a driver-side lookup: every
+      // gap of a scanned table must be hidden by its truncation
+      // watermark. Unprovable (no version column, unreadable table)
+      // => false => pruning off, results exact.
+      coverage = (s, producers, topic) =>
+        coverageGaps(s, st).exists { gaps =>
+          val scanned = producers.toSet
+          gaps.forall { case (p, t, v) =>
+            t != topic || !scanned(p) ||
+              truncatedVersion.get((p, t)).exists(v <= _)
           }
-      })
+        })
+  }
+
+  /** The unmasked coverage gaps of a store: the control table's
+    * (producer, topic, ingest_version) triples with no partials in the
+    * table backing the statfilter; None when either table lacks those
+    * columns (coverage unprovable). Fingerprint-cached on both tables'
+    * directories ([[graft.util.ControlCache]]) — every version append,
+    * scrub and import lands fresh part files in both — so a warm
+    * service answers coverage without a Spark job. */
+  private def coverageGaps(spark: SparkSession, st: IngestStore)
+      : Option[Seq[(String, String, Long)]] = {
+    val cat = st.catalog
+    val dirs =
+      Seq(cat.controlDir, cat.fieldStatsDir.getOrElse(cat.statsDir)).map { d =>
+        val p = new org.apache.hadoop.fs.Path(d)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration) -> p
+      }
+    ControlCache.cachedAll("coverage-gaps", dirs) {
+      JobDesc(spark.sparkContext, "plan:coverage") {
+        val ctl = cat.control(spark)
+        val parts = cat.fieldStats.fold(cat.stats(spark))(_(spark))
+        val key = Seq("producer", "topic", "ingest_version")
+        if (!key.forall(ctl.columns.contains)
+            || !key.forall(parts.columns.contains)) None
+        else {
+          import org.apache.spark.sql.functions.broadcast
+          Some(ctl.select(key.map(col): _*).distinct()
+            .join(broadcast(parts.select(key.map(col): _*).distinct()),
+              key, "left_anti")
+            .collect().toSeq.map(r => (r.getString(0), r.getString(1),
+              r.getAs[Number](2).longValue)))
+        }
+      }
+    }
   }
 
   /** Envelope columns a skeleton query keeps — everything else is
@@ -254,7 +274,7 @@ final class Dp3Service(underlying: MessageCatalog,
       val hiBucket =
         if (hi >= Long.MaxValue - b) Long.MaxValue
         else math.floorDiv(hi + b - 1, b)
-      maskVersions(restrict(st.stats(spark)))
+      maskVersions(restrict(st.catalog.stats(spark)))
         .where(col("bucket") >= loBucket && col("bucket") < hiBucket)
     }
 
@@ -298,7 +318,7 @@ final class Dp3Service(underlying: MessageCatalog,
       topic: Option[String] = None,
       startNs: Long = 0L, endNs: Long = Long.MaxValue): DataFrame = {
     val width = StatTiers.pickTierWidth(granularityNs)
-    val stored = store.flatMap(_.fieldStats).map(fs =>
+    val stored = store.flatMap(_.catalog.fieldStats).map(fs =>
         maskVersions(fs(spark))).filter { p =>
       val cols = p.columns.toSet
       numericFields.forall(f => cols.contains(s"${f}__min")) &&
@@ -370,7 +390,7 @@ final class Dp3Service(underlying: MessageCatalog,
       // which (producer, topic) exist is a control-table lookup, not a
       // data scan (reference: server/treemgr/treemgr.go:569-653)
       case Some(st) => StatTiers.available(
-        maskVersions(st.control(spark)), numericFields, textFields)
+        maskVersions(st.catalog.control(spark)), numericFields, textFields)
       case None => StatTiers.available(messages(spark), numericFields,
         textFields)
     }
@@ -403,7 +423,7 @@ final class Dp3Service(underlying: MessageCatalog,
     val verCol = if (store.isDefined) "ingest_version" else "seq"
     val latest: Map[String, Long] = {
       var src = store match {
-        case Some(st) => maskVersions(st.control(spark))
+        case Some(st) => maskVersions(st.catalog.control(spark))
         case None     => messages(spark)
       }
       src = src.where(col("topic").isin(topics: _*))
@@ -438,7 +458,7 @@ final class Dp3Service(underlying: MessageCatalog,
       case t: TruncateStmt =>
         store match {
           case Some(st) =>
-            val entries = st.control(spark)
+            val entries = st.catalog.control(spark)
               .where(col("producer") === t.producer
                 && col("topic") === t.topic)
             val resolved = t.asOf match {
@@ -476,14 +496,14 @@ final class Dp3Service(underlying: MessageCatalog,
     * (reference: server/routes/topics.go, treemgr.Topics). With a
     * store this is a control-table lookup; never a data scan. */
   def topics(spark: SparkSession): DataFrame = (store match {
-    case Some(st) => maskVersions(st.control(spark))
+    case Some(st) => maskVersions(st.catalog.control(spark))
     case None => messages(spark)
   }).select("topic").distinct().orderBy("topic")
 
   /** GET /databases/{db}/producers (reference:
     * server/routes/producers.go, treemgr.Producers). */
   def producersList(spark: SparkSession): DataFrame = (store match {
-    case Some(st) => maskVersions(st.control(spark))
+    case Some(st) => maskVersions(st.catalog.control(spark))
     case None => messages(spark)
   }).select("producer").distinct().orderBy("producer")
 
@@ -496,7 +516,7 @@ final class Dp3Service(underlying: MessageCatalog,
       topic: Option[String] = None,
       historical: Boolean = false): DataFrame = {
     val base = store match {
-      case Some(st) => maskVersions(st.control(spark))
+      case Some(st) => maskVersions(st.catalog.control(spark))
       case None =>
         // no ingest metadata: synthesize one "version" per table from
         // the data itself (max seq stands in for the ingest clock)

@@ -265,8 +265,8 @@ final class TopicMapCatalog(topics: Map[String, DataFrame])
   * Producer discovery reads the kilobyte-scale control table — the
   * reference's rootmap lookup (server/rootmap/sqlrootmap.go:427-461) —
   * so `from *` planning touches no event data at any scale. */
-final class IngestedCatalog(dataDir: String, statsDir: String,
-    controlDir: String, fieldStatsDir: Option[String] = None)
+final class IngestedCatalog(val dataDir: String, val statsDir: String,
+    val controlDir: String, val fieldStatsDir: Option[String] = None)
     extends MessageCatalog with Serializable {
 
   def messages(spark: SparkSession): DataFrame =
@@ -286,12 +286,22 @@ final class IngestedCatalog(dataDir: String, statsDir: String,
   override def scanTopic(spark: SparkSession, topic: String): DataFrame =
     messages(spark).where(col("topic") === topic)
 
+  /** The control table is flat and append-only — every version and
+    * every scrub lands fresh part files — so its (producer, topic)
+    * pairs are fingerprint-cached ([[graft.util.ControlCache]]): a
+    * repeated `from *` plans without a Spark job. */
   override def producers(spark: SparkSession,
-      topics: Seq[String]): Seq[String] =
-    control(spark)
-      .where(col("topic").isin(topics: _*))
-      .select("producer").distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
+      topics: Seq[String]): Seq[String] = {
+    val dir = new org.apache.hadoop.fs.Path(controlDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val pairs = graft.util.ControlCache.cachedAll("producer-topic",
+        Seq(fs -> dir)) {
+      control(spark).select("producer", "topic").distinct()
+        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    }
+    val wanted = topics.toSet
+    pairs.collect { case (p, t) if wanted(t) => p }.distinct.sorted
+  }
 }
 
 /** Plain loaders for the TPC-H-ish driver tables. */

@@ -30,23 +30,14 @@ import graft.ql._
 final class Planner(catalog: MessageCatalog,
     stats: Option[Planner.StatSource] = None) extends Serializable {
 
-  /** The stat source's coverage witness, sampled once per Planner (the
-    * service builds a fresh Planner per statement, so this is once per
-    * query; a long-lived Planner samples at its first pruned scan —
-    * sound for append-only stores, where proven coverage only grows as
-    * long as every later version writes its partials too). Pruning
-    * with an unproven tier silently drops rows (see
+  /** The stat source's coverage witness for one scan's tables.
+    * Pruning with an unproven tier silently drops rows (see
     * [[Planner.StatSource]]'s coverage contract), so an exception from
     * the witness reads as "cannot prove" — pruning stays off. */
-  @transient private var statCoverage: Option[Boolean] = None
-  private def coverageOk(spark: SparkSession,
-      src: Planner.StatSource): Boolean = synchronized {
-    statCoverage.getOrElse {
-      val ok = try src.coverage(spark) catch { case _: Exception => false }
-      statCoverage = Some(ok)
-      ok
-    }
-  }
+  private def coverageOk(spark: SparkSession, src: Planner.StatSource,
+      producers: Seq[String], topic: String): Boolean =
+    try src.coverage(spark, producers, topic)
+    catch { case _: Exception => false }
 
   def plan(spark: SparkSession, input: String): DataFrame =
     Parser.parse(input) match {
@@ -92,14 +83,20 @@ final class Planner(catalog: MessageCatalog,
     // as-of join partitions its window BY producer, and the dp3
     // producer-major tie order is recovered arithmetically from the
     // producer's index in the from-list. Identical output order, O(1)
-    // plan size in the number of producers.
-    val idxDf = spark.createDataFrame(
-      producers.zipWithIndex.map { case (p, i) => (p, i.toLong) })
-      .toDF("producer", "_pidx")
-    val merged = buildSelect(spark, q, producers, q.select)
-      .join(broadcast(idxDf), Seq("producer"))
-      .withColumn("_mj", col("_pidx") * lit(1000000L) + col("_mj"))
-      .drop("_pidx")
+    // plan size in the number of producers. With one producer its
+    // index is 0 and `_mj` is already final — no join, and no
+    // broadcast job.
+    val selected = buildSelect(spark, q, producers, q.select)
+    val merged =
+      if (producers.size == 1) selected
+      else {
+        val idxDf = spark.createDataFrame(
+          producers.zipWithIndex.map { case (p, i) => (p, i.toLong) })
+          .toDF("producer", "_pidx")
+        selected.join(broadcast(idxDf), Seq("producer"))
+          .withColumn("_mj", col("_pidx") * lit(1000000L) + col("_mj"))
+          .drop("_pidx")
+      }
 
     // seq as the final key makes the order total even when two
     // messages of one topic share a ns timestamp (limit/offset and
@@ -222,9 +219,10 @@ final class Planner(catalog: MessageCatalog,
     // raw source column — the difference between a parquet row-group
     // prune and a full-file decode (see MessageCatalog.scanTopic)
     var df = catalog.scanTopic(spark, e.topic, q.between)
-    df =
-      if (producers.size == 1) df.where(col("producer") === producers.head)
-      else df.where(col("producer").isin(producers: _*))
+    val ofProducers =
+      if (producers.size == 1) col("producer") === producers.head
+      else col("producer").isin(producers: _*)
+    df = df.where(ofProducers)
     val alias = e.alias.getOrElse(e.topic)
     whereFor(q, alias).foreach { pred =>
       df = df.where(compile(df, pred))
@@ -244,11 +242,14 @@ final class Planner(catalog: MessageCatalog,
       // silently dropping rows — the reference keeps chunks with
       // missing stats (ErrNoStatsFound => keep), and so do we, by
       // turning pruning off entirely when coverage can't be proven.
+      // The tier is restricted to this scan's tables, so the ranges
+      // carry no other producer's or topic's buckets.
       stats.foreach { src =>
         val tier = src.tier(spark)
         if (graft.stats.StatFilter.prunable(tier.columns.toSet, pred)
-            && coverageOk(spark, src))
-          df = graft.stats.StatFilter.pruneScan(df, tier, pred,
+            && coverageOk(spark, src, producers, e.topic))
+          df = graft.stats.StatFilter.pruneScan(df,
+            tier.where(ofProducers && col("topic") === e.topic), pred,
             src.widthNs)
       }
     }
@@ -409,16 +410,18 @@ object Planner {
     * unaccounted for, silently dropping rows. The reference never does
     * this: missing statistics keep the chunk (ErrNoStatsFound => keep,
     * server/executor/statfilter.go). `coverage` is the witness the
-    * planner consults before pruning — return true only when every
-    * unmasked data version has stat partials in this tier (Dp3Service
-    * verifies this against its control table; see its statSource). The
-    * default asserts coverage, which is correct for tiers derived from
-    * the very frame being scanned, but a PARTIAL tier supplied here
-    * with the default witness corrupts results — callers who cannot
-    * prove coverage must pass `_ => false` (pruning off). */
-  final case class StatSource(tier: org.apache.spark.sql.SparkSession
-      => org.apache.spark.sql.DataFrame, widthNs: Long,
-      coverage: org.apache.spark.sql.SparkSession => Boolean = _ => true)
+    * planner consults before pruning a scan of `producers` × `topic`
+    * — return true only when every unmasked data version of those
+    * tables has stat partials in this tier (Dp3Service verifies this
+    * against its control table; see its statSource). The default
+    * asserts coverage, which is correct for tiers derived from the
+    * very frame being scanned, but a PARTIAL tier supplied here with
+    * the default witness corrupts results — callers who cannot prove
+    * coverage must pass `(_, _, _) => false` (pruning off). */
+  final case class StatSource(tier: SparkSession => DataFrame,
+      widthNs: Long,
+      coverage: (SparkSession, Seq[String], String) => Boolean =
+        (_, _, _) => true)
 
   private[plan] def flattenMerge(sel: Select): Seq[Select] = sel match {
     case MergeSel(l, r) => flattenMerge(l) ++ flattenMerge(r)

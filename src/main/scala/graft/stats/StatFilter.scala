@@ -26,11 +26,11 @@ import graft.ql._
   * And/Or compose recursively like compileAndFilter/compileOrFilter.
   *
   * 100 TB shape: the tier is kilobytes per bucket, so the qualifying
-  * bucket set is control-plane data. [[pruneScan]] applies it twice —
-  * a coarse global time-range predicate that Catalyst pushes into the
-  * parquet reader (the row-group analogue of dp3's chunk skip), and an
-  * exact per-(producer, topic, bucket) broadcast semi-join (zero
-  * shuffle on the scan side).
+  * bucket set is control-plane data. [[pruneScan]] collects it once
+  * (the caller restricts the tier to the scanned producers and topic)
+  * and applies it as one time-range predicate that Catalyst pushes
+  * into the parquet reader — the row-group analogue of dp3's chunk
+  * skip.
   */
 object StatFilter {
 
@@ -140,14 +140,18 @@ object StatFilter {
     tier.where(compile(tier, where))
       .select(col("producer"), col("topic"), col("bucket"))
 
-  /** Global qualifying time ranges [start, end) in ns: distinct
-    * qualifying buckets coalesced into maximal runs. Driver-side
-    * collect is control-plane — summary rows, kilobytes per bucket. */
+  /** Qualifying time ranges [start, end) in ns: the distinct
+    * qualifying buckets coalesced into maximal runs. One driver-side
+    * collect of the bucket column — control-plane summary rows, no
+    * shuffle (dedup and sort happen on the driver) — run under the
+    * `plan:statfilter` job description. */
   def qualifyingRanges(tier: DataFrame, where: Expr, widthNs: Long)
       : Seq[(Long, Long)] = {
-    val ids = tier.where(compile(tier, where))
-      .select(col("bucket")).distinct().orderBy(col("bucket"))
-      .collect().map(_.getLong(0))
+    val ids = graft.util.JobDesc(tier.sparkSession.sparkContext,
+        "plan:statfilter") {
+      tier.where(compile(tier, where)).select(col("bucket"))
+        .collect().map(_.getLong(0))
+    }.distinct.sorted
     ids.foldLeft(Vector.empty[(Long, Long)]) { (acc, b) =>
       val (s, e) = (b * widthNs, (b + 1) * widthNs)
       acc.lastOption match {
@@ -157,64 +161,58 @@ object StatFilter {
     }
   }
 
-  /** Prune a raw message scan to the buckets that may contain matches:
-    * an ORed time-range predicate on `timeCol` that Catalyst pushes
-    * into the parquet scan (row-group skip — dp3's chunk skip), plus
-    * an exact broadcast semi-join on (producer, topic, bucket) for the
-    * per-producer precision the global ranges lack. The caller still
-    * applies the actual row predicate afterwards — the statfilter only
-    * proves absences, exactly like the reference (its executor filters
-    * rows after the chunk skip).
+  /** Prune a raw message scan to the time ranges of the buckets that
+    * may contain matches: an ORed time-range predicate on `timeCol`
+    * that Catalyst pushes into the parquet scan (row-group skip — dp3's
+    * chunk skip). The caller applies the actual row predicate as well —
+    * the statfilter only proves absences, exactly like the reference
+    * (its executor filters rows after the chunk skip) — which is why no
+    * per-(producer, topic, bucket) join follows the ranges: it would
+    * drop only rows the row predicate already drops, and read no fewer
+    * bytes. Restrict `tier` to the scanned producers and topic first,
+    * or other tables' buckets widen the ranges.
     *
     * SELECTIVITY GATE: when the qualifying buckets coalesce into more
     * than `maxRanges` time ranges, the matches are scattered across
     * the timeline and pruning cannot reduce scan I/O — the pushed row
-    * predicate already handles scattered lookups, and the bucket
-    * semi-join would only add plan weight. Measured at sf0.1 on a
+    * predicate already handles scattered lookups, and a long OR of
+    * ranges would only add plan weight. Measured at sf0.1 on a
     * time-clustered layout with a uniformly-scattered probe (~1% of
     * buckets kept but spread over the whole month): raw pushed filter
     * 0.10 s vs unconditional pruning 0.58 s. So: scattered → the scan
-    * returns UNCHANGED; clustered (few ranges) → both prunes apply;
+    * returns UNCHANGED; clustered (few ranges) → the ranges apply;
     * nothing qualifies → provably empty.
     *
     * COVERAGE CONTRACT: the tier must vouch for EVERY row in `scan` —
-    * both layers treat "no qualifying tier row" as "provably empty",
-    * so a bucket with data but no tier row (or a tier row merged from
-    * only some of the bucket's ingest versions) is silently dropped: a
-    * false negative the reference never produces (missing stats keep
-    * the chunk, ErrNoStatsFound => keep). Callers who cannot prove the
+    * "no qualifying tier row" reads as "provably empty", so a bucket
+    * with data but no tier row (or a tier row merged from only some of
+    * the bucket's ingest versions) is silently dropped: a false
+    * negative the reference never produces (missing stats keep the
+    * chunk, ErrNoStatsFound => keep). Callers who cannot prove the
     * tier covers every unmasked version must not call this at all —
     * the planner consults [[graft.plan.Planner.StatSource]]'s
     * `coverage` witness and skips pruning when coverage is unproven
-    * (Dp3Service verifies control-table versions against the stats
-    * table before letting a scan prune).
+    * (Dp3Service checks the scanned tables' ingest versions against
+    * the stats table before letting a scan prune).
     *
-    * The tier plan executes twice here (range collect + broadcast
-    * build). In a real deployment the tier is a STORED summary table
-    * written at ingest (the reference's nodestore statistics), so both
-    * reads are kilobyte scans; if deriving the tier on the fly,
-    * persist it first. Consulting the stats costs one small job at
-    * plan time regardless of outcome — the same stats walk the
-    * reference's tree descent performs — so the tier width should be
-    * chosen coarse enough that buckets hold many rows; a tier with ~1
-    * row per bucket (sparse data under a fine width) makes the walk
-    * cost comparable to just scanning. */
+    * The tier is read once here (the range collect). In a real
+    * deployment the tier is a STORED summary table written at ingest
+    * (the reference's nodestore statistics), so that read is a
+    * kilobyte scan; if deriving the tier on the fly, persist it first.
+    * Consulting the stats costs one small job at plan time regardless
+    * of outcome — the same stats walk the reference's tree descent
+    * performs — so the tier width should be chosen coarse enough that
+    * buckets hold many rows; a tier with ~1 row per bucket (sparse
+    * data under a fine width) makes the walk cost comparable to just
+    * scanning. */
   def pruneScan(scan: DataFrame, tier: DataFrame, where: Expr,
       widthNs: Long, timeCol: String = "time", maxRanges: Int = 64)
       : DataFrame = {
     val ranges = qualifyingRanges(tier, where, widthNs)
     if (ranges.isEmpty) scan.where(lit(false))
     else if (ranges.size > maxRanges) scan
-    else {
-      val ranged = scan.where(ranges.map { case (s, e) =>
-        col(timeCol) >= s && col(timeCol) < e
-      }.reduce(_ || _))
-      val buckets = qualifyingBuckets(tier, where)
-      ranged
-        .withColumn("_sf_bucket", expr(s"$timeCol div ${widthNs}L"))
-        .join(broadcast(buckets.withColumnRenamed("bucket", "_sf_bucket")),
-          Seq("producer", "topic", "_sf_bucket"), "left_semi")
-        .drop("_sf_bucket")
-    }
+    else scan.where(ranges.map { case (s, e) =>
+      col(timeCol) >= s && col(timeCol) < e
+    }.reduce(_ || _))
   }
 }

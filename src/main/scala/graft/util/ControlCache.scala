@@ -42,13 +42,29 @@ object ControlCache {
         .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
         .sorted.mkString("|")
 
+  /** Cache key of one table: the FileSystem URI (scheme + authority)
+    * plus the path — the same path on two filesystems (two HDFS
+    * namenodes, `file:` vs an object store) is two tables. */
+  private def keyOf(fs: FileSystem, dir: Path): String =
+    s"${fs.getUri}|${Path.getPathWithoutSchemeAndAuthority(dir)}"
+
   /** Load-or-reuse: returns the cached value when `dir`'s file
     * fingerprint matches the cached one, else runs `load` and caches
     * the result under the fresh fingerprint. `load` runs at most once
     * per distinct on-disk state per JVM. */
-  def cached[T](fs: FileSystem, dir: Path)(load: => T): T = {
-    val key = Path.getPathWithoutSchemeAndAuthority(dir).toString
-    val fp = fingerprint(fs, dir)
+  def cached[T](fs: FileSystem, dir: Path)(load: => T): T =
+    cachedAll("", Seq(fs -> dir))(load)
+
+  /** [[cached]] for a value derived from SEVERAL control tables: it is
+    * reused only while every table's fingerprint is unchanged. `what`
+    * names the derivation, so two different values computed from the
+    * same tables never share an entry. */
+  def cachedAll[T](what: String, dirs: Seq[(FileSystem, Path)])
+      (load: => T): T = {
+    val key = (what +: dirs.map { case (fs, d) => keyOf(fs, d) })
+      .mkString("\n")
+    val fp = dirs.map { case (fs, d) => fingerprint(fs, d) }
+      .mkString("\n")
     Option(cache.get(key)) match {
       case Some((oldFp, v)) if oldFp == fp => v.asInstanceOf[T]
       case _ =>

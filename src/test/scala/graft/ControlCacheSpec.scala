@@ -77,4 +77,30 @@ class ControlCacheSpec extends AnyFunSuite {
     val c2 = Similarity.readIvfCentroids(spark, s"$base/ivf")
     assert(c1 != c2, "stale centroids served after a rewrite")
   }
+
+  test("the same path on two filesystems is two cache entries") {
+    // one local directory seen through two schemes: identical
+    // fingerprints, but two tables as far as the cache is concerned
+    val dir = java.nio.file.Files
+      .createTempDirectory("ctlcache-fs").toString + "/meta"
+    Seq((1, "a")).toDF("n", "s").coalesce(1).write.parquet(dir)
+    val conf = new org.apache.hadoop.conf.Configuration(
+      spark.sparkContext.hadoopConfiguration)
+    conf.set("fs.graftalt.impl", classOf[AltSchemeLocalFs].getName)
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val local = new org.apache.hadoop.fs.Path(s"file://$dir")
+      .getFileSystem(conf)
+    val alt = new org.apache.hadoop.fs.Path(s"graftalt://$dir")
+      .getFileSystem(conf)
+    assert(alt.getUri.getScheme == "graftalt")
+    assert(ControlCache.cached(local, p)("local") == "local")
+    assert(ControlCache.cached(alt, p)("alt") == "alt")
+    assert(ControlCache.cached(local, p)("reloaded") == "local")
+  }
+}
+
+/** The local filesystem under a second scheme, `graftalt:` — the same
+  * files reached through another FileSystem URI. */
+final class AltSchemeLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftalt:///")
 }

@@ -447,4 +447,45 @@ class Dp3HttpSpec extends AnyFunSuite {
         || !Files.list(spool).findAny().isPresent)
     } finally h2.stop()
   }
+
+  test("stop() shuts the request pool down and its threads end") {
+    import scala.jdk.CollectionConverters._
+    val h = new Dp3Http(svc, spark).start()
+    def poolThreads = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(_.getName.startsWith(h.threadPrefix))
+    val r = client.send(HttpRequest.newBuilder(
+      URI.create(s"http://127.0.0.1:${h.boundPort}/")).GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+    assert(r.statusCode() == 200)
+    val running = poolThreads
+    assert(running.nonEmpty)
+    h.stop()
+    running.foreach(_.join(10000))
+    assert(poolThreads.isEmpty, poolThreads.map(_.getName))
+  }
+
+  test("every Spark job a /query request launches names its route or " +
+      "plan step") {
+    val (_, cat) = TestSpark.smallStore("graft-http-desc")
+    val ssvc = new Dp3Service(cat, s => cat.messages(s),
+      Some(graft.api.IngestStore(cat)))
+    val h = new Dp3Http(ssvc, spark).start()
+    try {
+      val (r, jobs) = JobLog.record(spark.sparkContext) {
+        client.send(HttpRequest.newBuilder(URI.create(
+          s"http://127.0.0.1:${h.boundPort}/databases/default/query"))
+          .POST(HttpRequest.BodyPublishers.ofString(
+            """{"query": "from p0 click where click.value > 3;"}"""))
+          .build(), HttpResponse.BodyHandlers.ofString())
+      }
+      assert(r.statusCode() == 200, r.body())
+      assert(r.body().linesIterator.size == 1)
+      val descs = jobs.map(_.desc)
+      assert(descs.nonEmpty && descs.forall(_.nonEmpty), descs)
+      assert(descs.contains("http:query") && descs.contains(
+        "plan:statfilter"), descs)
+      assert(descs.forall(d => d.startsWith("http:")
+        || d.startsWith("plan:")), descs)
+    } finally h.stop()
+  }
 }

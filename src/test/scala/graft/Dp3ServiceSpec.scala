@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.api.Dp3Service
 import graft.model.EventsCatalog
+import graft.TestSpark.timePruned
 
 /** The facade mirroring the reference's endpoint set — one smoke per
   * verb over the sf0.001 events table. */
@@ -198,8 +199,7 @@ class Dp3ServiceSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getLong(1))).toSeq)
     assert(got == Seq(("view", 15L * 1000000000L),
       ("click", 70L * 1000000000L), ("view", 75L * 1000000000L)))
-    assert(stored.query(spark, ql).queryExecution.executedPlan
-      .toString.contains("LeftSemi"))
+    assert(timePruned(stored.query(spark, ql)))
   }
 
   test("store-backed statfilter prunes QL scans to qualifying buckets") {
@@ -240,15 +240,13 @@ class Dp3ServiceSpec extends AnyFunSuite {
     assert(pruned.select("time", "seq").collect().toSeq
       == bare.query(spark, ql).select("time", "seq").collect().toSeq)
     assert(pruned.count() == 1)
-    // and the plan really carries the bucket skip: the broadcast
-    // semi-join against qualifying stat rows
-    assert(pruned.queryExecution.executedPlan.toString
-      .contains("LeftSemi"))
+    // and the plan really carries the bucket skip: the qualifying
+    // buckets' time range pushed into the parquet scan
+    assert(timePruned(pruned))
     // a query no stored stats can check is planned without the skip
     val untouched = stored.query(spark,
       "from p0 click where click.value != 3;")
-    assert(!untouched.queryExecution.executedPlan.toString
-      .contains("LeftSemi"))
+    assert(!timePruned(untouched))
     assert(untouched.count() == 3)
   }
 
@@ -285,10 +283,10 @@ class Dp3ServiceSpec extends AnyFunSuite {
       Some(graft.api.IngestStore(cat)))
 
     // the only matching row (value 4.0) lives in the uncovered version:
-    // it must surface, and the plan must NOT carry the bucket semi-join
+    // it must surface, and the plan must NOT carry the bucket skip
     val got = stored.query(spark, "from p0 click where click.value > 3;")
     assert(got.count() == 1)
-    assert(!got.queryExecution.executedPlan.toString.contains("LeftSemi"))
+    assert(!timePruned(got))
 
     // truncating the uncovered version restores coverage (masks apply
     // to control and stats alike) — pruning re-engages on a fresh
@@ -438,5 +436,72 @@ class Dp3ServiceSpec extends AnyFunSuite {
     val after = svc.truncate(spark, "truncate p3 click now;")
       .where(col("producer") === "p3" && col("topic") === "click").count()
     assert(before > 0 && after == 0)
+  }
+
+  test("a warm service plans QL without redundant Spark jobs") {
+    val (_, cat) = TestSpark.smallStore("graft-jobs")
+    val svc = new Dp3Service(cat, s => cat.messages(s),
+      Some(graft.api.IngestStore(cat)))
+    val sc = spark.sparkContext
+    val ql = "from p0 click where click.value > 3;"
+    // warm: coverage gaps and the producer list are cached from here
+    assert(svc.query(spark, ql).count() == 1)
+    assert(svc.query(spark, "from * click;").count() == 3)
+
+    // every plan pays the data source's schema read; a prunable where
+    // adds at most the tier's schema read and the one qualifying-bucket
+    // collect — no coverage join, no second tier read, no broadcast
+    val (_, bare) = JobLog.record(sc)(svc.query(spark, "from p0 click;"))
+    val (df, planJobs) = JobLog.record(sc)(svc.query(spark, ql))
+    val descs = planJobs.map(_.desc)
+    assert(planJobs.size - bare.size <= 2, descs)
+    assert(descs.count(_ == "plan:statfilter") == 1, descs)
+    assert(!descs.contains("plan:coverage"), descs)
+    assert(timePruned(df))
+    // one producer: its index is 0, so no producer-index join
+    assert(!df.queryExecution.executedPlan.toString
+      .contains("BroadcastExchange"))
+    assert(df.collect().length == 1)
+
+    // a repeated `from *` plans with exactly the jobs of a query naming
+    // its producer: the control-table lookup is cached
+    val (star, starJobs) =
+      JobLog.record(sc)(svc.query(spark, "from * click;"))
+    assert(starJobs.size == bare.size, starJobs.map(_.desc))
+    assert(star.count() == 3)
+    // several producers keep the broadcast index join (O(1) plan)
+    assert(svc.query(spark, "from p0, p1 click;").queryExecution
+      .executedPlan.toString.contains("BroadcastExchange"))
+  }
+
+  test("the cached coverage witness follows appends and truncation on " +
+      "one service") {
+    import spark.implicits._
+    val (base, cat) = TestSpark.smallStore("graft-covinv")
+    val svc = new Dp3Service(cat, s => cat.messages(s),
+      Some(graft.api.IngestStore(cat)))
+    val ql = "from p0, p1 click where click.value > 3;"
+    def times(df: org.apache.spark.sql.DataFrame) =
+      df.select("time").collect().map(_.getLong(0)).toSeq
+    // full coverage: pruning engaged
+    val q1 = svc.query(spark, ql)
+    assert(timePruned(q1))
+    assert(times(q1) == Seq(70L * 1000000000L))
+    // version 2 lands data and control rows for p1 but no partials:
+    // the same service must see the gap and stop pruning
+    Seq(("p1", "click", 130L * 1000000000L, 4L, 5.0, 2L))
+      .toDF("producer", "topic", "time", "seq", "value", "ingest_version")
+      .write.mode("append").parquet(s"$base/data")
+    Seq(("p1", "click", 2L, 2000L))
+      .toDF("producer", "topic", "ingest_version", "ingest_time_ns")
+      .write.mode("append").parquet(s"$base/control")
+    val q2 = svc.query(spark, ql)
+    assert(!timePruned(q2))
+    assert(times(q2) == Seq(70L * 1000000000L, 130L * 1000000000L))
+    // truncating the uncovered version hides the gap: pruning returns
+    svc.truncate(spark, "truncate p1 click now;")
+    val q3 = svc.query(spark, ql)
+    assert(timePruned(q3))
+    assert(times(q3) == Seq(70L * 1000000000L))
   }
 }

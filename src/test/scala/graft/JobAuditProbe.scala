@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-
 /** Job-count / input-bytes audit for composed registry entries whose
   * work is spread across EAGER control-plane jobs (pins, training
   * collects, maintenance verbs) plus the final plan — the shapes a
@@ -40,56 +38,20 @@ object JobAuditProbe {
     // warm run: codegen, listings, serve-entry buildOnce
     Bench.forced(fn(spark, sfDir)).collect(); sweep()
 
-    final case class Job(id: Int, desc: String, t0: Long) {
-      var stages = 0
-      var input = 0L
-      var tEnd = 0L
-    }
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
-    val stageToJob =
-      new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-    val order = new java.util.concurrent.CopyOnWriteArrayList[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val d = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        jobs.put(e.jobId, Job(e.jobId, d, System.nanoTime()))
-        order.add(e.jobId)
-        e.stageIds.foreach(s => stageToJob.put(s, e.jobId))
-      }
-      override def onStageCompleted(
-          e: SparkListenerStageCompleted): Unit = {
-        val j = stageToJob.get(e.stageInfo.stageId)
-        Option(jobs.get(j)).foreach { job =>
-          job.stages += 1
-          job.input += e.stageInfo.taskMetrics.inputMetrics.bytesRead
-          job.tEnd = System.nanoTime()
-        }
-      }
-    }
     (0 until runs).foreach { r =>
-      jobs.clear(); stageToJob.clear(); order.clear()
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      Bench.forced(fn(spark, sfDir)).collect()
-      val dt = (System.nanoTime() - t0) / 1e9
-      // drain listener-bus events before reading the counters
-      Thread.sleep(1500)
-      spark.sparkContext.removeSparkListener(listener)
-      import scala.jdk.CollectionConverters._
-      var totIn = 0L
-      var totStages = 0
-      order.asScala.foreach { id =>
-        val j = jobs.get(id)
-        totIn += j.input; totStages += j.stages
+      val (dt, jobs) = JobLog.record(spark.sparkContext) {
+        val t0 = System.nanoTime()
+        Bench.forced(fn(spark, sfDir)).collect()
+        (System.nanoTime() - t0) / 1e9
+      }
+      jobs.foreach { j =>
         println(f"[jobaudit] run=$r job=${j.id}%3d stages=${j.stages}%2d" +
           f" inMB=${j.input / 1048576.0}%8.2f" +
           f" ms=${(j.tEnd - j.t0) / 1e6}%8.1f  ${j.desc.take(80)}")
       }
-      println(f"[jobaudit] $name run=$r TOTAL jobs=${order.size()}%d " +
-        f"stages=$totStages%d inMB=${totIn / 1048576.0}%.2f " +
-        f"wall=$dt%.2f s")
+      println(f"[jobaudit] $name run=$r TOTAL jobs=${jobs.size}%d " +
+        f"stages=${jobs.map(_.stages).sum}%d " +
+        f"inMB=${jobs.map(_.input).sum / 1048576.0}%.2f wall=$dt%.2f s")
       sweep()
     }
     spark.stop()

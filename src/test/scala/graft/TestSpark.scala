@@ -21,6 +21,41 @@ object TestSpark {
     s
   }
 
+  /** Whether a planned QL query's parquet scans carry the statfilter's
+    * pushed `time` range — the mark of an engaged bucket skip, for
+    * queries with no `between` (no other predicate bounds time). */
+  def timePruned(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.toString.linesIterator
+      .filter(_.contains("PushedFilters"))
+      .exists(_.contains("GreaterThanOrEqual(time,"))
+
+  /** An ingested store under a fresh temp dir (returned with its
+    * catalog): `p0`'s click table with three rows in version 1 —
+    * (10 s, 1.0) and (20 s, 2.0) in base bucket 0, (70 s, 4.0) in
+    * bucket 1 — plus the version's base-tier partials and control
+    * row. */
+  def smallStore(tag: String): (String, graft.model.IngestedCatalog) = {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.lit
+    import graft.stats.StatTiers
+    val base = java.nio.file.Files.createTempDirectory(tag).toString
+    val v1 = Seq(("p0", "click", 10L * 1000000000L, 1L, 1.0),
+      ("p0", "click", 20L * 1000000000L, 2L, 2.0),
+      ("p0", "click", 70L * 1000000000L, 3L, 4.0))
+      .toDF("producer", "topic", "time", "seq", "value")
+      .withColumn("ingest_version", lit(1L))
+    v1.write.parquet(s"$base/data")
+    StatTiers.base(v1, StatTiers.BaseWidthNs)
+      .withColumn("ingest_version", lit(1L))
+      .write.parquet(s"$base/stats")
+    Seq(("p0", "click", 1L, 1000L))
+      .toDF("producer", "topic", "ingest_version", "ingest_time_ns")
+      .write.parquet(s"$base/control")
+    (base, new graft.model.IngestedCatalog(
+      s"$base/data", s"$base/stats", s"$base/control"))
+  }
+
   /** The reference's all-primitives fixture (reference:
     * server/executor/executor_test.go:327-388 prepTmgr2): topics t0..t9,
     * 5 messages each, every numeric field = message index c,
