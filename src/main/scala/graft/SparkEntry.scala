@@ -1429,7 +1429,7 @@ object SparkEntry {
 
     // the full persisted-BM25-index lifecycle under the oracle: build
     // on the even half of the corpus, APPEND the odd half, compact
-    // (any-copy postings dedup + stats fold under the Maint flip),
+    // (any-copy postings dedup + stats fold in one manifest commit),
     // then serve two queries from the STORED layout — the corpus text
     // is never re-tokenized at serve time (SearchSpec gates the plan),
     // and the result must equal inline bm25TopKBatch over the whole

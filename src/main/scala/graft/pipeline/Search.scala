@@ -1,8 +1,12 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+
+import graft.util.{DataFile, JobDesc, Maint, Manifest, ManifestLog}
 
 /** Full-text retrieval over a document corpus — Okapi BM25 ranking
   * (Robertson & Walker SIGIR'94; the Lucene-style `ln(1 + ...)`
@@ -293,316 +297,125 @@ object Search {
 
   /** Persist a BM25 inverted index so serving never re-tokenizes the
     * corpus — the text-retrieval analogue of
-    * [[Similarity.writeIvfIndex]]'s durable-layout discipline. Layout:
+    * [[Similarity.writeIvfIndex]]'s durable-layout discipline. Layout
+    * ([[ManifestLog]]; writing over an index supersedes it):
     *
-    *   - `dir/postings`: (term, doc_id, dl, tf) PARTITIONED BY
-    *     `bucket` = hash(term) mod nBuckets and sorted by term within
-    *     files — a query's term set maps to bucket DIRECTORIES
-    *     (Catalyst prunes the rest before IO, the IVF cell-prune
-    *     shape) and the pushed term-IN predicate prunes row groups
-    *     inside them. Serve cost ∝ postings of the query's terms,
-    *     never corpus size.
-    *   - `dir/stats`: mergeable (batch_fp, n, sumdl) partials, one row
-    *     per build/append; the serve reads `distinct()` + sum, so a
-    *     replayed identical append's duplicate row collapses
-    *     (batch_fp is a deterministic content fingerprint) and the
-    *     normalizer needs no corpus-sized aggregate at serve time.
-    *   - `dir/meta`: (nbuckets) — the partitioning contract appends
-    *     must reproduce, stored so it can never silently drift.
+    *   - `dir/_manifest/<v>`: the newest manifest is the index — the
+    *     bucket count (the partitioning contract appends must
+    *     reproduce), the postings schema, the live postings files with
+    *     their bucket and bytes, and one mergeable stats partial
+    *     (batch_fp, n, sumdl) per build/append; the serve sums their
+    *     `distinct`, so a replayed identical append's partial collapses
+    *     (batch_fp is a deterministic content fingerprint).
+    *   - `dir/postings/v=<v>/bucket=<b>/`: (term, doc_id, dl, tf) files
+    *     that version v wrote, bucket = hash(term) mod nBuckets, sorted
+    *     by term within files — a query's terms map to the listed files
+    *     of their buckets (the IVF cell-prune shape) and the pushed
+    *     term-IN prunes row groups inside them. Serve cost ∝ postings
+    *     of the query's terms, never corpus size.
     *
     * 100 TB shape: the postings build is [[postings]]' one shuffle;
     * the bucket write emits ~ceil(bucketBytes/targetBytesPerFile)
-    * files per bucket directory ([[sizedByBucket]] — sized from the
-    * input corpus bytes here, from the exact on-disk bytes at
-    * [[compactBm25Index]] time), so write-task size stays bounded by
-    * the target instead of growing with corpus/nBuckets. */
+    * files per bucket ([[sizedByBucket]] — sized from the input corpus
+    * bytes here, from the manifest's bytes at [[compactBm25Index]]
+    * time), so write-task size stays bounded by the target instead of
+    * growing with corpus/nBuckets. */
   def writeBm25Index(docs: DataFrame, dir: String, nBuckets: Int = 64,
       idCol: String = "doc_id", textCol: String = "text",
       targetBytesPerFile: Long = 128L << 20): Unit = {
     require(nBuckets >= 1, s"nBuckets >= 1: $nBuckets")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    Seq(nBuckets).toDF("nbuckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    statsPartial(docs, idCol, textCol)
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
-    postingsRows(docs, nBuckets, idCol, textCol,
-        estimatedFilesPerBucket(docs, nBuckets, targetBytesPerFile))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$dir/postings")
+    val log = manifestLog(docs.sparkSession, dir)
+    indexBatch(docs, log, "writeBm25Index", log.open("writeBm25Index"),
+      nBuckets, None, Nil, Nil, idCol, textCol, targetBytesPerFile)
   }
 
-  /** Incrementally index new documents: postings rows append into
-    * their term buckets under the STORED nBuckets (the quantizer-is-
-    * an-input rule — a drifted bucket count would silently split a
-    * term across directories and halve its df), and one stats partial
-    * row lands next to the existing ones. Idempotence contract (the
-    * [[Similarity.appendToIvfIndex]] discipline): a crash-retried
-    * append can leave duplicate posting rows, which — unlike raw
-    * vectors — CHANGE answers (rows count into df and duplicate
-    * per-(doc, term) contributions); the serve path heals them with a
-    * candidate-sized dropDuplicates and [[compactBm25Index]] heals the
-    * stored layout. Callers must not append the same batch twice with
+  /** Incrementally index new documents: postings rows land in their
+    * term buckets under the STORED nBuckets (the quantizer-is-an-input
+    * rule — a drifted bucket count would silently split a term across
+    * buckets and halve its df), and one stats partial joins the
+    * existing ones, all in one manifest commit. Idempotence contract
+    * (the [[Similarity.appendToIvfIndex]] discipline): a replayed
+    * append adds duplicate posting rows, which — unlike raw vectors —
+    * CHANGE answers (rows count into df and duplicate per-(doc, term)
+    * contributions); the serve path drops them with a candidate-sized
+    * dropDuplicates and the compactions drop them from the stored
+    * files. Callers must not append the same batch twice with
     * different content under the same doc ids. */
   def appendToBm25Index(newDocs: DataFrame, dir: String,
       idCol: String = "doc_id", textCol: String = "text",
       targetBytesPerFile: Long = 128L << 20): Unit = {
-    val spark = newDocs.sparkSession
-    // Mid-swap guard at the APPEND face's entry (the protocol rule
-    // every maintenance-touched tree carries): an ABSENT postings or
-    // stats tree with a surviving compact sibling is a crashed
-    // [[compactBm25Index]] flip, NOT a fresh index — an unguarded
-    // mode("append") would CREATE an empty tree holding only this
-    // batch (served df/idf silently wrong), and the next compact's
-    // cleanSiblings would then delete the parked history, the only
-    // surviving copy. Heal (restore the parked original) before
-    // writing; a truly absent tree with NO siblings next to a
-    // readable meta is external interference and fails loudly.
-    locally {
-      import org.apache.hadoop.fs.Path
-      import graft.util.Maint
-      val root = new Path(dir)
-      val fs = root.getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      def guard(name: String): Unit =
-        Maint.healAtEntry(fs, new Path(root, name),
-          new Path(root, s".$name-compact"),
-          new Path(root, s".$name-trash"),
-          "appendToBm25Index",
-          live = fs.exists(new Path(root, name)),
-          missingMsg = Some(s"appendToBm25Index: no $name tree " +
-            s"under $dir — not a writeBm25Index layout"))
-      guard("postings")
-      guard("stats")
-      // and a crashed [[compactBm25Buckets]] swap: a parked-absent
-      // bucket dir would otherwise be RECREATED by this append's
-      // write (holding only the new batch), after which the heal
-      // protocol sees a live dir and never restores the parked
-      // history — restore first (one exists check steady-state)
-      Maint.healParkedFlat(fs, new Path(root, "postings"),
-        new Path(root, ".postings-bswap"), "appendToBm25Index")
-    }
-    val nBuckets = storedNBuckets(spark, dir)
-    statsPartial(newDocs, idCol, textCol)
-      .coalesce(1).write.mode("append").parquet(s"$dir/stats")
-    postingsRows(newDocs, nBuckets, idCol, textCol,
-        estimatedFilesPerBucket(newDocs, nBuckets, targetBytesPerFile))
-      .write.mode("append").partitionBy("bucket")
-      .parquet(s"$dir/postings")
+    val verb = "appendToBm25Index"
+    val log = manifestLog(newDocs.sparkSession, dir)
+    val prev = committed(log.open(verb), verb, dir)
+    val meta = Bm25Meta(prev)
+    indexBatch(newDocs, log, verb, Some(prev), meta.nBuckets,
+      Some(meta.schema), prev.files, meta.stats, idCol, textCol,
+      targetBytesPerFile)
   }
 
   /** Compact a [[writeBm25Index]] layout after replayed appends:
     * any-copy dedup of full-row-identical duplicate postings (exact —
-    * tokenization is deterministic), stats partials collapsed to one
-    * summed row, both under [[graft.util.Maint]]'s whole-root flip
-    * (duplicates CHANGE answers here — df counts rows — so the
-    * postings tree must never expose a half-folded state).
+    * tokenization is deterministic) into freshly sized files, stats
+    * partials collapsed to one summed row, one manifest commit.
     * Single-writer: no concurrent appends (a pre-compact append's
-    * replay arriving after the fold would re-add its stats row with
-    * nothing left to collapse it against). */
+    * replay arriving after the fold would re-add its stats partial
+    * with nothing left to collapse it against). */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
-      dir: String, targetBytesPerFile: Long = 128L << 20): Unit = {
-    import org.apache.hadoop.fs.Path
-    import graft.util.Maint
-    val live = new Path(s"$dir/postings")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(s"$dir/.postings-compact")
-    val trash = new Path(s"$dir/.postings-trash")
-    // two sub-verbs so the crash matrix injects into EACH flip's
-    // windows independently (shared-name steps would shadow the
-    // second flip's points behind the first's)
-    Maint.healAtEntry(fs, live, tmp, trash, "compactBm25Postings",
-      live = fs.exists(live),
-      missingMsg = Some(s"compactBm25Index: no postings tree at $live"))
-    Maint.cleanSiblings(fs, tmp, trash, "compactBm25Postings")
-    // per-bucket EXACT output sizing from the live bucket dirs' bytes
-    // (the r19 sized-fold rule — an unsized repartition(bucket) put a
-    // bucket's whole postings in ONE task, and write-task size grew
-    // unbounded with corpus/nBuckets); skewed buckets (a stop-word's
-    // postings) get proportionally more files
-    val nBuckets = storedNBuckets(spark, dir)
-    val fpb = Array.fill[Long](nBuckets)(1L)
-    for (d <- fs.listStatus(live) if d.isDirectory;
-         name = d.getPath.getName if name.startsWith("bucket=")) {
-      val b = name.stripPrefix("bucket=").toInt
-      if (b >= 0 && b < nBuckets)
-        fpb(b) = Maint.sizedFileCount(
-          Maint.parquetBytes(fs, Seq(d.getPath)), targetBytesPerFile)
-          .toLong
-    }
-    sizedByBucket(
-        spark.read.parquet(live.toString)
-          .dropDuplicates("term", "doc_id"),
-        fpb)
-      .write.partitionBy("bucket").parquet(tmp.toString)
-    Maint.flipNow(fs, live, tmp, trash, "compactBm25Postings")
-    foldStats(spark, dir)
-  }
-
-  /** Fold the stats partial rows to ONE exact row under the whole-
-    * root flip (its own heal-at-entry — a crash between the stats
-    * flip's renames must restore the stranded original, never clean
-    * it away; distinct first — replayed appends wrote identical rows,
-    * and folding them un-collapsed would double-count). Shared tail
-    * of [[compactBm25Index]] and [[compactBm25Buckets]]. */
-  private def foldStats(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    import graft.util.Maint
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val sLive = new Path(s"$dir/stats")
-    val sTmp = new Path(s"$dir/.stats-compact")
-    val sTrash = new Path(s"$dir/.stats-trash")
-    Maint.healAtEntry(fs, sLive, sTmp, sTrash, "compactBm25Stats",
-      live = fs.exists(sLive),
-      missingMsg = Some(s"compactBm25Index: no stats tree at $sLive"))
-    Maint.cleanSiblings(fs, sTmp, sTrash, "compactBm25Stats")
-    spark.read.parquet(sLive.toString).distinct()
-      .agg(min(col("batch_fp")).as("batch_fp"), sum(col("n")).as("n"),
-        sum(col("sumdl")).as("sumdl"))
-      .select(col("batch_fp"), col("n"), col("sumdl"))
-      .coalesce(1).write.parquet(sTmp.toString)
-    Maint.flipNow(fs, sLive, sTmp, sTrash, "compactBm25Stats")
-    ()
-  }
+      dir: String, targetBytesPerFile: Long = 128L << 20): Unit =
+    fold(spark, dir, "compactBm25Index", targetBytesPerFile)(
+      (files, _) => (files.map(_.part).toSet, true))
 
   /** INCREMENTAL postings fold — [[compactBm25Index]]'s cost is
-    * O(index) per fold (the whole live tree rewrites under one flip);
-    * this verb folds ONLY buckets whose part-file count exceeds
-    * `maxPartFiles` (every append adds >= 1 file per touched bucket,
-    * so the file count is exactly the accumulated-appends signal),
-    * making fold cost proportional to the TOUCHED buckets, never the
-    * index. Returns the folded bucket ids.
+    * O(index) per fold; this verb folds ONLY buckets whose file count
+    * in the manifest exceeds `maxPartFiles` (every append adds >= 1
+    * file per touched bucket, so the file count is exactly the
+    * accumulated-appends signal), making fold cost proportional to the
+    * TOUCHED buckets, never the index. Returns the folded bucket ids.
     *
-    * Soundness of the finer protocol: a term maps to exactly one
-    * bucket, so (term, doc_id) duplicates can never straddle buckets
-    * — each bucket dir rewrites to its own deduped rows and swaps in
-    * ATOMICALLY under the park protocol ([[Maint.swapPartitionDir]]
-    * per dir, originals parked under `.postings-bswap` until the
-    * commit delete). Any crash prefix leaves every bucket either
-    * original (duplicates present — healed at serve by the
-    * candidate-sized dropDuplicates, exactly the append-replay
-    * state) or deduped; a bucket parked-but-not-promoted is restored
-    * by [[Maint.healParkedFlat]] at this verb's, the append face's
-    * AND the serve face's entry — a read can never silently miss a
-    * parked bucket's postings (the whole-root flip fails LOUD in its
-    * crash window via the absent root; per-bucket must match that
-    * bar). The whole-root fold remains [[compactBm25Index]] — use it
-    * when most buckets are touched. Single-writer, like every
-    * compaction here. Stats partials fold (to one row, whole-root
-    * flip) when their file count exceeds the same threshold. */
+    * A term maps to exactly one bucket, so (term, doc_id) duplicates
+    * never straddle buckets: each touched bucket rewrites to its own
+    * deduped rows, and the manifest commit swaps them in for the
+    * bucket's old files atomically. The whole-index fold remains
+    * [[compactBm25Index]] — use it when most buckets are touched.
+    * Single-writer, like every compaction here. Stats partials fold to
+    * one row in the same commit when their count exceeds the same
+    * threshold. */
   def compactBm25Buckets(spark: org.apache.spark.sql.SparkSession,
       dir: String, targetBytesPerFile: Long = 128L << 20,
       maxPartFiles: Int = 4): Seq[Int] = {
-    import org.apache.hadoop.fs.Path
-    import graft.util.Maint
     require(maxPartFiles >= 1, s"maxPartFiles >= 1: $maxPartFiles")
-    val verb = "compactBm25Buckets"
-    val live = new Path(s"$dir/postings")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(s"$dir/.postings-bfold")
-    val trash = new Path(s"$dir/.postings-bswap")
-    // a crashed WHOLE-ROOT compact owns the tree first (absent live +
-    // its sibling); then heal any of this verb's own parked buckets;
-    // a leftover tmp with no trash is a pre-swap crash — disposable
-    Maint.healAtEntry(fs, live, new Path(s"$dir/.postings-compact"),
-      new Path(s"$dir/.postings-trash"), verb,
-      live = fs.exists(live),
-      missingMsg = Some(s"compactBm25Buckets: no postings tree at $live"))
-    Maint.healParkedFlat(fs, live, trash, verb)
-    fs.delete(tmp, true)
-    Maint.step(verb, "cleaned")
-    val nBuckets = storedNBuckets(spark, dir)
-    // touched buckets + their exact on-disk bytes, one listing pass
-    val fpb = Array.fill[Long](nBuckets)(1L)
-    val touched = scala.collection.mutable.ArrayBuffer[Int]()
-    val touchedDirs = scala.collection.mutable.ArrayBuffer[String]()
-    for (d <- fs.listStatus(live) if d.isDirectory;
-         name = d.getPath.getName if name.startsWith("bucket=")) {
-      val b = name.stripPrefix("bucket=").toInt
-      val files = fs.listStatus(d.getPath).filter { s =>
-        val n = s.getPath.getName
-        s.isFile && n.endsWith(".parquet") && !n.startsWith(".") &&
-          !n.startsWith("_")
-      }
-      if (b >= 0 && b < nBuckets && files.length > maxPartFiles) {
-        touched += b
-        touchedDirs += d.getPath.toString
-        fpb(b) = Maint.sizedFileCount(files.map(_.getLen).sum,
-          targetBytesPerFile).toLong
-      }
+    fold(spark, dir, "compactBm25Buckets", targetBytesPerFile) {
+      (files, meta) => (files.groupBy(_.part).collect {
+          case (b, fl) if fl.size > maxPartFiles => b }.toSet,
+        meta.stats.size > maxPartFiles)
     }
-    if (touched.nonEmpty) {
-      // ONE job over the touched dirs only — enumerated explicitly
-      // under basePath so listing AND read stay O(touched), with the
-      // bucket-isin kept on top as the semantic contract
-      sizedByBucket(
-          spark.read.option("basePath", live.toString)
-            .parquet(touchedDirs.toSeq: _*)
-            .where(col("bucket").isin(touched.map(b => b: Any).toSeq: _*))
-            .dropDuplicates("term", "doc_id"),
-          fpb)
-        .write.partitionBy("bucket").parquet(tmp.toString)
-      Maint.step(verb, "built")
-      for (b <- touched) {
-        val name = s"bucket=$b"
-        Maint.swapPartitionDir(fs, new Path(live, name),
-          new Path(tmp, name), new Path(trash, name), verb)
-      }
-      Maint.step(verb, "buckets-swapped")
-      fs.delete(trash, true)
-      fs.delete(tmp, true)
-      Maint.step(verb, "committed")
-    }
-    // stats partials: fold when the file count exceeds the threshold
-    val sLive = new Path(s"$dir/stats")
-    val statsFiles =
-      if (!fs.exists(sLive)) 0
-      else fs.listStatus(sLive).count { s =>
-        val n = s.getPath.getName
-        s.isFile && n.endsWith(".parquet") && !n.startsWith(".") &&
-          !n.startsWith("_")
-      }
-    if (statsFiles > maxPartFiles) foldStats(spark, dir)
-    touched.toSeq
   }
 
   /** Serve a query batch from a [[writeBm25Index]] layout — identical
     * results to [[bm25TopKBatch]] over the indexed corpus at every k
     * (spec-pinned; the scoring tail is literally shared). The plan
-    * reads ONLY the index: bucket partition pruning + pushed term-IN
-    * on the postings, a one-row broadcast from the stats partials —
-    * corpus text is never scanned or re-tokenized (spec-gated). */
+    * reads ONLY the index: the newest manifest's files of the query's
+    * buckets with the term-IN pushed, and a one-row normalizer from
+    * the manifest's stats partials — corpus text is never scanned or
+    * re-tokenized (spec-gated). Read-only: it lists and reads, never
+    * renames or deletes. */
   def bm25TopKBatchFromIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, queries: Seq[(Long, String)], k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     val (qdf, allTerms) = queryTermsDf(spark, queries)
-    locally {
-      // self-heal a crashed [[compactBm25Buckets]] swap before
-      // reading: a parked-absent bucket dir would silently serve
-      // FEWER postings (the whole-root flip's crash state fails loud
-      // via the absent root; the per-bucket protocol must match that
-      // bar). Steady-state cost: one exists() on the trash sibling.
-      import org.apache.hadoop.fs.Path
-      val root = new Path(dir)
-      val fs = root.getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      graft.util.Maint.healParkedFlat(fs, new Path(root, "postings"),
-        new Path(root, ".postings-bswap"), "bm25Serve")
-    }
-    val nBuckets = storedNBuckets(spark, dir)
+    // the manifest is fingerprint-cached (ControlCache): a warm serve
+    // costs one listing of `_manifest`, no Spark job, no tree walk
+    val m = committed(manifestLog(spark, dir).latest, "bm25Serve", dir)
+    val meta = Bm25Meta(m)
     // the terms' bucket set, derived with the SAME engine function
     // that placed them — XxHash64Function IS what codegen emits for
     // xxhash64(string) (seed 42), called driver-side over |terms|
-    // local strings instead of spending a Spark job on a one-row
-    // distinct+collect per serve (spec-pinned ≡ the engine column)
-    val buckets = allTerms
-      .map(t => bucketOfTerm(t, nBuckets)).distinct.sorted
-      .map(b => b: Any)
-    val tf = spark.read.parquet(s"$dir/postings")
-      .where(col("bucket").isin(buckets: _*))
+    // local strings (spec-pinned ≡ the engine column)
+    val buckets = allTerms.map(t => bucketOfTerm(t, meta.nBuckets).toInt)
+      .toSet
+    val tf = readPostings(spark, dir, meta.schema,
+        m.files.filter(f => buckets(f.part)))
       .where(col("term").isin(allTerms: _*))
       // one term-keyed exchange feeds BOTH the dedup below and
       // bm25Rank's df window (hashpartitioning(term) satisfies the
@@ -613,26 +426,12 @@ object Search {
       // candidate size — |docs with a query term|, never the corpus
       .dropDuplicates("term", "doc_id")
       .select(col("term"), col("doc_id"), col("dl"), col("tf"))
-    // the corpus normalizer is a control-plane fold of the stats
-    // partials (one row per build/append — duplicates collapsed by
-    // the same distinct the in-plan version ran). Fingerprint-cached
-    // and re-planned as a one-row LocalRelation: the in-plan subtree
-    // cost a scan + distinct exchange + agg + broadcast build (~3
-    // scheduler round trips) per serve for ONE row; any append or
-    // compact rewrites the stats dir and misses the cache.
-    val statsDir = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(dir), "stats")
-    val sfs = statsDir.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val (nTot, sumdlTot) =
-      graft.util.ControlCache.cached(sfs, statsDir) {
-        val r = spark.read.parquet(statsDir.toString).distinct()
-          .agg(sum(col("n")).as("n"), sum(col("sumdl")).as("sumdl"))
-          .head()
-        (r.getLong(0), r.getLong(1))
-      }
+    // the corpus normalizer: the distinct stats partials summed on the
+    // driver, re-planned as a one-row LocalRelation
+    val parts = meta.stats.distinct
     import spark.implicits._
-    val stats = Seq((nTot, sumdlTot)).toDF("n", "sumdl")
+    val stats = Seq((parts.map(_._2).sum, parts.map(_._3).sum))
+      .toDF("n", "sumdl")
     bm25Rank(tf, stats, qdf, k, k1, b)
   }
 
@@ -645,18 +444,109 @@ object Search {
       .drop("query_id")
       .orderBy(col("score_mu").desc, col("doc_id").asc)
 
-  /** The on-disk posting rows: [[postings]] over the full vocabulary
-    * plus the term's bucket, clustered (bucket, term) via
-    * [[sizedByBucket]] so no write task rewrites a whole bucket's
-    * postings. */
-  private def postingsRows(docs: DataFrame, nBuckets: Int,
-      idCol: String, textCol: String,
-      filesPerBucket: Array[Long]): DataFrame =
-    sizedByBucket(
-      postings(docs, None, idCol, textCol)
-        .withColumn("bucket",
-          pmod(xxhash64(col("term")), lit(nBuckets.toLong))),
-      filesPerBucket)
+  /** The BM25 part of a [[Manifest]]: bucket count, postings file
+    * schema and stats partials (batch_fp, n, sumdl). */
+  private final case class Bm25Meta(nBuckets: Int, schema: StructType,
+      stats: Seq[(Long, Long, Long)]) {
+    def header: Seq[Seq[String]] =
+      Seq(Seq("nbuckets", nBuckets.toString), Seq("schema", schema.json)) ++
+        stats.map { case (fp, n, dl) =>
+          Seq("stats", fp.toString, n.toString, dl.toString) }
+  }
+
+  private object Bm25Meta {
+    def apply(m: Manifest): Bm25Meta = {
+      def one(tag: String) = m.header.find(_.head == tag).get(1)
+      Bm25Meta(one("nbuckets").toInt,
+        DataType.fromJson(one("schema")).asInstanceOf[StructType],
+        m.header.filter(_.head == "stats")
+          .map(l => (l(1).toLong, l(2).toLong, l(3).toLong)))
+    }
+  }
+
+  private def manifestLog(spark: org.apache.spark.sql.SparkSession,
+      dir: String) =
+    new ManifestLog(new Path(dir), spark.sparkContext.hadoopConfiguration,
+      "postings")
+
+  /** The committed manifest, or a loud failure: append, compact and
+    * serve need an index (a typo'd dir must never become a fresh one). */
+  private def committed(m: Option[Manifest], verb: String,
+      dir: String): Manifest =
+    m.getOrElse(throw new IllegalArgumentException(
+      s"$verb: no BM25 manifest under $dir — not a writeBm25Index layout"))
+
+  /** Index `docs` into the next version's write directory and commit
+    * it alongside the `kept` files and stats partials. The stored
+    * schema is the first write's, so appends read back as it did. */
+  private def indexBatch(docs: DataFrame, log: ManifestLog, verb: String,
+      prev: Option[Manifest], nBuckets: Int,
+      schema: Option[StructType], keptFiles: Seq[DataFile],
+      keptStats: Seq[(Long, Long, Long)], idCol: String,
+      textCol: String, targetBytesPerFile: Long): Unit = {
+    val sc = docs.sparkSession.sparkContext
+    val partial = JobDesc(sc, s"bm25:$verb:stats") {
+      val r = statsPartial(docs, idCol, textCol).head()
+      // an empty batch sums to nulls: it adds nothing
+      def at(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
+      (at(0), at(1), at(2))
+    }
+    val rows = sizedByBucket(
+      withBucket(postings(docs, None, idCol, textCol), nBuckets),
+      estimatedFilesPerBucket(docs, nBuckets, targetBytesPerFile))
+    val written = JobDesc(sc, s"bm25:$verb:postings") {
+      log.write(prev.fold(0L)(_.version) + 1, rows, "bucket")
+    }
+    log.commit(verb, prev,
+      Bm25Meta(nBuckets, schema.getOrElse(rows.drop("bucket").schema),
+        keptStats :+ partial).header, keptFiles ++ written)
+  }
+
+  /** The compactions: `due` picks the buckets to rewrite (their rows
+    * deduplicated into freshly sized files) and whether the stats
+    * partials fold to one row; both land in one commit, or none when
+    * nothing is due. Returns the rewritten buckets. */
+  private def fold(spark: org.apache.spark.sql.SparkSession, dir: String,
+      verb: String, targetBytesPerFile: Long)(
+      due: (Seq[DataFile], Bm25Meta) => (Set[Int], Boolean)): Seq[Int] = {
+    val log = manifestLog(spark, dir)
+    val prev = committed(log.open(verb), verb, dir)
+    val meta = Bm25Meta(prev)
+    val (buckets, foldDue) = due(prev.files, meta)
+    val (redo, keep) = prev.files.partition(f => buckets(f.part))
+    // per-bucket EXACT output sizing from the manifest's byte counts (an
+    // unsized repartition(bucket) put a bucket's whole postings in ONE
+    // task); a stop-word's bucket gets proportionally more files
+    val bytes = redo.groupMapReduce(_.part)(_.bytes)(_ + _)
+    val written = if (redo.isEmpty) Nil else
+      JobDesc(spark.sparkContext, s"bm25:$verb:postings") {
+        log.write(prev.version + 1, sizedByBucket(
+            withBucket(readPostings(spark, dir, meta.schema, redo)
+              .dropDuplicates("term", "doc_id"), meta.nBuckets),
+            Array.tabulate(meta.nBuckets)(b => Maint.sizedFileCount(
+              bytes.getOrElse(b, 0L), targetBytesPerFile).toLong)),
+          "bucket")
+      }
+    // the stats partials fold to one exact row (distinct first —
+    // replayed appends wrote identical partials)
+    val d = meta.stats.distinct
+    if (redo.nonEmpty || foldDue)
+      log.commit(verb, Some(prev), meta.copy(stats = if (!foldDue)
+          meta.stats else Seq((d.map(_._1).min, d.map(_._2).sum,
+          d.map(_._3).sum))).header, keep ++ written)
+    buckets.toSeq.sorted
+  }
+
+  /** The listed postings files, read with the manifest's schema — no
+    * schema-inference job, and no listing beyond the files named. */
+  private def readPostings(spark: org.apache.spark.sql.SparkSession,
+      dir: String, schema: StructType, files: Seq[DataFile]): DataFrame =
+    spark.read.schema(schema).parquet(files.map(f => s"$dir/${f.path}"): _*)
+
+  /** Posting rows plus their term's bucket. */
+  private def withBucket(rows: DataFrame, nBuckets: Int): DataFrame =
+    rows.withColumn("bucket",
+      pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
 
   /** Cluster posting rows into per-bucket sized write slots: terms
     * hash into `filesPerBucket(bucket)` salt slots within their
@@ -697,7 +587,6 @@ object Search {
     * the toy shape. */
   private def estimatedFilesPerBucket(docs: DataFrame, nBuckets: Int,
       targetBytesPerFile: Long): Array[Long] = {
-    import org.apache.hadoop.fs.Path
     val bytes =
       try {
         val conf = docs.sparkSession.sparkContext.hadoopConfiguration
@@ -706,7 +595,7 @@ object Search {
           p.getFileSystem(conf).getFileStatus(p).getLen
         }.sum
       } catch { case scala.util.control.NonFatal(_) => 0L }
-    Array.fill(nBuckets)(graft.util.Maint.sizedFileCount(
+    Array.fill(nBuckets)(Maint.sizedFileCount(
       bytes / math.max(nBuckets, 1), targetBytesPerFile).toLong)
   }
 
@@ -722,19 +611,6 @@ object Search {
       .hash(org.apache.spark.unsafe.types.UTF8String.fromString(term),
         org.apache.spark.sql.types.StringType, 42L)
     java.lang.Math.floorMod(h, nBuckets.toLong)
-  }
-
-  /** The stored bucket count off `dir/meta`, fingerprint-cached
-    * ([[graft.util.ControlCache]]): a frozen layout constant that
-    * otherwise costs a one-row Spark job per serve/append. */
-  private def storedNBuckets(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val meta = new Path(new Path(dir), "meta")
-    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.util.ControlCache.cached(fs, meta) {
-      spark.read.parquet(meta.toString).head().getInt(0)
-    }
   }
 
   /** One mergeable stats partial: doc count, total token length, and

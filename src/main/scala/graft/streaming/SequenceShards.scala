@@ -96,7 +96,7 @@ object SequenceShards {
     val trashRoot = new Path(root, ".swap_old")
     val tmp = new Path(root, ".shards_tmp")
     // the packing contract is STORE STATE, not a per-call argument
-    // (the writeBm25Index meta discipline / the frozen-quantizer
+    // (the writeBm25Index stored-nBuckets discipline / the frozen-quantizer
     // rule): a drifted nBuckets would route ids to lanes that
     // disagree with the stored `lane` values — the rebuild's filter
     // and packSequences' re-derivation would silently diverge — a

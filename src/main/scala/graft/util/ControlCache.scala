@@ -2,28 +2,29 @@ package graft.util
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Per-JVM cache for CONTROL-PLANE layout tables (an index's `meta`
-  * row, an IVF quantizer's centroids) keyed on the table directory's
-  * file fingerprint — name:length:mtime of every data file, so ANY
-  * rewrite (parquet part names are UUIDs; maintenance flips rename
-  * whole dirs full of fresh parts) misses the cache and reloads from
+/** Per-JVM cache for CONTROL-PLANE layout tables (an index's newest
+  * manifest, an IVF quantizer's centroids) keyed on the table
+  * directory's file fingerprint — name:length:mtime of every data
+  * file, so ANY rewrite (a commit adds the next manifest version;
+  * parquet part names are UUIDs) misses the cache and reloads from
   * storage. This turns the per-serve / per-append one-row
   * `spark.read.parquet(...).head()` control reads — each a full Spark
   * job (~50-150 ms of scheduler latency on a busy driver) — into one
   * `listStatus` round trip, without ever caching past a write.
   *
   * What this is NOT: a result cache. Values cached here are layout
-  * constants (bucket counts, quantizer weights) that the single-writer
-  * maintenance contract already freezes between rewrites; every fresh
-  * JVM reloads them from the parquet bytes, and a rewrite in THIS JVM
-  * invalidates by fingerprint, not by writer cooperation. Query
-  * results never pass through here.
+  * constants (bucket counts, file lists, quantizer weights) that the
+  * single-writer maintenance contract already freezes between
+  * rewrites; every fresh JVM reloads them from storage, and a rewrite
+  * in THIS JVM invalidates by fingerprint, not by writer cooperation.
+  * Query results never pass through here.
   *
   * Consistency bound: the fingerprint is read immediately before use,
   * so a cached value can only be stale if an EXTERNAL process
   * rewrites the control table in place with byte-identical file
   * names, lengths and mtimes — not a state any supported maintenance
-  * verb can produce (overwrites emit fresh UUID part names). */
+  * verb can produce (overwrites emit fresh UUID part names, commits
+  * a fresh manifest version). */
 object ControlCache {
 
   private val cache =

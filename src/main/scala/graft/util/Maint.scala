@@ -38,6 +38,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     [[healParked]] at entry + [[swapPartitionDir]] per partition
   *     with originals PARKED under a shared trash root until the
   *     verb's commit delete — never delete-then-rename.
+  *   - the BM25 index instead commits through [[ManifestLog]]'s
+  *     versioned manifest, whose crash points are [[step]]s too.
   */
 object Maint {
 
@@ -191,27 +193,6 @@ object Maint {
         o.getPath.getName)
       if (!fs.exists(live)) {
         fs.mkdirs(live.getParent)
-        if (!fs.rename(o.getPath, live))
-          throw new java.io.IOException(
-            s"$verb: heal ${o.getPath} -> $live")
-      }
-    }
-    step(verb, "heal-parked-restored")
-    fs.delete(trashRoot, true)
-    step(verb, "heal-parked-done")
-  }
-
-  /** [[healParked]] for a ONE-level partitioned layout (e.g. the
-    * sequence-shard `pack_bucket=<lane>` dirs): every dir directly
-    * under `trashRoot` is a parked original — restore it when its
-    * live counterpart is missing, then drop the park root. */
-  def healParkedFlat(fs: FileSystem, root: Path, trashRoot: Path,
-      verb: String): Unit = {
-    if (!fs.exists(trashRoot)) return
-    step(verb, "heal-parked-start")
-    for (o <- fs.listStatus(trashRoot) if o.isDirectory) {
-      val live = new Path(root, o.getPath.getName)
-      if (!fs.exists(live)) {
         if (!fs.rename(o.getPath, live))
           throw new java.io.IOException(
             s"$verb: heal ${o.getPath} -> $live")

@@ -38,16 +38,9 @@ object BucketFoldProbe {
       Search.appendToBm25Index(small, s"$base/bm25")
     }
     def bucketFiles(base: String): Map[Int, Int] = {
-      val live = new org.apache.hadoop.fs.Path(s"$base/bm25/postings")
-      val fs = live.getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(live).toSeq
-        .filter(d => d.isDirectory &&
-          d.getPath.getName.startsWith("bucket="))
-        .map(d => d.getPath.getName.stripPrefix("bucket=").toInt ->
-          fs.listStatus(d.getPath)
-            .count(f => f.isFile &&
-              f.getPath.getName.endsWith(".parquet"))).toMap
+      new graft.util.ManifestLog(new org.apache.hadoop.fs.Path(
+          s"$base/bm25"), spark.sparkContext.hadoopConfiguration, "postings")
+        .latest.get.files.groupBy(_.part).map { case (b, fs) => b -> fs.size }
     }
     val c0 = graft.util.ProbeGuard.canaryCpu(spark, cpus.toInt)
     // tree A: incremental fold (threshold 1 => only the appended

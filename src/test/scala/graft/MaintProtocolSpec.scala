@@ -65,7 +65,7 @@ class MaintProtocolSpec extends AnyFunSuite {
     * answer, a recording run to enumerate the steps this verb fires,
     * then one crash injection per step followed by a healing re-run
     * whose answer must equal the clean run's. */
-  private def crashMatrix(sc: Scenario): Unit = {
+  private def crashMatrix(sc: Scenario): Seq[String] = {
     val pristine = Files.createTempDirectory(s"maintpristine-${sc.verb}")
     sc.setup(pristine.toString)
     val clean = freshCopy(pristine)
@@ -73,14 +73,14 @@ class MaintProtocolSpec extends AnyFunSuite {
     val expected = sc.answer(clean)
     assert(expected.nonEmpty, s"${sc.verb}: empty expected answer — " +
       "the scenario exercises nothing")
-    // enumerate the steps a clean run fires (first occurrence each)
-    val points = scala.collection.mutable.LinkedHashSet[String]()
-    Maint.crashHook = (v, p) => if (v == sc.verb) { points += p; () }
+    // enumerate the steps a clean run fires
+    val fired = scala.collection.mutable.ArrayBuffer[String]()
+    Maint.crashHook = (v, p) => if (v == sc.verb) { fired += p; () }
     try sc.run(freshCopy(pristine))
     finally Maint.crashHook = (_, _) => ()
-    assert(points.nonEmpty,
+    assert(fired.nonEmpty,
       s"${sc.verb} fired no Maint steps — not routed through the helper")
-    for (point <- points) {
+    for (point <- fired.distinct) {
       val dir = freshCopy(pristine)
       Maint.crashHook = (v, p) =>
         if (v == sc.verb && p == point) throw CrashInjected(v, p)
@@ -92,6 +92,7 @@ class MaintProtocolSpec extends AnyFunSuite {
       assert(sc.answer(dir) == expected,
         s"${sc.verb}: answers diverged after crash at '$point' + re-run")
     }
+    fired.toSeq
   }
 
   /** The heal-path crash matrix: start every injection run from the
@@ -334,111 +335,84 @@ class MaintProtocolSpec extends AnyFunSuite {
 
   // ---- persisted BM25 index ---------------------------------------------
 
+  private def bm25Docs = Seq((0L, "spark runs fast"),
+    (1L, "spark and flink"), (2L, "ducks swim in ponds"),
+    (3L, "spark flink stream")).toDF("doc_id", "text")
+
   private def bm25Setup(base: String): Unit = {
-    val docs = Seq((0L, "spark runs fast"), (1L, "spark and flink"),
-      (2L, "ducks swim in ponds"), (3L, "spark flink stream"))
-      .toDF("doc_id", "text")
     graft.pipeline.Search.writeBm25Index(
-      docs.where(col("doc_id") < 2), s"$base/bm25", nBuckets = 4)
+      bm25Docs.where(col("doc_id") < 2), s"$base/bm25", nBuckets = 4)
     graft.pipeline.Search.appendToBm25Index(
-      docs.where(col("doc_id") >= 2), s"$base/bm25")
+      bm25Docs.where(col("doc_id") >= 2), s"$base/bm25")
   }
 
   /** answer face: the served ranking itself (exact rows after the
-    * serve's own duplicate heal) plus the folded stats totals. */
-  private def bm25Answer(base: String): Seq[String] =
+    * serve's own duplicate heal) plus the normalizer totals over the
+    * manifest's distinct stats partials. */
+  private def bm25Answer(base: String): Seq[String] = {
+    val m = new graft.util.ManifestLog(
+      new org.apache.hadoop.fs.Path(s"$base/bm25"),
+      spark.sparkContext.hadoopConfiguration, "postings").latest.get
+    val parts = m.header.filter(_.head == "stats").distinct
     sortedRows(graft.pipeline.Search.bm25TopKBatchFromIndex(spark,
-      s"$base/bm25", Seq((1L, "spark flink"), (2L, "ducks")), k = 5)) ++
-      sortedRows(spark.read.parquet(s"$base/bm25/stats").distinct()
-        .agg(sum(col("n")).as("n"), sum(col("sumdl")).as("sumdl")))
+      s"$base/bm25", Seq((1L, "spark flink"), (2L, "ducks")), k = 5)) :+
+      s"n=${parts.map(_(2).toLong).sum} sumdl=${parts.map(_(3).toLong).sum}"
+  }
+
+  /** A BM25 verb's crash matrix: every point re-runs to the clean
+    * answers, and a clean run passes its one commit point once. */
+  private def bm25Matrix(verb: String, setup: String => Unit,
+      run: String => Unit): Seq[String] = {
+    val fired = crashMatrix(Scenario(verb, setup, run, bm25Answer))
+    assert(fired.count(_ == "committed") == 1, fired)
+    fired
+  }
 
   test("compactBm25Index (postings flip): crash at every step heals " +
       "on re-run") {
-    crashMatrix(Scenario("compactBm25Postings", bm25Setup,
-      b => graft.pipeline.Search.compactBm25Index(spark, s"$b/bm25"),
-      bm25Answer))
+    bm25Matrix("compactBm25Index", bm25Setup,
+      b => graft.pipeline.Search.compactBm25Index(spark, s"$b/bm25"))
   }
 
   test("compactBm25Index (stats fold): crash at every step heals " +
       "on re-run") {
-    crashMatrix(Scenario("compactBm25Stats", bm25Setup,
-      b => graft.pipeline.Search.compactBm25Index(spark, s"$b/bm25"),
-      bm25Answer))
+    // a replayed append: duplicate postings and a duplicate stats
+    // partial, both collapsed by the fold
+    bm25Matrix("compactBm25Index",
+      b => {
+        bm25Setup(b)
+        graft.pipeline.Search.appendToBm25Index(
+          bm25Docs.where(col("doc_id") >= 2), s"$b/bm25")
+      },
+      b => graft.pipeline.Search.compactBm25Index(spark, s"$b/bm25"))
   }
 
-  test("compactBm25Buckets (incremental per-bucket fold): crash at " +
-      "every step heals on re-run — including mid bucket-swap, where " +
-      "the append AND serve faces restore the parked bucket first") {
-    // maxPartFiles = 1 so the build+append state (2 files/bucket)
-    // folds; a crash between park and promote leaves a bucket absent,
-    // which every face must heal before touching the tree
-    crashMatrix(Scenario("compactBm25Buckets", bm25Setup,
+  test("compactBm25Buckets with the stats fold due: a crash at every " +
+      "point heals on re-running the verb, then serves the clean " +
+      "answers") {
+    // two stats partials (build + append) and maxPartFiles = 1: the
+    // run folds the touched buckets AND the stats in one commit
+    val fired = bm25Matrix("compactBm25Buckets", bm25Setup,
       b => graft.pipeline.Search.compactBm25Buckets(spark, s"$b/bm25",
-        maxPartFiles = 1),
-      bm25Answer))
+        maxPartFiles = 1))
+    // the crash between the data write and the commit is enumerated
+    assert(fired.contains("written") &&
+      fired.indexOf("written") < fired.indexOf("committed"), fired)
   }
 
-  test("compactBm25Buckets heal path: a parked bucket (mid-swap crash " +
-      "state) restores at the verb's entry, with crashes DURING the " +
-      "heal also recovering") {
-    healCrashMatrix(
-      Scenario("compactBm25Buckets", bm25Setup,
-        b => graft.pipeline.Search.compactBm25Buckets(spark, s"$b/bm25",
-          maxPartFiles = 1),
-        bm25Answer),
-      park = { b =>
-        // simulate the crash window inside one bucket's swap: the
-        // live dir renamed into the trash sibling, promote not done
-        import org.apache.hadoop.fs.Path
-        val fs = new Path(b).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val live = new Path(s"$b/bm25/postings")
-        val parked = fs.listStatus(live)
-          .filter(d => d.isDirectory &&
-            d.getPath.getName.startsWith("bucket=")).head.getPath
-        val trash = new Path(s"$b/bm25/.postings-bswap")
-        fs.mkdirs(trash)
-        assert(fs.rename(parked, new Path(trash, parked.getName)))
-      })
+  test("appendToBm25Index: crash at every step heals on replaying " +
+      "the append") {
+    bm25Matrix("appendToBm25Index", bm25Setup,
+      b => graft.pipeline.Search.appendToBm25Index(
+        Seq((9L, "spark spark ducks")).toDF("doc_id", "text"),
+        s"$b/bm25"))
   }
 
-  test("a crashed compactBm25Buckets swap can never serve fewer " +
-      "postings or lose the parked bucket to a later append: both " +
-      "faces heal it at entry") {
-    import org.apache.hadoop.fs.Path
-    val base = java.nio.file.Files
-      .createTempDirectory("bswap-faces").toString
-    bm25Setup(base)
-    val expected = bm25Answer(base)
-    def park(): Unit = {
-      val fs = new Path(base).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      val live = new Path(s"$base/bm25/postings")
-      val parked = fs.listStatus(live)
-        .filter(d => d.isDirectory &&
-          d.getPath.getName.startsWith("bucket=")).head.getPath
-      val trash = new Path(s"$base/bm25/.postings-bswap")
-      fs.mkdirs(trash)
-      assert(fs.rename(parked, new Path(trash, parked.getName)))
-    }
-    // serve face: heals, answer identical to the pre-crash state
-    park()
-    assert(bm25Answer(base) == expected)
-    // append face: heals BEFORE writing, so the parked history
-    // survives — the final state must equal a clean (never-crashed)
-    // twin that took the same build + appends
-    park()
-    graft.pipeline.Search.appendToBm25Index(
-      Seq((9L, "spark spark spark")).toDF("doc_id", "text"),
-      s"$base/bm25")
-    val served = bm25Answer(base)
-    val twin = java.nio.file.Files
-      .createTempDirectory("bswap-twin").toString
-    bm25Setup(twin)
-    graft.pipeline.Search.appendToBm25Index(
-      Seq((9L, "spark spark spark")).toDF("doc_id", "text"),
-      s"$twin/bm25")
-    assert(served == bm25Answer(twin), served.mkString("\n"))
+  test("writeBm25Index over an index: crash at every step heals on " +
+      "re-run") {
+    bm25Matrix("writeBm25Index", bm25Setup,
+      b => graft.pipeline.Search.writeBm25Index(
+        bm25Docs.where(col("doc_id") =!= 2L), s"$b/bm25", nBuckets = 3))
   }
 
   // ---- incremental sequence shards (docs overwrite + lane swap) ---------

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
@@ -179,6 +181,21 @@ class SearchSpec extends AnyFunSuite {
 
   private val queries = Seq((1L, "spark flink"), (2L, "ducks engine"))
 
+  /** The index's live manifest. */
+  private def manifest(dir: String): graft.util.Manifest =
+    new graft.util.ManifestLog(new org.apache.hadoop.fs.Path(dir),
+      spark.sparkContext.hadoopConfiguration, "postings").latest.get
+
+  /** The rows of the listed postings files (of `buckets`, default all). */
+  private def storedPostings(dir: String,
+      buckets: Int => Boolean = _ => true) =
+    spark.read.parquet(manifest(dir).files.filter(f => buckets(f.part))
+      .map(f => s"$dir/${f.path}"): _*)
+
+  /** Listed files per bucket. */
+  private def bucketFiles(dir: String): Map[Int, Seq[graft.util.DataFile]] =
+    manifest(dir).files.groupBy(_.part)
+
   test("stored-index serve equals inline BM25 at every k") {
     val dir = tmpIdx()
     Search.writeBm25Index(docs, dir, nBuckets = 4)
@@ -212,9 +229,9 @@ class SearchSpec extends AnyFunSuite {
     // fold to one row) and answers are unchanged
     Search.compactBm25Index(spark, dir)
     assert(serve(dir, queries, 5) == want, "post-compact serve")
-    assert(spark.read.parquet(s"$dir/stats").count() == 1L,
+    assert(manifest(dir).header.count(_.head == "stats") == 1,
       "stats partials fold to one exact row")
-    val posts = spark.read.parquet(s"$dir/postings")
+    val posts = storedPostings(dir)
     assert(posts.count() ==
       posts.dropDuplicates("term", "doc_id").count(),
       "compaction removed the replayed duplicates")
@@ -224,55 +241,18 @@ class SearchSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException] {
       Search.compactBm25Index(spark, s"$dir/definitely-missing")
     }
-    assert(e.getMessage.contains("no postings tree"))
-  }
-
-  test("append face guards the mid-swap state: a crashed compact's " +
-      "parked postings/stats restore at the append's entry (never an " +
-      "empty recreated tree), an orphan tmp fails loudly, and a " +
-      "typo'd dir never creates trees") {
-    val dir = tmpIdx()
-    val evens = docs.where(col("doc_id") % 2 === 0)
-    val odds = docs.where(col("doc_id") % 2 === 1)
-    Search.writeBm25Index(evens, dir, nBuckets = 4)
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"$dir/$s")
-    // crashed compact mid-flip: postings parked in trash, live
-    // absent — an unguarded append would recreate an empty postings
-    // tree holding only this batch (df/idf silently wrong) and the
-    // next compact's cleanSiblings would delete the parked history
-    assert(fs.rename(p("postings"), p(".postings-trash")))
-    Search.appendToBm25Index(odds, dir)
-    assert(fs.exists(p("postings")) && !fs.exists(p(".postings-trash")),
-      "append entry must restore the parked postings")
-    assert(serve(dir, queries, 5) == inline(queries, 5),
-      "healed + appended index must serve the full corpus")
-    // the stats sidecar carries the same guard (the replayed odds
-    // append below is healed by serve-side dedup, per contract)
-    assert(fs.rename(p("stats"), p(".stats-trash")))
-    Search.appendToBm25Index(odds, dir)
-    assert(fs.exists(p("stats")) && !fs.exists(p(".stats-trash")),
-      "append entry must restore the parked stats")
-    assert(serve(dir, queries, 5) == inline(queries, 5))
-    // orphan tmp (no live, no trash) is external interference: loud
-    assert(fs.rename(p("postings"), p(".postings-compact")))
-    intercept[java.io.IOException] {
-      Search.appendToBm25Index(odds, dir)
-    }
-    assert(fs.rename(p(".postings-compact"), p("postings")))
-    // a truly absent layout fails loudly instead of creating trees
-    val e = intercept[IllegalArgumentException] {
+    assert(e.getMessage.contains("not a writeBm25Index layout"))
+    // an append to a typo'd dir fails the same way and creates nothing
+    intercept[IllegalArgumentException] {
       Search.appendToBm25Index(odds, s"$dir-definitely-missing")
     }
-    assert(e.getMessage.contains("no postings tree"))
+    assert(!new java.io.File(s"$dir-definitely-missing").exists())
   }
 
   test("postings folds are file-size-aware: compact emits " +
       "~ceil(bucketBytes/target) files per bucket (bounded write " +
       "tasks, never one task per bucket), the fresh build sizes from " +
       "corpus bytes, and answers are unchanged") {
-    import org.apache.hadoop.fs.Path
     val base = tmpIdx()
     val corpusDir = s"$base-corpus"
     docs.write.parquet(corpusDir)
@@ -282,30 +262,24 @@ class SearchSpec extends AnyFunSuite {
     // estimated per-bucket split engage (corpus bytes >> target)
     Search.writeBm25Index(stored, dir, nBuckets = 4,
       targetBytesPerFile = 64L)
-    def bucketFiles(): Map[Int, Int] = {
-      val root = new java.io.File(s"$dir/postings")
-      root.listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-        .map(d => d.getName.stripPrefix("bucket=").toInt ->
-          d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
-    }
-    val fresh = bucketFiles()
+    def fileCounts(): Map[Int, Int] =
+      bucketFiles(dir).map { case (b, fs) => b -> fs.size }
+    val fresh = fileCounts()
     assert(fresh.values.max >= 2,
       s"fresh build never split a bucket: $fresh")
     val want = serve(dir, queries, 5)
     assert(want == inline(queries, 5))
-    // compact: EXACT per-bucket sizing from the live dirs' bytes —
+    // compact: EXACT per-bucket sizing from the listed files' bytes —
     // every bucket's file count stays within its sizedFileCount cap
     // and at least one bucket genuinely splits at this target
-    val fs = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val preBytes = fs.listStatus(new Path(s"$dir/postings"))
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("bucket="))
-      .map(s => s.getPath.getName.stripPrefix("bucket=").toInt ->
-        graft.util.Maint.parquetBytes(fs, Seq(s.getPath))).toMap
+    val preBytes = bucketFiles(dir).map { case (b, fs) =>
+      b -> fs.map(_.bytes).sum }
+    // the manifest's byte counts are the files' on-disk lengths
+    bucketFiles(dir).values.flatten.foreach { f =>
+      assert(new java.io.File(s"$dir/${f.path}").length == f.bytes, f)
+    }
     Search.compactBm25Index(spark, dir, targetBytesPerFile = 512L)
-    val post = bucketFiles()
+    val post = fileCounts()
     post.foreach { case (b, n) =>
       val cap = graft.util.Maint.sizedFileCount(preBytes(b), 512L)
       assert(n >= 1 && n <= cap,
@@ -370,12 +344,17 @@ class SearchSpec extends AnyFunSuite {
     assert(scans.nonEmpty, plan)
     assert(scans.forall(l => l.contains("/postings")
       || l.contains("/stats")), plan)
-    // the bucket prune reaches the partition filters and the term-IN
-    // predicate is pushed into the postings scan
+    // the scan reads only the listed files of the query's buckets, and
+    // the term-IN predicate is pushed into it
     val postScan = scans.filter(_.contains("/postings"))
-    assert(postScan.exists(_.contains("PartitionFilters: [bucket")
-      ), plan)
-    assert(postScan.exists(_.contains("term")), plan)
+    assert(postScan.exists(_.contains("PushedFilters: [In(term")), plan)
+    val b = Search.bucketOfTerm("ducks", 4).toInt
+    val read = Search.bm25TopKBatchFromIndex(spark, dir,
+      Seq((1L, "ducks")), 3).inputFiles.toSet
+    val want = bucketFiles(dir)(b)
+      .map(f => new java.io.File(s"$dir/${f.path}").toURI.getPath).toSet
+    assert(want.size < manifest(dir).files.size)
+    assert(read.map(f => new java.net.URI(f).getPath) == want, read)
   }
 
   test("scale shape: the serve plan scans the postings tree ONCE and " +
@@ -401,22 +380,15 @@ class SearchSpec extends AnyFunSuite {
   test("compactBm25Buckets folds ONLY over-threshold buckets — " +
       "untouched bucket dirs keep their exact files — and serving " +
       "equals inline before and after, duplicates healed") {
-    import org.apache.hadoop.fs.Path
     val dir = tmpIdx()
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     Search.writeBm25Index(docs.where(col("doc_id") < 2), dir,
       nBuckets = 4)
     val append = docs.where(col("doc_id") >= 2)
     Search.appendToBm25Index(append, dir)
     Search.appendToBm25Index(append, dir) // replayed duplicate
     def files(): Map[String, Set[String]] =
-      fs.listStatus(new Path(s"$dir/postings")).toSeq
-        .filter(d => d.isDirectory &&
-          d.getPath.getName.startsWith("bucket="))
-        .map(d => d.getPath.getName -> fs.listStatus(d.getPath).toSeq
-          .map(_.getPath.getName)
-          .filter(n => n.endsWith(".parquet")).toSet).toMap
+      bucketFiles(dir).map { case (b, fs) =>
+        s"bucket=$b" -> fs.map(_.path).toSet }
     val before = files()
     // threshold 2: only buckets the appends actually touched (3
     // files: build + 2 appends) fold; build-only buckets (1 file)
@@ -436,8 +408,7 @@ class SearchSpec extends AnyFunSuite {
     // duplicates are GONE from the folded buckets' stored rows (an
     // append-only bucket below threshold legitimately keeps its
     // replay duplicates until IT crosses — serve heals them)
-    val foldedRows = spark.read.parquet(s"$dir/postings")
-      .where(col("bucket").isin(folded.map(b => b: Any): _*))
+    val foldedRows = storedPostings(dir, folded.toSet)
     assert(foldedRows.count() ==
       foldedRows.dropDuplicates("term", "doc_id").count())
     // serve ≡ inline at every k (the replay healed at the fold)
@@ -448,6 +419,125 @@ class SearchSpec extends AnyFunSuite {
     assert(Search.compactBm25Buckets(spark, dir,
       maxPartFiles = 2).isEmpty)
     assert(files() == after)
+  }
+
+  /** Every file and directory under `dir` with its length. */
+  private def listing(dir: String): Seq[(String, Long)] = {
+    val root = java.nio.file.Paths.get(dir)
+    val s = java.nio.file.Files.walk(root)
+    try s.iterator().asScala.toSeq.map(p =>
+        root.relativize(p).toString -> p.toFile.length).sorted
+    finally s.close()
+  }
+
+  /** Run `verb` with a crash injected at protocol point `point`. */
+  private def crashAt(verb: String, point: String)(run: => Unit): Unit = {
+    val boom = new RuntimeException(s"injected crash: $verb@$point")
+    graft.util.Maint.crashHook = (v, p) =>
+      if (v == verb && p == point) throw boom
+    try assert(intercept[RuntimeException](run) eq boom)
+    finally graft.util.Maint.crashHook = (_, _) => ()
+  }
+
+  /** No file outside the live manifest's list, one manifest left. */
+  private def onlyLive(dir: String): Unit = {
+    val live = manifest(dir).files.map(_.path).toSet
+    val parquet = listing(dir).map(_._1)
+      .filter(p => p.endsWith(".parquet") && !p.split('/').last
+        .startsWith("."))
+    assert(parquet.toSet == live, parquet)
+    assert(new java.io.File(s"$dir/_manifest").list()
+      .count(_.forall(_.isDigit)) == 1)
+  }
+
+  test("serving never mutates the index: each state a crash can leave " +
+      "serves the clean answers with the directory listing unchanged, " +
+      "and the next verb removes the leftovers") {
+    val evens = docs.where(col("doc_id") % 2 === 0)
+    val odds = docs.where(col("doc_id") % 2 === 1)
+    val want = inline(queries, 5)
+    // an uncommitted write directory holding extra postings: an
+    // append of a new doc crashed between its data write and commit
+    val dir = tmpIdx()
+    Search.writeBm25Index(evens, dir, nBuckets = 4)
+    Search.appendToBm25Index(odds, dir)
+    val extra = Seq((7L, "spark flink ducks")).toDF("doc_id", "text")
+    crashAt("appendToBm25Index", "written") {
+      Search.appendToBm25Index(extra, dir)
+    }
+    assert(new java.io.File(s"$dir/postings/v=3").isDirectory)
+    val before = listing(dir)
+    assert(serve(dir, queries, 5) == want)
+    assert(listing(dir) == before, "the serve changed the directory")
+    Search.compactBm25Index(spark, dir)
+    onlyLive(dir)
+    assert(serve(dir, queries, 5) == want)
+    // a committed manifest next to its undeleted predecessor and the
+    // files only the predecessor lists: a compact crashed after commit
+    val dir2 = tmpIdx()
+    Search.writeBm25Index(evens, dir2, nBuckets = 4)
+    Search.appendToBm25Index(odds, dir2)
+    val superseded = manifest(dir2).files
+    crashAt("compactBm25Index", "committed") {
+      Search.compactBm25Index(spark, dir2)
+    }
+    assert(new java.io.File(s"$dir2/_manifest").list()
+      .count(_.forall(_.isDigit)) == 2)
+    assert(superseded.forall(f =>
+      new java.io.File(s"$dir2/${f.path}").exists))
+    val before2 = listing(dir2)
+    assert(serve(dir2, queries, 5) == want)
+    assert(listing(dir2) == before2, "the serve changed the directory")
+    Search.appendToBm25Index(extra, dir2)
+    onlyLive(dir2)
+    assert(superseded.forall(f =>
+      !new java.io.File(s"$dir2/${f.path}").exists))
+    assert(serve(dir2, queries, 5) == Search.bm25TopKBatch(
+      docs.union(extra), queries, 5).collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("serve job budget on a 64-bucket index: a warm serve launches no " +
+      "leaf-listing job, and the first serve after an append launches " +
+      "no more jobs than a warm one") {
+    // ~200 distinct terms: postings in more buckets than Spark's
+    // parallel-listing threshold (32 paths)
+    val wide = (0 until 100).map(i => (i.toLong, s"w$i w${i + 100} spark"))
+      .toDF("doc_id", "text")
+    val qs = Seq((1L, "spark w3"), (2L, "w150"))
+    val dir = tmpIdx()
+    Search.writeBm25Index(wide.where(col("doc_id") < 60), dir)
+    assert(bucketFiles(dir).size > 32)
+    def serveJobs() = JobLog.record(spark.sparkContext) {
+      Search.bm25TopKBatchFromIndex(spark, dir, qs, 5).collect()
+    }._2
+    serveJobs()
+    val warm = serveJobs()
+    assert(warm.nonEmpty)
+    assert(!warm.exists(_.desc.startsWith("Listing leaf files")),
+      warm.map(_.desc))
+    Search.appendToBm25Index(wide.where(col("doc_id") >= 60), dir)
+    val first = serveJobs()
+    assert(first.size <= warm.size,
+      s"first ${first.map(_.desc)} vs warm ${warm.map(_.desc)}")
+    assert(serve(dir, qs, 5) == Search.bm25TopKBatch(wide, qs, 5)
+      .collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("every Spark job the append and the bucket fold launch names " +
+      "its verb and step") {
+    val dir = tmpIdx()
+    Search.writeBm25Index(docs.where(col("doc_id") < 2), dir, nBuckets = 4)
+    val (_, appendJobs) = JobLog.record(spark.sparkContext) {
+      Search.appendToBm25Index(docs.where(col("doc_id") >= 2), dir)
+    }
+    val (folded, foldJobs) = JobLog.record(spark.sparkContext) {
+      Search.compactBm25Buckets(spark, dir, maxPartFiles = 1)
+    }
+    assert(folded.nonEmpty && appendJobs.nonEmpty && foldJobs.nonEmpty)
+    assert(appendJobs.forall(_.desc.startsWith("bm25:appendToBm25Index:")),
+      appendJobs.map(_.desc))
+    assert(foldJobs.forall(_.desc.startsWith("bm25:compactBm25Buckets:")),
+      foldJobs.map(_.desc))
   }
 
   test("driver-side bucketOfTerm equals the engine's " +
