@@ -1176,7 +1176,7 @@ object SparkEntry {
     // the INCREMENTAL shard store under the oracle: three hash-split
     // batches of the corpus stream through SequenceShards.appendBatch
     // (version-partitioned docs sidecar, only touched lanes rebuild,
-    // Maint park-protocol swaps) and the resulting store must equal
+    // one manifest commit per append) and the resulting store must equal
     // the batch packSequences over the whole corpus — which is what
     // the oracle recomputes from raw text, blind to the batching.
     // Ids are a deterministic md5 token encoding (the cross-engine
@@ -1222,8 +1222,8 @@ object SparkEntry {
     // SERVE-ONLY worker slice of the epoch read — the distributed-
     // dataloader sharding face: worker 1 of 3 owns the lanes at
     // 0-based visit positions ≡ 1 (mod 3) of the epoch permutation
-    // (1-based lane_ord 2, 5, 8), its lane dirs are enumerated
-    // driver-side and read explicitly under the store basePath, so
+    // (1-based lane_ord 2, 5, 8), its lanes' files are picked from
+    // the store manifest and read under the store basePath, so
     // each worker LISTS and reads only its own ~1/W of the store
     // (the 100 TB read path: W workers split the store with zero
     // coordination). Stamps are identical to t_shards_read's — the

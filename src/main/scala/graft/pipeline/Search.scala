@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.util.{DataFile, JobDesc, Maint, Manifest, ManifestLog}
 
@@ -307,7 +307,7 @@ object Search {
     *     (batch_fp, n, sumdl) per build/append; the serve sums their
     *     `distinct`, so a replayed identical append's partial collapses
     *     (batch_fp is a deterministic content fingerprint).
-    *   - `dir/postings/v=<v>/bucket=<b>/`: (term, doc_id, dl, tf) files
+    *   - `dir/postings/bucket=<b>/v=<v>/`: (term, doc_id, dl, tf) files
     *     that version v wrote, bucket = hash(term) mod nBuckets, sorted
     *     by term within files — a query's terms map to the listed files
     *     of their buckets (the IVF cell-prune shape) and the pushed
@@ -363,7 +363,7 @@ object Search {
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
       dir: String, targetBytesPerFile: Long = 128L << 20): Unit =
     fold(spark, dir, "compactBm25Index", targetBytesPerFile)(
-      (files, _) => (files.map(_.part).toSet, true))
+      (files, _) => (files.map(bucketOf).toSet, true))
 
   /** INCREMENTAL postings fold — [[compactBm25Index]]'s cost is
     * O(index) per fold; this verb folds ONLY buckets whose file count
@@ -385,7 +385,7 @@ object Search {
       maxPartFiles: Int = 4): Seq[Int] = {
     require(maxPartFiles >= 1, s"maxPartFiles >= 1: $maxPartFiles")
     fold(spark, dir, "compactBm25Buckets", targetBytesPerFile) {
-      (files, meta) => (files.groupBy(_.part).collect {
+      (files, meta) => (files.groupBy(bucketOf).collect {
           case (b, fl) if fl.size > maxPartFiles => b }.toSet,
         meta.stats.size > maxPartFiles)
     }
@@ -415,7 +415,7 @@ object Search {
     val buckets = allTerms.map(t => bucketOfTerm(t, meta.nBuckets).toInt)
       .toSet
     val tf = readPostings(spark, dir, meta.schema,
-        m.files.filter(f => buckets(f.part)))
+        m.files.filter(f => buckets(bucketOf(f))))
       .where(col("term").isin(allTerms: _*))
       // one term-keyed exchange feeds BOTH the dedup below and
       // bm25Rank's df window (hashpartitioning(term) satisfies the
@@ -455,19 +455,18 @@ object Search {
   }
 
   private object Bm25Meta {
-    def apply(m: Manifest): Bm25Meta = {
-      def one(tag: String) = m.header.find(_.head == tag).get(1)
-      Bm25Meta(one("nbuckets").toInt,
-        DataType.fromJson(one("schema")).asInstanceOf[StructType],
+    def apply(m: Manifest): Bm25Meta =
+      Bm25Meta(m.line("nbuckets").head.toInt, m.schema("schema"),
         m.header.filter(_.head == "stats")
           .map(l => (l(1).toLong, l(2).toLong, l(3).toLong)))
-    }
   }
 
   private def manifestLog(spark: org.apache.spark.sql.SparkSession,
       dir: String) =
     new ManifestLog(new Path(dir), spark.sparkContext.hadoopConfiguration,
-      "postings")
+      Map("postings" -> Seq("bucket")))
+
+  private def bucketOf(f: DataFile): Int = f.part("bucket").toInt
 
   /** The committed manifest, or a loud failure: append, compact and
     * serve need an index (a typo'd dir must never become a fresh one). */
@@ -495,7 +494,7 @@ object Search {
       withBucket(postings(docs, None, idCol, textCol), nBuckets),
       estimatedFilesPerBucket(docs, nBuckets, targetBytesPerFile))
     val written = JobDesc(sc, s"bm25:$verb:postings") {
-      log.write(prev.fold(0L)(_.version) + 1, rows, "bucket")
+      log.write(prev.fold(0L)(_.version) + 1, "postings", rows)
     }
     log.commit(verb, prev,
       Bm25Meta(nBuckets, schema.getOrElse(rows.drop("bucket").schema),
@@ -513,19 +512,18 @@ object Search {
     val prev = committed(log.open(verb), verb, dir)
     val meta = Bm25Meta(prev)
     val (buckets, foldDue) = due(prev.files, meta)
-    val (redo, keep) = prev.files.partition(f => buckets(f.part))
+    val (redo, keep) = prev.files.partition(f => buckets(bucketOf(f)))
     // per-bucket EXACT output sizing from the manifest's byte counts (an
     // unsized repartition(bucket) put a bucket's whole postings in ONE
     // task); a stop-word's bucket gets proportionally more files
-    val bytes = redo.groupMapReduce(_.part)(_.bytes)(_ + _)
+    val bytes = redo.groupMapReduce(bucketOf)(_.bytes)(_ + _)
     val written = if (redo.isEmpty) Nil else
       JobDesc(spark.sparkContext, s"bm25:$verb:postings") {
-        log.write(prev.version + 1, sizedByBucket(
+        log.write(prev.version + 1, "postings", sizedByBucket(
             withBucket(readPostings(spark, dir, meta.schema, redo)
               .dropDuplicates("term", "doc_id"), meta.nBuckets),
             Array.tabulate(meta.nBuckets)(b => Maint.sizedFileCount(
-              bytes.getOrElse(b, 0L), targetBytesPerFile).toLong)),
-          "bucket")
+              bytes.getOrElse(b, 0L), targetBytesPerFile).toLong)))
       }
     // the stats partials fold to one exact row (distinct first —
     // replayed appends wrote identical partials)

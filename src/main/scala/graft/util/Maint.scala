@@ -38,8 +38,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     [[healParked]] at entry + [[swapPartitionDir]] per partition
   *     with originals PARKED under a shared trash root until the
   *     verb's commit delete — never delete-then-rename.
-  *   - the BM25 index instead commits through [[ManifestLog]]'s
-  *     versioned manifest, whose crash points are [[step]]s too.
+  *   - the BM25 index and the SequenceShards store instead commit
+  *     through [[ManifestLog]]'s versioned manifest (one commit point
+  *     per verb, reads never mutate), whose crash points are [[step]]s
+  *     too.
   */
 object Maint {
 
@@ -221,54 +223,5 @@ object Maint {
     if (fs.exists(fresh) && !fs.rename(fresh, live))
       throw new java.io.IOException(s"$verb: rename $fresh -> $live")
     step(verb, "partition-swapped")
-  }
-
-  /** Batched two-level partition swap: every `parent/child` dir under
-    * `tmpRoot` replaces its counterpart under `liveRoot`, originals
-    * parked under `trashRoot` (same protocol and step points as
-    * [[swapPartitionDir]] per dir). The batching is in the FILESYSTEM
-    * ROUND TRIPS, not the protocol: the live tree's child-dir sets are
-    * read in ONE listing pass up front (instead of exists+mkdirs per
-    * child — ~4 extra round trips per swapped dir on an object store,
-    * and a measurable driver tax per micro-batch even on local FS),
-    * and parent/park dirs are created once per parent. Crash windows
-    * are unchanged — any prefix of completed swaps is exactly a state
-    * [[healParked]] at the next entry restores. */
-  def swapPartitionDirsUnder(fs: FileSystem, liveRoot: Path,
-      tmpRoot: Path, trashRoot: Path, verb: String): Unit = {
-    fs.mkdirs(liveRoot)
-    // one pass over the live tree: parent -> present child names
-    val liveChildren: Map[String, Set[String]] =
-      fs.listStatus(liveRoot).toSeq
-        .filter(_.isDirectory)
-        .map { p =>
-          p.getPath.getName -> fs.listStatus(p.getPath).toSeq
-            .filter(_.isDirectory).map(_.getPath.getName).toSet
-        }.toMap
-    for (parentDir <- fs.listStatus(tmpRoot) if parentDir.isDirectory) {
-      val parentName = parentDir.getPath.getName
-      val livePar = new Path(liveRoot, parentName)
-      val keepPar = new Path(trashRoot, parentName)
-      val present = liveChildren.getOrElse(parentName, Set.empty[String])
-      if (!liveChildren.contains(parentName)) fs.mkdirs(livePar)
-      var keepMade = false
-      for (childDir <- fs.listStatus(parentDir.getPath)
-             if childDir.isDirectory) {
-        val childName = childDir.getPath.getName
-        val live = new Path(livePar, childName)
-        if (present(childName)) {
-          if (!keepMade) { fs.mkdirs(keepPar); keepMade = true }
-          val keep = new Path(keepPar, childName)
-          if (!fs.rename(live, keep))
-            throw new java.io.IOException(
-              s"$verb: rename $live -> $keep")
-          step(verb, "partition-parked")
-        }
-        if (!fs.rename(childDir.getPath, live))
-          throw new java.io.IOException(
-            s"$verb: rename ${childDir.getPath} -> $live")
-        step(verb, "partition-swapped")
-      }
-    }
   }
 }

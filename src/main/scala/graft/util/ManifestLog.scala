@@ -5,26 +5,50 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{DataType, StructType}
 
-/** A data file a manifest lists: path relative to the store root, its
-  * partition, its length in bytes. */
-final case class DataFile(path: String, part: Int, bytes: Long)
+/** A data file a manifest lists: path relative to the store root and
+  * its length in bytes. The path names the file's tree (its first
+  * segment) and its partition values (its `key=value` segments). */
+final case class DataFile(path: String, bytes: Long) {
+  def tree: String = path.takeWhile(_ != '/')
+
+  /** The value of partition `key` in this file's path. */
+  def part(key: String): Long = path.split('/')
+    .collectFirst { case s if s.startsWith(s"$key=") =>
+      s.substring(key.length + 1).toLong }
+    .getOrElse(throw new IllegalStateException(s"$path: no $key= directory"))
+}
 
 /** A committed manifest: version, the store's own header lines
   * (tab-separated fields; the first is a tag other than `file`), and
   * the live data files. */
 final case class Manifest(version: Long, header: Seq[Seq[String]],
-    files: Seq[DataFile])
+    files: Seq[DataFile]) {
+  /** The fields after the tag of the header line tagged `tag`. */
+  def line(tag: String): Seq[String] = header.find(_.head == tag)
+    .getOrElse(throw new IllegalStateException(
+      s"manifest $version has no $tag line")).tail
+
+  /** A schema the header stores as JSON under `tag`. */
+  def schema(tag: String): StructType =
+    DataType.fromJson(line(tag).head).asInstanceOf[StructType]
+
+  def filesOf(tree: String): Seq[DataFile] = files.filter(_.tree == tree)
+}
 
 /** The versioned-manifest commit protocol of the store at `root`
   * (after the file-sink metadata log of Structured Streaming and
   * dp3's versioned roots): writers add immutable files and commit by
   * creating the next manifest; readers read only the files the newest
-  * manifest lists. Layout: `_manifest/<v>` (the newest is live) and
-  * `<data>/v=<v>/...` (the files version `v` wrote).
+  * manifest lists. Layout: `_manifest/<v>` (the newest is live) and,
+  * per data tree, `<tree>/<k1>=../<kn>=../v=<v>/part-*.parquet` — the
+  * tree's partition directories, then innermost the version that wrote
+  * the files. `trees` maps each tree to its partition keys.
   *
   * A verb [[open]]s (resolve the newest manifest `v`, finish a crashed
-  * predecessor's clean, drop an uncommitted `v+1` write directory),
+  * predecessor's clean, drop the uncommitted `v=<v+1>` directories),
   * [[write]]s version `v+1`'s files, then [[commit]]s: the no-overwrite
   * create of `_manifest/<v+1>` is its ONE commit point, after which the
   * files only `v` listed, and manifest `v`, are deleted. Every crash
@@ -33,13 +57,22 @@ final case class Manifest(version: Long, header: Seq[Seq[String]],
   * ([[latest]]) only list and read. Single-writer: a racing writer
   * fails loudly at the create. The crash points are [[Maint.step]]s, so
   * MaintProtocolSpec's crash matrix enumerates them. */
-final class ManifestLog(root: Path, conf: Configuration, data: String) {
+final class ManifestLog(root: Path, conf: Configuration,
+    trees: Map[String, Seq[String]]) {
   private val fs = root.getFileSystem(conf)
   private val dir = new Path(root, "_manifest")
   private def at(v: Long) = new Path(dir, v.toString)
   private def staged(v: Long) = new Path(dir, s".$v.staged")
 
-  private def writeDir(v: Long) = new Path(root, s"$data/v=$v")
+  /** Version `v`'s write directories in `tree`, relative to the root:
+    * one listing per partition directory. */
+  private def writeDirs(tree: String, v: Long): Seq[String] =
+    if (!fs.exists(new Path(root, tree))) Nil
+    else trees(tree).foldLeft(Seq(tree)) { (ds, k) =>
+      ds.flatMap(d => fs.listStatus(new Path(root, d)).toSeq
+        .map(_.getPath.getName).filter(_.startsWith(s"$k="))
+        .map(n => s"$d/$n"))
+    }.map(d => s"$d/v=$v").filter(d => fs.exists(new Path(root, d)))
 
   private def versions: Seq[Long] =
     if (!fs.exists(dir)) Nil
@@ -51,8 +84,10 @@ final class ManifestLog(root: Path, conf: Configuration, data: String) {
     val lines = try new String(in.readAllBytes(), UTF_8) finally in.close()
     val (files, header) = lines.split('\n').toSeq.filter(_.nonEmpty)
       .map(_.split('\t').toSeq).partition(_.head == "file")
-    Manifest(v, header, files.map { case Seq(_, p, b, path) =>
-      DataFile(path, p.toInt, b.toLong) })
+    // a file line ends in (bytes, path); older lines carry a partition
+    // field before them
+    Manifest(v, header,
+      files.map(l => DataFile(l.last, l(l.length - 2).toLong)))
   }
 
   /** The newest committed manifest (None: never committed). Cached on
@@ -67,7 +102,10 @@ final class ManifestLog(root: Path, conf: Configuration, data: String) {
     val cur = latest
     val v = cur.fold(0L)(_.version)
     for (m <- cur; old <- versions if old < v) supersede(verb, read(old), m)
-    fs.delete(writeDir(v + 1), true)
+    trees.keys.foreach { t =>
+      drop(writeDirs(t, v + 1), cur.toSeq.flatMap(_.files))
+      fs.delete(new Path(root, s"$t/_temporary"), true)
+    }
     fs.delete(staged(v + 1), false)
     Maint.step(verb, "opened")
     cur
@@ -80,9 +118,9 @@ final class ManifestLog(root: Path, conf: Configuration, data: String) {
     Maint.step(verb, "written")
     val next = Manifest(prev.fold(0L)(_.version) + 1, header, files)
     val out = fs.create(staged(next.version), true)
-    try out.write((header ++ files.map(f => Seq("file", f.part.toString,
-        f.bytes.toString, f.path))).map(_.mkString("\t") + "\n").mkString
-      .getBytes(UTF_8))
+    try out.write((header ++ files.map(f =>
+        Seq("file", f.bytes.toString, f.path))).map(_.mkString("\t") + "\n")
+      .mkString.getBytes(UTF_8))
     finally out.close()
     Maint.step(verb, "staged")
     if (fs.exists(at(next.version)) ||
@@ -93,40 +131,43 @@ final class ManifestLog(root: Path, conf: Configuration, data: String) {
     prev.foreach(supersede(verb, _, next))
   }
 
-  /** Delete the files `old` lists and `live` does not, each at the
-    * coarsest directory holding no live file, then manifest `old`.
-    * Idempotent: a crash inside is finished by the next [[open]]. */
+  /** Delete the files `old` lists and `live` does not, then manifest
+    * `old`. Idempotent: a crash inside is finished by the next
+    * [[open]]. */
   private def supersede(verb: String, old: Manifest,
       live: Manifest): Unit = {
-    def dirs(p: String) = {
-      val parts = p.split('/')
-      (2 until parts.length).map(parts.take(_).mkString("/"))
-    }
     val keep = live.files.map(_.path).toSet
-    val liveDirs = keep.flatMap(dirs)
-    old.files.map(_.path).filterNot(keep)
-      .map(p => dirs(p).find(!liveDirs(_)).getOrElse(p)).distinct
-      .foreach(p => fs.delete(new Path(root, p), true))
+    drop(old.files.map(_.path).filterNot(keep), live.files)
     Maint.step(verb, "superseded")
     fs.delete(at(old.version), false)
     Maint.step(verb, "cleaned")
   }
 
-  /** Write `rows` as parquet partitioned by `partKey` into version
-    * `v`'s write directory; returns the files written. */
-  def write(v: Long, rows: DataFrame, partKey: String): Seq[DataFile] = {
-    rows.write.partitionBy(partKey).parquet(writeDir(v).toString)
-    val base = fs.makeQualified(root).toString + "/"
-    val it = fs.listFiles(writeDir(v), true)
-    val files = Seq.newBuilder[DataFile]
-    while (it.hasNext) {
-      val p = it.next()
-      val (name, parent) = (p.getPath.getName, p.getPath.getParent.getName)
-      if (name.endsWith(".parquet") && !name.startsWith(".") &&
-          parent.startsWith(s"$partKey="))
-        files += DataFile(p.getPath.toString.stripPrefix(base),
-          parent.stripPrefix(s"$partKey=").toInt, p.getLen)
+  /** Delete each of `paths` at the coarsest directory below its tree
+    * that holds no `live` file. */
+  private def drop(paths: Seq[String], live: Seq[DataFile]): Unit = {
+    def dirs(p: String) = {
+      val parts = p.split('/')
+      (2 to parts.length).map(parts.take(_).mkString("/"))
     }
-    files.result().sortBy(_.path)
+    val liveDirs = live.flatMap(f => dirs(f.path)).toSet
+    paths.map(p => dirs(p).find(!liveDirs(_)).getOrElse(p)).distinct
+      .foreach(p => fs.delete(new Path(root, p), true))
+  }
+
+  /** Write `rows` (carrying `tree`'s partition columns) as version `v`'s
+    * parquet files of `tree`; returns the files written. One write per
+    * tree and version. */
+  def write(v: Long, tree: String, rows: DataFrame): Seq[DataFile] = {
+    rows.withColumn("v", lit(v)).write.mode("append")
+      .partitionBy(trees(tree) :+ "v": _*)
+      .parquet(new Path(root, tree).toString)
+    writeDirs(tree, v).flatMap(d => fs.listStatus(new Path(root, d)).toSeq
+      .filter { s =>
+        val n = s.getPath.getName
+        n.endsWith(".parquet") && !n.startsWith(".")
+      }
+      .map(s => DataFile(s"$d/${s.getPath.getName}", s.getLen)))
+      .sortBy(_.path)
   }
 }

@@ -39,8 +39,10 @@ object BucketFoldProbe {
     }
     def bucketFiles(base: String): Map[Int, Int] = {
       new graft.util.ManifestLog(new org.apache.hadoop.fs.Path(
-          s"$base/bm25"), spark.sparkContext.hadoopConfiguration, "postings")
-        .latest.get.files.groupBy(_.part).map { case (b, fs) => b -> fs.size }
+          s"$base/bm25"), spark.sparkContext.hadoopConfiguration,
+          Map("postings" -> Seq("bucket")))
+        .latest.get.files.groupBy(_.part("bucket").toInt)
+        .map { case (b, fs) => b -> fs.size }
     }
     val c0 = graft.util.ProbeGuard.canaryCpu(spark, cpus.toInt)
     // tree A: incremental fold (threshold 1 => only the appended

@@ -71,10 +71,8 @@ object E2eProbe {
     // shard-writer leg: the big corpus's packed output lands as one
     // parquet shard per lane (the chain re-executes into the write —
     // total = chain + shard write, so the writer's own cost is the
-    // delta vs the timed chain above). Written under a store ROOT so
-    // the epoch-read leg below consumes it without a chain re-run.
-    val bigStore = s"/tmp/graft_e2e_shards_${System.nanoTime()}"
-    val shardDir = s"$bigStore/shards"
+    // delta vs the timed chain above).
+    val shardDir = s"/tmp/graft_e2e_shards_${System.nanoTime()}"
     val t0 = System.nanoTime()
     graft.export.Export.writeSequenceShards(fn(spark, big), shardDir)
     val wdt = (System.nanoTime() - t0) / 1e9
@@ -96,19 +94,24 @@ object E2eProbe {
     // readEpoch alone (stored shards + the within-lane epoch_pos
     // window + the row-local lane_ord stamp), forced through
     // Bench.forced so column pruning can never drop the window.
-    // Stores assemble untimed: meta carries the chain's packing
-    // contract (readEpoch consumes only n_buckets and salt).
-    import spark.implicits._
-    def writeMeta(root: String): Unit =
-      Seq((128, 8, 0L, "graft"))
-        .toDF("seq_len", "n_buckets", "eos_id", "salt")
-        .coalesce(1).write.parquet(s"$root/meta")
-    writeMeta(bigStore)
-    val refStore = s"/tmp/graft_e2e_shards_ref_${System.nanoTime()}"
-    graft.export.Export.writeSequenceShards(fn(spark, ref),
-      s"$refStore/shards")
-    writeMeta(refStore)
-    sweep()
+    // Stores assemble untimed, each through one appendBatch over the
+    // corpus (md5-derived token ids, seqLen 128, 8 lanes — the
+    // t_shards_read store shape).
+    def store(dir: String): String = {
+      val root = s"/tmp/graft_e2e_store_${System.nanoTime()}"
+      graft.streaming.SequenceShards.appendBatch(spark,
+        graft.model.Tables.load(spark, dir, "documents").select(
+          org.apache.spark.sql.functions.col("doc_id"),
+          graft.pipeline.TextOps.md5TokenIds(
+            org.apache.spark.sql.functions.col("text"), 997)
+            .as("bpe_ids")),
+        1L, root, seqLen = 128, nBuckets = 8, eosId = 997L)
+      sweep()
+      root
+    }
+    val refStore = store(ref)
+    val bigStore = store(big)
+    val nBig = graft.streaming.SequenceShards.read(spark, bigStore).count()
     def epochLeg(root: String): (Double, Double) =
       ProbeGuard.minOfThree(() => {
         val e0 = System.nanoTime()
@@ -124,9 +127,9 @@ object E2eProbe {
       f"  big: $beSec%.2f s (sp=$beSp%.2f)  ratio=${beSec / reSec}%.2f" +
       f"  canary=$cCpu2%.2f  load=${ProbeGuard.loadavg()}%.2f")
     // worker-slice leg (r20 continuation): one worker's 1/W of the
-    // same epoch off the big store — the slice scan partition-prunes
-    // to the worker's own lane dirs, so its cost should track its
-    // ROW SHARE of the full read, not the store size
+    // same epoch off the big store — the slice reads only the
+    // worker's own lanes' files, so its cost should track its ROW
+    // SHARE of the full read, not the store size
     val nSlice = graft.streaming.SequenceShards
       .readEpochSlice(spark, bigStore, epoch = 1, worker = 1,
         numWorkers = 4).count()
@@ -140,8 +143,8 @@ object E2eProbe {
       sweep(); dt
     })
     println(f"[e2e-probe] readEpochSlice(1 of 4) big: $slSec%.2f s " +
-      f"(sp=$slSp%.2f)  rows=$nSlice%d/$m1%d " +
-      f"(share=${nSlice.toDouble / m1}%.2f)  vs full $beSec%.2f s " +
+      f"(sp=$slSp%.2f)  rows=$nSlice%d/$nBig%d " +
+      f"(share=${nSlice.toDouble / nBig}%.2f)  vs full $beSec%.2f s " +
       f"(ratio=${slSec / beSec}%.2f)  load=${ProbeGuard.loadavg()}%.2f")
     spark.stop()
   }

@@ -352,7 +352,8 @@ class MaintProtocolSpec extends AnyFunSuite {
   private def bm25Answer(base: String): Seq[String] = {
     val m = new graft.util.ManifestLog(
       new org.apache.hadoop.fs.Path(s"$base/bm25"),
-      spark.sparkContext.hadoopConfiguration, "postings").latest.get
+      spark.sparkContext.hadoopConfiguration,
+      Map("postings" -> Seq("bucket"))).latest.get
     val parts = m.header.filter(_.head == "stats").distinct
     sortedRows(graft.pipeline.Search.bm25TopKBatchFromIndex(spark,
       s"$base/bm25", Seq((1L, "spark flink"), (2L, "ducks")), k = 5)) :+
@@ -415,7 +416,7 @@ class MaintProtocolSpec extends AnyFunSuite {
         bm25Docs.where(col("doc_id") =!= 2L), s"$b/bm25", nBuckets = 3))
   }
 
-  // ---- incremental sequence shards (docs overwrite + lane swap) ---------
+  // ---- incremental sequence shards (one manifest per verb) --------------
 
   test("sequenceShards appendBatch: crash at every step heals on " +
       "replaying the batch (the stream's own recovery path)") {
@@ -433,11 +434,12 @@ class MaintProtocolSpec extends AnyFunSuite {
         .select(col("pack_bucket").cast("long"), col("seq_idx"),
           col("n_docs"), col("starts").cast("array<int>"),
           col("ids").cast("array<int>")))
-    crashMatrix(Scenario("sequenceShards", setup,
+    val fired = crashMatrix(Scenario("sequenceShards", setup,
       b => { graft.streaming.SequenceShards.appendBatch(spark,
         mk(24L until 36L), 3L, s"$b/sq", seqLen = 6, nBuckets = 3,
         eosId = 0L); () },
       answer))
+    assert(fired.count(_ == "committed") == 1, fired)
   }
 
   test("sequenceShards compactDocs (docs sidecar flip): crash at " +
@@ -462,10 +464,11 @@ class MaintProtocolSpec extends AnyFunSuite {
         .select(col("pack_bucket").cast("long"), col("seq_idx"),
           col("n_docs"), col("starts").cast("array<int>"),
           col("ids").cast("array<int>")))
-    crashMatrix(Scenario("compactDocs", setup,
+    val fired = crashMatrix(Scenario("compactDocs", setup,
       b => graft.streaming.SequenceShards.compactDocs(spark,
         s"$b/sq"),
       answer))
+    assert(fired.count(_ == "committed") == 1, fired)
   }
 
   // ---- ingest store maintenance (partition park/swap + sidecar flip) ----

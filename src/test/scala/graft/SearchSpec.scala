@@ -184,17 +184,19 @@ class SearchSpec extends AnyFunSuite {
   /** The index's live manifest. */
   private def manifest(dir: String): graft.util.Manifest =
     new graft.util.ManifestLog(new org.apache.hadoop.fs.Path(dir),
-      spark.sparkContext.hadoopConfiguration, "postings").latest.get
+      spark.sparkContext.hadoopConfiguration,
+      Map("postings" -> Seq("bucket"))).latest.get
 
   /** The rows of the listed postings files (of `buckets`, default all). */
   private def storedPostings(dir: String,
       buckets: Int => Boolean = _ => true) =
-    spark.read.parquet(manifest(dir).files.filter(f => buckets(f.part))
+    spark.read.parquet(manifest(dir).files
+      .filter(f => buckets(f.part("bucket").toInt))
       .map(f => s"$dir/${f.path}"): _*)
 
   /** Listed files per bucket. */
   private def bucketFiles(dir: String): Map[Int, Seq[graft.util.DataFile]] =
-    manifest(dir).files.groupBy(_.part)
+    manifest(dir).files.groupBy(_.part("bucket").toInt)
 
   test("stored-index serve equals inline BM25 at every k") {
     val dir = tmpIdx()
@@ -465,7 +467,8 @@ class SearchSpec extends AnyFunSuite {
     crashAt("appendToBm25Index", "written") {
       Search.appendToBm25Index(extra, dir)
     }
-    assert(new java.io.File(s"$dir/postings/v=3").isDirectory)
+    assert(new java.io.File(s"$dir/postings").list()
+      .exists(b => new java.io.File(s"$dir/postings/$b/v=3").isDirectory))
     val before = listing(dir)
     assert(serve(dir, queries, 5) == want)
     assert(listing(dir) == before, "the serve changed the directory")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 import graft.export.Export
 import graft.pipeline.{Dedup, Sampling, TextOps}
 import graft.streaming.{CorpusDedup, SequenceShards}
@@ -34,6 +36,25 @@ class StreamingSequenceShardsSpec extends AnyFunSuite {
         col("ids").cast("array<int>"))
       .collect().map(_.toString).sorted.toSeq
 
+  /** The store's live manifest. */
+  private def manifest(dir: String): graft.util.Manifest =
+    new graft.util.ManifestLog(new org.apache.hadoop.fs.Path(dir),
+      spark.sparkContext.hadoopConfiguration, Map.empty).latest.get
+
+  /** Every file under `dir` (relative path, length, mtime). */
+  private def files(dir: String): Seq[(String, Long, Long)] = {
+    val root = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.exists(root)) Nil
+    else {
+      val s = java.nio.file.Files.walk(root)
+      try s.iterator().asScala.toSeq
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => (root.relativize(p).toString, p.toFile.length,
+          p.toFile.lastModified)).sorted
+      finally s.close()
+    }
+  }
+
   private def batchEquivalent(ids: Seq[Long]): Seq[String] = {
     val dir = root()
     Export.writeSequenceShards(
@@ -59,20 +80,10 @@ class StreamingSequenceShardsSpec extends AnyFunSuite {
 
     // untouched lanes keep their EXACT files: a single-doc batch
     // touches one lane; every other lane dir's listing is unchanged
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     def listing(): Map[String, Seq[(String, Long, Long)]] =
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/shards"))
-        .filter(_.isDirectory).map { d =>
-          // two levels: lane dir -> segment dirs -> parquet files
-          d.getPath.getName -> fs.listStatus(d.getPath)
-            .filter(_.isDirectory).flatMap { sd =>
-              fs.listStatus(sd.getPath)
-                .filter(_.getPath.getName.endsWith(".parquet"))
-                .map(s => (sd.getPath.getName + "/" +
-                  s.getPath.getName, s.getLen, s.getModificationTime))
-            }.toSeq.sortBy(_._1)
-        }.toMap
+      new java.io.File(s"$dir/shards").list().toSeq
+        .filter(_.startsWith("pack_bucket="))
+        .map(l => l -> files(s"$dir/shards/$l")).toMap
     val before = listing()
     val affected = SequenceShards.appendBatch(spark, mkDocs(Seq(1000L)),
       4L, dir, SeqLen, Lanes, eosId = 0L)
@@ -140,25 +151,14 @@ class StreamingSequenceShardsSpec extends AnyFunSuite {
       "prefix rows carry over, and rows stay bit-identical to the " +
       "batch pack") {
     val dir = root()
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     val all = 0L until 80L
     // seqLen 4, 2 lanes, segSize 4: ~40 docs/lane at ~5 positions
     // each -> ~50 sequences/lane over ~12 segment dirs
     SequenceShards.appendBatch(spark, mkDocs(all), 1L, dir,
       seqLen = 4, nBuckets = 2, eosId = 0L, segSize = 4)
-    def segListing(lane: Long): Map[Long, Seq[(String, Long, Long)]] = {
-      val p = new org.apache.hadoop.fs.Path(
-        s"$dir/shards/pack_bucket=$lane")
-      if (!fs.exists(p)) Map.empty
-      else fs.listStatus(p).filter(_.isDirectory).map { d =>
-        d.getPath.getName.stripPrefix("seq_seg=").toLong ->
-          fs.listStatus(d.getPath)
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .map(s => (s.getPath.getName, s.getLen,
-              s.getModificationTime)).toSeq.sortBy(_._1)
-      }.toMap
-    }
+    def segListing(lane: Long): Map[Long, Seq[(String, Long, Long)]] =
+      files(s"$dir/shards/pack_bucket=$lane")
+        .groupBy(_._1.takeWhile(_ != '/').stripPrefix("seq_seg=").toLong)
     val before = (0L until 2L).map(l => l -> segListing(l)).toMap
     Thread.sleep(5) // ensure a rebuilt file's mtime can never tie
     val affected = SequenceShards.appendBatch(spark,
@@ -202,7 +202,7 @@ class StreamingSequenceShardsSpec extends AnyFunSuite {
     val ctl = Seq((0L, "00000000", 0L, 37L, 9L, 120L),
         (1L, "00000000", 0L, 41L, 8L, 130L))
       .toDF("lane", "_pk0", "_id0", "_base", "_min_seq", "_tot")
-    val df = SequenceShards.carriedRows(spark, s"$dir/shards", ctl,
+    val df = SequenceShards.carriedRows(spark, dir, manifest(dir), ctl,
       Seq(0L, 1L), ctl.collect(), 4)
     val plan = df.queryExecution.executedPlan.toString
     assert("""PartitionFilters: \[[^\]]*pack_bucket""".r
@@ -211,8 +211,8 @@ class StreamingSequenceShardsSpec extends AnyFunSuite {
     assert("""PartitionFilters: \[[^\]]*seq_seg""".r
       .findFirstIn(plan).isDefined,
       s"seq_seg not in PartitionFilters:\n$plan")
-    // the LISTING is bounded to the boundary-segment dirs too: the
-    // relation is built from the per-lane (lane, K0) paths, so its
+    // the LISTING is bounded to the boundary-segment files too: the
+    // relation is built from the manifest's (lane, K0) files, so its
     // file set never mentions any other segment (discovery on a bare
     // root would walk the whole store every batch)
     val boundaryDirs = Seq("pack_bucket=0/seq_seg=2/",
@@ -237,9 +237,8 @@ class StreamingSequenceShardsSpec extends AnyFunSuite {
 
   test("compactDocs folds version partitions without changing the " +
       "store: later appends pack bit-identically over the folded " +
-      "history, replay stays idempotent, and appendBatch heals a " +
-      "crashed compaction at its own entry (never a truncated " +
-      "history); an orphan tmp fails loudly") {
+      "history, replay stays idempotent, and a dir with no manifest " +
+      "is left untouched") {
     val dir = root()
     val all = 0L until 60L
     Seq(all.slice(0, 20), all.slice(20, 40), all.slice(40, 60))
@@ -247,16 +246,18 @@ class StreamingSequenceShardsSpec extends AnyFunSuite {
         SequenceShards.appendBatch(spark, mkDocs(ids), i + 1L, dir,
           SeqLen, Lanes, eosId = 0L)
       }
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     def versionDirs(): Set[String] =
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/docs"))
-        .filter(_.isDirectory).map(_.getPath.getName)
-        .filter(_.startsWith("version=")).toSet
+      new java.io.File(s"$dir/docs").list().toSet
+        .filter(_.startsWith("version="))
     assert(versionDirs() == Set("version=1", "version=2", "version=3"))
+    val newest = manifest(dir).filesOf("docs")
+      .filter(_.part("version") == 3L)
     SequenceShards.compactDocs(spark, dir)
-    // fold-only-committed: versions < max fold into the second-newest
+    // fold-only-committed: versions < max fold into the second-newest;
+    // the newest keeps its exact files
     assert(versionDirs() == Set("version=2", "version=3"))
+    assert(manifest(dir).filesOf("docs")
+      .filter(_.part("version") == 3L) == newest)
     assert(rows(SequenceShards.read(spark, dir)) == batchEquivalent(all))
     // later appends pack bit-identically over the folded history
     SequenceShards.appendBatch(spark, mkDocs(Seq(1000L)), 4L, dir,
@@ -267,32 +268,15 @@ class StreamingSequenceShardsSpec extends AnyFunSuite {
     SequenceShards.appendBatch(spark, mkDocs(Seq(1000L)), 4L, dir,
       SeqLen, Lanes, eosId = 0L)
     assert(rows(SequenceShards.read(spark, dir)) == want)
-    // idempotent (<= 2 versions: nothing strictly-older); no-op on a
-    // never-written store
+    // idempotent (<= 2 versions: nothing strictly-older)
     SequenceShards.compactDocs(spark, dir)
+    val settled = files(dir)
     SequenceShards.compactDocs(spark, dir)
+    assert(files(dir) == settled)
     assert(rows(SequenceShards.read(spark, dir)) == want)
+    // no-op on a never-written store: nothing is created
     SequenceShards.compactDocs(spark, s"$dir-neverwritten")
-    // mid-swap crash state: docs parked in the trash sibling —
-    // appendBatch must RESTORE it before the version overwrite (an
-    // unguarded write would create a fresh single-version docs tree
-    // and silently pack a truncated history)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/docs"),
-      new org.apache.hadoop.fs.Path(s"$dir/.docs-trash")))
-    SequenceShards.appendBatch(spark, mkDocs(Seq(2000L)), 5L, dir,
-      SeqLen, Lanes, eosId = 0L)
-    assert(rows(SequenceShards.read(spark, dir)) ==
-      batchEquivalent((all :+ 1000L) :+ 2000L),
-      "entry heal must restore the full history before packing")
-    // orphan tmp (no live, no trash) is external interference: loud
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/docs"),
-      new org.apache.hadoop.fs.Path(s"$dir/.docs-compact")))
-    intercept[java.io.IOException] {
-      SequenceShards.appendBatch(spark, mkDocs(Seq(3000L)), 6L, dir,
-        SeqLen, Lanes, eosId = 0L)
-    }
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/.docs-compact"),
-      new org.apache.hadoop.fs.Path(s"$dir/docs")))
+    assert(!new java.io.File(s"$dir-neverwritten").exists)
   }
 
   test("readEpochSlice shards the epoch read: the W slices partition " +
@@ -357,17 +341,12 @@ class StreamingSequenceShardsSpec extends AnyFunSuite {
     }
   }
 
-  test("stats summarizes the live tree per lane — listing-derived " +
-      "segment/file/byte counts (hidden siblings excluded) agree " +
-      "with the filesystem, sequence counts and seq_max agree with " +
-      "the read face") {
+  test("stats summarizes the live store per lane — manifest-derived " +
+      "segment/file/byte counts agree with the filesystem, sequence " +
+      "counts and seq_max agree with the read face") {
     val dir = root()
     SequenceShards.appendBatch(spark, mkDocs(0L until 60L), 1L, dir,
       SeqLen, Lanes, eosId = 0L)
-    // a parked maintenance sibling must not count: reads skip it
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/shards/.swap_old"))
     val got = SequenceShards.stats(spark, dir)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
@@ -381,24 +360,22 @@ class StreamingSequenceShardsSpec extends AnyFunSuite {
       val (nSegs, nFiles, bytes, nSeqs, seqMax) = got(lane)
       assert(nSeqs == n && seqMax == mx,
         s"lane $lane sequence stats diverge from the read face")
-      val lp = new org.apache.hadoop.fs.Path(
-        s"$dir/shards/pack_bucket=$lane")
-      val segDirs = fs.listStatus(lp).filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("seq_seg="))
-      assert(nSegs == segDirs.length, s"lane $lane segment count")
-      val pq = segDirs.flatMap(sd => fs.listStatus(sd.getPath)
-        .filter(f => f.isFile &&
-          f.getPath.getName.endsWith(".parquet")))
-      assert(nFiles == pq.length && bytes == pq.map(_.getLen).sum,
+      val pq = files(s"$dir/shards/pack_bucket=$lane")
+        .filter(f => f._1.endsWith(".parquet") &&
+          !f._1.split('/').last.startsWith("."))
+      assert(nSegs == pq.map(_._1.takeWhile(_ != '/')).distinct.size,
+        s"lane $lane segment count")
+      assert(nFiles == pq.length && bytes == pq.map(_._2).sum,
         s"lane $lane file/byte stats diverge from the listing")
     }
   }
 
   test("start() drives a non-default segSize store (the streaming " +
       "face forwards the full packing contract) and the streamed " +
-      "state equals the batch pack; a pre-seq_seg 4-column meta " +
-      "fails loudly, never with an index error; hashBucketLocal is " +
-      "the byte-identical driver twin of hashBucket") {
+      "state equals the batch pack; a pre-manifest store fails " +
+      "loudly at every face but compactDocs, which leaves it " +
+      "untouched; hashBucketLocal is the byte-identical driver twin " +
+      "of hashBucket") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val dir = root()
     implicit val sqlCtx = spark.sqlContext
@@ -414,18 +391,33 @@ class StreamingSequenceShardsSpec extends AnyFunSuite {
       .awaitTermination()
     assert(rows(SequenceShards.read(spark, dir)) == batchEquivalent(all),
       "streamed (segSize=4) ≠ batch pack")
-    // a legacy store's 4-column meta (pre-segmented layout) must hit
-    // the designed message, not getInt(4)'s AIOOBE
+    // a store built before the manifest layout (meta table, shard
+    // and docs trees, no manifest): every face fails with the designed
+    // message, and none of them — compactDocs included — touches it
     val legacy = root()
-    Seq((SeqLen, Lanes, 0L, "graft"))
-      .toDF("seq_len", "n_buckets", "eos_id", "salt")
+    Seq((SeqLen, Lanes, 0L, "graft", 8192))
+      .toDF("seq_len", "n_buckets", "eos_id", "salt", "seg_size")
       .coalesce(1).write.parquet(s"$legacy/meta")
-    val e = intercept[IllegalArgumentException] {
-      SequenceShards.appendBatch(spark, mkDocs(Seq(1L)), 1L, legacy,
-        SeqLen, Lanes, eosId = 0L)
+    Export.writeSequenceShards(
+      Sampling.packSequences(mkDocs(all), SeqLen, Lanes, eosId = 0L),
+      s"$legacy/shards")
+    mkDocs(all).withColumn("version", lit(1L))
+      .write.partitionBy("version").parquet(s"$legacy/docs")
+    val before = files(legacy)
+    val faces = Seq[() => Any](
+      () => SequenceShards.appendBatch(spark, mkDocs(Seq(1L)), 2L, legacy,
+        SeqLen, Lanes, eosId = 0L),
+      () => SequenceShards.read(spark, legacy),
+      () => SequenceShards.readEpoch(spark, legacy, 1L),
+      () => SequenceShards.readEpochSlice(spark, legacy, 1L, 0, 2),
+      () => SequenceShards.stats(spark, legacy))
+    faces.foreach { face =>
+      val e = intercept[IllegalArgumentException](face())
+      assert(e.getMessage.contains("before the manifest layout"),
+        e.getMessage)
     }
-    assert(e.getMessage.contains("pre-seq_seg meta layout"),
-      e.getMessage)
+    SequenceShards.compactDocs(spark, legacy)
+    assert(files(legacy) == before, "a face changed a pre-manifest store")
     // the probe's driver-side pk derivation must agree with the
     // engine's lane/pk column bit-for-bit
     val ids = Seq("0", "17", "900000000042", "doc-x")
@@ -434,6 +426,163 @@ class StreamingSequenceShardsSpec extends AnyFunSuite {
       .collect().map(_.getString(0)).toSeq
     assert(engine == ids.map(Sampling.hashBucketLocal(_, "graft")),
       "hashBucketLocal diverged from hashBucket")
+  }
+
+  test("reads that overlap an append see the pre-batch or the " +
+      "post-batch store at every point the append passes, and a frame " +
+      "planned before the append either reads one of them or throws") {
+    val dir = root()
+    val W = 3
+    def append(ids: Seq[Long], v: Long): Unit = {
+      SequenceShards.appendBatch(spark, mkDocs(ids), v, dir, seqLen = 4,
+        nBuckets = 2, eosId = 0L, segSize = 4)
+      ()
+    }
+    append(0L until 80L, 1L)
+    def observe(): Seq[Seq[String]] =
+      rows(SequenceShards.read(spark, dir)) +: (0 until W).map(w =>
+        rows(SequenceShards.readEpochSlice(spark, dir, 1L, w, W)))
+    val pre = observe()
+    val early = SequenceShards.read(spark, dir) +: (0 until W).map(w =>
+      SequenceShards.readEpochSlice(spark, dir, 1L, w, W))
+    val seen =
+      scala.collection.mutable.ArrayBuffer[(String, Seq[Seq[String]])]()
+    graft.util.Maint.crashHook = (v, p) =>
+      if (v == "sequenceShards") seen += p -> observe()
+    // mid-lane splices: the batch rewrites segments that already exist
+    try append(Seq(2045L, 3001L, 4077L), 2L)
+    finally graft.util.Maint.crashHook = (_, _) => ()
+    val post = observe()
+    val key = "\\[(\\d+),(\\d+),".r
+    def byKey(rs: Seq[String]) =
+      rs.map(r => key.findFirstIn(r).get -> r).toMap
+    assert(byKey(pre.head).exists { case (k, r) =>
+      byKey(post.head).get(k).exists(_ != r) },
+      "the batch rewrote no existing sequence")
+    assert(seen.nonEmpty, "appendBatch passed no protocol point")
+    seen.foreach { case (point, got) =>
+      val whole = got == pre || got == post
+      assert(whole,
+        s"a read at '$point' saw neither the pre- nor the post-batch store")
+    }
+    early.zip(post).zip(pre).foreach { case ((df, after), before) =>
+      scala.util.Try(rows(df)).foreach { got =>
+        val whole = got == before || got == after
+        assert(whole, "a frame planned before the append read a mixed store")
+      }
+    }
+  }
+
+  /** Run `verb` with a crash injected at protocol point `point`. */
+  private def crashAt(verb: String, point: String)(run: => Any): Unit = {
+    val boom = new RuntimeException(s"injected crash: $verb@$point")
+    graft.util.Maint.crashHook = (v, p) =>
+      if (v == verb && p == point) throw boom
+    try assert(intercept[RuntimeException](run) eq boom)
+    finally graft.util.Maint.crashHook = (_, _) => ()
+  }
+
+  test("reads do no mutation: each state a crash can leave reads as " +
+      "the clean store with the listing unchanged, and the next verb " +
+      "leaves only the live files and one manifest") {
+    val W = 2
+    def faces(dir: String): Seq[Seq[String]] =
+      Seq(rows(SequenceShards.read(spark, dir)),
+        rows(SequenceShards.readEpoch(spark, dir, 1L)),
+        SequenceShards.stats(spark, dir).collect().map(_.toString).toSeq) ++
+        (0 until W).map(w =>
+          rows(SequenceShards.readEpochSlice(spark, dir, 1L, w, W)))
+    def onlyLive(dir: String): Unit = {
+      val live = manifest(dir).files.map(_.path).toSet
+      val stored = files(dir).map(_._1).filter(p => p.endsWith(".parquet") &&
+        !p.split('/').last.startsWith("."))
+      assert(stored.toSet == live, stored)
+      assert(new java.io.File(s"$dir/_manifest").list()
+        .count(_.forall(_.isDigit)) == 1)
+      assert(new java.io.File(dir).list().toSet ==
+        Set("_manifest", "docs", "shards"))
+    }
+    def build(dir: String): Unit =
+      Seq(0L until 20L, 20L until 40L, 40L until 60L).zipWithIndex
+        .foreach { case (ids, i) =>
+          SequenceShards.appendBatch(spark, mkDocs(ids), i + 1L, dir,
+            SeqLen, Lanes, eosId = 0L)
+        }
+    // an uncommitted v+1: an append crashed between its writes and
+    // its commit
+    val dir = root()
+    build(dir)
+    val clean = faces(dir)
+    crashAt("sequenceShards", "written") {
+      SequenceShards.appendBatch(spark, mkDocs(Seq(1000L, 2001L)), 4L,
+        dir, SeqLen, Lanes, eosId = 0L)
+    }
+    val next = manifest(dir).version + 1
+    assert(files(dir).exists(_._1.contains(s"/v=$next/")))
+    val before = files(dir).map(f => (f._1, f._2))
+    assert(faces(dir) == clean)
+    assert(files(dir).map(f => (f._1, f._2)) == before,
+      "a read face changed the directory")
+    SequenceShards.appendBatch(spark, mkDocs(Seq(1000L, 2001L)), 4L, dir,
+      SeqLen, Lanes, eosId = 0L)
+    onlyLive(dir)
+    assert(rows(SequenceShards.read(spark, dir)) ==
+      batchEquivalent((0L until 60L) :+ 1000L :+ 2001L))
+    // a committed v+1 beside the undeleted manifest v and the files
+    // only v lists: a compaction crashed right after its commit
+    val dir2 = root()
+    build(dir2)
+    val superseded = manifest(dir2).files
+    crashAt("compactDocs", "committed") {
+      SequenceShards.compactDocs(spark, dir2)
+    }
+    assert(new java.io.File(s"$dir2/_manifest").list()
+      .count(_.forall(_.isDigit)) == 2)
+    assert(superseded.forall(f => new java.io.File(s"$dir2/${f.path}").exists))
+    val before2 = files(dir2).map(f => (f._1, f._2))
+    assert(faces(dir2) == clean)
+    assert(files(dir2).map(f => (f._1, f._2)) == before2,
+      "a read face changed the directory")
+    SequenceShards.compactDocs(spark, dir2)
+    onlyLive(dir2)
+    assert(faces(dir2) == clean)
+  }
+
+  test("every Spark job appendBatch and compactDocs launch names its " +
+      "verb and step") {
+    val dir = root()
+    val jobs = Seq(0L until 20L, 20L until 40L, 40L until 60L)
+      .zipWithIndex.flatMap { case (ids, i) =>
+        JobLog.record(spark.sparkContext) {
+          SequenceShards.appendBatch(spark, mkDocs(ids), i + 1L, dir,
+            SeqLen, Lanes, eosId = 0L)
+        }._2
+      }
+    val (_, compactJobs) = JobLog.record(spark.sparkContext) {
+      SequenceShards.compactDocs(spark, dir)
+    }
+    assert(jobs.nonEmpty && compactJobs.nonEmpty)
+    assert(jobs.forall(_.desc.startsWith("shards:appendBatch:")),
+      jobs.map(_.desc))
+    assert(compactJobs.forall(_.desc.startsWith("shards:compactDocs:")),
+      compactJobs.map(_.desc))
+  }
+
+  test("epoch-slice job budget: a warm readEpochSlice collect launches " +
+      "no schema-inference and no leaf-listing job") {
+    val dir = root()
+    SequenceShards.appendBatch(spark, mkDocs(0L until 60L), 1L, dir,
+      SeqLen, Lanes, eosId = 0L)
+    def sliceJobs() = JobLog.record(spark.sparkContext) {
+      SequenceShards.readEpochSlice(spark, dir, 3L, 1, 3).collect()
+    }._2
+    sliceJobs()
+    val warm = sliceJobs()
+    assert(!warm.exists(_.desc.startsWith("Listing leaf files")),
+      warm.map(_.desc))
+    // the epoch_pos window's shuffle map stage and the result stage;
+    // the parent layout paid a third, the parquet schema inference
+    assert(warm.size == 2, warm.map(j => s"${j.desc}/${j.stages}"))
   }
 
   test("composes with streaming corpus dedup: survivors of each " +
