@@ -15,7 +15,7 @@ import graft.streaming.CorpusDedup
   *   runMain graft.StreamMaintProbe <face> [docsParquet] [nBatches] [compactEvery]
   * face ∈ exact | neardup | semantic | all; compactEvery = 0 disables
   * maintenance (the baseline curve). Prints one line per batch
-  * (face, mode, batch index, seconds, live version-partition count)
+  * (face, mode, batch index, seconds, live sidecar version count)
   * and a per-decile mean summary per (face, mode).
   *
   * Probe tool only — the library never calls this; outputs land under
@@ -51,13 +51,12 @@ object StreamMaintProbe {
         .foreach(_.unpersist(blocking = true))
       spark.sharedState.cacheManager.clearCache()
     }
-    def versionCount(dir: String): Int = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) 0
-      else fs.listStatus(p)
-        .count(s => s.isDirectory && s.getPath.getName.startsWith("version="))
-    }
+    // live `version` values of a manifest store's tree: the files its
+    // newest manifest lists, not the dirs on disk
+    def versionCount(root: String, tree: String): Int =
+      new graft.util.ManifestLog(new org.apache.hadoop.fs.Path(root),
+        spark.sparkContext.hadoopConfiguration, Map(tree -> Seq("version")))
+        .latest.fold(0)(_.filesOf(tree).map(_.part("version")).distinct.size)
 
     // Deterministic hash split into batches: id RANGES are wrong for
     // the scaled corpus (ids sit at copy*1e6 offsets, so ranges make
@@ -113,7 +112,7 @@ object StreamMaintProbe {
           if (every > 0 && (i + 1) % every == 0) compact(dir)
           sweep()
           println(f"[probe] $name $mode batch=${i + 1}%d sec=$dt%.2f " +
-            f"versions=${versionCount(s"$dir-side")}%d")
+            f"versions=${versionCount(s"$dir-side", "rows")}%d")
           dt
         }
         val c1 = graft.util.ProbeGuard.canaryCpu(spark, cpus.toInt)
@@ -217,7 +216,7 @@ object StreamMaintProbe {
       // the delta is the per-batch docs listing/footer overhead the
       // fold deletes — the thing that otherwise grows per batch
       // forever.
-      def docVersions(): Int = versionCount(s"$store/docs")
+      def docVersions(): Int = versionCount(store, "docs")
       val preFold = cand.slice(1020, 1030).map(c => appendOne(c._1))
       // capture AFTER the pre-fold appends: this is the history the
       // fold actually folds (each append above added a version)

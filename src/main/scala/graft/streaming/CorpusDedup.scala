@@ -1,10 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.pipeline.{Bloom, TextOps}
+import graft.util.{DataFile, JobDesc, Maint, Manifest, ManifestLog}
 
 /** Streaming incremental corpus dedup — the production face of the
   * batch cross-corpus operators: a document stream is deduplicated
@@ -27,10 +29,20 @@ import graft.pipeline.{Bloom, TextOps}
   * each batch costs |batch| work + a hit-fraction fingerprint join —
   * never a corpus scan.
   *
+  * Sidecar layout: every sidecar (`tierDir`, `fpDir`, and the
+  * near-dup `postingsDir` and semantic `vecDir`) is a [[ManifestLog]]
+  * store with one tree, `rows/version=<N>/v=<mv>/part-*.parquet`; the
+  * newest `_manifest/<mv>` lists the live files with their bytes and
+  * stores the row schema. Every write is one manifest commit: readers
+  * see the pre- or the post-commit rows, never a mix or a duplicate,
+  * and a crash leaves unlisted files the next verb deletes. Reads
+  * only list and read. `corpusDir` stays plain `version=`-partitioned
+  * parquet, overwritten per version.
+  *
   * 100 TB shape: the tier grows one kilobyte-scale partial per batch
-  * (compact by rewriting the bit_or-merged row set when versions pile
-  * up — same recipe as `Ingest.compact`); the fingerprint table is the
-  * only corpus-sized sidecar and is touched only on the hit fraction,
+  * (compact by folding the bit_or-merged row set when versions pile
+  * up — [[compactTier]]); the fingerprint table is the only
+  * corpus-sized sidecar and is touched only on the hit fraction,
   * shuffled by `_fp`. Batch work never depends on corpus size.
   *
   * Reference note: dp3's ingest dedups on the message identity key at
@@ -48,12 +60,13 @@ object CorpusDedup {
     * batch replays with the SAME batchId. [[appendBatch]] is
     * idempotent per version — the accepted set is computed against
     * strictly OLDER versions only (a replay never sees its own partial
-    * writes, so it re-derives the identical survivor set), and all
-    * three outputs are version-partitioned dynamic overwrites (a
-    * replay replaces its own partitions with identical content rather
-    * than appending duplicates). Replay ∘ appendBatch = appendBatch,
-    * which together with the checkpointed offsets gives effectively-
-    * exactly-once corpus contents. */
+    * writes, so it re-derives the identical survivor set), the corpus
+    * write is a dynamic overwrite of its version partition, and each
+    * sidecar commit replaces the files its manifest lists for the
+    * version (a replay replaces its own rows with identical content
+    * rather than appending duplicates). Replay ∘ appendBatch =
+    * appendBatch, which together with the checkpointed offsets gives
+    * effectively-exactly-once corpus contents. */
   def start(spark: SparkSession, stream: DataFrame, corpusDir: String,
       tierDir: String, fpDir: String, checkpointDir: String,
       nBuckets: Int = 1024, nWords: Int = 4, kHashes: Int = 4,
@@ -69,36 +82,99 @@ object CorpusDedup {
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** THE versioned sidecar write, shared by [[appendBatch]] and
-    * [[appendBatchNearDup]] so the replay contract (dynamic partition
-    * overwrite of exactly `version=N`) cannot drift between the exact
-    * and near-dup paths: a retried batch replaces its own partition
-    * and only its own partition. */
-  private def writeVersioned(version: Long)(
-      df: DataFrame, dir: String): Unit =
-    df.withColumn("version", lit(version))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("version")
-      .parquet(dir)
+  /** Each sidecar's one tree. */
+  private val Rows = "rows"
+
+  private def sidecar(spark: SparkSession, dir: String): ManifestLog =
+    new ManifestLog(new Path(dir), spark.sparkContext.hadoopConfiguration,
+      Map(Rows -> Seq("version")))
+
+  /** `files` of a sidecar, read with the manifest's schema under the
+    * tree's basePath (`version` survives as a long): no
+    * schema-inference job, and no listing beyond the files named. */
+  private def rows(spark: SparkSession, dir: String, m: Manifest,
+      files: Seq[DataFile]): DataFrame =
+    spark.read.schema(m.schema(Rows)).option("basePath", s"$dir/$Rows")
+      .parquet(files.map(f => s"$dir/${f.path}"): _*).drop("v")
+
+  /** The append faces' read: the sidecar's rows of versions strictly
+    * older than `version` from the newest manifest — None when there
+    * are none (no corpus yet). A replay never sees its own version's
+    * rows, so it re-derives the same survivors. Lists and reads only;
+    * fails loudly on a dir built before the manifest layout. */
+  private def older(spark: SparkSession, dir: String, version: Long,
+      face: String): Option[DataFrame] = {
+    val m = sidecar(spark, dir).latest
+    if (m.isEmpty) {
+      val p = new Path(dir)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      require(!fs.exists(p) || !fs.listStatus(p).exists { st =>
+          val n = st.getPath.getName
+          n.startsWith("version=") || n.endsWith(".parquet")
+        }, s"$face: $dir holds a sidecar built before the manifest " +
+          "layout — rebuild it with this version")
+    }
+    m.flatMap { m =>
+      val files = m.filesOf(Rows).filter(_.part("version") < version)
+      if (files.isEmpty) None else Some(rows(spark, dir, m, files))
+    }
+  }
+
+  /** The append faces' sidecar write: `df`'s rows become `version`'s
+    * files in one commit that drops the files the newest manifest
+    * lists for `version` — a replay replaces them, never duplicates
+    * them. `step` names the sidecar in the job description and the
+    * commit's [[Maint.step]] verb. */
+  private def commitVersion(spark: SparkSession, dir: String, verb: String,
+      step: String, version: Long, df: DataFrame): Unit = {
+    val log = sidecar(spark, dir)
+    val prev = log.open(s"$verb:$step")
+    val data = df.withColumn("version", lit(version))
+    val written = JobDesc(spark.sparkContext, s"dedup:$verb:$step") {
+      log.write(prev.fold(0L)(_.version) + 1, Rows, data)
+    }
+    log.commit(s"$verb:$step", prev,
+      prev.fold(Seq(Seq(Rows, data.schema.json)))(_.header),
+      prev.fold(Seq.empty[DataFile])(_.filesOf(Rows)
+        .filter(_.part("version") != version)) ++ written)
+  }
+
+  /** The corpus write: a dynamic partition overwrite of exactly
+    * `version=N`, so a retried batch replaces its own partition. */
+  private def writeCorpus(spark: SparkSession, verb: String, version: Long,
+      df: DataFrame, corpusDir: String): Unit =
+    JobDesc(spark.sparkContext, s"dedup:$verb:corpus") {
+      df.withColumn("version", lit(version))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("version")
+        .parquet(corpusDir)
+    }
+
+  /** bit_or of each bloom word — the tier partial's merge. */
+  private def bloomOr(nWords: Int): Seq[Column] =
+    (0 until nWords).map(x => expr(s"bit_or(bloom_w$x)").as(s"bloom_w$x"))
 
   /** One micro-batch (also the batch-import face): in-batch canonical
-    * copy, corpus-membership filter, then three version-partitioned
-    * writes. Returns the number of accepted documents.
+    * copy, corpus-membership filter, then the corpus write and one
+    * commit per sidecar. Returns the number of accepted documents.
     *
     * Idempotent per `version`: the membership state is read with
-    * `version < N` (partition-pruned, so a crashed attempt's own
-    * partial writes are invisible to its replay — without this a
-    * bloom false positive could find its OWN fingerprint from the
-    * failed attempt and silently drop the document), and each output
-    * is a dynamic partition overwrite of `version=N` only, so a
-    * replay replaces rather than duplicates. Callers outside the
-    * streaming path must issue versions monotonically and reuse the
-    * same version when retrying a failed append. */
+    * `version < N` from the sidecars' manifests (a crashed attempt's
+    * own writes are invisible to its replay — without this a bloom
+    * false positive could find its OWN fingerprint from the failed
+    * attempt and silently drop the document); the corpus write
+    * overwrites `version=N` and each sidecar commit replaces the
+    * files it lists for version N, so a replay replaces rather than
+    * duplicates. Callers outside the streaming path must issue
+    * versions monotonically and reuse the same version when retrying
+    * a failed append. */
   def appendBatch(spark: SparkSession, batch0: DataFrame, version: Long,
       corpusDir: String, tierDir: String, fpDir: String,
       nBuckets: Int = 1024, nWords: Int = 4, kHashes: Int = 4,
       idCol: String = "doc_id", textCol: String = "text"): Long = {
+    val verb = "appendBatch"
+    val sc = spark.sparkContext
     // in-batch exact dedup: deterministic canonical copy (min id per
     // fingerprint) — Dedup.canonicalPerFingerprint, the ONE copy of
     // the contract this and Curate.curate share (skew-safe grouped
@@ -107,42 +183,46 @@ object CorpusDedup {
     val batch = graft.pipeline.Dedup.canonicalPerFingerprint(batch0,
       TextOps.fingerprint(col(textCol)), idCol)
     val (survivors, tierPin) =
-      if (exists(spark, tierDir)) {
-        val tier = spark.read.parquet(tierDir)
-          .where(col("version") < version)
-          .select(col("bloom_bucket") +:
-            (0 until nWords).map(n => col(s"bloom_w$n")): _*)
-        val fps = spark.read.parquet(fpDir)
-          .where(col("version") < version).select(col("_fp"))
-        val (s, p) = Bloom.dedupAgainstTierOwned(batch,
-          tier, fps, nBuckets, nWords, kHashes, textCol)
-        (s, Some(p))
-      } else (batch, None)
-    // one computation of the accepted set feeds all three writes; the
-    // pin severs lineage to the sidecar reads, so the overwrites
-    // below never write a path their own plan is reading. Lazy pin:
-    // the count below is the single next consumer and materializes
-    // the cache in its own job (the pinLazy discipline) — the tier
-    // pin is released only AFTER that, or the count would recompute
-    // through the released prefilter
-    val (pinned, pin) = graft.pipeline.Dedup.pinLazy(
-      Bloom.withBloomWords(survivors, nBuckets, nWords, kHashes,
-        textCol))
+      older(spark, tierDir, version, verb) match {
+        case Some(rows) =>
+          // the fingerprints commit before the tier, so older tier rows
+          // imply older fingerprints
+          val fps = older(spark, fpDir, version, verb).getOrElse(
+            throw new IllegalStateException(s"$verb: $tierDir has rows " +
+              s"older than version $version but $fpDir has none"))
+          val (s, p) = JobDesc(sc, s"dedup:$verb:prefilter") {
+            Bloom.dedupAgainstTierOwned(batch,
+              rows.select(col("bloom_bucket") +:
+                (0 until nWords).map(n => col(s"bloom_w$n")): _*),
+              fps.select(col("_fp")), nBuckets, nWords, kHashes, textCol)
+          }
+          (s, Some(p))
+        case None => (batch, None)
+      }
+    // one computation of the accepted set feeds all three writes. Lazy
+    // pin: the count below is the single next consumer and
+    // materializes the cache in its own job (the pinLazy discipline) —
+    // the tier pin is released only AFTER that, or the count would
+    // recompute through the released prefilter. Pinning plans the
+    // frame, which already runs its shuffle stages
+    val (pinned, pin) = JobDesc(sc, s"dedup:$verb:accept") {
+      graft.pipeline.Dedup.pinLazy(Bloom.withBloomWords(survivors,
+        nBuckets, nWords, kHashes, textCol))
+    }
     try {
       // release the prefilter the moment the accepted set is
       // materialized (finally: also on failure)
-      val n =
+      val n = JobDesc(sc, s"dedup:$verb:accept") {
         try pinned.count() finally tierPin.foreach(_.release())
+      }
       if (n > 0) {
-        writeVersioned(version)(
+        writeCorpus(spark, verb, version,
           pinned.select(batch0.columns.map(col): _*), corpusDir)
-        writeVersioned(version)(
-          pinned.select(col(idCol), col("_fp")), fpDir)
-        writeVersioned(version)(pinned.groupBy(col("bloom_bucket"))
-          .agg(expr("bit_or(bloom_w0)").as("bloom_w0"),
-            (1 until nWords).map(x =>
-              expr(s"bit_or(bloom_w$x)").as(s"bloom_w$x")): _*),
-          tierDir)
+        commitVersion(spark, fpDir, verb, "fp", version,
+          pinned.select(col(idCol), col("_fp")))
+        val words = bloomOr(nWords)
+        commitVersion(spark, tierDir, verb, "tier", version,
+          pinned.groupBy(col("bloom_bucket")).agg(words.head, words.tail: _*))
       }
       n
     } finally pin.release()
@@ -156,9 +236,9 @@ object CorpusDedup {
     * exploded index is "the thing to persist between batches" in
     * production — this is that sidecar).
     *
-    * `postingsDir` layout: (bucket, sh, ref_id, nb, version) — one row
+    * `postingsDir` rows: (bucket, sh, ref_id, nb, version) — one row
     * per accepted document per distinct k-shingle, `nb` the document's
-    * shingle-set size frozen at accept time, partitioned by `version`
+    * shingle-set size frozen at accept time, committed per `version`
     * (idempotent replay, same discipline as [[appendBatch]]). Rows are
     * clustered by (`bucket` = hash(sh) mod nBuckets, `sh`) within each
     * version's files, and the read path pushes
@@ -207,7 +287,9 @@ object CorpusDedup {
       k: Int = 3, threshold: Double = 0.5,
       maxDf: Int = Int.MaxValue, nBuckets: Int = 256,
       idCol: String = "doc_id", textCol: String = "text"): Long = {
-    import graft.pipeline.{Dedup, TextOps}
+    import graft.pipeline.Dedup
+    val verb = "appendBatchNearDup"
+    val sc = spark.sparkContext
     if (maxDf != Int.MaxValue)
       require(maxDf >= 1, s"maxDf must be >= 1 (got $maxDf)")
     // one pinned frame of (id, distinct-shingle array, size): feeds
@@ -216,51 +298,48 @@ object CorpusDedup {
     // lazy pin: the first consumer is single either way (the bucket-set
     // collect when a corpus exists, else the survivor count) and
     // materializes the cache in its own job
-    val (arr, pin) = Dedup.pinLazy(
-      graft.util.Spread.ensure(
-        batch0.select(col(idCol).as("_id"), col(textCol)), Seq(col("_id")))
+    val (arr, pin) = JobDesc(sc, s"dedup:$verb:batch") {
+      Dedup.pinLazy(graft.util.Spread.ensure(
+          batch0.select(col(idCol).as("_id"), col(textCol)), Seq(col("_id")))
         .select(col("_id"),
           TextOps.tokens(lower(col(textCol))).as("_toks"))
         .select(col("_id"),
           Dedup.shinglesOfTokens(col("_toks"), k).as("_arr"))
         .withColumn("_na", size(col("_arr"))))
+    }
     try {
       val flagged: DataFrame =
-        if (!exists(spark, postingsDir)) {
-          // an absent index with a surviving maintenance sibling is a
-          // crashed compaction's mid-swap state, NOT an empty corpus —
-          // treating it as empty would accept every duplicate in the
-          // batch; heal via compactPostings first
-          requireNoMidSwap(spark, postingsDir,
-            Seq(".compact-trash", ".compact"), "compactPostings")
-          arr.select(col("_id")).limit(0) // typed-empty: no corpus yet
-        } else {
-          // the batch's bucket set, collected driver-side (≤ nBuckets
-          // ints off the pinned frame): pushed as a row predicate so
-          // the (bucket, sh)-clustered postings files prune row
-          // groups the batch cannot match
-          val batchBuckets = arr
-            .select(explode(col("_arr")).as("sh"))
-            .select(pmod(xxhash64(col("sh")), lit(nBuckets.toLong))
-              .as("bucket"))
-            .distinct().collect().map(_.getLong(0))
-          val postings = spark.read.parquet(postingsDir)
-            .where(col("version") < version)
-            .where(col("bucket").isin(batchBuckets: _*))
-            .select(col("sh"), col("ref_id"), col("nb"))
-          NearDupPlan.flagged(arr, postings, maxDf, threshold)
+        older(spark, postingsDir, version, verb) match {
+          case None =>
+            arr.select(col("_id")).limit(0) // typed-empty: no corpus yet
+          case Some(rows) =>
+            // the batch's bucket set, collected driver-side (≤ nBuckets
+            // ints off the pinned frame): pushed as a row predicate so
+            // the (bucket, sh)-clustered postings files prune row
+            // groups the batch cannot match
+            val batchBuckets = JobDesc(sc, s"dedup:$verb:buckets") {
+              arr.select(explode(col("_arr")).as("sh"))
+                .select(pmod(xxhash64(col("sh")), lit(nBuckets.toLong))
+                  .as("bucket"))
+                .distinct().collect().map(_.getLong(0))
+            }
+            val postings = rows
+              .where(col("bucket").isin(batchBuckets: _*))
+              .select(col("sh"), col("ref_id"), col("nb"))
+            NearDupPlan.flagged(arr, postings, maxDf, threshold)
         }
       val survivors = arr.join(broadcast(flagged), Seq("_id"), "left_anti")
       // lazy: the count is the single next consumer (pinLazy rule)
-      val (pinnedSurv, survPin) = Dedup.pinLazy(survivors)
+      val (pinnedSurv, survPin) =
+        JobDesc(sc, s"dedup:$verb:accept")(Dedup.pinLazy(survivors))
       try {
-        val n = pinnedSurv.count()
+        val n = JobDesc(sc, s"dedup:$verb:accept")(pinnedSurv.count())
         if (n > 0) {
-          writeVersioned(version)(
+          writeCorpus(spark, verb, version,
             batch0.join(broadcast(pinnedSurv.select(
               col("_id").as(idCol))), Seq(idCol), "left_semi"),
             corpusDir)
-          writeVersioned(version)(
+          commitVersion(spark, postingsDir, verb, "postings", version,
             pinnedSurv.select(col("_id").as("ref_id"),
                 col("_na").as("nb"), explode(col("_arr")).as("sh"))
               .withColumn("bucket",
@@ -268,8 +347,7 @@ object CorpusDedup {
               // cluster by (bucket, sh) so the next batch's pushed
               // bucket-IN predicate skips row groups on min/max stats
               .repartition(col("bucket"))
-              .sortWithinPartitions(col("bucket"), col("sh")),
-            postingsDir)
+              .sortWithinPartitions(col("bucket"), col("sh")))
         }
         n
       } finally survPin.release()
@@ -333,10 +411,10 @@ object CorpusDedup {
     * `threshold` of anything already ACCEPTED, using a persisted
     * accepted-vector sidecar instead of re-reading corpus embeddings.
     *
-    * `vecDir` layout: (vec_id, embedding, _nrm, cell, version) — one
-    * row per accepted vector with its norm frozen at accept time,
-    * partitioned by `version` (idempotent replay, the sidecar
-    * discipline shared with [[appendBatch]]), rows clustered by
+    * `vecDir` rows: (_rv, _rnrm, cell, version) — one row per
+    * accepted vector with its norm frozen at accept time, committed
+    * per `version` (idempotent replay, the sidecar discipline shared
+    * with [[appendBatch]]), rows clustered by
     * `cell` within each version's files so the read path's pushed
     * `cell IN (batch cells)` predicate prunes row groups the batch
     * cannot touch (the coarse-quantizer analogue of the postings
@@ -368,6 +446,8 @@ object CorpusDedup {
       cents: Seq[Seq[Double]], threshold: Double,
       idCol: String = "vec_id", vecCol: String = "embedding"): Long = {
     import graft.pipeline.{Dedup, Similarity}
+    val verb = "appendBatchSemantic"
+    val sc = spark.sparkContext
     require(cents.nonEmpty,
       "appendBatchSemantic needs a trained coarse quantizer (cents)")
     // one pinned frame of (id, vector, norm, cell): feeds the
@@ -375,51 +455,47 @@ object CorpusDedup {
     // sidecar append. Lazy: the first consumer is single either way
     // (the cell-set collect when a corpus exists, else the survivor
     // count) and materializes the cache in its own job
-    val (arr, pin) = Dedup.pinLazy(
-      Similarity.assignCells(
-        batch0.select(col(idCol).as("_id"), col(vecCol).as("_v")),
-        cents, "_v")
+    val (arr, pin) = JobDesc(sc, s"dedup:$verb:batch") {
+      Dedup.pinLazy(Similarity.assignCells(
+          batch0.select(col(idCol).as("_id"), col(vecCol).as("_v")),
+          cents, "_v")
         .withColumn("_nrm", Similarity.norm(col("_v"))))
+    }
     try {
       val flagged: DataFrame =
-        if (!exists(spark, vecDir)) {
-          // an absent sidecar with a surviving maintenance sibling is
-          // a crashed requantize's mid-swap state, NOT an empty corpus
-          // — treating it as empty would accept every paraphrase in
-          // the batch; re-run requantizeVectors (its entry heals) first
-          requireNoMidSwap(spark, vecDir,
-            Seq(".trash", ".requantize"), "requantizeVectors")
-          arr.select(col("_id")).limit(0) // typed-empty: no corpus yet
-        } else {
-          // the batch's cell set, collected driver-side (≤ kCells
-          // ints off the pinned frame): pushed as a row predicate so
-          // the cell-clustered sidecar files prune row groups
-          val batchCells = arr.select(col("cell")).distinct()
-            .collect().map(_.getInt(0))
-          val accepted = spark.read.parquet(vecDir)
-            .where(col("version") < version)
-            .where(col("cell").isin(batchCells.map(c => c: Any): _*))
-            .select(col("_rv"), col("_rnrm"), col("cell"))
-          SemanticPlan.flagged(arr, accepted, threshold)
+        older(spark, vecDir, version, verb) match {
+          case None =>
+            arr.select(col("_id")).limit(0) // typed-empty: no corpus yet
+          case Some(rows) =>
+            // the batch's cell set, collected driver-side (≤ kCells
+            // ints off the pinned frame): pushed as a row predicate so
+            // the cell-clustered sidecar files prune row groups
+            val batchCells = JobDesc(sc, s"dedup:$verb:cells") {
+              arr.select(col("cell")).distinct().collect().map(_.getInt(0))
+            }
+            val accepted = rows
+              .where(col("cell").isin(batchCells.map(c => c: Any): _*))
+              .select(col("_rv"), col("_rnrm"), col("cell"))
+            SemanticPlan.flagged(arr, accepted, threshold)
         }
       val survivors = arr.join(broadcast(flagged), Seq("_id"), "left_anti")
       // lazy: the count is the single next consumer (pinLazy rule)
-      val (pinnedSurv, survPin) = Dedup.pinLazy(survivors)
+      val (pinnedSurv, survPin) =
+        JobDesc(sc, s"dedup:$verb:accept")(Dedup.pinLazy(survivors))
       try {
-        val n = pinnedSurv.count()
+        val n = JobDesc(sc, s"dedup:$verb:accept")(pinnedSurv.count())
         if (n > 0) {
-          writeVersioned(version)(
+          writeCorpus(spark, verb, version,
             batch0.join(broadcast(pinnedSurv.select(
               col("_id").as(idCol))), Seq(idCol), "left_semi"),
             corpusDir)
-          writeVersioned(version)(
+          commitVersion(spark, vecDir, verb, "vec", version,
             pinnedSurv.select(col("_v").as("_rv"),
                 col("_nrm").as("_rnrm"), col("cell"))
               // cluster by cell so the next batch's pushed cell-IN
               // predicate skips row groups on min/max stats
               .repartition(col("cell"))
-              .sortWithinPartitions(col("cell")),
-            vecDir)
+              .sortWithinPartitions(col("cell")))
         }
         n
       } finally survPin.release()
@@ -483,263 +559,111 @@ object CorpusDedup {
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** Compact the tier sidecar: after many batches the tier holds one
-    * partial row-set per version; fold them to ONE bit_or-merged row
-    * per bucket (≤ nBuckets rows total, landing in the max version's
-    * partition). Membership answers are unchanged — bit_or is
-    * associative — and the next batch's prefilter reads one row per
-    * bucket instead of one per (bucket, version).
-    *
-    * Crash-safe in place: the merged rows (control-plane kilobytes —
-    * collected to the driver, which also severs any read-while-write
-    * overlap) are first APPENDED into the second-newest version's
-    * partition dir, then the superseded version dirs and the
-    * partition's old part files are deleted. The NEWEST version is
-    * never folded: its stream batch may not have committed its
-    * checkpoint yet, and a replay of it re-reads `version < maxV` —
-    * which must still see all older membership bits, not an empty
-    * tier. The tier path never disappears (the old
-    * write-new-then-flip left a window where a concurrent append's
-    * exists() check saw no tier and bypassed dedup entirely), and a
-    * crash at any step leaves redundant-but-correct bits that the
-    * next compaction folds. Run single-writer with respect to
-    * appendBatch: deleting files under a concurrently planning read
-    * can fail that batch (correctness is unaffected — it would fail,
-    * not mis-dedup — but schedule compaction between batches). */
-  def compactTier(spark: SparkSession, tierDir: String,
-      nWords: Int = 4): Unit = {
-    if (!exists(spark, tierDir)) return
-    val tier = spark.read.parquet(tierDir)
-    val versions = tier.select(col("version").cast("long"))
-      .distinct().collect().map(_.getLong(0)).sorted
-    // Fold only versions STRICTLY OLDER than the newest: the newest
-    // version may belong to a stream batch whose checkpoint commit
-    // has not landed yet, and an at-least-once replay of that batch
-    // re-reads the tier with `version < maxV` — folding maxV's
-    // partials downward would make that read come back EMPTY and
-    // re-accept every historical duplicate. Versions with a
-    // successor are committed by construction (the stream issues
-    // versions monotonically), so they are safe to merge.
-    if (versions.length <= 2) return // nothing strictly-older to fold
-    val olds = versions.init
-    val keepV = olds.last
-    val merged = tier.where(col("version") < versions.last)
-      .groupBy(col("bloom_bucket"))
-      .agg(expr("bit_or(bloom_w0)").as("bloom_w0"),
-        (1 until nWords).map(x =>
-          expr(s"bit_or(bloom_w$x)").as(s"bloom_w$x")): _*)
-    val local = merged.collect() // ≤ nBuckets rows of longs
-    val fs = new org.apache.hadoop.fs.Path(tierDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val part = new org.apache.hadoop.fs.Path(s"$tierDir/version=$keepV")
-    val superseded = fs.listStatus(part).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet"))
-    spark.createDataFrame(
-        java.util.Arrays.asList(local: _*), merged.schema)
-      .coalesce(1).write.mode("append").parquet(part.toString)
-    graft.util.Maint.step("compactTier", "appended")
-    olds.init.foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$tierDir/version=$v"),
-        true)
+  /** THE sidecar maintenance commit, shared by the five maintenance
+    * verbs: open the newest manifest, write the rewritten rows as
+    * manifest version `v+1`'s files, and commit once — readers see the
+    * old rows or the new, never both, so no crash can duplicate or
+    * lose a row, and the next verb deletes whatever a crash left
+    * unlisted. `fold`: rewrite the files of versions STRICTLY OLDER
+    * than the newest as the second-newest version and keep the
+    * newest's exact files (nothing to do below three versions) — the
+    * newest version's stream batch may not have committed its
+    * checkpoint, and its replay re-reads `version < N`, which must
+    * still see every older row. Otherwise every listed file is
+    * rewritten with its `version`. `shape` re-clusters the rows into
+    * `nFiles` output files, sized from the rewritten files' manifest
+    * bytes ([[Maint.sizedFileCount]]). A dir with no manifest (never
+    * written, or built before the manifest layout) is left untouched.
+    * Single-writer with respect to the append faces. */
+  private def rewrite(spark: SparkSession, dir: String, verb: String,
+      targetBytesPerFile: Long, fold: Boolean)(
+      shape: (DataFrame, Int) => DataFrame): Unit = {
+    val log = sidecar(spark, dir)
+    if (log.latest.isEmpty) return
+    val prev = log.open(verb).get
+    val files = prev.filesOf(Rows)
+    val versions = files.map(_.part("version")).distinct.sorted
+    val (redo, version) =
+      if (!fold) (files, col("version"))
+      else if (versions.length <= 2) return
+      else (files.filter(_.part("version") < versions.last),
+        lit(versions.init.last))
+    val nFiles = Maint.sizedFileCount(redo.map(_.bytes).sum,
+      targetBytesPerFile)
+    val written = JobDesc(spark.sparkContext, s"dedup:$verb:rows") {
+      log.write(prev.version + 1, Rows, shape(
+        rows(spark, dir, prev, redo).withColumn("version", version), nFiles))
     }
-    graft.util.Maint.step("compactTier", "olds-deleted")
-    superseded.foreach(fs.delete(_, false))
-    graft.util.Maint.step("compactTier", "committed")
-    ()
+    log.commit(verb, Some(prev), prev.header, files.diff(redo) ++ written)
   }
 
-  /** Compact the fingerprint sidecar: [[appendBatch]] leaves one
-    * `version=N` partition per batch forever, so a long-lived stream
-    * accumulates thousands of small partitions and every batch's
-    * membership join pays the file-listing and footer overhead. Fold
-    * all fingerprints of versions STRICTLY OLDER than the newest into
-    * the second-newest version's partition — same fold-only-committed
-    * rule as [[compactTier]]: the newest version's stream batch may
-    * not have committed its checkpoint, and its replay re-reads
-    * `version < N`, which must still see every older fingerprint.
-    * Membership answers are unchanged (the fold moves rows, it never
-    * drops or alters a fingerprint; `version` collapsing to `keepV`
-    * is invisible to the `version < N` reads).
-    *
-    * Unlike the tier (kilobytes, driver-collected), fingerprints are
-    * corpus-sized, so the fold is distributed, via the
-    * duplicates-harmless protocol ([[graft.util.Maint]]): write the
-    * merged rows to a temp dir (Spark refuses to write a path it
-    * reads), RENAME the part files into the keep partition (UUID part
-    * names cannot collide), then delete the superseded version dirs
-    * and the keep partition's pre-fold files. A crash between steps
-    * leaves redundant-but-correct rows — duplicate fingerprints are
-    * harmless to the membership semi-join and the next compaction
-    * folds them. Output files are SIZED (`ceil(bytes / target)`, the
-    * Ingest.optimize rule) so the fold never collapses the sidecar's
-    * scan parallelism to one AQE-coalesced task's worth of files.
-    * Single-writer with respect to appendBatch, like compactTier. */
+  /** Compact the tier sidecar: after many batches the tier holds one
+    * partial row-set per version; fold the versions strictly older
+    * than the newest to ONE bit_or-merged row per bucket in one file
+    * (≤ nBuckets rows, as the second-newest version), in one commit
+    * ([[rewrite]]). Membership answers are unchanged — bit_or is
+    * associative — and the next batch's prefilter reads one row per
+    * bucket instead of one per (bucket, version). */
+  def compactTier(spark: SparkSession, tierDir: String,
+      nWords: Int = 4): Unit =
+    rewrite(spark, tierDir, "compactTier", 128L << 20, fold = true) {
+      (rows, _) =>
+        val words = bloomOr(nWords)
+        rows.groupBy(col("bloom_bucket"), col("version"))
+          .agg(words.head, words.tail: _*).coalesce(1)
+    }
+
+  /** Compact the fingerprint sidecar: [[appendBatch]] adds files under
+    * one `version=N` per batch forever, so a long-lived stream
+    * accumulates thousands of small files and every batch's
+    * membership join pays the listing and footer overhead. Fold the
+    * fingerprints of versions strictly older than the newest into the
+    * second-newest version in one commit ([[rewrite]]): the fold moves
+    * rows, never drops, alters or duplicates one. Output files are
+    * SIZED (`ceil(bytes / target)`, the Ingest.optimize rule) and
+    * range-clustered by `_fp`, so the fold never collapses the
+    * sidecar's scan parallelism to one AQE-coalesced task's worth of
+    * files. */
   def compactFp(spark: SparkSession, fpDir: String,
       targetBytesPerFile: Long = 128L << 20): Unit =
-    foldHarmless(spark, fpDir, "compactFp", targetBytesPerFile) {
-      (merged, nFiles) =>
+    rewrite(spark, fpDir, "compactFp", targetBytesPerFile, fold = true) {
+      (rows, nFiles) =>
         // membership probes are a semi-join on _fp (no pushed range
         // predicate), so even spread is all the layout needs
-        merged.repartitionByRange(nFiles, col("_fp"))
+        rows.repartitionByRange(nFiles, col("_fp"))
     }
 
-  /** The shared duplicates-harmless version fold ([[compactFp]],
-    * [[compactVectors]]): fold all rows of versions strictly older
-    * than the newest into the second-newest version's partition.
-    * `shape` re-clusters the merged frame into `nFiles` output files
-    * (sized from the folded sources' bytes — [[graft.util.Maint
-    * .sizedFileCount]]). Crash windows between the protocol steps
-    * leave redundant-but-correct rows by precondition (the caller's
-    * read path tolerates duplicates); [[graft.util.Maint]] injects
-    * test crashes at each step. */
-  private def foldHarmless(spark: SparkSession, dir: String,
-      verb: String, targetBytesPerFile: Long)(
-      shape: (DataFrame, Int) => DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    import graft.util.Maint
-    if (!exists(spark, dir)) return
-    val df = spark.read.parquet(dir)
-    val versions = df.select(col("version").cast("long"))
-      .distinct().collect().map(_.getLong(0)).sorted
-    if (versions.length <= 2) return // nothing strictly-older to fold
-    val keepV = versions.init.last
-    val dataCols = df.columns.filterNot(_ == "version").map(col)
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nFiles = Maint.sizedFileCount(
-      Maint.parquetBytes(fs,
-        versions.init.map(v => new Path(s"$dir/version=$v")).toSeq),
-      targetBytesPerFile)
-    val merged = shape(
-      df.where(col("version") < versions.last).select(dataCols: _*),
-      nFiles)
-    val part = new Path(s"$dir/version=$keepV")
-    val superseded = fs.listStatus(part).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet"))
-    val tmp = new Path(s"$dir/.compact-tmp-$keepV")
-    fs.delete(tmp, true)
-    Maint.step(verb, "cleaned")
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    Maint.step(verb, "built")
-    Maint.renamePartsInto(fs, tmp, part, verb)
-    versions.init.init.foreach { v =>
-      fs.delete(new Path(s"$dir/version=$v"), true)
-    }
-    Maint.step(verb, "olds-deleted")
-    superseded.foreach(fs.delete(_, false))
-    Maint.step(verb, "committed")
-    ()
-  }
-
-  /** Compact the shingle-postings sidecar: [[appendBatchNearDup]]
-    * leaves one `version=N` partition per batch forever, so a
-    * ten-thousand-batch history pays file-listing and footer overhead
-    * proportional to history length on EVERY batch. Fold all postings
-    * of versions STRICTLY OLDER than the newest into the
-    * second-newest version's partition — the fold-only-committed rule
-    * shared with [[compactTier]]/[[compactFp]]: the newest version's
-    * stream batch may not have committed its checkpoint, and its
-    * replay re-reads `version < N`, which must still see every older
-    * posting. The rewrite re-clusters the keep partition by
-    * (`bucket`, `sh`), so the next batch's pushed bucket-IN predicate
-    * prunes row groups exactly as the append path's layout does.
-    *
-    * Protocol: whole-root write-new-then-FLIP (tmp sibling → rename
-    * root away → rename tmp in), NOT [[compactFp]]'s
-    * rename-parts-into-partition. The fingerprint fold tolerates its
-    * crash windows because duplicate fingerprint rows are harmless to
-    * a membership SEMI-join; duplicate POSTINGS rows are not — the
-    * candidate aggregate counts rows into the intersection size `_c`,
-    * so a crash that left a posting both in its old version dir and
-    * merged into the keep partition would inflate measured Jaccard
-    * and silently DROP documents that are not near-duplicates. The
-    * root flip has no such window: every state exposes either the
-    * complete old tree or the complete new one. Heal-at-entry is the
-    * scrubSidecarVersion discipline — live absent + trash present ⇒
-    * restore the original (the rewrite is parameter-free, but restore
-    * + rerun is uniformly correct and keeps one rule), discard tmp,
-    * re-run; live absent + only tmp ⇒ fail loudly. [[appendBatchNearDup]]
-    * guards the same state at ITS entry, so a crashed compaction can
-    * never make a batch mistake the mid-swap absence for an empty
-    * corpus and accept everything. Single-writer with respect to
-    * appendBatchNearDup, like every compaction here. */
+  /** Compact the shingle-postings sidecar: fold the postings of
+    * versions strictly older than the newest into the second-newest
+    * version in one commit ([[rewrite]]), so long
+    * [[appendBatchNearDup]] histories keep flat per-batch listing
+    * overhead. Output files are SIZED (`ceil(bytes / target)`) and
+    * range-clustered by (`bucket`, `sh`): each file is a contiguous
+    * slab, so the next batch's pushed bucket-IN predicate prunes whole
+    * files on footer min/max, as the append layout prunes row groups
+    * (an unsized fold let AQE collapse the sidecar to 1-2 files and
+    * the candidate joins to 1-2 tasks). */
   def compactPostings(spark: SparkSession, postingsDir: String,
-      targetBytesPerFile: Long = 128L << 20): Unit = {
-    import org.apache.hadoop.fs.Path
-    import graft.util.Maint
-    val root = new Path(postingsDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = root.suffix(".compact")
-    val trash = root.suffix(".compact-trash")
-    if (!Maint.healAtEntry(fs, root, tmp, trash, "compactPostings",
-        live = exists(spark, postingsDir)))
-      return // never written — nothing to compact
-    Maint.cleanSiblings(fs, tmp, trash, "compactPostings")
-    val posts = spark.read.parquet(postingsDir)
-    val versions = posts.select(col("version").cast("long"))
-      .distinct().collect().map(_.getLong(0)).sorted
-    if (versions.length <= 2) return // nothing strictly-older to fold
-    val maxV = versions.last
-    val keepV = versions.init.last
-    // output files SIZED like Ingest.optimize (ceil(bytes / target)):
-    // an unsized repartition(cols) lets AQE coalesce the fold into 1-2
-    // files and the next batches' candidate joins scan the corpus side
-    // on 1-2 tasks — file-count-bounded parallelism (measured: the
-    // 80-batch probe's compacted semantic curve ran SLOWER than
-    // uncompacted from exactly this). Range partitioning on the
-    // cluster keys keeps each file a contiguous (version, bucket, sh)
-    // slab, so the pushed bucket-IN predicate prunes whole FILES on
-    // footer min/max, not just row groups.
-    val nFiles = Maint.sizedFileCount(
-      Maint.parquetBytes(fs,
-        versions.map(v => new Path(s"$postingsDir/version=$v")).toSeq),
-      targetBytesPerFile)
-    posts
-      .withColumn("version",
-        when(col("version").cast("long") < maxV, lit(keepV))
-          .otherwise(col("version").cast("long")))
-      .repartitionByRange(nFiles, col("version"), col("bucket"),
-        col("sh"))
-      .sortWithinPartitions(col("version"), col("bucket"), col("sh"))
-      .write.partitionBy("version").parquet(tmp.toString)
-    Maint.flipNow(fs, root, tmp, trash, "compactPostings")
-    ()
-  }
+      targetBytesPerFile: Long = 128L << 20): Unit =
+    rewrite(spark, postingsDir, "compactPostings", targetBytesPerFile,
+        fold = true) { (rows, nFiles) =>
+      rows.repartitionByRange(nFiles, col("bucket"), col("sh"))
+        .sortWithinPartitions(col("bucket"), col("sh"))
+    }
 
-  /** Compact the accepted-vector sidecar: fold all vectors of
-    * versions STRICTLY OLDER than the newest into the second-newest
-    * version's partition (the fold-only-committed rule — see
-    * [[compactTier]]) so long [[appendBatchSemantic]] histories keep
-    * flat per-batch listing overhead. The fold moves rows and
-    * re-clusters them by `cell`; it never drops or alters a vector,
-    * and `version` collapsing to `keepV` is invisible to the
-    * `version < N` reads.
-    *
-    * Protocol: [[compactFp]]'s rename-parts-into-partition — safe
-    * here, unlike the postings fold, because the semantic flag plan
-    * ends in `select(_id).distinct()`: a crash window that leaves a
-    * vector both in its old version dir and in the keep partition
-    * costs duplicate candidate rows the distinct collapses, never a
-    * changed answer. The root never vanishes, so no batch can
-    * mistake a mid-compaction state for an empty corpus. Superseded
-    * files delete only after the merged rows land. The fold also
-    * `distinct()`s the merged rows: a tolerated crash window's
-    * duplicates are answer-invisible but would otherwise survive
-    * EVERY later fold and grow the sidecar monotonically across
-    * repeated crashes — full-row dedup at fold time collapses them
-    * (exact: a crash duplicates bit-identical rows, and two genuinely
-    * identical accepted vectors are interchangeable for membership).
-    * Output files are SIZED (`ceil(bytes / target)`) and
-    * range-clustered by (cell, norm) so the pushed cell-IN predicate
-    * prunes whole files while scan parallelism survives the fold.
-    * Single-writer with respect to appendBatchSemantic. */
+  /** Compact the accepted-vector sidecar: fold the vectors of versions
+    * strictly older than the newest into the second-newest version in
+    * one commit ([[rewrite]]), so long [[appendBatchSemantic]]
+    * histories keep flat per-batch listing overhead. Output files are
+    * SIZED (`ceil(bytes / target)`) and range-clustered by (cell,
+    * norm), so the pushed cell-IN predicate prunes whole files while
+    * scan parallelism survives the fold. */
   def compactVectors(spark: SparkSession, vecDir: String,
       targetBytesPerFile: Long = 128L << 20): Unit =
-    foldHarmless(spark, vecDir, "compactVectors", targetBytesPerFile) {
-      (merged, nFiles) =>
-        merged.distinct()
-          .repartitionByRange(nFiles, col("cell"), col("_rnrm"))
-          .sortWithinPartitions(col("cell"))
+    rewrite(spark, vecDir, "compactVectors", targetBytesPerFile,
+        fold = true) { (rows, nFiles) =>
+      rows.repartitionByRange(nFiles, col("cell"), col("_rnrm"))
+        .sortWithinPartitions(col("cell"))
     }
 
   /** Re-quantize the accepted-vector sidecar under a NEW coarse
@@ -750,69 +674,27 @@ object CorpusDedup {
     * pruning; they never break correctness). STOPPED-STREAM,
     * single-writer: every batch after this must pass the new `cents`,
     * or cell assignments disagree and the candidate join loses pairs
-    * — the coordinated swap is the point. Vectors and frozen norms
-    * are untouched (membership answers cannot change); only `cell` is
-    * recomputed, with the whole sidecar rewritten version-partitioned
-    * and cell-clustered exactly like the append path writes it, via
-    * write-new-then-FLIP on the sidecar root (the
-    * [[graft.pipeline.Similarity.compactIvfVectors]] swap contract: a
-    * concurrent read fails loudly, never sees half a layout). The
-    * `version` column survives verbatim so checkpoint-replay's
-    * `version < N` reads still see every accepted vector. */
+    * — the coordinated swap is the point. Vectors, frozen norms and
+    * `version` survive verbatim (membership answers cannot change,
+    * and checkpoint-replay's `version < N` reads still see every
+    * accepted vector); only `cell` is recomputed. Every row is
+    * rewritten, cell-clustered like the append path writes it, and
+    * one commit lists only the new files ([[rewrite]]). */
   def requantizeVectors(spark: SparkSession, vecDir: String,
       cents: Seq[Seq[Double]]): Unit = {
-    import graft.pipeline.Similarity
     require(cents.nonEmpty, "requantizeVectors needs a quantizer")
-    val root = new org.apache.hadoop.fs.Path(vecDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$vecDir.requantize")
-    val trash = new org.apache.hadoop.fs.Path(s"$vecDir.trash")
-    // an absent live sidecar WITH a surviving trash sibling is this
-    // verb's own mid-swap crash state — a bare return would report a
-    // 'successful' requantize while every accepted vector sat stranded
-    // in the trash forever (membership candidate joins go silently
-    // empty). Maint restores the ORIGINAL and this call re-quantizes
-    // under ITS quantizer — never completing a crashed attempt's tmp,
-    // which may have been built under a different one.
-    if (!graft.util.Maint.healAtEntry(fs, root, tmp, trash,
-        "requantizeVectors", live = exists(spark, vecDir)))
-      return // never written — nothing to requantize
-    graft.util.Maint.cleanSiblings(fs, tmp, trash, "requantizeVectors")
-    Similarity.assignCells(
-        spark.read.parquet(vecDir).drop("cell"), cents, "_rv")
-      .repartition(col("version"), col("cell"))
-      .sortWithinPartitions(col("version"), col("cell"))
-      .write.partitionBy("version").parquet(tmp.toString)
-    graft.util.Maint.flipNow(fs, root, tmp, trash, "requantizeVectors")
-    ()
-  }
-
-  /** Fail loudly when an ABSENT sidecar root has a surviving
-    * maintenance sibling (write-new-then-flip trash/tmp): that is a
-    * crashed maintenance verb's mid-swap state, and the append faces
-    * must never mistake it for an empty corpus — silently accepting a
-    * whole batch of duplicates is the one unrecoverable outcome. The
-    * named verb's own entry heal restores the root. */
-  private def requireNoMidSwap(spark: SparkSession, dir: String,
-      suffixes: Seq[String], healVerb: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    suffixes.foreach { s =>
-      val sib = p.suffix(s)
-      if (fs.exists(sib))
-        throw new java.io.IOException(
-          s"$dir is absent but $sib survives — a crashed maintenance " +
-            s"swap, not an empty corpus; run $healVerb to heal before " +
-            "appending")
+    rewrite(spark, vecDir, "requantizeVectors", 128L << 20, fold = false) {
+      (rows, _) =>
+        graft.pipeline.Similarity.assignCells(rows.drop("cell"), cents, "_rv")
+          .repartition(col("version"), col("cell"))
+          .sortWithinPartitions(col("version"), col("cell"))
     }
   }
 
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      st.getPath.getName.endsWith(".parquet") ||
-        (st.isDirectory && st.getPath.getName.startsWith("version="))
-    }
-  }
+  /** The live rows of a sidecar — every file the newest manifest lists,
+    * `version` as a long; None when it was never committed. Lists and
+    * reads only. */
+  private[graft] def sidecarRows(spark: SparkSession,
+      dir: String): Option[DataFrame] =
+    sidecar(spark, dir).latest.map(m => rows(spark, dir, m, m.filesOf(Rows)))
 }

@@ -103,8 +103,9 @@ object Ingest {
     * any write below and the checkpoint commit re-delivers this
     * version — plain appends would silently duplicate data rows,
     * DOUBLE the stat partials, and double-count the control registry.
-    * The protocol (the [[CorpusDedup.appendBatch]] discipline, without
-    * re-partitioning the data tree by version):
+    * The protocol (the replay safety [[CorpusDedup.appendBatch]] gets
+    * from its sidecars' manifest commits, here kept by an intent marker
+    * because the data tree is not partitioned by version):
     *
     *   1. an INTENT marker (`_ingest_intent_v<N>` under the data root,
     *      a metadata-only touch) brackets the writes — created first,

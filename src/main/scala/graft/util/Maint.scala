@@ -4,9 +4,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** THE maintenance-verb filesystem protocol — one audited copy of the
   * write-new-then-flip / park-then-swap / heal-at-entry discipline
-  * that every destructive maintenance verb in the library routes
-  * through (sidecar version folds, index compactions, retrains,
-  * requantize, version scrubs, partition optimize).
+  * that the destructive maintenance verbs of the stores not yet on
+  * [[ManifestLog]] route through (vector-index compactions and
+  * retrains, version scrubs, partition optimize).
   *
   * Why one copy: the protocol exists because a maintenance verb that
   * crashes between two filesystem mutations must leave a state that is
@@ -19,29 +19,23 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * point of the shared helper and asserts heal-or-loud for each verb,
   * which is only tractable because the steps live here once.
   *
-  * Protocol choice is the caller's, dictated by what a crash-window
-  * DUPLICATE does downstream (the round-18 rule):
-  *   - duplicates change answers (postings rows count into Jaccard
-  *     intersections, PQ code rows sum into ADC scores, whole-index
-  *     layouts must swap atomically) → whole-root flip:
+  * Protocol choice is the caller's; neither may expose a crash-window
+  * DUPLICATE, which changes answers (PQ code rows sum into ADC scores,
+  * whole-index layouts must swap atomically):
+  *   - a tree rewritten whole → whole-root flip:
   *     [[healAtEntry]] + [[cleanSiblings]] + build-into-tmp +
   *     [[flipNow]]. Every crash state exposes either the complete old
   *     tree or the complete new one; an absent root with a surviving
   *     sibling is the mid-swap state the data-path entry guards
   *     against.
-  *   - duplicates harmless (membership semi-joins, `distinct()` flag
-  *     plans) → the cheaper in-place fold: build-into-tmp +
-  *     [[renamePartsInto]] the keep partition, then delete superseded
-  *     sources. The live root never vanishes; a crash leaves
-  *     redundant-but-correct rows the next fold collapses.
   *   - per-partition rewrites (a store too large to flip whole) →
   *     [[healParked]] at entry + [[swapPartitionDir]] per partition
   *     with originals PARKED under a shared trash root until the
   *     verb's commit delete — never delete-then-rename.
-  *   - the BM25 index and the SequenceShards store instead commit
-  *     through [[ManifestLog]]'s versioned manifest (one commit point
-  *     per verb, reads never mutate), whose crash points are [[step]]s
-  *     too.
+  *   - the BM25 index, the SequenceShards store and the CorpusDedup
+  *     sidecars instead commit through [[ManifestLog]]'s versioned
+  *     manifest (one commit point per verb, reads never mutate), whose
+  *     crash points are [[step]]s too.
   */
 object Maint {
 
@@ -135,36 +129,6 @@ object Maint {
     fs.delete(trash, true)
     step(verb, "committed")
   }
-
-  /** The duplicates-harmless fold's commit: move the rewritten part
-    * files from `tmp` into the keep partition (UUID part names cannot
-    * collide), then discard `tmp`. A crash mid-loop leaves some rows
-    * present both in `tmp` (unreachable by reads) and their sources
-    * (still live) — redundant-but-correct by the protocol's
-    * precondition, collapsed by the next fold. */
-  def renamePartsInto(fs: FileSystem, tmp: Path, keep: Path,
-      verb: String): Unit = {
-    fs.listStatus(tmp).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet"))
-      .foreach { p =>
-        if (!fs.rename(p, new Path(keep, p.getName)))
-          throw new java.io.IOException(s"$verb: rename $p -> $keep")
-      }
-    step(verb, "parts-renamed")
-    fs.delete(tmp, true)
-    step(verb, "tmp-deleted")
-  }
-
-  /** Total bytes of non-hidden parquet files directly under `dirs` —
-    * the input to [[sizedFileCount]]. Listing-only (no data read). */
-  def parquetBytes(fs: FileSystem, dirs: Seq[Path]): Long =
-    dirs.filter(fs.exists).flatMap(fs.listStatus(_))
-      .filter { s =>
-        val n = s.getPath.getName
-        s.isFile && n.endsWith(".parquet") && !n.startsWith(".") &&
-          !n.startsWith("_")
-      }
-      .map(_.getLen).sum
 
   /** ceil(bytes / target), floored at 1 — the Ingest.optimize output
     * sizing, shared by the sidecar folds so a fold emits target-sized

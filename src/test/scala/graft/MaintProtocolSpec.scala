@@ -10,23 +10,24 @@ import graft.pipeline.Similarity
 import graft.streaming.{CorpusDedup, Ingest}
 import graft.util.Maint
 
-/** The maintenance-protocol crash matrix: for EVERY filesystem step of
-  * [[graft.util.Maint]] (as exercised by each verb), inject a crash at
-  * that step, then assert heal-or-loud — re-running the verb restores
-  * a state whose ANSWERS equal the never-crashed run's. One spec
-  * instead of a hand-written test per (verb × window) because the
-  * steps live in one audited helper: the matrix ENUMERATES ITSELF by
-  * first recording which steps a clean run fires, then replaying the
-  * verb once per step with a throwing hook.
+/** The maintenance-protocol crash matrix: for EVERY crash point a
+  * verb passes ([[graft.util.Maint.step]], fired by the shared
+  * [[graft.util.Maint]] helpers and by [[graft.util.ManifestLog]]),
+  * inject a crash at that point, then assert heal-or-loud —
+  * re-running the verb restores a state whose answer equals the
+  * never-crashed run's. One spec instead of a hand-written test per
+  * (verb × window) because the points live in shared helpers: the
+  * matrix ENUMERATES ITSELF by first recording which points a clean
+  * run fires, then replaying the verb once per point with a throwing
+  * hook.
   *
-  * Answer-level comparison is deliberate: the duplicates-harmless
-  * protocol ([[Maint.renamePartsInto]]) tolerates crash windows that
-  * leave redundant rows (membership semi-joins and `distinct()` flag
-  * plans collapse them), so raw-row equality would be WRONG to assert
-  * there — each scenario supplies the verb's downstream answer face
-  * (distinct membership rows, bit_or-merged bloom words, exact rows
-  * for the flip-protocol verbs whose duplicates would change
-  * answers). */
+  * Each scenario supplies the verb's answer face. No protocol here may
+  * leave a crash-window duplicate (a duplicate posting inflates a
+  * Jaccard intersection, a duplicate fingerprint outlives every later
+  * fold), so the CorpusDedup sidecars are compared as the exact sorted
+  * multiset of their live rows, read through the store's own read
+  * face; the index verbs compare their own answer faces (index rows
+  * per id, the served BM25 ranking). */
 class MaintProtocolSpec extends AnyFunSuite {
   private lazy val spark: SparkSession = TestSpark.spark
   import spark.implicits._
@@ -149,53 +150,48 @@ class MaintProtocolSpec extends AnyFunSuite {
         s"$base/tier", s"$base/fp", nBuckets = 16, nWords = 2)
     }
 
-  /** membership face: the bit_or-merged words per bucket over the
-    * committed versions — exactly what the next batch's prefilter
-    * reads (redundant partials are invariant under bit_or). */
-  private def tierAnswer(base: String): Seq[String] = {
-    val t = spark.read.parquet(s"$base/tier")
-    val maxV = t.agg(max(col("version").cast("long"))).head.getLong(0)
-    sortedRows(t.where(col("version") < maxV)
-      .groupBy(col("bloom_bucket"))
-      .agg(expr("bit_or(bloom_w0)").as("w0"),
-        expr("bit_or(bloom_w1)").as("w1")))
+  /** A sidecar's exact answer: the sorted multiset of its live rows,
+    * `version` included, through the read face. */
+  private def sidecarAnswer(dir: String): Seq[String] =
+    sortedRows(CorpusDedup.sidecarRows(spark, dir).get)
+
+  /** A CorpusDedup verb's crash matrix: every point re-runs to the
+    * clean rows, and a clean run passes its one commit point once. */
+  private def sidecarMatrix(verb: String, setup: String => Unit,
+      sidecar: String, run: String => Unit): Unit = {
+    val fired = crashMatrix(Scenario(verb, setup, run,
+      b => sidecarAnswer(s"$b/$sidecar")))
+    assert(fired.count(_ == "committed") == 1, fired)
   }
 
-  /** membership face: distinct fingerprints per committed version
-    * bucketing collapsed — what the exact-confirm semi-join answers. */
-  private def fpAnswer(base: String): Seq[String] =
-    sortedRows(spark.read.parquet(s"$base/fp")
-      .select("doc_id", "_fp").distinct())
-
   test("compactTier: crash at every step heals on re-run") {
-    crashMatrix(Scenario("compactTier", exactSetup,
-      b => CorpusDedup.compactTier(spark, s"$b/tier", nWords = 2),
-      tierAnswer))
+    sidecarMatrix("compactTier", exactSetup, "tier",
+      b => CorpusDedup.compactTier(spark, s"$b/tier", nWords = 2))
   }
 
   test("compactFp: crash at every step heals on re-run") {
-    crashMatrix(Scenario("compactFp", exactSetup,
-      b => CorpusDedup.compactFp(spark, s"$b/fp"),
-      fpAnswer))
+    sidecarMatrix("compactFp", exactSetup, "fp",
+      b => CorpusDedup.compactFp(spark, s"$b/fp"))
   }
 
-  // ---- near-dup postings sidecar (flip protocol) ------------------------
+  // ---- near-dup postings sidecar ----------------------------------------
+
+  /** Family `i`'s text: no shingle in common with another family's. */
+  private def family(i: Int): String =
+    (0 until 7).map(w => s"f$i-w$w").mkString(" ")
+
+  /** Four batches of one new family each: four versions, so the fold
+    * has strictly-older versions to fold. */
+  private def nearDupSetup(base: String): Unit =
+    (0 until 4).foreach { i =>
+      val b = Seq((i * 10L, family(i))).toDF("doc_id", "text")
+      CorpusDedup.appendBatchNearDup(spark, b, i + 1L,
+        s"$base/corpus", s"$base/postings", k = 3, threshold = 0.5)
+    }
 
   test("compactPostings: crash at every step heals on re-run") {
-    def setup(base: String): Unit =
-      (0 until 4).foreach { i =>
-        val b = Seq((i * 10L,
-          s"family $i words one two three four five six seven"))
-          .toDF("doc_id", "text")
-        CorpusDedup.appendBatchNearDup(spark, b, i + 1L,
-          s"$base/corpus", s"$base/postings", k = 3, threshold = 0.5)
-      }
-    // flip protocol: duplicates would CHANGE answers, so the answer
-    // face is the exact posting multiset (and the version layout)
-    def answer(base: String): Seq[String] =
-      sortedRows(spark.read.parquet(s"$base/postings"))
-    crashMatrix(Scenario("compactPostings", setup,
-      b => CorpusDedup.compactPostings(spark, s"$b/postings"), answer))
+    sidecarMatrix("compactPostings", nearDupSetup, "postings",
+      b => CorpusDedup.compactPostings(spark, s"$b/postings"))
   }
 
   // ---- semantic vector sidecar ------------------------------------------
@@ -216,52 +212,119 @@ class MaintProtocolSpec extends AnyFunSuite {
         s"$base/corpus", s"$base/vec", semCents, threshold = 0.9999)
     }
 
-  /** membership face: distinct sidecar rows (the flag plan ends in
-    * distinct(), so redundant crash-window copies are invisible). */
-  private def vecAnswer(base: String): Seq[String] =
-    sortedRows(spark.read.parquet(s"$base/vec")
-      .select("_rv", "_rnrm", "cell").distinct())
-
   test("compactVectors: crash at every step heals on re-run") {
-    crashMatrix(Scenario("compactVectors", semanticSetup,
-      b => CorpusDedup.compactVectors(spark, s"$b/vec"), vecAnswer))
+    sidecarMatrix("compactVectors", semanticSetup, "vec",
+      b => CorpusDedup.compactVectors(spark, s"$b/vec"))
   }
 
   test("requantizeVectors: crash at every step heals on re-run") {
     val cents2 = Similarity.trainIvfCentroids(
       (0 until 8).map(i => (i.toLong, vecOf(i + 3))).toDF("vec_id",
         "embedding"), k = 3, iters = 2)
-    crashMatrix(Scenario("requantizeVectors", semanticSetup,
-      b => CorpusDedup.requantizeVectors(spark, s"$b/vec", cents2),
-      vecAnswer))
+    sidecarMatrix("requantizeVectors", semanticSetup, "vec",
+      b => CorpusDedup.requantizeVectors(spark, s"$b/vec", cents2))
+  }
+
+  // ---- sidecar crash states: reads never mutate, verbs leave it tidy ----
+
+  /** Every file under `dir`, recursively: (relative path, length). */
+  private def listing(dir: String): Seq[(String, Long)] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => (root.relativize(p).toString, Files.size(p))).toSeq.sorted
+  }
+
+  /** A tidy sidecar: the root holds only `_manifest/` and the `rows`
+    * tree, `_manifest/` one manifest, and every data file under `rows`
+    * is one the manifest lists. */
+  private def assertTidy(dir: String): Unit = {
+    val m = new graft.util.ManifestLog(new org.apache.hadoop.fs.Path(dir),
+      spark.sparkContext.hadoopConfiguration,
+      Map("rows" -> Seq("version"))).latest.get
+    assert(new java.io.File(dir).list().toSet == Set("_manifest", "rows"))
+    assert(new java.io.File(s"$dir/_manifest").list()
+      .filterNot(_.startsWith(".")).toSeq == Seq(m.version.toString))
+    assert(listing(dir).map(_._1).filter(_.endsWith(".parquet"))
+      .filterNot(_.split('/').last.startsWith(".")).toSet ==
+      m.files.map(_.path).toSet)
+  }
+
+  /** The two states a crash leaves in a sidecar — an append crashed at
+    * `written` (an uncommitted manifest version's files) and a
+    * compaction crashed at `committed` (manifest v+1 beside manifest v
+    * and its superseded files). In each, the read face equals the
+    * clean store's and changes no file, the next append accepts
+    * exactly what it accepts on the clean store, and the sidecar ends
+    * tidy. */
+  private def crashStates(setup: String => Unit, sidecar: String,
+      append: (String, Long) => Long, appendVerb: String,
+      compact: String => Unit, compactVerb: String): Unit = {
+    val pristine = Files.createTempDirectory("maintstates")
+    setup(pristine.toString)
+    def crashed(verb: String, point: String)(body: String => Unit)
+        : String = {
+      val d = freshCopy(pristine)
+      Maint.crashHook = (v, p) =>
+        if (v == verb && p == point) throw CrashInjected(v, p)
+      try intercept[CrashInjected](body(d))
+      finally Maint.crashHook = (_, _) => ()
+      d
+    }
+    val cleanPre = freshCopy(pristine)
+    val wantPre = sidecarAnswer(s"$cleanPre/$sidecar")
+    val want = append(cleanPre, 5L)
+    val cleanCompacted = freshCopy(pristine)
+    compact(cleanCompacted)
+    for ((dir, wantRead) <- Seq(
+        crashed(appendVerb, "written")(d => { append(d, 5L); () }) ->
+          wantPre,
+        crashed(compactVerb, "committed")(compact) ->
+          sidecarAnswer(s"$cleanCompacted/$sidecar"))) {
+      val before = listing(s"$dir/$sidecar")
+      assert(sidecarAnswer(s"$dir/$sidecar") == wantRead)
+      assert(listing(s"$dir/$sidecar") == before,
+        "the read face changed the sidecar's files")
+      assert(append(dir, 5L) == want)
+      assertTidy(s"$dir/$sidecar")
+    }
+  }
+
+  test("fp sidecar crash states: reads never mutate, the next append " +
+      "accepts what the clean store accepts, and leaves it tidy") {
+    crashStates(exactSetup, "fp",
+      (b, v) => CorpusDedup.appendBatch(spark,
+        Seq((v * 10L, "doc number 1 alpha beta gamma"),
+          (v * 10L + 1, s"fresh doc $v")).toDF("doc_id", "text"),
+        v, s"$b/corpus", s"$b/tier", s"$b/fp", nBuckets = 16, nWords = 2),
+      "appendBatch:fp",
+      b => CorpusDedup.compactFp(spark, s"$b/fp"), "compactFp")
+  }
+
+  test("postings sidecar crash states: reads never mutate, the next " +
+      "append accepts what the clean store accepts, and leaves it tidy") {
+    crashStates(nearDupSetup, "postings",
+      (b, v) => CorpusDedup.appendBatchNearDup(spark,
+        Seq((v * 10L, family(1)), (v * 10L + 1, family(v.toInt)))
+          .toDF("doc_id", "text"),
+        v, s"$b/corpus", s"$b/postings", k = 3, threshold = 0.5),
+      "appendBatchNearDup:postings",
+      b => CorpusDedup.compactPostings(spark, s"$b/postings"),
+      "compactPostings")
   }
 
   test("heal path itself: crashes DURING a heal-in-progress (the " +
       "mid-swap starting state) recover on re-run, for both a " +
-      "version-fold flip and a whole-sidecar flip") {
+      "version-fold flip and a whole-index flip") {
     healCrashMatrix(
-      Scenario("compactPostings",
-        base => {
-          (0 until 4).foreach { i =>
-            CorpusDedup.appendBatchNearDup(spark,
-              Seq((i * 10L,
-                s"family $i words one two three four five six"))
-                .toDF("doc_id", "text"),
-              i + 1L, s"$base/corpus", s"$base/postings",
-              k = 3, threshold = 0.5)
-          }
-        },
-        b => CorpusDedup.compactPostings(spark, s"$b/postings"),
-        b => sortedRows(spark.read.parquet(s"$b/postings"))),
-      parkDir(_, "postings", "postings.compact-trash"))
-    val cents2 = Similarity.trainIvfCentroids(
-      (0 until 8).map(i => (i.toLong, vecOf(i + 3))).toDF("vec_id",
-        "embedding"), k = 3, iters = 2)
+      Scenario("compactIvfVectors", ivfSetup,
+        b => Similarity.compactIvfVectors(spark, s"$b/ivf"), ivfAnswer),
+      parkDir(_, "ivf/vectors", "ivf/.vectors-trash"))
     healCrashMatrix(
-      Scenario("requantizeVectors", semanticSetup,
-        b => CorpusDedup.requantizeVectors(spark, s"$b/vec", cents2),
-        vecAnswer),
-      parkDir(_, "vec", "vec.trash"))
+      Scenario("retrainIvfIndex", ivfSetup,
+        b => Similarity.retrainIvfIndex(spark, s"$b/ivf", kCells = 3,
+          iters = 2), ivfAnswer),
+      parkDir(_, "ivf", "ivf.trash"))
   }
 
   // ---- persisted vector indexes -----------------------------------------

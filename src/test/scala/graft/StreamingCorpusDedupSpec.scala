@@ -16,6 +16,9 @@ class StreamingCorpusDedupSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** A sidecar's live rows, through its read face. */
+  private def side(dir: String) = CorpusDedup.sidecarRows(spark, dir).get
+
   private def dirs(): (String, String, String, String) = {
     val base = Files.createTempDirectory("graft-corpusdedup").toString
     (s"$base/corpus", s"$base/tier", s"$base/fp", s"$base/ckpt")
@@ -43,10 +46,10 @@ class StreamingCorpusDedupSpec extends AnyFunSuite {
     assert(accepted == Map(1L -> 1L, 2L -> 1L, 11L -> 2L))
     // sidecars carry one fingerprint row per accepted doc and one
     // tier partial per (bucket, version)
-    val fps = spark.read.parquet(fp)
+    val fps = side(fp)
     assert(fps.count() == 3 && fps.select("doc_id").as[Long]
       .collect().toSet == Set(1L, 2L, 11L))
-    val tierRows = spark.read.parquet(tier)
+    val tierRows = side(tier)
     assert(tierRows.select(col("version").cast("long")).distinct()
       .as[Long].collect().toSet == Set(1L, 2L))
     spark.sparkContext.getPersistentRDDs.values
@@ -87,9 +90,9 @@ class StreamingCorpusDedupSpec extends AnyFunSuite {
         .map(i => (i, s"doc $i body")).toDF("doc_id", "text")
       CorpusDedup.appendBatch(spark, b, v, corpus, tier, fp)
     }
-    val before = spark.read.parquet(tier).count()
+    val before = side(tier).count()
     CorpusDedup.compactTier(spark, tier)
-    val after = spark.read.parquet(tier)
+    val after = side(tier)
     assert(after.count() <= before)
     // versions STRICTLY older than the newest fold into ONE version
     // partition with one row per bucket; the newest version's
@@ -166,7 +169,7 @@ class StreamingCorpusDedupSpec extends AnyFunSuite {
     assert(CorpusDedup.appendBatch(spark, dups, 2L, corpus, tier, fp)
       == 0L)
     assert(spark.read.parquet(corpus).count() == 30)
-    assert(spark.read.parquet(tier)
+    assert(side(tier)
       .select(col("version").cast("long")).distinct()
       .as[Long].collect().toSet == Set(1L))
     spark.sparkContext.getPersistentRDDs.values
@@ -185,9 +188,9 @@ class StreamingCorpusDedupSpec extends AnyFunSuite {
     def snapshot() = (
       spark.read.parquet(corpus).select("doc_id").as[Long]
         .collect().sorted.toSeq,
-      spark.read.parquet(fp).select("doc_id").as[Long]
+      side(fp).select("doc_id").as[Long]
         .collect().sorted.toSeq,
-      spark.read.parquet(tier).count())
+      side(tier).count())
     val before = snapshot()
     // crash-replay: same batch, same version, state already committed
     assert(CorpusDedup.appendBatch(spark, b2, 2L, corpus, tier, fp)
@@ -204,21 +207,24 @@ class StreamingCorpusDedupSpec extends AnyFunSuite {
     val b1 = Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
     CorpusDedup.appendBatch(spark, b1, 1L, corpus, tier, fp)
     val b2 = Seq((10L, "gamma"), (11L, "alpha")).toDF("doc_id", "text")
-    CorpusDedup.appendBatch(spark, b2, 2L, corpus, tier, fp)
-    // simulate a crash between the corpus write and the sidecar
-    // writes of version 2: sidecars vanish, corpus rows remain
-    val conf = spark.sparkContext.hadoopConfiguration
-    for (dir <- Seq(fp, tier)) {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/version=2")
-      assert(p.getFileSystem(conf).delete(p, true))
-    }
+    // crash version 2 after its corpus and fingerprint files are
+    // written, before the fingerprint commit: corpus rows remain, both
+    // sidecars still end at version 1
+    graft.util.Maint.crashHook = (v, p) =>
+      if (v == "appendBatch:fp" && p == "written")
+        throw new IllegalStateException("crash")
+    try intercept[IllegalStateException](
+      CorpusDedup.appendBatch(spark, b2, 2L, corpus, tier, fp))
+    finally graft.util.Maint.crashHook = (_, _) => ()
+    assert(side(fp).select(col("version")).distinct().as[Long]
+      .collect().toSeq == Seq(1L))
     assert(CorpusDedup.appendBatch(spark, b2, 2L, corpus, tier, fp)
       == 1L)
     // corpus has no duplicates and all three stores agree again
     val docs = spark.read.parquet(corpus).select("doc_id").as[Long]
       .collect().sorted.toSeq
     assert(docs == Seq(1L, 2L, 10L), s"got $docs")
-    assert(spark.read.parquet(fp).select("doc_id").as[Long]
+    assert(side(fp).select("doc_id").as[Long]
       .collect().sorted.toSeq == Seq(1L, 2L, 10L))
     // and the healed sidecars dedup the next batch correctly
     assert(CorpusDedup.appendBatch(spark,
@@ -240,19 +246,19 @@ class StreamingCorpusDedupSpec extends AnyFunSuite {
         .toDF("doc_id", "text")
       CorpusDedup.appendBatch(spark, b, i + 1L, corpus, tier, fp)
     }
-    val fpSetBefore = spark.read.parquet(fp)
+    val fpSetBefore = side(fp)
       .select("doc_id").as[Long].collect().sorted.toSeq
-    val nPartsBefore = spark.read.parquet(fp)
+    val nPartsBefore = side(fp)
       .select(col("version").cast("long")).distinct().count()
     assert(nPartsBefore == 4L)
     CorpusDedup.compactFp(spark, fp)
     // fold-only-committed: versions 1-3 collapse into version=3, the
     // newest (4) stays untouched for its possibly-uncommitted replay
-    val byVersion = spark.read.parquet(fp)
+    val byVersion = side(fp)
       .select(col("version").cast("long")).distinct()
       .as[Long].collect().sorted.toSeq
     assert(byVersion == Seq(3L, 4L), s"got $byVersion")
-    assert(spark.read.parquet(fp).select("doc_id").as[Long]
+    assert(side(fp).select("doc_id").as[Long]
       .collect().sorted.toSeq == fpSetBefore,
       "the fold must move fingerprints, never drop or alter one")
     // membership answers unchanged: a batch of pure re-offers
@@ -284,13 +290,19 @@ class StreamingCorpusDedupSpec extends AnyFunSuite {
       Seq((3L, "c")).toDF("doc_id", "text"),
       2L, corpus, tier, fp)
     CorpusDedup.compactFp(spark, fp)
-    assert(spark.read.parquet(fp)
+    assert(side(fp)
       .select(col("version").cast("long")).distinct()
       .as[Long].collect().sorted.toSeq == Seq(1L, 2L))
     sweep()
   }
 
   // --- near-dup face ------------------------------------------------------
+
+  /** A sidecar's live files, from its newest manifest. */
+  private def manifestFiles(dir: String): Seq[graft.util.DataFile] =
+    new graft.util.ManifestLog(new org.apache.hadoop.fs.Path(dir),
+      spark.sparkContext.hadoopConfiguration, Map("rows" -> Seq("version")))
+      .latest.get.files
 
   private def sweep(): Unit =
     spark.sparkContext.getPersistentRDDs.values
@@ -357,8 +369,7 @@ class StreamingCorpusDedupSpec extends AnyFunSuite {
     def snapshot() = (
       spark.read.parquet(corpus).select("doc_id").as[Long]
         .collect().sorted.toSeq,
-      spark.read.parquet(postings)
-        .select("ref_id", "sh").distinct().count())
+      side(postings).count())
     val before = snapshot()
     assert(CorpusDedup.appendBatchNearDup(spark, b2, 2L, corpus,
       postings) == 1L)
@@ -391,7 +402,7 @@ class StreamingCorpusDedupSpec extends AnyFunSuite {
         Dedup.shinglesOfTokens(col("_toks"), 3).as("_arr"))
       .withColumn("_na", size(col("_arr"))))
     try {
-      val postings = spark.read.parquet(postingsDir)
+      val postings = side(postingsDir)
         .where(col("version") < 2)
         .select(col("sh"), col("ref_id"), col("nb"))
       for (maxDf <- Seq(Int.MaxValue, 3)) {
@@ -427,7 +438,7 @@ class StreamingCorpusDedupSpec extends AnyFunSuite {
     // a batch whose shingles cover few buckets: its postings read
     // must carry a bucket filter (pushed to parquet), and the rows
     // it admits are exactly the buckets the batch hashes into
-    val written = spark.read.parquet(postingsDir)
+    val written = side(postingsDir)
     assert(written.columns.contains("bucket"))
     val b2 = Seq((10L, famText(1, 3))).toDF("doc_id", "text")
     assert(CorpusDedup.appendBatchNearDup(spark, b2, 2L, corpus,
@@ -456,20 +467,19 @@ class StreamingCorpusDedupSpec extends AnyFunSuite {
     // batch 0 accepted both its docs (empty corpus); later batches
     // accepted only their new family
     assert(acceptedBefore == Seq(0L, 1L, 10L, 20L, 30L))
-    def postingRows() = spark.read.parquet(postings)
+    def postingRows() = side(postings)
       .select("bucket", "sh", "ref_id", "nb")
       .collect().map(_.toString).sorted.toSeq
     val rowsBefore = postingRows()
     CorpusDedup.compactPostings(spark, postings)
     // versions 1-3 collapse into version=3; newest (4) stays for its
     // possibly-uncommitted replay
-    assert(spark.read.parquet(postings)
+    assert(side(postings)
       .select(col("version").cast("long")).distinct()
       .as[Long].collect().sorted.toSeq == Seq(3L, 4L))
-    // the fold moves postings rows, never drops, alters, or — the
-    // reason this verb flips the whole root — DUPLICATES one (a
-    // duplicated posting inflates the intersection count and silently
-    // drops non-near-dup documents)
+    // the fold moves postings rows, never drops, alters, or DUPLICATES
+    // one (a duplicated posting inflates the intersection count and
+    // silently drops non-near-dup documents)
     assert(postingRows() == rowsBefore)
     // membership answers unchanged: near-dups of every pre-fold
     // family still drop, a new family still lands
@@ -493,7 +503,7 @@ class StreamingCorpusDedupSpec extends AnyFunSuite {
         Dedup.shinglesOfTokens(col("_toks"), 3).as("_arr"))
       .withColumn("_na", size(col("_arr"))))
     try {
-      val posts = spark.read.parquet(postings)
+      val posts = side(postings)
         .where(col("version") < 10)
         .select(col("sh"), col("ref_id"), col("nb"))
       val p = CorpusDedup.NearDupPlan
@@ -521,36 +531,27 @@ class StreamingCorpusDedupSpec extends AnyFunSuite {
       CorpusDedup.appendBatchNearDup(spark, b, v + 1L, corpus,
         postings, k = 3, threshold = 0.5)
     }
-    val fs = new Path(postings).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val allBytes = graft.util.Maint.parquetBytes(fs,
-      (1 to 4).map(v => new Path(s"$postings/version=$v")))
+    // the folded versions' bytes, from the manifest
+    def files(v: Long) = manifestFiles(postings).filter(_.part("version") == v)
+    val foldedBytes = (1L to 3L).flatMap(files).map(_.bytes).sum
     val target = 4096L
-    val nExp = graft.util.Maint.sizedFileCount(allBytes, target)
-    assert(nExp > 2, s"fixture too small: $allBytes bytes")
-    def rows() = spark.read.parquet(postings)
+    val nExp = graft.util.Maint.sizedFileCount(foldedBytes, target)
+    assert(nExp > 2, s"fixture too small: $foldedBytes bytes")
+    def rows() = side(postings)
       .select("bucket", "sh", "ref_id", "nb")
       .collect().map(_.toString).sorted.toSeq
     val before = rows()
     CorpusDedup.compactPostings(spark, postings,
       targetBytesPerFile = target)
-    val files = fs.listStatus(new Path(postings))
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("version="))
-      .flatMap(d => fs.listStatus(d.getPath))
-      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-    // range tasks straddling the version boundary may write one file
-    // in each version dir — allow that single split
-    assert(math.abs(files.length - nExp) <= 1,
-      s"fold emitted ${files.length} files, sizing says $nExp")
+    assert(files(3L).length == nExp,
+      s"fold emitted ${files(3L).length} files, sizing says $nExp")
     assert(rows() == before, "the sized fold changed posting rows")
     sweep()
   }
 
   test("compactPostings is a no-op below three versions, survives a " +
-      "missing dir, and its mid-swap crash state is guarded at the " +
-      "append entry and healed at its own") {
-    import org.apache.hadoop.fs.Path
+      "missing dir, and leaves a sidecar built before the manifest " +
+      "layout untouched, which the append face refuses loudly") {
     val (corpus, _, _, _) = dirs()
     val postings = corpus + "-postings"
     CorpusDedup.compactPostings(spark, postings) // no dir: must not throw
@@ -560,31 +561,30 @@ class StreamingCorpusDedupSpec extends AnyFunSuite {
         i + 1L, corpus, postings)
     }
     CorpusDedup.compactPostings(spark, postings)
-    assert(spark.read.parquet(postings)
+    assert(side(postings)
       .select(col("version").cast("long")).distinct()
       .as[Long].collect().sorted.toSeq == Seq(1L, 2L))
-    // simulate the flip's crash window: live root renamed away, the
-    // full original surviving in the trash sibling. The APPEND face
-    // must fail loudly — treating the absence as an empty corpus
-    // would accept every duplicate in the batch
-    val fs = new Path(postings).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new Path(postings),
-      new Path(postings + ".compact-trash")))
-    val ex = intercept[java.io.IOException] {
+    // the pre-manifest layout: version-partitioned parquet at the root.
+    // Reading it as an empty corpus would accept every duplicate
+    val legacy = corpus + "-legacy"
+    side(postings).drop("version").withColumn("version", lit(1L))
+      .write.partitionBy("version").parquet(legacy)
+    def tree() = {
+      import scala.jdk.CollectionConverters._
+      val root = java.nio.file.Paths.get(legacy)
+      Files.walk(root).iterator().asScala.map(root.relativize(_).toString)
+        .toSeq.sorted
+    }
+    val before = tree()
+    CorpusDedup.compactPostings(spark, legacy)
+    assert(tree() == before, "the compaction touched a pre-manifest dir")
+    val ex = intercept[IllegalArgumentException] {
       CorpusDedup.appendBatchNearDup(spark,
         Seq((50L, famText(0, 3))).toDF("doc_id", "text"),
-        3L, corpus, postings)
+        3L, corpus, legacy)
     }
-    assert(ex.getMessage.contains("compactPostings"))
-    // the verb's own entry heals: original restored, fold re-runs
-    CorpusDedup.compactPostings(spark, postings)
-    assert(!fs.exists(new Path(postings + ".compact-trash")))
-    // and the healed index dedups again: a near-dup of doc 0 drops
-    assert(CorpusDedup.appendBatchNearDup(spark,
-      Seq((50L, famText(0, 3)), (51L, famText(5, 0)))
-        .toDF("doc_id", "text"),
-      3L, corpus, postings) == 1L)
+    assert(ex.getMessage.contains("built before the manifest layout"))
+    assert(tree() == before)
     sweep()
   }
 
@@ -618,6 +618,70 @@ class StreamingCorpusDedupSpec extends AnyFunSuite {
     // 100 dropped (rare-shingle overlap with doc 0), 101 kept (only
     // the hot boilerplate shingle links it, and the cap removed it)
     assert(got == 1L && kept == Set(101L), s"got=$got kept=$kept")
+    sweep()
+  }
+
+  // --- job naming and the append budget ----------------------------------
+
+  test("every Spark job the three append faces and the five maintenance " +
+      "verbs launch carries a dedup:<verb>:<step> description") {
+    val base = Files.createTempDirectory("graft-dedupjobs").toString
+    def vec(i: Long): Seq[Float] =
+      (0 until 4).map(d => math.sin(i * (0.7 + 0.13 * d) + d).toFloat)
+    def vecs(ids: Seq[Long]) = ids.map(i => (i, vec(i))).toDF("vec_id",
+      "embedding")
+    val cents = graft.pipeline.Similarity.trainIvfCentroids(
+      vecs(0L until 8L), k = 2, iters = 2)
+    val (_, jobs) = JobLog.record(spark.sparkContext) {
+      (1L to 4L).foreach { v =>
+        val b = Seq((v * 10, "doc zero body"), (v * 10 + 1, s"doc $v body"))
+          .toDF("doc_id", "text")
+        CorpusDedup.appendBatch(spark, b, v, s"$base/corpus", s"$base/tier",
+          s"$base/fp", nBuckets = 16, nWords = 2)
+        CorpusDedup.appendBatchNearDup(spark, b, v, s"$base/ncorpus",
+          s"$base/postings")
+        CorpusDedup.appendBatchSemantic(spark, vecs(Seq(v * 10, v * 10 + 1)),
+          v, s"$base/scorpus", s"$base/vec", cents, threshold = 0.9999)
+      }
+      CorpusDedup.compactTier(spark, s"$base/tier", nWords = 2)
+      CorpusDedup.compactFp(spark, s"$base/fp")
+      CorpusDedup.compactPostings(spark, s"$base/postings")
+      CorpusDedup.compactVectors(spark, s"$base/vec")
+      CorpusDedup.requantizeVectors(spark, s"$base/vec", cents)
+    }
+    val verbs = Seq("appendBatch", "appendBatchNearDup",
+      "appendBatchSemantic", "compactTier", "compactFp", "compactPostings",
+      "compactVectors", "requantizeVectors")
+    val descs = jobs.map(_.desc)
+    assert(descs.filterNot(d =>
+      verbs.exists(v => d.startsWith(s"dedup:$v:"))).isEmpty, descs)
+    assert(verbs.filterNot(v => descs.exists(_.startsWith(s"dedup:$v:")))
+      .isEmpty, descs)
+    sweep()
+  }
+
+  test("append job budget: a warm second appendBatch launches a pinned " +
+      "number of jobs, with no schema-inference and no leaf-listing job") {
+    def batch(v: Long) = (0L until 40L).map(i =>
+      (v * 1000 + i, s"doc ${i % 30} body text")).toDF("doc_id", "text")
+    def append(base: String, v: Long) = CorpusDedup.appendBatch(spark,
+      batch(v), v, s"$base/corpus", s"$base/tier", s"$base/fp",
+      nBuckets = 16, nWords = 2)
+    val warm = Files.createTempDirectory("graft-dedupwarm").toString
+    append(warm, 1L); append(warm, 2L)
+    val base = Files.createTempDirectory("graft-dedupbudget").toString
+    append(base, 1L)
+    val (n, jobs) = JobLog.record(spark.sparkContext)(append(base, 2L))
+    assert(n == 0L) // every text of batch 2 was accepted in batch 1
+    assert(!jobs.exists(_.desc.startsWith("Listing leaf files")),
+      jobs.map(_.desc))
+    // four for the bloom prefilter and four for the accepted set (a
+    // batch of only duplicates writes nothing); the sidecar reads take
+    // the manifest's schema, so neither adds a schema-inference job
+    assert(jobs.map(_.desc).groupBy(identity).view.mapValues(_.size)
+      .toMap == Map("dedup:appendBatch:prefilter" -> 4,
+        "dedup:appendBatch:accept" -> 4),
+      jobs.map(j => s"${j.desc}/${j.stages}"))
     sweep()
   }
 }

@@ -40,6 +40,9 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
       (0 until 8).map(f => (f.toLong, famVec(f, 0)))
         .toDF("vec_id", "embedding"), k = 2, iters = 3)
 
+  /** A sidecar's live rows, through its read face. */
+  private def live(dir: String) = CorpusDedup.sidecarRows(spark, dir).get
+
   private def sweep(): Unit =
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
@@ -63,23 +66,22 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
       CorpusDedup.appendBatchSemantic(spark, b, v + 1L, corpus, vecs,
         cents8, threshold = 0.9999)
     }
-    val fs = new Path(vecs).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val foldedBytes = graft.util.Maint.parquetBytes(fs,
-      (1 to 3).map(v => new Path(s"$vecs/version=$v")))
+    // the folded versions' files and bytes, from the manifest
+    def files(v: Long) = new graft.util.ManifestLog(new Path(vecs),
+      spark.sparkContext.hadoopConfiguration, Map("rows" -> Seq("version")))
+      .latest.get.files.filter(_.part("version") == v)
+    val foldedBytes = (1L to 3L).flatMap(files).map(_.bytes).sum
     val target = 2048L
     val nExp = graft.util.Maint.sizedFileCount(foldedBytes, target)
     assert(nExp > 2, s"fixture too small to exercise sizing: " +
       s"$foldedBytes bytes")
-    def rows() = spark.read.parquet(vecs)
-      .select("_rv", "_rnrm", "cell").distinct()
+    def rows() = live(vecs)
+      .select("_rv", "_rnrm", "cell")
       .collect().map(_.toString).sorted.toSeq
     val before = rows()
     CorpusDedup.compactVectors(spark, vecs, targetBytesPerFile = target)
-    val keepFiles = fs.listStatus(new Path(s"$vecs/version=3"))
-      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
-    assert(keepFiles.length == nExp,
-      s"fold emitted ${keepFiles.length} files, sizing says $nExp")
+    assert(files(3L).length == nExp,
+      s"fold emitted ${files(3L).length} files, sizing says $nExp")
     assert(rows() == before, "the sized fold changed membership rows")
     sweep()
   }
@@ -102,7 +104,7 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
       .select("vec_id").as[Long].collect().toSet
     assert(accepted == Set(1L, 2L, 3L, 11L))
     // sidecar carries one row per accepted vector with frozen norm
-    val side = spark.read.parquet(vecs)
+    val side = live(vecs)
     assert(side.count() == 4)
     assert(side.columns.toSet ==
       Set("_rv", "_rnrm", "cell", "version"))
@@ -155,7 +157,7 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
       Seq((10L, famVec(6, 0)), (11L, famVec(0, 1))) // 11 ~ 1: dropped
         .toDF("vec_id", "embedding"),
       2L, corpus, vecs, cents, Threshold)
-    val before = spark.read.parquet(vecs)
+    val before = live(vecs)
       .select(col("_rv"), col("_rnrm"), col("version"))
       .collect().map(_.toString).sorted.toSeq
     // drift maintenance: a finer quantizer replaces the frozen one
@@ -164,7 +166,7 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
         .toDF("vec_id", "embedding"), k = 4, iters = 3)
     assert(cents2 != cents, "the probe needs a genuinely new quantizer")
     CorpusDedup.requantizeVectors(spark, vecs, cents2)
-    val side = spark.read.parquet(vecs)
+    val side = live(vecs)
     // vectors, frozen norms, and versions survive verbatim — only
     // `cell` is recomputed, and it must equal a fresh assignment of
     // the same vectors under the new quantizer
@@ -194,42 +196,6 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
     sweep()
   }
 
-  test("requantizeVectors heals its own mid-swap crash state: a " +
-      "sidecar stranded in the trash sibling restores, then " +
-      "requantizes under the CALLER's quantizer") {
-    val (corpus, vecs) = dirs()
-    CorpusDedup.appendBatchSemantic(spark,
-      Seq((1L, famVec(0, 0)), (2L, famVec(2, 0)))
-        .toDF("vec_id", "embedding"),
-      1L, corpus, vecs, cents, Threshold)
-    val before = spark.read.parquet(vecs)
-      .select(col("_rv"), col("_rnrm"), col("version"))
-      .collect().map(_.toString).sorted.toSeq
-    // simulate the crash between the flip's two renames: live sidecar
-    // gone, everything in the trash sibling — the old bare return
-    // reported success while every accepted vector sat stranded
-    // forever (candidate joins silently empty)
-    val root = new org.apache.hadoop.fs.Path(vecs)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(root, new org.apache.hadoop.fs.Path(s"$vecs.trash")))
-    val cents2 = Similarity.trainIvfCentroids(
-      (0 until 8).map(f => (f.toLong, famVec(f, 0)))
-        .toDF("vec_id", "embedding"), k = 4, iters = 3)
-    CorpusDedup.requantizeVectors(spark, vecs, cents2)
-    val side = spark.read.parquet(vecs)
-    assert(side.select(col("_rv"), col("_rnrm"), col("version"))
-      .collect().map(_.toString).sorted.toSeq == before,
-      "every accepted vector must survive the heal")
-    assert(Similarity.assignCells(
-        side.withColumnRenamed("cell", "cell_old"), cents2, "_rv")
-      .where(col("cell") =!= col("cell_old")).count() == 0,
-      "cells must reflect the caller's quantizer, not a crashed tmp's")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$vecs.trash")))
-    // an absent sidecar with NO siblings stays a genuine no-op
-    CorpusDedup.requantizeVectors(spark, s"$vecs-nonexistent", cents2)
-    sweep()
-  }
-
   test("compactVectors folds committed version partitions without " +
       "changing membership, and replay after a fold still works") {
     val (corpus, vecs) = dirs()
@@ -244,14 +210,14 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
     }
     assert(spark.read.parquet(corpus).select("vec_id").as[Long]
       .collect().sorted.toSeq == Seq(0L, 1L, 10L, 20L, 30L))
-    def sideRows() = spark.read.parquet(vecs)
+    def sideRows() = live(vecs)
       .select("_rv", "_rnrm", "cell")
       .collect().map(_.toString).sorted.toSeq
     val rowsBefore = sideRows()
     CorpusDedup.compactVectors(spark, vecs)
     // versions 1-3 collapse into version=3; the newest (4) stays for
     // its possibly-uncommitted replay
-    assert(spark.read.parquet(vecs)
+    assert(live(vecs)
       .select(col("version").cast("long")).distinct()
       .as[Long].collect().sorted.toSeq == Seq(3L, 4L))
     assert(sideRows() == rowsBefore,
@@ -273,31 +239,6 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
     sweep()
   }
 
-  test("appendBatchSemantic fails loudly on a crashed requantize's " +
-      "mid-swap state instead of treating it as an empty corpus") {
-    val (corpus, vecs) = dirs()
-    CorpusDedup.appendBatchSemantic(spark,
-      Seq((1L, famVec(0, 0))).toDF("vec_id", "embedding"),
-      1L, corpus, vecs, cents, Threshold)
-    val root = new org.apache.hadoop.fs.Path(vecs)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(root, new org.apache.hadoop.fs.Path(s"$vecs.trash")))
-    // an absent sidecar with a trash sibling must NOT be an empty
-    // corpus — that would accept every paraphrase in the batch
-    val ex = intercept[java.io.IOException] {
-      CorpusDedup.appendBatchSemantic(spark,
-        Seq((10L, famVec(0, 2))).toDF("vec_id", "embedding"),
-        2L, corpus, vecs, cents, Threshold)
-    }
-    assert(ex.getMessage.contains("requantizeVectors"))
-    // requantizeVectors' entry heal restores; the paraphrase then drops
-    CorpusDedup.requantizeVectors(spark, vecs, cents)
-    assert(CorpusDedup.appendBatchSemantic(spark,
-      Seq((10L, famVec(0, 2))).toDF("vec_id", "embedding"),
-      2L, corpus, vecs, cents, Threshold) == 0L)
-    sweep()
-  }
-
   test("appendBatchSemantic replay with the same version is idempotent") {
     val (corpus, vecs) = dirs()
     val b1 = Seq((1L, famVec(0, 0)), (2L, famVec(2, 0)))
@@ -311,7 +252,7 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
     def snapshot() = (
       spark.read.parquet(corpus).select("vec_id").as[Long]
         .collect().sorted.toSeq,
-      spark.read.parquet(vecs).count())
+      live(vecs).count())
     val before = snapshot()
     assert(CorpusDedup.appendBatchSemantic(spark, b2, 2L, corpus, vecs,
       cents, Threshold) == 1L)
@@ -338,7 +279,7 @@ class StreamingSemanticDedupSpec extends AnyFunSuite {
     try {
       val batchCells = arr.select(col("cell")).distinct()
         .collect().map(_.getInt(0))
-      val accepted = spark.read.parquet(vecs)
+      val accepted = live(vecs)
         .where(col("version") < 2)
         .where(col("cell").isin(batchCells.map(c => c: Any): _*))
         .select(col("_rv"), col("_rnrm"), col("cell"))
