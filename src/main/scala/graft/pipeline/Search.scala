@@ -267,7 +267,7 @@ object Search {
     * 100 TB serving shape: the lexical arm reads only the
     * [[writeBm25Index]] layout (bucket-pruned postings + the stats
     * partials), the vector arm only the [[Similarity.writeIvfIndex]]
-    * layout (probe-pruned cell partitions), and the fusion runs over
+    * layout (the probed cells' listed files), and the fusion runs over
     * ≤ 2·kCand candidate rows — corpus text and raw embedding tables
     * are never scanned (spec-gated). Takes the serving-shape inputs
     * (a query string + an explicit query vector); `nprobe = kCells`
@@ -333,10 +333,9 @@ object Search {
     * term buckets under the STORED nBuckets (the quantizer-is-an-input
     * rule — a drifted bucket count would silently split a term across
     * buckets and halve its df), and one stats partial joins the
-    * existing ones, all in one manifest commit. Idempotence contract
-    * (the [[Similarity.appendToIvfIndex]] discipline): a replayed
-    * append adds duplicate posting rows, which — unlike raw vectors —
-    * CHANGE answers (rows count into df and duplicate per-(doc, term)
+    * existing ones, all in one manifest commit. Idempotence contract:
+    * a replayed append adds duplicate posting rows, which — unlike raw
+    * vectors — CHANGE answers (rows count into df and duplicate per-(doc, term)
     * contributions); the serve path drops them with a candidate-sized
     * dropDuplicates and the compactions drop them from the stored
     * files. Callers must not append the same batch twice with

@@ -1,7 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
+  StringType, StructField, StructType}
+
+import graft.functions.{ResidualCodebook, VectorFunctions}
+
+import graft.util.{DataFile, JobDesc, Maint, Manifest, ManifestLog}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -25,6 +32,39 @@ import org.apache.spark.sql.functions._
   *    cell; in production, k-means cell ids computed at ingest and
   *    used as a partition key so Catalyst prunes everything else).
   *  - cosineNearDupPairs: exact within-cell O(n²/cells) self-join.
+  *
+  * The three stored index families are ONE structure — a frozen
+  * quantizer plus cell-partitioned rows — kept in ONE [[ManifestLog]]
+  * store at `dir` (one engine and one storage path for every vector
+  * index, as in AnalyticDB-V):
+  *
+  *   - `dir/_manifest/<v>`: the newest manifest IS the index. Its
+  *     header freezes the family (`ivf`, `pq` or `ivfpq`), the
+  *     residual flag, the row schema, the coarse quantizer (one
+  *     `centroid` line per cell), the PQ codebook (geometry, schema and
+  *     one line per (_i, _cell, _sub, _cmu) row) and one content
+  *     fingerprint per committed append; it lists the live files with
+  *     their bytes.
+  *   - `dir/cells/cell=<c>/v=<v>/part-*.parquet`: the rows of coarse
+  *     cell c that manifest version v wrote — raw vectors (IVF) or m
+  *     codes per vector (PQ, IVF-PQ). Flat PQ is the one-cell case,
+  *     `cell=0`. A serve's probe set maps to the listed files of the
+  *     probed cells: unprobed cells are never opened (serve cost ∝
+  *     probed cells, never corpus size — the vector analogue of dp3's
+  *     tree descent).
+  *
+  * Every verb commits once. A write or retrain commits a quantizer
+  * and its rows together, superseding the old index; an append is one
+  * write plus one commit under the frozen quantizer, so it lands whole
+  * or not at all, and replaying a committed append (same content
+  * fingerprint) is a no-op; the three compactions are one fold. A
+  * crash leaves the old index or the new one live, plus files the
+  * next verb deletes. A serve resolves the manifest once (fingerprint-
+  * cached: no Spark job) and reads the listed files with the header
+  * schema — no schema-inference job, no side table, and no way to pair
+  * one index's quantizer with another's rows. Readers only list and
+  * read; writers are single-writer. A dir with no manifest fails every
+  * face loudly, except a write into an empty or absent dir.
   */
 object Similarity {
 
@@ -296,197 +336,338 @@ object Similarity {
       .orderBy(col("cos_sim").desc, col(idCol).asc).limit(k)
   }
 
-  /** Persist an IVF index to storage: `dir/centroids` holds the
-    * coarse quantizer as (cell, pos, w) rows and `dir/vectors` holds
-    * the corpus PARTITIONED BY cell on disk — a query's probe set
-    * maps to partition DIRECTORIES, so Catalyst prunes every other
-    * cell at the file level before a byte is read (the vector
-    * analogue of dp3's tree descent: serve cost ∝ probed cells,
-    * never corpus size; at 100 TB the unprobed 99% of the index is
-    * never opened). Training is [[trainIvfCentroids]] — no RNG, so
-    * rebuilding the index reproduces it bit for bit. */
+  // --- the stored vector index: IVF, PQ and IVF-PQ -----------------------
+
+  private val Cells = "cells"
+
+  /** A PQ codebook as the header stores it: geometry (dims, m), the
+    * codebook frame's schema, and its rows as fields. */
+  private final case class Codebook(dims: Int, m: Int, schema: StructType,
+      rows: Seq[Seq[String]]) {
+    /** The codebook frame the encoders take, in its stored column
+      * types — a local relation, so using it launches no job. */
+    def frame(spark: SparkSession): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows.map(Row(_: _*)): _*),
+          StructType(schema.fields.map(_.copy(dataType = StringType))))
+        .select(schema.fields.map(f => col(f.name).cast(f.dataType)
+          .as(f.name)).toIndexedSeq: _*)
+
+    def local(spark: SparkSession): Array[(Int, Long, Int, Long)] =
+      cbTuples(frame(spark))
+  }
+
+  private object Codebook {
+    /** From a codebook frame that is already a local relation. A field
+      * holding a tab or a newline would corrupt its header line, so such
+      * a label cell is refused. */
+    def apply(frame: DataFrame, dims: Int, m: Int): Codebook =
+      Codebook(dims, m, frame.schema, frame.collect().toSeq.map(_.toSeq.map {
+        v =>
+          val s = String.valueOf(v)
+          require(v != null && !s.exists(c => c == '\t' || c == '\n'),
+            s"a codebook cell must be non-null and hold no tab or newline: $s")
+          s
+      }))
+  }
+
+  /** collected (_i, _cell, _sub, _cmu) codebook rows, normalized to
+    * integers (cell and sub types follow the build frame's label type) */
+  private def cbTuples(cb: DataFrame): Array[(Int, Long, Int, Long)] =
+    cb.select(col("_i").cast("int"), col("_cell").cast("long"),
+        col("_sub").cast("int"), col("_cmu").cast("long"))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
+        r.getLong(3)))
+
+  /** A stored index's header: its family, quantizer, row schema and
+    * the fingerprints of its committed appends. */
+  private final case class VecIndex(family: String, residual: Boolean,
+      schema: StructType, cents: Seq[Seq[Double]],
+      codebook: Option[Codebook], batches: Seq[String]) {
+    def header: Seq[Seq[String]] =
+      Seq(Seq("family", family), Seq("residual", residual.toString),
+        Seq("schema", schema.json)) ++
+        cents.map("centroid" +: _.map(_.toString)) ++
+        codebook.toSeq.flatMap { cb =>
+          Seq(Seq("geometry", cb.dims.toString, cb.m.toString),
+            Seq("codebook-schema", cb.schema.json)) ++
+            cb.rows.map("codebook" +: _)
+        } ++ batches.map(b => Seq("batch", b))
+
+    def cb: Codebook = codebook.getOrElse(throw new IllegalStateException(
+      s"a $family index has no codebook"))
+  }
+
+  private object VecIndex {
+    def apply(m: Manifest): VecIndex = {
+      def all(tag: String) = m.header.filter(_.head == tag).map(_.tail)
+      VecIndex(m.line("family").head, m.line("residual").head.toBoolean,
+        m.schema("schema"), all("centroid").map(_.map(_.toDouble)),
+        all("geometry").headOption.map(g => Codebook(g(0).toInt, g(1).toInt,
+          m.schema("codebook-schema"), all("codebook"))),
+        all("batch").map(_.head))
+    }
+  }
+
+  private def store(spark: SparkSession, dir: String): ManifestLog =
+    new ManifestLog(new Path(dir), spark.sparkContext.hadoopConfiguration,
+      Map(Cells -> Seq("cell")))
+
+  /** The manifest `m` of the index at `dir`, parsed, for `face`, which
+    * takes `families`. No manifest fails loudly: a dir holding anything
+    * but this layout's trees is an index built before the manifest
+    * layout, anything else is no index. */
+  private def checked(spark: SparkSession, dir: String, face: String,
+      families: Set[String], m: Option[Manifest]): (Manifest, VecIndex) = {
+    val man = m.getOrElse(throw new IllegalArgumentException(
+      if (preManifest(spark, dir)) preManifestMsg(face, dir)
+      else s"$face: no index at $dir"))
+    val idx = VecIndex(man)
+    require(families(idx.family),
+      s"$face: $dir holds a ${idx.family} index, not ${families.mkString("/")}")
+    (man, idx)
+  }
+
+  private def preManifest(spark: SparkSession, dir: String): Boolean = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(p) && fs.listStatus(p).exists { s =>
+      val n = s.getPath.getName
+      !n.startsWith(".") && n != "_manifest" && n != Cells
+    }
+  }
+
+  private def preManifestMsg(face: String, dir: String): String =
+    s"$face: $dir holds a vector index built before the manifest " +
+      "layout — rebuild it with this version"
+
+  /** A maintenance verb's entry: the index `dir` holds, after the
+    * crashed predecessor's leftovers are tidied. */
+  private def opened(spark: SparkSession, log: ManifestLog, dir: String,
+      verb: String, families: Set[String]): (Manifest, VecIndex) = {
+    checked(spark, dir, verb, families, log.latest)
+    checked(spark, dir, verb, families, log.open(verb))
+  }
+
+  /** `files` of the index, read with the header's row schema under the
+    * cells tree's basePath (`cell` comes from the path): no
+    * schema-inference job and no listing beyond the files named. */
+  private def rowsOf(spark: SparkSession, dir: String, idx: VecIndex,
+      files: Seq[DataFile]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        StructType(idx.schema.filter(_.name != "cell") :+ idx.schema("cell")))
+    else spark.read.schema(idx.schema).option("basePath", s"$dir/$Cells")
+      .parquet(files.map(f => s"$dir/${f.path}"): _*).drop("v")
+
+  /** The listed rows of the cells in `cells`. */
+  private def cellRows(spark: SparkSession, dir: String, m: Manifest,
+      idx: VecIndex, cells: Set[Int]): DataFrame =
+    rowsOf(spark, dir, idx,
+      m.filesOf(Cells).filter(f => cells(f.part("cell").toInt)))
+
+  /** THE write and retrain path: `build` gets the manifest `dir` holds
+    * (a retrain requires an index of one of `families`; a write, with
+    * none, refuses only a pre-manifest dir) and hands the new header
+    * and rows to its continuation, which writes them as the next
+    * version in one commit that supersedes every file of the old
+    * index. `build`'s eager jobs (training collects, pins) run as
+    * `vec:<verb>:train`, the row write as `vec:<verb>:rows`. */
+  private def rebuild(spark: SparkSession, dir: String, verb: String,
+      families: Set[String])(
+      build: (Option[Manifest], (VecIndex, DataFrame) => Unit) => Unit)
+      : Unit = {
+    val sc = spark.sparkContext
+    val log = store(spark, dir)
+    val prev =
+      if (families.nonEmpty) Some(opened(spark, log, dir, verb, families)._1)
+      else {
+        require(log.latest.nonEmpty || !preManifest(spark, dir),
+          preManifestMsg(verb, dir))
+        log.open(verb)
+      }
+    JobDesc(sc, s"vec:$verb:train") {
+      build(prev, (idx, rows) => {
+        val written = JobDesc(sc, s"vec:$verb:rows") {
+          log.write(prev.fold(0L)(_.version) + 1, Cells, rows)
+        }
+        log.commit(verb, prev, idx.header, written)
+      })
+    }
+  }
+
+  /** THE append path: `encode` the batch under the index's frozen
+    * quantizer, write its rows as the next version and commit them
+    * beside the live files — one commit, so the batch is visible whole
+    * or not at all. The batch's content fingerprint (an order-free XOR
+    * of row hashes, plus the row count) joins the header, and a batch
+    * whose fingerprint is already there is a replay of a committed
+    * append: a no-op, so a re-run after any crash adds no duplicate. */
+  private def append(batch: DataFrame, dir: String, verb: String,
+      family: String)(encode: VecIndex => DataFrame): Unit = {
+    val spark = batch.sparkSession
+    val sc = spark.sparkContext
+    val log = store(spark, dir)
+    val (prev, idx) = opened(spark, log, dir, verb, Set(family))
+    val fp = JobDesc(sc, s"vec:$verb:fingerprint") {
+      val r = batch.agg(expr("bit_xor(xxhash64(*))"), count(lit(1))).head()
+      s"${if (r.isNullAt(0)) 0L else r.getLong(0)}:${r.getLong(1)}"
+    }
+    if (!idx.batches.contains(fp)) {
+      val written = JobDesc(sc, s"vec:$verb:rows") {
+        log.write(prev.version + 1, Cells, encode(idx))
+      }
+      log.commit(verb, Some(prev),
+        idx.copy(batches = idx.batches :+ fp).header, prev.files ++ written)
+    }
+  }
+
+  /** THE compaction: every listed row rewritten with duplicates on
+    * `key` dropped, into files sized from the manifest's bytes
+    * ([[Maint.sizedFileCount]]) and range-clustered by cell, in one
+    * commit; the header carries over. Duplicates are full-row identical
+    * by construction (encoding is a pure function of the frozen
+    * quantizer and the vector), so any-copy dedup is exact — and they
+    * matter: the ADC serve sums one lookup row per code row, so a
+    * duplicated vector's score doubles. Appends never replay a
+    * committed batch; duplicates come from overlapping batches. */
+  private def fold(spark: SparkSession, dir: String, verb: String,
+      family: String, key: Seq[String]): Unit = {
+    val log = store(spark, dir)
+    val (prev, idx) = opened(spark, log, dir, verb, Set(family))
+    val files = prev.filesOf(Cells)
+    val nFiles = Maint.sizedFileCount(files.map(_.bytes).sum, 128L << 20)
+    val written = JobDesc(spark.sparkContext, s"vec:$verb:rows") {
+      log.write(prev.version + 1, Cells, rowsOf(spark, dir, idx, files)
+        .dropDuplicates(key)
+        .repartitionByRange(nFiles, ("cell" +: key).distinct.map(col): _*))
+    }
+    log.commit(verb, Some(prev), prev.header, written)
+  }
+
+  /** The live rows of the index at `dir` — every listed file, `cell`
+    * from the path; None when it was never committed. Lists and reads
+    * only. */
+  private[graft] def indexRows(spark: SparkSession,
+      dir: String): Option[DataFrame] =
+    store(spark, dir).latest.map(m =>
+      rowsOf(spark, dir, VecIndex(m), m.filesOf(Cells)))
+
+  /** The stored codebook of a PQ or IVF-PQ index, in its stored column
+    * types. */
+  private[graft] def indexCodebook(spark: SparkSession,
+      dir: String): DataFrame =
+    checked(spark, dir, "indexCodebook", Set("pq", "ivfpq"),
+      store(spark, dir).latest)._2.cb.frame(spark)
+
+  /** Persist an IVF index: the coarse quantizer in the manifest header
+    * and the corpus rows partitioned by cell (the stored-index layout
+    * in the object doc). Training is [[trainIvfCentroids]] — no RNG, so rebuilding
+    * the index reproduces it bit for bit. Writing over an index
+    * supersedes it in one commit. */
   def writeIvfIndex(emb: DataFrame, dir: String, kCells: Int,
       iters: Int = 5, idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit =
-    writeIvfIndexWith(emb,
-      trainIvfCentroids(emb, kCells, iters, idCol, vecCol), dir, vecCol)
+    writeIvf(emb, dir, "writeIvfIndex", vecCol)(
+      trainIvfCentroids(emb, kCells, iters, idCol, vecCol))
 
   /** [[writeIvfIndex]] with an explicit, already-trained quantizer —
     * the rebuild face incremental maintenance verifies against
     * (append ≡ rebuild holds for a FIXED quantizer; retraining
     * changes cells by design). */
   def writeIvfIndexWith(emb: DataFrame, cents: Seq[Seq[Double]],
-      dir: String, vecCol: String = "embedding"): Unit = {
-    writeCentroidsTable(emb.sparkSession, cents, dir)
-    assignCells(emb, cents, vecCol)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/vectors")
-  }
+      dir: String, vecCol: String = "embedding"): Unit =
+    writeIvf(emb, dir, "writeIvfIndexWith", vecCol)(cents)
 
-  /** the ONE writer of the `dir/centroids` (cell, pos, w) layout —
-    * shared by the IVF-only and composed-index builds so the format
-    * [[readIvfCentroids]] decodes can never fork */
-  private def writeCentroidsTable(
-      spark: org.apache.spark.sql.SparkSession,
-      cents: Seq[Seq[Double]], dir: String): Unit = {
-    import spark.implicits._
-    cents.zipWithIndex.flatMap { case (c, ci) =>
-      c.zipWithIndex.map { case (w, p) => (ci, p, w) } }
-      .toDF("cell", "pos", "w")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-  }
-
-  /** Read a persisted coarse quantizer back as centroid vectors
-    * (cell-ordered) — control-plane kilobytes, shared by the serving
-    * path and incremental maintenance. */
-  def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[Seq[Double]] = {
-    import org.apache.hadoop.fs.Path
-    val cdir = new Path(new Path(dir), "centroids")
-    val fs = cdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // fingerprint-cached (graft.util.ControlCache): the quantizer is
-    // frozen between maintenance rewrites, so steady-state serves
-    // skip the per-call collect job; a retrain/rewrite lands fresh
-    // UUID part files, which misses the fingerprint and reloads
-    graft.util.ControlCache.cached(fs, cdir) {
-      spark.read.parquet(cdir.toString)
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (_, rows) => rows.sortBy(_._2).map(_._3).toSeq }
+  private def writeIvf(emb: DataFrame, dir: String, verb: String,
+      vecCol: String)(cents: => Seq[Seq[Double]]): Unit =
+    rebuild(emb.sparkSession, dir, verb, Set.empty) { (_, commit) =>
+      val c = cents
+      val rows = assignCells(emb, c, vecCol)
+      commit(VecIndex("ivf", residual = false, rows.schema, c, None, Nil),
+        rows)
     }
-  }
 
-  /** Incrementally add vectors to a persisted IVF index: assign each
-    * new vector with the STORED quantizer (deterministic — the same
-    * cell a full rebuild would give) and append the matching cell
-    * partition directories. Serving is unchanged in kind: probe-set
-    * pruning still maps to partition directories, which now hold one
-    * more file per append — run [[compactIvfVectors]] when the file
-    * count per cell grows, and [[writeIvfIndex]] (retrain) when the
-    * data distribution drifts enough that the frozen quantizer's
-    * cells go unbalanced. An append is atomic per task file; a failed
-    * attempt can leave duplicate vec_ids if retried after a partial
-    * commit — retry by rebuilding the cell partitions ([[compactIvfVectors]]
-    * dedups on `idCol`), the usual object-store append discipline. */
+  /** The stored coarse quantizer of an IVF or IVF-PQ index as centroid
+    * vectors (cell-ordered), from the manifest header: a warm call runs
+    * no Spark job. */
+  def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Seq[Seq[Double]] =
+    checked(spark, dir, "readIvfCentroids", Set("ivf", "ivfpq"),
+      store(spark, dir).latest)._2.cents
+
+  /** Incrementally add vectors to a stored IVF index: assign each new
+    * vector with the STORED quantizer (deterministic — the same cell a
+    * full rebuild would give) and append the rows to their cells in
+    * one commit; replaying a committed append is a no-op. Serving is
+    * unchanged in kind: each append adds files to the cells it
+    * touches — run [[compactIvfVectors]] when the file count per cell
+    * grows, and [[retrainIvfIndex]] when the data distribution drifts
+    * enough that the frozen quantizer's cells go unbalanced. */
   def appendToIvfIndex(newEmb: DataFrame, dir: String,
-      vecCol: String = "embedding"): Unit = {
-    val cents = readIvfCentroids(newEmb.sparkSession, dir)
-    assignCells(newEmb, cents, vecCol)
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"$dir/vectors")
-  }
+      vecCol: String = "embedding"): Unit =
+    append(newEmb, dir, "appendToIvfIndex", "ivf")(idx =>
+      assignCells(newEmb, idx.cents, vecCol))
 
-  /** Compact a [[writeIvfIndex]] layout after many appends: rewrite
-    * the vectors tree with one pass (dedup on `idCol` keeping the
-    * first-written row — min id per duplicate — so a retried partial
-    * append heals), then FLIP directories: the new tree is fully
-    * written to a sibling temp dir before the live dir is swapped via
-    * two renames (Spark refuses to overwrite a path it reads — the
-    * write-new-then-flip rule). The swap window leaves the vectors
-    * path momentarily absent: a concurrent read fails loudly, never
-    * serves half an index; run single-writer like the other sidecar
-    * compactions. */
+  /** Compact a [[writeIvfIndex]] index after many appends: one pass
+    * over the listed rows, duplicates on (`idCol`, cell) dropped, into
+    * sized files, in one commit (readers see the old files or the new,
+    * never a mix or an absent index). */
   def compactIvfVectors(spark: org.apache.spark.sql.SparkSession,
-      dir: String, idCol: String = "vec_id"): Unit = {
-    import org.apache.hadoop.fs.Path
-    import graft.util.Maint
-    val live = new Path(s"$dir/vectors")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(s"$dir/.vectors-compact")
-    val trash = new Path(s"$dir/.vectors-trash")
-    // loud on a missing vectors tree with no siblings (a typo'd dir);
-    // live-absent WITH the trash sibling is this verb's own mid-swap
-    // crash state, which Maint heals before the fold re-runs
-    Maint.healAtEntry(fs, live, tmp, trash, "compactIvfVectors",
-      live = fs.exists(live),
-      missingMsg = Some(s"compactIvfVectors: no vectors tree at $live"))
-    Maint.cleanSiblings(fs, tmp, trash, "compactIvfVectors")
-    // duplicate (id, cell) rows are full-row identical by construction
-    // (a replayed append re-derives the same deterministic assignment),
-    // so any-copy-wins dedup is exact
-    spark.read.parquet(live.toString)
-      .dropDuplicates(idCol, "cell")
-      .write.partitionBy("cell").parquet(tmp.toString)
-    Maint.flipNow(fs, live, tmp, trash, "compactIvfVectors")
-    ()
-  }
+      dir: String, idCol: String = "vec_id"): Unit =
+    fold(spark, dir, "compactIvfVectors", "ivf", Seq(idCol, "cell"))
 
-  /** Retrain a persisted IVF index in place — the lifecycle step
+  /** Retrain a stored IVF index in place — the lifecycle step
     * [[appendToIvfIndex]]'s scaladoc defers to when the frozen
     * quantizer's cells go unbalanced under distribution drift. Reads
-    * the live vectors (healing replayed partial appends first — dup
-    * rows are full-row identical, so any-copy dedup on `idCol` is
-    * exact, and an UNhealed duplicate would bias the centroid means),
-    * trains a fresh quantizer with [[trainIvfCentroids]] (no RNG:
-    * retrain ≡ [[writeIvfIndex]] over the same rows, bit for bit),
-    * and builds the ENTIRE new index under a temp sibling before
-    * flipping the whole directory. Centroids and vectors MUST change
-    * together — a reader pairing the new quantizer with the old
-    * partition layout probes the wrong directories silently — so the
-    * flip is on `dir` itself, not the subtrees ([[compactIvfVectors]]
-    * flips only `vectors` because compaction never changes the
-    * quantizer). Same swap contract: the path is momentarily absent,
-    * a concurrent read fails loudly, single-writer discipline. */
+    * the live rows (duplicates on `idCol` dropped — an unhealed
+    * duplicate would bias the centroid means), trains a fresh quantizer
+    * with [[trainIvfCentroids]] (no RNG: retrain ≡ [[writeIvfIndex]]
+    * over the same rows, bit for bit), and commits the new quantizer
+    * and the reassigned rows together in one commit — a reader never
+    * pairs the new quantizer with the old cells. */
   def retrainIvfIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, kCells: Int, iters: Int = 5,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    import org.apache.hadoop.fs.Path
-    // Path normalizes a trailing slash; SUFFIX the normalized path
-    // rather than string-concatenating dir — "/data/idx/.retrain"
-    // from "/data/idx/" would nest the temp tree INSIDE the index and
-    // the root rename would carry it along
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = root.suffix(".retrain")
-    val trash = root.suffix(".trash")
-    graft.util.Maint.healAtEntry(fs, root, tmp, trash,
-      "retrainIvfIndex",
-      live = fs.exists(new Path(root, "vectors")),
-      missingMsg = Some(s"retrainIvfIndex: no index at $root"))
-    graft.util.Maint.cleanSiblings(fs, tmp, trash, "retrainIvfIndex")
-    // pin the healed frame: the k-means trainer takes one action for
-    // the seed plus one per iteration and the rewrite is one more —
-    // unpinned, EACH would re-run the scan + dedup shuffle (the
-    // multi-consumer-subtree rule; iters+2 executions at default 5)
-    val (live, liveHandle) = Dedup.pinNow(
-      spark.read.parquet(s"$dir/vectors").dropDuplicates(idCol)
-        .drop("cell"))
-    try {
-      val cents = trainIvfCentroids(live, kCells, iters, idCol, vecCol)
-      writeIvfIndexWith(live, cents, tmp.toString, vecCol)
-    } finally liveHandle.release()
-    graft.util.Maint.flipNow(fs, root, tmp, trash, "retrainIvfIndex")
-    ()
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    rebuild(spark, dir, "retrainIvfIndex", Set("ivf")) { (prev, commit) =>
+      val idx = VecIndex(prev.get)
+      // pin the live rows: the k-means trainer takes one action for
+      // the seed plus one per iteration and the rewrite is one more —
+      // unpinned, EACH would re-run the scan + dedup shuffle (the
+      // multi-consumer-subtree rule; iters+2 executions at default 5)
+      val (live, pin) = Dedup.pinNow(
+        rowsOf(spark, dir, idx, prev.get.filesOf(Cells))
+          .dropDuplicates(idCol).drop("cell"))
+      try {
+        val cents = trainIvfCentroids(live, kCells, iters, idCol, vecCol)
+        commit(idx.copy(cents = cents), assignCells(live, cents, vecCol))
+      } finally pin.release()
+    }
 
   /** Serve top-k from a [[writeIvfIndex]] index without the training
-    * frame: the centroid table is control-plane (kCells x dims rows),
-    * so probe selection — the `nprobe` best cells by unit-centroid
-    * dot, ties by cell id — happens driver-side, and the data side is
-    * ONE scan of the probed partitions (check `PartitionFilters` in
-    * the plan: unprobed cells are pruned before IO). Takes an
-    * explicit query VECTOR (the serving shape — queries usually
-    * aren't corpus rows); returns (idCol, cell, cos_sim), ranked like
-    * [[ivfTopK]]. nprobe = kCells degrades to brute force over the
-    * whole index. */
+    * frame: the quantizer is control-plane (kCells x dims, in the
+    * manifest header), so probe selection — the `nprobe` best cells by
+    * unit-centroid dot, ties by cell id — happens driver-side, and the
+    * data side is ONE scan of the probed cells' listed files (unprobed
+    * cells are never opened). Takes an explicit query VECTOR (the
+    * serving shape — queries usually aren't corpus rows); returns
+    * (idCol, cell, cos_sim), ranked like [[ivfTopK]]. nprobe = kCells
+    * degrades to brute force over the whole index. */
   def ivfTopKFromIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, queryVec: Seq[Float], k: Int, nprobe: Int = 1,
       idCol: String = "vec_id", vecCol: String = "embedding")
       : DataFrame = {
     require(k >= 1 && nprobe >= 1, s"k >= 1, nprobe >= 1")
-    def dotL(a: Seq[Double], b: Seq[Double]): Double =
-      a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y }
-    val cents = readIvfCentroids(spark, dir)
+    val (m, idx) = checked(spark, dir, "ivfTopKFromIndex", Set("ivf"),
+      store(spark, dir).latest)
     val q = queryVec.map(_.toDouble)
-    val probed = probeCellsOf(cents, q, nprobe)
+    val probed = probeCellsOf(idx.cents, q, nprobe)
     val qn = math.sqrt(dotL(q, q))
     // zero-norm guard on BOTH sides: 0/0 = NaN, and Spark sorts NaN
     // ABOVE every real number in a descending order — a zero vector
     // in the index (or a zero query) would displace a genuine top-k
     // hit with garbage (mmrTopK carries the same guard)
     require(qn > 0.0, "ivfTopKFromIndex: zero-norm query vector")
-    spark.read.parquet(s"$dir/vectors")
-      .where(col("cell").isin(probed: _*))
+    cellRows(spark, dir, m, idx, probed.toSet)
       .where(dot(col(vecCol), col(vecCol)) > 0)
       .select(col(idCol), col("cell").cast("int").as("cell"),
         round(dot(col(vecCol), lit(q.toArray)) /
@@ -727,7 +908,7 @@ object Similarity {
     * Deliberately the JOIN shape (it expands the per-dim rows by the
     * cell count before reducing): these label-cell faces accept an
     * ARBITRARY `cellCol` type — string domains included — which the
-    * integral-id native argmin ([[rawCodesOf]], the IVF-PQ faces'
+    * integral-id native argmin ([[codesOf]], the IVF-PQ faces'
     * map-only encode) cannot carry without narrowing the contract;
     * label-cell counts are small by construction, so the expansion is
     * bounded where the coarse-cell faces' was not. */
@@ -759,45 +940,36 @@ object Similarity {
       .select(col("query_id"), col("_vid").as("vec_id"), col("adc_mu2"))
   }
 
-  /** Persist a PQ index: `dir/codebook` = (_i, _cell, _sub, _cmu)
-    * rows (dims × cells — control-plane) and `dir/codes` =
-    * (_vid, _sub, _cell) — m small codes per vector, the COMPRESSED
-    * corpus a query scans instead of raw embeddings (the
-    * memory-compression half of IVF-PQ made durable: at 100 TB the
-    * d-float vectors stay cold; serving IO is m codes per row).
-    * The same deterministic micro-unit pipeline as [[pqTopKBatch]],
-    * so a rebuild is bit-reproducible. */
+  /** Persist a PQ index: the codebook ((_i, _cell, _sub, _cmu) rows,
+    * dims × cells — control-plane) in the manifest header and m small
+    * codes per vector, (_vid, _sub, _cell), as the rows of the one cell
+    * `cell=0` — the COMPRESSED corpus a query scans instead of raw
+    * embeddings (the memory-compression half of IVF-PQ made durable: at
+    * 100 TB the d-float vectors stay cold; serving IO is m codes per
+    * row). The same deterministic micro-unit pipeline as
+    * [[pqTopKBatch]], so a rebuild is bit-reproducible; writing over an
+    * index supersedes it in one commit. */
   def writePqIndex(emb: DataFrame, dir: String, dims: Int, m: Int = 4,
       cellCol: String = "label", idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit = {
     require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
-    val subDim = dims / m
-    val rows = muRows(emb, dims, "writePqIndex", idCol, vecCol,
-      Some(cellCol))
-    val codebook = pqCodebookLocal(rows, subDim)
-    codebook.coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/codebook")
-    pqEncode(emb, rows, codebook, m, subDim, idCol, vecCol,
-        "writePqIndex")
-      .repartition(col("_vid"))
-      .write.mode("overwrite").parquet(s"$dir/codes")
+    rebuild(emb.sparkSession, dir, "writePqIndex", Set.empty) {
+      (_, commit) =>
+        buildPq(emb, dims, m, cellCol, idCol, vecCol, "writePqIndex")(commit)
+    }
   }
 
-  /** (_vid, _sub, _rv) µ subvector frame for the plain-PQ native
-    * encode — [[residualSubRows]] minus the coarse quantizer: no cell
-    * assignment, no residual subtraction (a plain PQ code is a pure
-    * function of the vector and the label-cell codebook). */
-  private def pqSubRows(emb: DataFrame, m: Int, subDim: Int,
-      idCol: String, vecCol: String, op: String): DataFrame = {
-    val muArr = transform(vecDimsChecked(vecCol, m * subDim, op), x =>
-      floor(x.cast("double") * lit(1000000.0)).cast("long"))
-    val subCols = (0 until m).map(s =>
-      struct(lit(s).as("_sub"),
-        expr(s"slice(_r, ${s * subDim + 1}, $subDim)").as("_rv")))
-    emb.select(col(idCol).as("_vid"), muArr.as("_r"))
-      .select(col("_vid"), explode(array(subCols: _*)).as("_sv"))
-      .select(col("_vid"), col("_sv").getField("_sub").as("_sub"),
-        col("_sv").getField("_rv").as("_rv"))
+  /** A flat PQ index over `emb`: the label-cell codebook and the codes,
+    * handed to `commit`. */
+  private def buildPq(emb: DataFrame, dims: Int, m: Int, cellCol: String,
+      idCol: String, vecCol: String, op: String)(
+      commit: (VecIndex, DataFrame) => Unit): Unit = {
+    val rows = muRows(emb, dims, op, idCol, vecCol, Some(cellCol))
+    val codebook = pqCodebookLocal(rows, dims / m)
+    val codes = pqEncode(emb, rows, codebook, m, dims / m, idCol, vecCol, op)
+      .repartition(col("_vid"))
+    commit(VecIndex("pq", residual = false, codes.schema, Nil,
+      Some(Codebook(codebook, dims, m)), Nil), codes)
   }
 
   /** Plain-PQ encode dispatch: INTEGRAL cell domains run the native
@@ -816,172 +988,91 @@ object Similarity {
   private def pqEncode(emb: DataFrame, rows: DataFrame,
       codebook: DataFrame, m: Int, subDim: Int, idCol: String,
       vecCol: String, op: String): DataFrame = {
-    import org.apache.spark.sql.types.{ByteType, ShortType,
-      IntegerType, LongType}
+    import org.apache.spark.sql.types.{ByteType, ShortType}
     codebook.schema("_cell").dataType match {
       case cellType @ (ByteType | ShortType | IntegerType
           | LongType) =>
-        val table = rawCodebookArrays(codebook
-          .select(col("_i").cast("int"), col("_cell").cast("long"),
-            col("_sub").cast("int"), col("_cmu").cast("long"))
-          .collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
-            r.getLong(3))), m)
-        pqSubRows(emb, m, subDim, idCol, vecCol, op)
-          .withColumn("_c", graft.functions.VectorFunctions
-            .residualCodeWith(col("_sub"), col("_rv"), table))
-          .select(col("_vid"), col("_sub").cast("long").as("_sub"),
-            col("_c").cast(cellType).as("_cell"))
-      case _ => pqCodesOf(rows, codebook)
+        codesOf(residualSubRows(emb, Nil, m, subDim, idCol, vecCol, op,
+            subtract = false),
+          rawCodebookArrays(cbTuples(codebook), m), LongType, cellType)
+      case _ => pqCodesOf(rows, codebook).withColumn("cell", lit(0))
     }
   }
 
-  /** Incrementally add vectors to a persisted PQ index: encode the
-    * new vectors against the STORED codebook (the quantization is a
-    * pure function of (codebook, vector), so append ≡ same-codebook
-    * rebuild) and append their code rows. Retrain
-    * ([[retrainPqIndex]]) when distribution drift degrades the
-    * codebook; heal replayed appends with [[compactPqCodes]] — the
-    * [[appendToIvfIndex]] discipline. */
+  /** Incrementally add vectors to a stored PQ index: encode the new
+    * vectors against the STORED codebook (the quantization is a pure
+    * function of (codebook, vector), so append ≡ same-codebook rebuild)
+    * and append their code rows in one commit; replaying a committed
+    * append is a no-op. Retrain ([[retrainPqIndex]]) when distribution
+    * drift degrades the codebook; fold overlapping batches' duplicate
+    * codes with [[compactPqCodes]]. */
   def appendToPqIndex(newEmb: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = newEmb.sparkSession
-    val cb0 = spark.read.parquet(s"$dir/codebook")
-    val cbRows = cb0.collect()
-    val codebook = spark.createDataFrame(
-      java.util.Arrays.asList(cbRows: _*), cb0.schema)
-    val dims = cbRows
-      .map(_.getAs[Number]("_i").intValue()).max + 1
-    val m = cbRows
-      .map(_.getAs[Number]("_sub").intValue()).max + 1
-    // no cell column needed: encoding is a pure function of
-    // (codebook, vector)
-    val rows = muRows(newEmb, dims, "appendToPqIndex", idCol, vecCol,
-      None)
-    pqEncode(newEmb, rows, codebook, m, dims / m, idCol, vecCol,
-        "appendToPqIndex")
-      .repartition(col("_vid"))
-      .write.mode("append").parquet(s"$dir/codes")
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    append(newEmb, dir, "appendToPqIndex", "pq") { idx =>
+      val cb = idx.cb
+      // no cell column needed: encoding is a pure function of
+      // (codebook, vector)
+      val rows = muRows(newEmb, cb.dims, "appendToPqIndex", idCol, vecCol,
+        None)
+      pqEncode(newEmb, rows, cb.frame(newEmb.sparkSession), cb.m,
+          cb.dims / cb.m, idCol, vecCol, "appendToPqIndex")
+        .repartition(col("_vid"))
+    }
 
-  /** Compact a [[writePqIndex]] codes table after replayed appends —
-    * the plain-PQ face of [[compactIvfPqCodes]], minus the cell
-    * partitioning (this layout has none to preserve). The encode is a
-    * pure function of (stored codebook, vector), so a crash-retried
-    * [[appendToPqIndex]] that half-committed writes full-row-identical
-    * duplicate (_vid, _sub) rows — and [[pqAdcServe]] sums one LUT row
-    * per CODE ROW, so the duplicated vector's ADC score doubles and
-    * rankings shift silently. Any-copy dedup is exact (duplicates are
-    * bit-identical by construction); the rewrite lands fully under a
-    * temp sibling before two renames flip it live (write-new-then-flip:
-    * the swap window fails a concurrent read loudly, never serves half
-    * an index; single-writer discipline). */
+  /** Compact a [[writePqIndex]] index: the plain-PQ face of the one
+    * fold, duplicates on (_vid, _sub) dropped — [[pqAdcServe]] sums one
+    * LUT row per CODE ROW, so a duplicated vector's ADC score doubles
+    * and rankings shift silently. One commit. */
   def compactPqCodes(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    import graft.util.Maint
-    val live = new Path(s"$dir/codes")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(s"$dir/.codes-compact")
-    val trash = new Path(s"$dir/.codes-trash")
-    // loud on missing codes with no siblings (a typo'd dir); the
-    // mid-swap crash state (live absent, trash surviving) heals here
-    Maint.healAtEntry(fs, live, tmp, trash, "compactPqCodes",
-      live = fs.exists(live),
-      missingMsg = Some(s"compactPqCodes: no codes tree at $live"))
-    Maint.cleanSiblings(fs, tmp, trash, "compactPqCodes")
-    spark.read.parquet(live.toString)
-      .dropDuplicates("_vid", "_sub")
-      .repartition(col("_vid"))
-      .write.parquet(tmp.toString)
-    Maint.flipNow(fs, live, tmp, trash, "compactPqCodes")
-    ()
-  }
+      dir: String): Unit =
+    fold(spark, dir, "compactPqCodes", "pq", Seq("_vid", "_sub"))
 
-  /** Retrain a plain [[writePqIndex]] index under distribution drift —
-    * [[retrainIvfPqIndex]]'s discipline for the flat layout: codebook
-    * AND codes rebuild from the provided embedding frame (the index
-    * stores only lossy codes, so retraining needs the corpus), with
-    * the geometry (dims, m) carried over from the STORED codebook so a
-    * retrain can never silently change the code budget. The entire new
-    * index lands under a temp sibling and the whole dir flips at once
-    * ([[writePqIndex]] writes codebook then codes sequentially — an
-    * in-place rebuild would let a concurrent reader pair a fresh
-    * codebook with stale codes). Replay duplication in the old codes
-    * never carries over; healing WITHOUT retraining is
-    * [[compactPqCodes]]. Deterministic end to end: retrain ≡ a fresh
+  /** Retrain a plain [[writePqIndex]] index under distribution drift:
+    * codebook AND codes rebuild from the provided embedding frame (the
+    * index stores only lossy codes, so retraining needs the corpus),
+    * with the geometry (dims, m) carried over from the STORED codebook
+    * so a retrain can never silently change the code budget. The new
+    * codebook and codes land in one commit that supersedes the old
+    * index. Deterministic end to end: retrain ≡ a fresh
     * [[writePqIndex]] over the same rows, bit for bit (spec-pinned). */
   def retrainPqIndex(emb: DataFrame, dir: String,
       cellCol: String = "label", idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = emb.sparkSession
-    // normalized-then-suffixed temp paths (the trailing-slash rule)
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.util.Maint.healAtEntry(fs, root, root.suffix(".retrain"),
-      root.suffix(".trash"), "retrainPqIndex",
-      live = fs.exists(new Path(root, "codes")),
-      missingMsg = Some(s"retrainPqIndex: no index at $root"))
-    // geometry only — _cell stays un-cast so generic label domains
-    // (the join-face encode) retrain too
-    val mm = spark.read.parquet(s"$dir/codebook")
-      .agg(max(col("_i").cast("int")).as("_mi"),
-        max(col("_sub").cast("int")).as("_ms"))
-      .collect()(0)
-    val dims = mm.getInt(0) + 1
-    val m = mm.getInt(1) + 1
-    val tmp = root.suffix(".retrain")
-    val trash = root.suffix(".trash")
-    graft.util.Maint.cleanSiblings(fs, tmp, trash, "retrainPqIndex")
-    writePqIndex(emb, tmp.toString, dims, m, cellCol, idCol, vecCol)
-    graft.util.Maint.flipNow(fs, root, tmp, trash, "retrainPqIndex")
-    ()
-  }
+      vecCol: String = "embedding"): Unit =
+    rebuild(emb.sparkSession, dir, "retrainPqIndex", Set("pq")) {
+      (prev, commit) =>
+        val cb = VecIndex(prev.get).cb
+        buildPq(emb, cb.dims, cb.m, cellCol, idCol, vecCol,
+          "retrainPqIndex")(commit)
+    }
 
   /** Serve ADC top-k from a [[writePqIndex]] index with EXPLICIT
     * query vectors — the serving shape: the per-query lookup tables
-    * compute DRIVER-side from the collected codebook (|Q|·m·cells
+    * compute DRIVER-side from the header's codebook (|Q|·m·cells
     * integers, the same arithmetic as the distributed LUT: per
     * (sub, cell) the integer dot of the query's µ-components with
     * the sub-centroid's), broadcast, and score against ONE scan of
-    * the stored code table. Raw embeddings are never read
-    * (spec-gated: the serve plan's only FileScan is `codes`) —
-    * identical results to [[pqTopKBatch]] over the index's build
-    * frame for corpus queries (self excluded by id). */
+    * the listed code files. Raw embeddings are never read
+    * (spec-gated) — identical results to [[pqTopKBatch]] over the
+    * index's build frame for corpus queries (self excluded by id). An
+    * IVF-PQ index serves here over all its cells. */
   def pqTopKFromIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, queries: Seq[(Long, Seq[Float])], k: Int)
       : DataFrame = {
     require(queries.nonEmpty, "empty query set")
     require(k >= 1, "k must be >= 1")
+    val (m, idx) = checked(spark, dir, "pqTopKFromIndex",
+      Set("pq", "ivfpq"), store(spark, dir).latest)
     val lut = spark.createDataFrame(
-      java.util.Arrays.asList(
-        pqLutRows(readPqCodebookLocal(spark, dir), queries): _*),
+      java.util.Arrays.asList(pqLutRows(idx.cb.local(spark), queries): _*),
       pqLutSchema)
-    pqAdcServe(spark.read.parquet(s"$dir/codes"), lut, k)
+    pqAdcServe(rowsOf(spark, dir, idx, m.filesOf(Cells)), lut, k)
   }
 
-  /** collected (_i, _cell, _sub, _cmu) codebook rows. cell/sub re-read
-    * from disk can surface as int or long depending on the build
-    * frame's label type — normalize (the partition-column-type lesson
-    * from the working notes). */
-  private def readPqCodebookLocal(
-      spark: org.apache.spark.sql.SparkSession, dir: String)
-      : Array[(Int, Long, Int, Long)] =
-    spark.read.parquet(s"$dir/codebook")
-      .select(col("_i").cast("int"), col("_cell").cast("long"),
-        col("_sub").cast("int"), col("_cmu").cast("long"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
-        r.getLong(3)))
-
-  private val pqLutSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("query_id",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("_sub",
-      org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("_cell",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("_dot",
-      org.apache.spark.sql.types.LongType, nullable = false)))
+  private val pqLutSchema = StructType(Seq(
+    StructField("query_id", LongType, nullable = false),
+    StructField("_sub", IntegerType, nullable = false),
+    StructField("_cell", LongType, nullable = false),
+    StructField("_dot", LongType, nullable = false)))
 
   /** driver-built per-query ADC lookup rows (query_id, _sub, _cell,
     * _dot) — the same arithmetic as the distributed LUT build. The
@@ -1013,15 +1104,15 @@ object Similarity {
     * serve: the `nprobe` best cells by unit-centroid dot, ties by
     * cell id (the [[ivfTopKFromIndex]] ranking) */
   private def probeCellsOf(cents: Seq[Seq[Double]], q: Seq[Double],
-      nprobe: Int): Seq[Int] = {
-    def dotL(a: Seq[Double], b: Seq[Double]): Double =
-      a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y }
+      nprobe: Int): Seq[Int] =
     cents.zipWithIndex.map { case (c, ci) =>
       val n = math.sqrt(dotL(c, c))
       val u = if (n == 0.0) c else c.map(_ / n)
       (ci, dotL(q, u))
     }.sortBy { case (ci, s) => (-s, ci) }.take(nprobe).map(_._1)
-  }
+
+  private def dotL(a: Seq[Double], b: Seq[Double]): Double =
+    a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y }
 
   /** The raw coarse-cell codebook as the native encoder's
     * [sub][k][pos] centroid arrays plus parallel PRESENT-cell id
@@ -1033,7 +1124,7 @@ object Similarity {
     * (sf1: raw build 13.9 s under the join vs 9.4 s residual
     * map-only on the same corpus). */
   private def rawCodebookArrays(cb: Array[(Int, Long, Int, Long)],
-      m: Int): graft.functions.ResidualCodebook = {
+      m: Int): ResidualCodebook = {
     val bySub = cb.groupBy(_._3)
     val empty = Array.empty[(Int, Long, Int, Long)]
     val cbArr = (0 until m).map { s =>
@@ -1043,39 +1134,44 @@ object Similarity {
     val idsArr = (0 until m).map { s =>
       bySub.getOrElse(s, empty).map(_._2).distinct.sorted
     }.toArray
-    new graft.functions.ResidualCodebook(cbArr, idsArr)
+    new ResidualCodebook(cbArr, idsArr)
   }
 
-  /** [[rawCodebookArrays]]' encode applied to the µ subvector frame —
-    * (cell, _vid, _sub, _cell) in the raw layout's on-disk types
-    * (_sub BIGINT, _cell INT: the columns appended files must match
-    * byte-for-byte against pre-existing part files). */
-  private def rawCodesOf(emb: DataFrame, cents: Seq[Seq[Double]],
-      m: Int, subDim: Int, idCol: String, vecCol: String, op: String,
-      table: graft.functions.ResidualCodebook): DataFrame =
-    residualSubRows(emb, cents, m, subDim, idCol, vecCol, op,
-        subtract = false)
-      .withColumn("_c", graft.functions.VectorFunctions
-        .residualCodeWith(col("_sub"), col("_rv"), table))
+  /** The native-argmin encode of a subvector frame against `table`:
+    * (cell, _vid, _sub, _cell), `_sub` and `_cell` cast to the layout's
+    * on-disk types (appended files must match the build's column for
+    * column). */
+  private def codesOf(subRows: DataFrame, table: ResidualCodebook,
+      subType: DataType, cellType: DataType): DataFrame =
+    subRows
+      .withColumn("_c",
+        VectorFunctions.residualCodeWith(col("_sub"), col("_rv"), table))
       .select(col("_vcell").as("cell"), col("_vid"),
-        col("_sub").cast("long").as("_sub"),
-        col("_c").cast("int").as("_cell"))
+        col("_sub").cast(subType).as("_sub"),
+        col("_c").cast(cellType).as("_cell"))
+
+  /** An IVF-PQ subvector frame's codes under `codebook`, in the
+    * layout's on-disk types: raw _sub BIGINT and _cell INT, residual
+    * _sub INT and _cell BIGINT. */
+  private def ivfPqCodesOf(subRows: DataFrame,
+      codebook: Array[(Int, Long, Int, Long)], m: Int,
+      residual: Boolean): DataFrame =
+    codesOf(subRows, rawCodebookArrays(codebook, m),
+      if (residual) IntegerType else LongType,
+      if (residual) LongType else IntegerType)
 
   /** Persist the COMPOSED IVF-PQ index — IVFADC (Jégou et al.,
     * TPAMI 2011 §IV): the production serve shape at 100 TB, where
     * neither half suffices alone — a PQ-only index scans every
     * vector's codes (no pruning), an IVF-only index reads raw
-    * d-float vectors in the probed cells (no compression). Layout:
-    *
-    *   `dir/centroids` — the coarse quantizer, [[writeIvfIndex]]'s
-    *       (cell, pos, w) format ([[readIvfCentroids]] reads both);
-    *   `dir/codebook`  — the PQ codebook (_i, _cell, _sub, _cmu),
-    *       control-plane;
-    *   `dir/codes`     — m codes per vector, PARTITIONED BY the
-    *       coarse `cell`: a query's probe set maps to partition
-    *       DIRECTORIES of the compressed table, so serve IO is
-    *       (probed fraction) × (m codes per row) — pruning AND
-    *       compression compose.
+    * d-float vectors in the probed cells (no compression). The header
+    * holds the coarse quantizer (the [[writeIvfIndex]] format;
+    * [[readIvfCentroids]] reads both) and the PQ codebook
+    * (_i, _cell, _sub, _cmu); the rows are m codes per vector,
+    * (_vid, _sub, _cell), partitioned by the coarse `cell`: a query's
+    * probe set maps to the listed files of the compressed table, so
+    * serve IO is (probed fraction) × (m codes per row) — pruning AND
+    * compression compose.
     *
     * PQ sub-centroids group on the coarse cell (the training-free
     * codebook discipline of [[pqTopKBatch]] with `cellCol` = the
@@ -1088,64 +1184,56 @@ object Similarity {
       kSub: Int = 16): Unit = {
     require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
     require(kSub >= 1, s"kSub >= 1: $kSub")
+    rebuild(emb.sparkSession, dir, "writeIvfPqIndex", Set.empty) {
+      (_, commit) => buildIvfPq(emb, kCells, dims, m, iters, idCol, vecCol,
+        residual, kSub, "writeIvfPqIndex")(commit)
+    }
+  }
+
+  /** An IVF-PQ index over `emb`: the trained coarse quantizer, the
+    * codebook and the codes, handed to `commit`. */
+  private def buildIvfPq(emb: DataFrame, kCells: Int, dims: Int, m: Int,
+      iters: Int, idCol: String, vecCol: String, residual: Boolean,
+      kSub: Int, op: String)(commit: (VecIndex, DataFrame) => Unit): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
     val subDim = dims / m
     val cents = trainIvfCentroids(emb, kCells, iters, idCol, vecCol)
-    writeCentroidsTable(spark, cents, dir)
-    writeIvfPqMeta(spark, dir, residual, m, subDim)
+    def done(codebook: DataFrame, subRows: DataFrame): Unit = {
+      // repartition WITHOUT a count: AQE merges small cells into shared
+      // tasks (file-count control rule); partitionBy still lays each
+      // cell in its own directory
+      val codes = ivfPqCodesOf(subRows, cbTuples(codebook), m, residual)
+        .repartition(col("cell"))
+      commit(VecIndex("ivfpq", residual, codes.schema, cents,
+        Some(Codebook(codebook, dims, m)), Nil), codes)
+    }
     if (residual) {
       // IVFADC: per-subspace integer-L2 k-means over the µ-residuals,
       // codes = argmin against the trained codebook. The subvector
       // frame feeds init + iters + the final encode — pin it (the
       // multi-consumer-subtree rule; retrainIvfIndex's discipline)
       val (subRows, pin) = Dedup.pinNow(
-        residualSubRows(emb, cents, m, subDim, idCol, vecCol,
-          "writeIvfPqIndex"))
+        residualSubRows(emb, cents, m, subDim, idCol, vecCol, op))
       try {
         val cb = trainResidualCodebook(subRows, m, kSub, iters)
         // stored in the SHARED codebook schema (_i = sub·subDim + pos,
         // _cell = code id, _sub, _cmu) so the driver LUT builder
         // serves both encodings with the same integer arithmetic
-        cb.zipWithIndex.flatMap { case (subCents, s) =>
-          subCents.zipWithIndex.flatMap { case (c, j) =>
-            c.zipWithIndex.map { case (mu, p) =>
-              (s * subDim + p, j.toLong, s, mu) } } }
-          .toDF("_i", "_cell", "_sub", "_cmu")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebook")
-        subRows.withColumn("_c", residualCodeExpr(cb))
-          .select(col("_vcell").as("cell"), col("_vid"), col("_sub"),
-            col("_c").as("_cell"))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$dir/codes")
+        done(cb.zipWithIndex.flatMap { case (subCents, s) =>
+            subCents.zipWithIndex.flatMap { case (c, j) =>
+              c.zipWithIndex.map { case (mu, p) =>
+                (s * subDim + p, j.toLong, s, mu) } } }
+            .toDF("_i", "_cell", "_sub", "_cmu"), subRows)
       } finally pin.release()
-    } else {
+    } else
       // raw µ encoding: the codebook trains from the per-dim frame
       // (one map-side-combined agg) and codes assign MAP-ONLY via the
       // same native argmin as the residual face
-      val rows = muRows(assignCells(emb, cents, vecCol), dims,
-        "writeIvfPqIndex", idCol, vecCol, Some("cell"))
-      val codebook = pqCodebookLocal(rows, subDim)
-      codebook.coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/codebook")
-      // the codebook frame is already a LOCAL relation — this collect
-      // is control-plane; normalize types like readPqCodebookLocal so
-      // build and append share one array builder
-      val table = rawCodebookArrays(codebook
-        .select(col("_i").cast("int"), col("_cell").cast("long"),
-          col("_sub").cast("int"), col("_cmu").cast("long"))
-        .collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
-          r.getLong(3))), m)
-      // repartition WITHOUT a count: AQE merges small cells into shared
-      // tasks (file-count control rule); partitionBy still lays each
-      // cell in its own directory
-      rawCodesOf(emb, cents, m, subDim, idCol, vecCol,
-          "writeIvfPqIndex", table)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dir/codes")
-    }
+      done(pqCodebookLocal(muRows(assignCells(emb, cents, vecCol), dims,
+          op, idCol, vecCol, Some("cell")), subDim),
+        residualSubRows(emb, cents, m, subDim, idCol, vecCol, op,
+          subtract = false))
   }
 
   /** Per-row vector-dims guard for the index BUILD/APPEND paths: a
@@ -1186,7 +1274,8 @@ object Similarity {
     // subtract = false is the RAW face: the same (vid, vcell, sub,
     // subvector) frame over plain µ components, feeding the identical
     // native argmin — one builder so the quantization and dims guard
-    // can never fork between encodings
+    // can never fork between encodings. No quantizer (`cents` empty,
+    // the flat PQ face) puts every vector in cell 0.
     val resid =
       if (!subtract) muArr
       else {
@@ -1198,7 +1287,8 @@ object Similarity {
     val subCols = (0 until m).map(s =>
       struct(lit(s).as("_sub"),
         expr(s"slice(_r, ${s * subDim + 1}, $subDim)").as("_rv")))
-    assignCells(emb, cents, vecCol)
+    (if (cents.isEmpty) emb.withColumn("cell", lit(0))
+      else assignCells(emb, cents, vecCol))
       .select(col(idCol).as("_vid"), col("cell").as("_vcell"),
         resid.as("_r"))
       .select(col("_vid"), col("_vcell"),
@@ -1207,19 +1297,6 @@ object Similarity {
         col("_sv").getField("_sub").as("_sub"),
         col("_sv").getField("_rv").as("_rv"))
   }
-
-  /** argmin-L2 code id for `_rv` against the per-subspace codebook
-    * (indexed [sub][code][pos]); first min wins — ties to the lower
-    * code id. Since round 16 this is the NATIVE
-    * [[graft.functions.ResidualCode]] expression: the
-    * transform/aggregate/array_position HOF composition it replaces
-    * ran interpreted on the build/append hot path (r15 measured the
-    * residual sf1 build 50 s vs 29 s raw, the tax scaling with
-    * kSub × subDim per row per training iteration), identical
-    * integer math term for term. */
-  private def residualCodeExpr(cb: Seq[Seq[Array[Long]]]): Column =
-    graft.functions.VectorFunctions.residualCode(col("_sub"),
-      col("_rv"), cb)
 
   /** Deterministic integer-L2 k-means per subspace, all `m` subspaces
     * trained in one frame (the `_sub` column rides the group keys).
@@ -1261,7 +1338,12 @@ object Similarity {
     var cb: Seq[Seq[Array[Long]]] = (0 until m).map(s =>
       init.getOrElse(s, Array.empty).sortBy(_._2).map(_._3).toSeq)
     for (_ <- 0 until iters) {
-      val assigned = subRows.withColumn("_c", residualCodeExpr(cb))
+      // argmin-L2 code id per subvector, ties to the lower id: the
+      // native [[graft.functions.ResidualCode]] (the interpreted HOF
+      // composition it replaced cost the r15 residual sf1 build 50 s
+      // vs 29 s raw), identical integer math term for term
+      val assigned = subRows.withColumn("_c",
+        VectorFunctions.residualCode(col("_sub"), col("_rv"), cb))
       val updated = assigned
         .select(col("_sub"), col("_c"),
           posexplode(col("_rv")).as(Seq("_pos", "_x")))
@@ -1283,176 +1365,83 @@ object Similarity {
     cb
   }
 
-  /** the one-row control-plane marker a [[writeIvfPqIndex]] layout
-    * carries so the serve knows its encoding; absent = raw (the
-    * pre-residual layout) */
-  private def writeIvfPqMeta(spark: org.apache.spark.sql.SparkSession,
-      dir: String, residual: Boolean, m: Int, subDim: Int): Unit = {
-    import spark.implicits._
-    Seq((residual, m, subDim)).toDF("residual", "m", "subdim")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  private def readIvfPqMeta(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) false
-    else spark.read.parquet(p.toString)
-      .select(col("residual")).collect()(0).getBoolean(0)
-  }
-
   /** Incrementally add vectors to a [[writeIvfPqIndex]] index: both
-    * encodings are pure functions of (stored centroids, stored
-    * codebook, vector) — coarse cell by argmax cosine, code by
-    * nearest sub-centroid (raw µ or µ-residual per `dir/meta`) — so
-    * an append writes exactly the code rows a same-table rebuild
-    * would, into the matching coarse-cell partition directories (the
-    * [[appendToIvfIndex]]/[[appendToPqIndex]] discipline; retrain
-    * with [[writeIvfPqIndex]] when drift unbalances the cells). */
+    * encodings are pure functions of (stored quantizer, stored
+    * codebook, vector) — coarse cell by argmax cosine, code by nearest
+    * sub-centroid (raw µ or µ-residual per the header's flag) — so an
+    * append writes exactly the code rows a same-quantizer rebuild
+    * would, into the matching cells, in one commit; replaying a
+    * committed append is a no-op (retrain with [[retrainIvfPqIndex]]
+    * when drift unbalances the cells). */
   def appendToIvfPqIndex(newEmb: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = newEmb.sparkSession
-    val cents = readIvfCentroids(spark, dir)
-    val residual = readIvfPqMeta(spark, dir)
-    val cb = readPqCodebookLocal(spark, dir)
-    val dims = cb.map(_._1).max + 1
-    val m = cb.map(_._3).max + 1
-    val subDim = dims / m
-    val codes =
-      if (residual) {
-        // rebuild the trained codebook's [sub][code][pos] shape from
-        // the stored rows; code ids are dense from 0 by construction
-        val bySub = cb.groupBy(_._3)
-        val cbArr: Seq[Seq[Array[Long]]] = (0 until m).map { s =>
-          bySub(s).groupBy(_._2).toSeq.sortBy(_._1)
-            .map { case (_, rs) => rs.sortBy(_._1).map(_._4) }
-        }
-        residualSubRows(newEmb, cents, m, subDim, idCol, vecCol,
-          "appendToIvfPqIndex")
-          .withColumn("_c", residualCodeExpr(cbArr))
-          .select(col("_vcell").as("cell"), col("_vid"), col("_sub"),
-            col("_c").as("_cell"))
-      } else
-        // the same map-only native-argmin encode as the build;
-        // rawCodesOf emits the raw layout's exact on-disk column
-        // types, so the parquet union of old and new part files keeps
-        // reading (the appendToPqIndex discipline)
-        rawCodesOf(newEmb, cents, m, subDim, idCol, vecCol,
-          "appendToIvfPqIndex", rawCodebookArrays(cb, m))
-    codes.repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    append(newEmb, dir, "appendToIvfPqIndex", "ivfpq") { idx =>
+      ivfPqCodesOf(residualSubRows(newEmb, idx.cents, idx.cb.m,
+          idx.cb.dims / idx.cb.m, idCol, vecCol, "appendToIvfPqIndex",
+          subtract = idx.residual),
+        idx.cb.local(newEmb.sparkSession), idx.cb.m, idx.residual)
+        .repartition(col("cell"))
+    }
 
-  /** Compact a [[writeIvfPqIndex]] codes table after replayed appends —
-    * the composed-index face of [[compactIvfVectors]]. Both encodings
-    * are pure functions of the STORED control-plane tables, so a
-    * crash-retried [[appendToIvfPqIndex]] that half-committed writes
-    * full-row-identical duplicate (cell, _vid, _sub) rows — and unlike
-    * raw-vector duplication these are NOT mere bloat: the ADC serve
-    * sums one LUT row per CODE ROW, so a duplicated vector's
-    * ⟨q,decode⟩ term doubles and rankings shift silently. Any-copy
-    * dedup is exact (duplicates are bit-identical by construction);
-    * the rewrite lands fully under a temp sibling before two renames
-    * flip it live ([[compactIvfVectors]]'s write-new-then-flip
-    * contract: the swap window fails a concurrent read loudly, never
-    * serves half an index; single-writer discipline). */
+  /** Compact a [[writeIvfPqIndex]] index: the composed-index face of
+    * the one fold, duplicates on (cell, _vid, _sub) dropped — unlike
+    * raw-vector duplicates these are NOT mere bloat: the ADC serve sums
+    * one LUT row per CODE ROW, so a duplicated vector's ⟨q,decode⟩ term
+    * doubles and rankings shift silently. One commit. */
   def compactIvfPqCodes(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    import graft.util.Maint
-    val live = new Path(s"$dir/codes")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(s"$dir/.codes-compact")
-    val trash = new Path(s"$dir/.codes-trash")
-    // loud on missing codes with no siblings (a typo'd dir); the
-    // mid-swap crash state (live absent, trash surviving) heals here
-    Maint.healAtEntry(fs, live, tmp, trash, "compactIvfPqCodes",
-      live = fs.exists(live),
-      missingMsg = Some(s"compactIvfPqCodes: no codes tree at $live"))
-    Maint.cleanSiblings(fs, tmp, trash, "compactIvfPqCodes")
-    // repartition WITHOUT a count (the build path's file-count rule):
-    // AQE merges small cells into shared tasks; partitionBy still lays
-    // each cell in its own prunable directory
-    spark.read.parquet(live.toString)
-      .dropDuplicates("cell", "_vid", "_sub")
-      .repartition(col("cell"))
-      .write.partitionBy("cell").parquet(tmp.toString)
-    Maint.flipNow(fs, live, tmp, trash, "compactIvfPqCodes")
-    ()
-  }
+      dir: String): Unit =
+    fold(spark, dir, "compactIvfPqCodes", "ivfpq", Seq("cell", "_vid", "_sub"))
 
   /** Retrain a composed [[writeIvfPqIndex]] index under distribution
-    * drift — [[retrainIvfIndex]]'s discipline for the IVFADC layout.
-    * Coarse quantizer and PQ sub-codebooks retrain TOGETHER from the
-    * provided embedding frame: the index stores only codes (PQ
+    * drift. Coarse quantizer and PQ sub-codebooks retrain TOGETHER from
+    * the provided embedding frame: the index stores only codes (PQ
     * compression is lossy by design), so retraining needs the corpus —
     * unlike the raw-IVF face, whose index IS the vectors. The encoding
-    * contract (raw/residual, m, kSub) carries over from the stored
-    * index so a retrain can never silently switch encodings;
-    * `kCells`/`iters` are the caller's drift response. The ENTIRE new
-    * index is built under a temp sibling and the whole dir flips at
-    * once: [[writeIvfPqIndex]] writes its four subtrees sequentially,
-    * so an in-place rebuild would let a concurrent reader pair a fresh
-    * quantizer with stale codes and probe wrong directories silently.
-    * Replay duplication in the old codes never carries over (codes
-    * rebuild from `emb`); healing a live index WITHOUT retraining is
-    * [[compactIvfPqCodes]]. No RNG anywhere: retrain ≡ a fresh
-    * [[writeIvfPqIndex]] over the same rows, bit for bit
+    * contract (raw/residual, dims, m, kSub) carries over from the
+    * stored index so a retrain can never silently switch encodings;
+    * `kCells`/`iters` are the caller's drift response. The new
+    * quantizer, codebook and codes land in one commit that supersedes
+    * the old index — a reader sees the old index or the new, never a
+    * fresh quantizer over stale codes. No RNG anywhere: retrain ≡ a
+    * fresh [[writeIvfPqIndex]] over the same rows, bit for bit
     * (spec-pinned). */
   def retrainIvfPqIndex(emb: DataFrame, dir: String, kCells: Int,
       iters: Int = 5, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = emb.sparkSession
-    // normalized-then-suffixed temp paths (the retrainIvfIndex
-    // trailing-slash note: a string-concatenated "$dir.retrain" nests
-    // inside the index when dir ends in '/')
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.util.Maint.healAtEntry(fs, root, root.suffix(".retrain"),
-      root.suffix(".trash"), "retrainIvfPqIndex",
-      live = fs.exists(new Path(root, "codes")),
-      missingMsg = Some(s"retrainIvfPqIndex: no index at $root"))
-    val cb = readPqCodebookLocal(spark, dir)
-    val residual = readIvfPqMeta(spark, dir)
-    val dims = cb.map(_._1).max + 1
-    val m = cb.map(_._3).max + 1
-    // kSub = dense code ids per subspace — meaningful ONLY under the
-    // residual layout; a raw codebook's _cell values are coarse-cell
-    // ids, so max+1 there would be a bogus kCells-shaped number. The
-    // raw branch of writeIvfPqIndex ignores kSub, but never hand it
-    // one that LOOKS meaningful (latent trap if raw ever consumes it).
-    val kSub = if (residual) cb.map(_._2).max.toInt + 1 else 1
-    val tmp = root.suffix(".retrain")
-    val trash = root.suffix(".trash")
-    graft.util.Maint.cleanSiblings(fs, tmp, trash, "retrainIvfPqIndex")
-    writeIvfPqIndex(emb, tmp.toString, kCells, dims, m, iters, idCol,
-      vecCol, residual, kSub)
-    graft.util.Maint.flipNow(fs, root, tmp, trash, "retrainIvfPqIndex")
-    ()
-  }
+      vecCol: String = "embedding"): Unit =
+    rebuild(emb.sparkSession, dir, "retrainIvfPqIndex", Set("ivfpq")) {
+      (prev, commit) =>
+        val idx = VecIndex(prev.get)
+        // kSub = dense code ids per subspace — meaningful ONLY under the
+        // residual layout; a raw codebook's _cell values are coarse-cell
+        // ids, so max+1 there would be a bogus kCells-shaped number
+        val kSub =
+          if (idx.residual) idx.cb.local(emb.sparkSession).map(_._2).max
+            .toInt + 1
+          else 1
+        buildIvfPq(emb, kCells, idx.cb.dims, idx.cb.m, iters, idCol, vecCol,
+          idx.residual, kSub, "retrainIvfPqIndex")(commit)
+    }
 
   /** Serve ADC top-k from a [[writeIvfPqIndex]] index: driver probe
-    * selection against the stored coarse quantizer (per query: the
-    * `nprobe` best cells, the [[ivfTopKFromIndex]] ranking), ONE
-    * partition-pruned scan of the compressed code table (gate
-    * `PartitionFilters` — unprobed cells are never opened), then
-    * integer ADC against the broadcast driver-built LUTs, scoped per
-    * query to ITS probe set by a broadcast (query_id, cell) join.
-    * Raw embeddings are never read; results for corpus queries equal
-    * inline probe-then-ADC composition at every nprobe (spec-pinned),
-    * and nprobe = kCells degrades to [[pqTopKFromIndex]] over the
-    * same codebook. */
+    * selection against the header's coarse quantizer (per query: the
+    * `nprobe` best cells, the [[ivfTopKFromIndex]] ranking), ONE scan
+    * of the listed code files of the probed cells (unprobed cells are
+    * never opened), then integer ADC against the broadcast driver-built
+    * LUTs, scoped per query to ITS probe set by a broadcast
+    * (query_id, cell) join. Raw embeddings are never read; results for
+    * corpus queries equal inline probe-then-ADC composition at every
+    * nprobe (spec-pinned), and nprobe = kCells degrades to
+    * [[pqTopKFromIndex]] over the same codebook. */
   def ivfPqTopKFromIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, queries: Seq[(Long, Seq[Float])], k: Int,
       nprobe: Int = 1): DataFrame = {
     require(queries.nonEmpty, "empty query set")
     require(k >= 1 && nprobe >= 1, "k >= 1, nprobe >= 1")
-    val cents = readIvfCentroids(spark, dir)
-    val residual = readIvfPqMeta(spark, dir)
-    val cb = readPqCodebookLocal(spark, dir)
-    val dims = cb.map(_._1).max + 1
+    val (man, idx) = checked(spark, dir, "ivfPqTopKFromIndex", Set("ivfpq"),
+      store(spark, dir).latest)
+    val cents = idx.cents
+    val cb = idx.cb.local(spark)
+    val dims = idx.cb.dims
     // per-(query, probed cell) rows; `_qc` is the ⟨q, centroid⟩ ADC
     // term of the residual decomposition ⟨q,x⟩ ≈ ⟨q,c⟩ + ⟨q,decode⟩ —
     // identically zero under raw encoding, so ONE serve plan covers
@@ -1466,29 +1455,24 @@ object Similarity {
         math.floor(x.toDouble * 1000000.0).toLong)
       probeCellsOf(cents, q, nprobe).map { ci =>
         val qc =
-          if (!residual) 0L
+          if (!idx.residual) 0L
           else cents(ci).zip(qmu).foldLeft(0L) { case (acc, (c, qm)) =>
             acc + math.floor(c * 1000000.0).toLong * qm }
         Row(qid, ci, qc)
       }
     }
-    val probeSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("query_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("cell",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("_qc",
-        org.apache.spark.sql.types.LongType, nullable = false)))
+    val probeSchema = StructType(Seq(
+      StructField("query_id", LongType, nullable = false),
+      StructField("cell", IntegerType, nullable = false),
+      StructField("_qc", LongType, nullable = false)))
     val probe = spark.createDataFrame(
       java.util.Arrays.asList(probeRows: _*), probeSchema)
     val lut = spark.createDataFrame(
       java.util.Arrays.asList(pqLutRows(cb, queries): _*), pqLutSchema)
-    // the STATIC isin over the union of probe sets is what reaches
-    // PartitionFilters (directory pruning before IO); the broadcast
-    // probe join then scopes each query to its own cells
-    val allProbed = probeRows.map(_.getInt(1)).distinct
-    val scored = spark.read.parquet(s"$dir/codes")
-      .where(col("cell").isin(allProbed: _*))
+    // the scan reads only the union of the probe sets' listed files;
+    // the broadcast probe join then scopes each query to its own cells
+    val scored = cellRows(spark, dir, man, idx,
+        probeRows.map(_.getInt(1)).toSet)
       .select(col("cell").cast("int").as("cell"), col("_vid"),
         col("_sub"), col("_cell"))
       .join(broadcast(probe), Seq("cell"))

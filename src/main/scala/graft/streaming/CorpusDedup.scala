@@ -668,7 +668,9 @@ object CorpusDedup {
 
   /** Re-quantize the accepted-vector sidecar under a NEW coarse
     * quantizer — the streaming face of
-    * [[graft.pipeline.Similarity.retrainIvfIndex]], and the
+    * [[graft.pipeline.Similarity.retrainIvfIndex]] (which likewise
+    * commits the new quantizer and every reassigned row in one
+    * manifest commit), and the
     * maintenance step [[appendBatchSemantic]]'s frozen-quantizer
     * contract defers to under distribution drift (stale cells stop
     * pruning; they never break correctness). STOPPED-STREAM,

@@ -4,9 +4,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** THE maintenance-verb filesystem protocol — one audited copy of the
   * write-new-then-flip / park-then-swap / heal-at-entry discipline
-  * that the destructive maintenance verbs of the stores not yet on
-  * [[ManifestLog]] route through (vector-index compactions and
-  * retrains, version scrubs, partition optimize).
+  * that the destructive maintenance verbs of the one store not yet on
+  * [[ManifestLog]] route through: the ingest store's version scrubs
+  * and partition optimize (`graft.streaming.Ingest`, the only
+  * remaining caller of the flip and park helpers).
   *
   * Why one copy: the protocol exists because a maintenance verb that
   * crashes between two filesystem mutations must leave a state that is
@@ -20,8 +21,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * which is only tractable because the steps live here once.
   *
   * Protocol choice is the caller's; neither may expose a crash-window
-  * DUPLICATE, which changes answers (PQ code rows sum into ADC scores,
-  * whole-index layouts must swap atomically):
+  * DUPLICATE or a half-written tree, which change answers:
   *   - a tree rewritten whole → whole-root flip:
   *     [[healAtEntry]] + [[cleanSiblings]] + build-into-tmp +
   *     [[flipNow]]. Every crash state exposes either the complete old
@@ -32,10 +32,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     [[healParked]] at entry + [[swapPartitionDir]] per partition
   *     with originals PARKED under a shared trash root until the
   *     verb's commit delete — never delete-then-rename.
-  *   - the BM25 index, the SequenceShards store and the CorpusDedup
-  *     sidecars instead commit through [[ManifestLog]]'s versioned
-  *     manifest (one commit point per verb, reads never mutate), whose
-  *     crash points are [[step]]s too.
+  *   - the BM25 index, the SequenceShards store, the CorpusDedup
+  *     sidecars and the stored vector indexes (IVF, PQ, IVF-PQ)
+  *     instead commit through [[ManifestLog]]'s versioned manifest
+  *     (one commit point per verb, reads never mutate), whose crash
+  *     points are [[step]]s too.
   */
 object Maint {
 

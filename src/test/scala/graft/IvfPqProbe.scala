@@ -10,8 +10,8 @@ import graft.pipeline.Similarity
   * corpus vectors as queries, and measure recall@k against the exact
   * cosine ranking at nprobe ∈ {1, 2, 4, …, kCells}, plus warm serve
   * seconds. The numbers this prints back the two claims the operator
-  * makes: (a) serve cost tracks the probed fraction (partition-pruned
-  * codes scan), (b) residual coding buys recall at the same code
+  * makes: (a) serve cost tracks the probed fraction (the probed cells'
+  * code files), (b) residual coding buys recall at the same code
   * budget (the IVFADC point). */
 object IvfPqProbe {
   def main(args: Array[String]): Unit = {
@@ -75,7 +75,7 @@ object IvfPqProbe {
       }
       println(f"== $label: build $tBuild%.1f s")
       lines.foreach(println)
-      // lifecycle at scale: a crash-replayed append (half the corpus
+      // lifecycle at scale: an overlapping append (half the corpus
       // lands twice), the compaction heal, and a retrain — walls plus
       // the serve-restoration check the PipelineSpec pins at toy size
       val half = emb.where(col("vec_id") % 2 === 0)
@@ -87,30 +87,30 @@ object IvfPqProbe {
           .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
       val clean = serveSet()
       def codeRows(): Long =
-        spark.read.parquet(s"$dir/codes").count()
+        Similarity.indexRows(spark, dir).get.count()
       val rowsClean = codeRows()
       val nHalf = half.count()
       var t = System.nanoTime()
       Similarity.appendToIvfPqIndex(half, dir)
       val tAppend = (System.nanoTime() - t) / 1e9
-      // the replay must have actually duplicated rows, or the heal
-      // check below passes vacuously (the PipelineSpec contract at
-      // probe scale)
+      // the overlapping append must have actually duplicated rows, or
+      // the heal check below passes vacuously (the PipelineSpec
+      // contract at probe scale)
       require(codeRows() == rowsClean + nHalf * m,
-        s"$label: replay append did not duplicate code rows")
+        s"$label: overlapping append did not duplicate code rows")
       t = System.nanoTime()
       Similarity.compactIvfPqCodes(spark, dir)
       val tCompact = (System.nanoTime() - t) / 1e9
       require(codeRows() == rowsClean,
         s"$label: compaction must restore the exact code-row count")
       require(serveSet() == clean,
-        s"$label: compaction must restore the pre-replay serve")
+        s"$label: compaction must restore the pre-overlap serve")
       t = System.nanoTime()
       Similarity.retrainIvfPqIndex(emb, dir, kCells = kCells, iters = 3)
       val tRetrain = (System.nanoTime() - t) / 1e9
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
-      println(f"  lifecycle: replay-append $tAppend%.1f s, " +
+      println(f"  lifecycle: overlap-append $tAppend%.1f s, " +
         f"compact $tCompact%.1f s (serve restored), " +
         f"retrain $tRetrain%.1f s")
     }

@@ -26,8 +26,9 @@ import graft.util.Maint
   * Jaccard intersection, a duplicate fingerprint outlives every later
   * fold), so the CorpusDedup sidecars are compared as the exact sorted
   * multiset of their live rows, read through the store's own read
-  * face; the index verbs compare their own answer faces (index rows
-  * per id, the served BM25 ranking). */
+  * face, and so are the stored vector indexes (with their manifest
+  * header: quantizer, codebook, append fingerprints); the BM25 verbs
+  * compare the served ranking. */
 class MaintProtocolSpec extends AnyFunSuite {
   private lazy val spark: SparkSession = TestSpark.spark
   import spark.implicits._
@@ -101,8 +102,8 @@ class MaintProtocolSpec extends AnyFunSuite {
     * sibling — exactly what a crash between a flip's two renames
     * leaves), so the recorded points include the heal-* steps and a
     * crash DURING the heal itself must also recover on re-run. The
-    * heal logic is the shared helper, so two representative flip
-    * verbs cover it for all. */
+    * heal logic is the shared helper; `Ingest.scrubVersion`'s
+    * sidecar flip is its last caller. */
   private def healCrashMatrix(sc: Scenario,
       park: String => Unit): Unit = {
     val pristine = Files.createTempDirectory(s"mainthealp-${sc.verb}")
@@ -313,21 +314,7 @@ class MaintProtocolSpec extends AnyFunSuite {
       "compactPostings")
   }
 
-  test("heal path itself: crashes DURING a heal-in-progress (the " +
-      "mid-swap starting state) recover on re-run, for both a " +
-      "version-fold flip and a whole-index flip") {
-    healCrashMatrix(
-      Scenario("compactIvfVectors", ivfSetup,
-        b => Similarity.compactIvfVectors(spark, s"$b/ivf"), ivfAnswer),
-      parkDir(_, "ivf/vectors", "ivf/.vectors-trash"))
-    healCrashMatrix(
-      Scenario("retrainIvfIndex", ivfSetup,
-        b => Similarity.retrainIvfIndex(spark, s"$b/ivf", kCells = 3,
-          iters = 2), ivfAnswer),
-      parkDir(_, "ivf", "ivf.trash"))
-  }
-
-  // ---- persisted vector indexes -----------------------------------------
+  // ---- stored vector indexes (one ManifestLog store) --------------------
 
   private lazy val emb8: DataFrame = {
     val df = (0 until 8)
@@ -337,63 +324,220 @@ class MaintProtocolSpec extends AnyFunSuite {
     df
   }
 
+  /** An append batch: four new vectors, ids 8 to 11. */
+  private lazy val batch4: DataFrame =
+    (8 until 12).map(i => (i.toLong, vecOf(i), (i % 2).toLong))
+      .toDF("vec_id", "embedding", "label")
+
+  /** An overlapping batch: vectors 6 and 7 again, so the index holds
+    * duplicate rows for a compaction to drop. */
+  private def overlap: DataFrame = emb8.where(col("vec_id") >= 6)
+
   private def ivfSetup(base: String): Unit =
     Similarity.writeIvfIndex(emb8, s"$base/ivf", kCells = 2, iters = 2)
 
-  private def ivfAnswer(base: String): Seq[String] =
-    sortedRows(spark.read.parquet(s"$base/ivf/vectors")
-      .dropDuplicates("vec_id", "cell")) ++
-      sortedRows(spark.read.parquet(s"$base/ivf/centroids"))
-
-  test("compactIvfVectors: crash at every step heals on re-run") {
-    crashMatrix(Scenario("compactIvfVectors", ivfSetup,
-      b => Similarity.compactIvfVectors(spark, s"$b/ivf"), ivfAnswer))
-  }
-
-  test("retrainIvfIndex: crash at every step heals on re-run") {
-    crashMatrix(Scenario("retrainIvfIndex", ivfSetup,
-      b => Similarity.retrainIvfIndex(spark, s"$b/ivf", kCells = 3,
-        iters = 2), ivfAnswer))
-  }
-
   private def pqSetup(base: String): Unit =
     Similarity.writePqIndex(emb8, s"$base/pq", dims = 4, m = 2)
-
-  private def pqAnswer(base: String): Seq[String] =
-    sortedRows(spark.read.parquet(s"$base/pq/codes")
-      .dropDuplicates("_vid", "_sub")) ++
-      sortedRows(spark.read.parquet(s"$base/pq/codebook"))
-
-  test("compactPqCodes: crash at every step heals on re-run") {
-    crashMatrix(Scenario("compactPqCodes", pqSetup,
-      b => Similarity.compactPqCodes(spark, s"$b/pq"), pqAnswer))
-  }
-
-  test("retrainPqIndex: crash at every step heals on re-run") {
-    crashMatrix(Scenario("retrainPqIndex", pqSetup,
-      b => Similarity.retrainPqIndex(emb8, s"$b/pq"), pqAnswer))
-  }
 
   private def ivfPqSetup(base: String): Unit =
     Similarity.writeIvfPqIndex(emb8, s"$base/ivfpq", kCells = 2,
       dims = 4, m = 2, iters = 2)
 
-  private def ivfPqAnswer(base: String): Seq[String] =
-    sortedRows(spark.read.parquet(s"$base/ivfpq/codes")
-      .dropDuplicates("cell", "_vid", "_sub")) ++
-      sortedRows(spark.read.parquet(s"$base/ivfpq/codebook")) ++
-      sortedRows(spark.read.parquet(s"$base/ivfpq/centroids"))
+  private def indexLog(dir: String) = new graft.util.ManifestLog(
+    new org.apache.hadoop.fs.Path(dir),
+    spark.sparkContext.hadoopConfiguration, Map("cells" -> Seq("cell")))
+
+  /** A stored index's exact answer: the sorted multiset of its live
+    * rows through the read face, then its manifest header (quantizer,
+    * codebook, schema and append fingerprints). */
+  private def indexAnswer(dir: String): Seq[String] =
+    sortedRows(Similarity.indexRows(spark, dir).get) ++
+      indexLog(dir).latest.get.header.map(_.mkString("\t"))
+
+  /** A vector-index verb's crash matrix: every point re-runs to the
+    * clean rows and header, and a clean run passes its one commit
+    * point once. */
+  private def vecMatrix(verb: String, setup: String => Unit, idx: String,
+      run: String => Unit): Unit = {
+    val fired = crashMatrix(Scenario(verb, setup, run,
+      b => indexAnswer(s"$b/$idx")))
+    assert(fired.count(_ == "committed") == 1, fired)
+  }
+
+  test("compactIvfVectors: crash at every step heals on re-run") {
+    vecMatrix("compactIvfVectors",
+      b => { ivfSetup(b); Similarity.appendToIvfIndex(overlap, s"$b/ivf") },
+      "ivf", b => Similarity.compactIvfVectors(spark, s"$b/ivf"))
+  }
+
+  test("retrainIvfIndex: crash at every step heals on re-run") {
+    vecMatrix("retrainIvfIndex", ivfSetup, "ivf",
+      b => Similarity.retrainIvfIndex(spark, s"$b/ivf", kCells = 3,
+        iters = 2))
+  }
+
+  test("appendToIvfIndex: a crash at every step, then a re-run, gives " +
+      "the clean rows with no duplicates") {
+    vecMatrix("appendToIvfIndex", ivfSetup, "ivf",
+      b => Similarity.appendToIvfIndex(batch4, s"$b/ivf"))
+  }
+
+  test("compactPqCodes: crash at every step heals on re-run") {
+    vecMatrix("compactPqCodes",
+      b => { pqSetup(b); Similarity.appendToPqIndex(overlap, s"$b/pq") },
+      "pq", b => Similarity.compactPqCodes(spark, s"$b/pq"))
+  }
+
+  test("retrainPqIndex: crash at every step heals on re-run") {
+    vecMatrix("retrainPqIndex", pqSetup, "pq",
+      b => Similarity.retrainPqIndex(emb8.where(col("vec_id") =!= 2L),
+        s"$b/pq"))
+  }
+
+  test("appendToPqIndex: a crash at every step, then a re-run, gives " +
+      "the clean rows with no duplicates") {
+    vecMatrix("appendToPqIndex", pqSetup, "pq",
+      b => Similarity.appendToPqIndex(batch4, s"$b/pq"))
+  }
 
   test("compactIvfPqCodes: crash at every step heals on re-run") {
-    crashMatrix(Scenario("compactIvfPqCodes", ivfPqSetup,
-      b => Similarity.compactIvfPqCodes(spark, s"$b/ivfpq"),
-      ivfPqAnswer))
+    vecMatrix("compactIvfPqCodes",
+      b => {
+        ivfPqSetup(b)
+        Similarity.appendToIvfPqIndex(overlap, s"$b/ivfpq")
+      },
+      "ivfpq", b => Similarity.compactIvfPqCodes(spark, s"$b/ivfpq"))
   }
 
   test("retrainIvfPqIndex: crash at every step heals on re-run") {
-    crashMatrix(Scenario("retrainIvfPqIndex", ivfPqSetup,
-      b => Similarity.retrainIvfPqIndex(emb8, s"$b/ivfpq", kCells = 2,
-        iters = 2), ivfPqAnswer))
+    vecMatrix("retrainIvfPqIndex", ivfPqSetup, "ivfpq",
+      b => Similarity.retrainIvfPqIndex(emb8, s"$b/ivfpq", kCells = 3,
+        iters = 2))
+  }
+
+  test("appendToIvfPqIndex: a crash at every step, then a re-run, " +
+      "gives the clean rows with no duplicates") {
+    vecMatrix("appendToIvfPqIndex", ivfPqSetup, "ivfpq",
+      b => Similarity.appendToIvfPqIndex(batch4, s"$b/ivfpq"))
+  }
+
+  private def ivfServe(b: String): DataFrame =
+    Similarity.ivfTopKFromIndex(spark, s"$b/ivf", vecOf(3), k = 20,
+      nprobe = 2)
+
+  private def ivfPqServe(b: String): DataFrame =
+    Similarity.ivfPqTopKFromIndex(spark, s"$b/ivfpq", Seq(100L -> vecOf(3)),
+      k = 20, nprobe = 2)
+
+  /** A tidy index: the root holds only `_manifest/` and `cells/`,
+    * `_manifest/` one manifest, and every data file under `cells` is one
+    * the manifest lists. */
+  private def assertTidyIndex(dir: String): Unit = {
+    val m = indexLog(dir).latest.get
+    assert(new java.io.File(dir).list().toSet == Set("_manifest", "cells"))
+    assert(new java.io.File(s"$dir/_manifest").list()
+      .filterNot(_.startsWith(".")).toSeq == Seq(m.version.toString))
+    assert(listing(dir).map(_._1).filter(_.endsWith(".parquet"))
+      .filterNot(_.split('/').last.startsWith(".")).toSet ==
+      m.files.map(_.path).toSet)
+  }
+
+  /** The two states a crash leaves in a stored index — an append
+    * crashed at `written` (an uncommitted version's files) and a retrain
+    * crashed at `committed` (manifest v+1 beside manifest v and its
+    * superseded files). In each, the serve answers as the clean store
+    * does (before the append; after the retrain) and changes no file,
+    * and the next verb leaves the index tidy. */
+  private def indexCrashStates(setup: String => Unit, idx: String,
+      serve: String => DataFrame, append: String => Unit,
+      appendVerb: String, retrain: String => Unit, retrainVerb: String,
+      next: String => Unit): Unit = {
+    val pristine = Files.createTempDirectory("maintvecstates")
+    setup(pristine.toString)
+    def crashed(verb: String, run: String => Unit): String = {
+      val d = freshCopy(pristine)
+      Maint.crashHook = (v, p) =>
+        if (v == verb && p == (if (verb == appendVerb) "written"
+          else "committed")) throw CrashInjected(v, p)
+      try intercept[CrashInjected](run(d))
+      finally Maint.crashHook = (_, _) => ()
+      d
+    }
+    val retrained = freshCopy(pristine)
+    retrain(retrained)
+    for ((dir, want) <- Seq(
+        crashed(appendVerb, append) -> sortedRows(serve(freshCopy(pristine))),
+        crashed(retrainVerb, retrain) -> sortedRows(serve(retrained)))) {
+      val before = listing(s"$dir/$idx")
+      assert(sortedRows(serve(dir)) == want)
+      assert(Similarity.indexRows(spark, s"$dir/$idx").get.count() > 0)
+      assert(listing(s"$dir/$idx") == before,
+        "a read face changed the index's files")
+      next(dir)
+      assertTidyIndex(s"$dir/$idx")
+    }
+  }
+
+  test("ivf index crash states: serves never mutate and answer as the " +
+      "clean store, and the next verb leaves only _manifest/ and cells/") {
+    indexCrashStates(ivfSetup, "ivf", ivfServe,
+      b => Similarity.appendToIvfIndex(batch4, s"$b/ivf"),
+      "appendToIvfIndex",
+      b => Similarity.retrainIvfIndex(spark, s"$b/ivf", kCells = 3,
+        iters = 2), "retrainIvfIndex",
+      b => Similarity.compactIvfVectors(spark, s"$b/ivf"))
+  }
+
+  test("ivf-pq index crash states: serves never mutate and answer as " +
+      "the clean store, and the next verb leaves only _manifest/ and " +
+      "cells/") {
+    indexCrashStates(ivfPqSetup, "ivfpq", ivfPqServe,
+      b => Similarity.appendToIvfPqIndex(batch4, s"$b/ivfpq"),
+      "appendToIvfPqIndex",
+      b => Similarity.retrainIvfPqIndex(emb8, s"$b/ivfpq", kCells = 3,
+        iters = 2), "retrainIvfPqIndex",
+      b => Similarity.appendToIvfPqIndex(batch4, s"$b/ivfpq"))
+  }
+
+  /** Serves that overlap `verb` at every protocol point it passes (the
+    * crash hook as an observer): a serve planned and run at the point,
+    * and a frame planned BEFORE the verb and run at the point, each
+    * equal the pre-verb or the post-verb answer, or throw. Returns the
+    * points at which the fresh serve threw. */
+  private def overlappingServes(verb: String, setup: String => Unit,
+      run: String => Unit, serve: String => DataFrame): Seq[String] = {
+    val pristine = Files.createTempDirectory(s"maintoverlap-$verb")
+    setup(pristine.toString)
+    val pre = sortedRows(serve(freshCopy(pristine)))
+    val post = { val d = freshCopy(pristine); run(d); sortedRows(serve(d)) }
+    assert(pre != post, s"$verb changes no answer: the test guards nothing")
+    val dir = freshCopy(pristine)
+    val planned = serve(dir)
+    val seen = scala.collection.mutable.ArrayBuffer[
+      (String, scala.util.Try[Seq[String]], scala.util.Try[Seq[String]])]()
+    Maint.crashHook = (v, p) => if (v == verb) {
+      seen += ((p, scala.util.Try(sortedRows(serve(dir))),
+        scala.util.Try(sortedRows(planned))))
+      ()
+    }
+    try run(dir) finally Maint.crashHook = (_, _) => ()
+    assert(seen.nonEmpty, s"$verb passed no protocol point")
+    for ((p, fresh, old) <- seen; t <- Seq(fresh, old))
+      assert(t.fold(_ => true, a => a == pre || a == post),
+        s"$verb: a serve at '$p' saw neither the pre- nor the post-verb " +
+          "index")
+    seen.collect { case (p, scala.util.Failure(_), _) => p }.toSeq
+  }
+
+  test("serves overlapping retrainIvfPqIndex and compactIvfVectors at " +
+      "every protocol point see the old or the new index, and a fresh " +
+      "serve never fails") {
+    assert(overlappingServes("retrainIvfPqIndex", ivfPqSetup,
+      b => Similarity.retrainIvfPqIndex(emb8, s"$b/ivfpq", kCells = 3,
+        iters = 2), ivfPqServe).isEmpty)
+    assert(overlappingServes("compactIvfVectors",
+      b => { ivfSetup(b); Similarity.appendToIvfIndex(overlap, s"$b/ivf") },
+      b => Similarity.compactIvfVectors(spark, s"$b/ivf"), ivfServe).isEmpty)
   }
 
   // ---- persisted BM25 index ---------------------------------------------
@@ -558,6 +702,17 @@ class MaintProtocolSpec extends AnyFunSuite {
       b => Ingest.scrubVersion(spark, 2L, s"$b/data", s"$b/stats",
         None, None),
       storeAnswer))
+  }
+
+  test("heal path itself: crashes DURING a heal-in-progress (the " +
+      "mid-swap starting state) recover on re-run, for scrubVersion's " +
+      "sidecar flip") {
+    healCrashMatrix(
+      Scenario("scrubVersion", storeSetup,
+        b => Ingest.scrubVersion(spark, 2L, s"$b/data", s"$b/stats",
+          None, None),
+        storeAnswer),
+      parkDir(_, "stats", "stats.scrub-trash"))
   }
 
   test("optimize: crash at every step heals on re-run") {

@@ -10,6 +10,45 @@ class PipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** The live rows of the stored vector index at `dir`. */
+  private def indexRows(dir: String) = Similarity.indexRows(spark, dir).get
+
+  private def indexLog(dir: String) = new graft.util.ManifestLog(
+    new org.apache.hadoop.fs.Path(dir),
+    spark.sparkContext.hadoopConfiguration, Map("cells" -> Seq("cell")))
+
+  /** The files the vector index at `dir` lists for `cells`. */
+  private def cellFiles(dir: String, cells: Set[Int]): Set[String] =
+    indexLog(dir).latest.get.files
+      .filter(f => cells(f.part("cell").toInt))
+      .map(f => new java.io.File(s"$dir/${f.path}").toURI.getPath).toSet
+
+  /** The files a frame's plan scans. */
+  private def scanned(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.inputFiles.map(f => new java.net.URI(f).getPath).toSet
+
+  /** The stored serve's probe ranking, re-derived: unit centroids, dot
+    * with the query, ties by cell id. */
+  private def probesOf(cents: Seq[Seq[Double]], vec: Seq[Float],
+      nprobe: Int): Seq[Int] = {
+    def d(a: Seq[Double], b: Seq[Double]) =
+      a.zip(b).map { case (x, y) => x * y }.sum
+    val q = vec.map(_.toDouble)
+    cents.zipWithIndex.map { case (c, ci) =>
+      val n = math.sqrt(d(c, c))
+      (ci, d(q, if (n == 0.0) c else c.map(_ / n)))
+    }.sortBy { case (ci, sc) => (-sc, ci) }.take(nprobe).map(_._1)
+  }
+
+  /** A fresh index holding `dir`'s header — its frozen quantizer and
+    * codebook — and no rows. */
+  private def emptyTwin(dir: String, tag: String): String = {
+    val twin = java.nio.file.Files.createTempDirectory(tag).toString
+    indexLog(twin).commit("emptyTwin", None, indexLog(dir).latest.get.header,
+      Nil)
+    twin
+  }
+
   private lazy val docs = Seq(
     (0L, "the quick brown fox jumps over the lazy dog"),
     (1L, "the quick brown fox jumps over the lazy cat"),   // near-dup of 0
@@ -107,12 +146,14 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSeq
     assert(rows(served) == rows(inline))
-    // serving reads the m-codes-per-vector table ONLY: one FileScan,
-    // of codes — raw embeddings never touched at serve time
+    // serving reads the m-codes-per-vector rows ONLY: one FileScan, of
+    // the index's listed code files — raw embeddings never touched at
+    // serve time
     val p = served.queryExecution.executedPlan.toString
     val scans = p.linesIterator.filter(_.contains("FileScan")).toSeq
-    assert(scans.length == 1 && scans.head.contains("codes"),
+    assert(scans.length == 1 && scans.head.contains("/cells/"),
       s"serve plan must scan codes only:\n$p")
+    assert(scanned(served) == cellFiles(dir, Set(0)))
     // rebuild is bit-reproducible
     Similarity.writePqIndex(emb, dir, dims = 4, m = 2)
     assert(rows(Similarity.pqTopKFromIndex(spark, dir, queries, k = 5))
@@ -126,23 +167,20 @@ class PipelineSpec extends AnyFunSuite {
     Similarity.writePqIndex(emb.where(col("vec_id") < 3), dir3,
       dims = 4, m = 2)
     Similarity.appendToPqIndex(emb.where(col("vec_id") >= 3), dir3)
-    val cb3 = spark.read.parquet(s"$dir3/codebook")
-    val codes3 = spark.read.parquet(s"$dir3/codes")
+    val codes3 = indexRows(dir3)
       .orderBy("_vid", "_sub").collect().map(_.toString).toSeq
     // rebuild the codes with the SAME stored codebook via a second
-    // append into a fresh dir holding only that codebook
-    val dir4 = java.nio.file.Files.createTempDirectory("pqapp2")
-      .toString
-    cb3.write.parquet(s"$dir4/codebook")
+    // append into a fresh index holding only that codebook
+    val dir4 = emptyTwin(dir3, "pqapp2")
     Similarity.appendToPqIndex(emb, dir4)
-    assert(spark.read.parquet(s"$dir4/codes")
+    assert(indexRows(dir4)
       .orderBy("_vid", "_sub").collect().map(_.toString).toSeq
       == codes3, "append must encode exactly as a same-codebook build")
   }
 
-  test("plain pq lifecycle: compaction heals replayed appends back to " +
+  test("plain pq lifecycle: compaction heals overlapping appends back to " +
       "the exact pre-duplicate serve, retrain rebuilds bit-for-bit " +
-      "behind a whole-dir flip, and the native integral-cell encode " +
+      "in one commit, and the native integral-cell encode " +
       "matches the generic join face code-for-code") {
     val emb = Seq(
       (0L, Array(1.0f, 0.9f, 0.0f, 0.1f), 0),
@@ -161,7 +199,7 @@ class PipelineSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSeq
     def codeRows(d: String): Seq[String] =
-      spark.read.parquet(s"$d/codes")
+      indexRows(d)
         .select(col("_vid"), col("_sub").cast("int"),
           col("_cell").cast("long"))
         .collect().map(_.toString).sorted.toSeq
@@ -169,11 +207,15 @@ class PipelineSpec extends AnyFunSuite {
     Similarity.writePqIndex(emb, dir, dims = 4, m = 2)
     val before = serve(dir)
     val codesBefore = codeRows(dir)
-    // a crash-replayed append: the same batch commits twice —
+    // an overlapping batch: vectors 4 and 5 commit a second time —
     // duplicate (_vid, _sub) rows double those vectors' ADC sums
     Similarity.appendToPqIndex(emb.where(col("vec_id") >= 4), dir)
     assert(codeRows(dir).size == codesBefore.size + 4,
-      "replay must have duplicated code rows")
+      "the overlap must have duplicated code rows")
+    // replaying that committed append is a no-op
+    Similarity.appendToPqIndex(emb.where(col("vec_id") >= 4), dir)
+    assert(codeRows(dir).size == codesBefore.size + 4,
+      "a replayed append must add nothing")
     assert(serve(dir) != before,
       "duplicated code rows must shift the ADC scores — if they " +
         "don't, this spec guards nothing")
@@ -182,24 +224,24 @@ class PipelineSpec extends AnyFunSuite {
       "compaction must restore the exact rows")
     assert(serve(dir) == before,
       "healed serve must equal pre-duplicate")
-    // idempotent on a clean index; a missing live tree fails LOUDLY
-    // (absent codes is the mid-swap crash state — a silent no-op would
-    // report a 'successful' heal over a broken index)
+    // idempotent on a clean index; a missing index fails LOUDLY (a
+    // silent no-op would report a 'successful' compaction of a typo'd
+    // path)
     Similarity.compactPqCodes(spark, dir)
     assert(codeRows(dir) == codesBefore && serve(dir) == before,
       "compaction must be a no-op when clean")
     val eNoCodes = intercept[IllegalArgumentException] {
       Similarity.compactPqCodes(spark, s"$dir/definitely-missing")
     }
-    assert(eNoCodes.getMessage.contains("no codes tree"))
+    assert(eNoCodes.getMessage.contains("no index"))
     // retrain == a fresh writePqIndex over the same rows, bit for bit;
     // geometry (dims, m) carries over from the STORED codebook, and
-    // the trailing-slash dir pins the sibling-path normalization
+    // the trailing-slash dir pins the path normalization
     Similarity.retrainPqIndex(emb, dir + "/")
     val fresh = java.nio.file.Files.createTempDirectory("pqfresh")
       .toString
     Similarity.writePqIndex(emb, fresh, dims = 4, m = 2)
-    def cbRows(d: String) = spark.read.parquet(s"$d/codebook")
+    def cbRows(d: String) = Similarity.indexCodebook(spark, d)
       .collect().map(_.toString).sorted.toSeq
     assert(cbRows(dir) == cbRows(fresh),
       "retrain codebook diverged from fresh build")
@@ -219,7 +261,7 @@ class PipelineSpec extends AnyFunSuite {
     Similarity.writePqIndex(
       emb.withColumn("label", col("label").cast("string")), dirS,
       dims = 4, m = 2)
-    assert(spark.read.parquet(s"$dirS/codebook").schema("_cell")
+    assert(Similarity.indexCodebook(spark, dirS).schema("_cell")
       .dataType.typeName == "string",
       "string labels must persist a string-cell codebook (join face)")
     assert(codeRows(dirS) == codeRows(dir),
@@ -249,19 +291,11 @@ class PipelineSpec extends AnyFunSuite {
     val queries = Seq(
       0L -> Seq(1.0f, 0.9f, 0.0f, 0.1f),
       3L -> Seq(0.0f, 0.1f, 1.0f, 0.9f))
-    // the probe ranking, re-derived (unit centroids, dot, ties by id)
     val cents = Similarity.readIvfCentroids(spark, dir)
-    def probes(vec: Seq[Float], nprobe: Int): Seq[Int] = {
-      def d(a: Seq[Double], b: Seq[Double]) =
-        a.zip(b).map { case (x, y) => x * y }.sum
-      val q = vec.map(_.toDouble)
-      cents.zipWithIndex.map { case (c, ci) =>
-        val n = math.sqrt(d(c, c))
-        (ci, d(q, if (n == 0.0) c else c.map(_ / n)))
-      }.sortBy { case (ci, s) => (-s, ci) }.take(nprobe).map(_._1)
-    }
+    def probes(vec: Seq[Float], nprobe: Int): Seq[Int] =
+      probesOf(cents, vec, nprobe)
     // vector -> coarse cell, from the stored codes
-    val cellOf = spark.read.parquet(s"$dir/codes")
+    val cellOf = indexRows(dir)
       .select(col("_vid"), col("cell").cast("int")).distinct()
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     // RAW encode driver oracle (the residual test's discipline): every
@@ -271,7 +305,7 @@ class PipelineSpec extends AnyFunSuite {
     // self-consistency
     locally {
       def mu(x: Float): Long = math.floor(x.toDouble * 1000000.0).toLong
-      val cbRows = spark.read.parquet(s"$dir/codebook")
+      val cbRows = Similarity.indexCodebook(spark, dir)
         .select(col("_i").cast("int"), col("_cell").cast("long"),
           col("_sub").cast("int"), col("_cmu").cast("long"))
         .collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
@@ -279,7 +313,7 @@ class PipelineSpec extends AnyFunSuite {
       val bySub = cbRows.groupBy(_._3).map { case (s, rs) =>
         s -> rs.groupBy(_._2).toSeq.sortBy(_._1).map { case (cid, cs) =>
           cid -> cs.sortBy(_._1).map(_._4) } }
-      val stored = spark.read.parquet(s"$dir/codes")
+      val stored = indexRows(dir)
         .select(col("_vid"), col("_sub").cast("int"),
           col("_cell").cast("long"))
         .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2))
@@ -316,15 +350,16 @@ class PipelineSpec extends AnyFunSuite {
           .sortBy { case (_, vid, mu) => (-mu, vid) }.take(3)
       }.sortBy { case (q, vid, mu) => (q, -mu, vid) }
       assert(rows(served) == expected, s"nprobe=$nprobe")
-      // plan gate: ONE FileScan, of codes, with the probe set in
-      // PartitionFilters — unprobed cells never opened, raw
+      // plan gate: ONE FileScan, of codes, reading exactly the listed
+      // files of the probed cells — unprobed cells never opened, raw
       // embeddings never read
       val p = served.queryExecution.executedPlan.toString
       val scans = p.linesIterator.filter(_.contains("FileScan")).toSeq
-      assert(scans.length == 1 && scans.head.contains("codes"),
+      assert(scans.length == 1 && scans.head.contains("/cells/"),
         s"nprobe=$nprobe serve plan:\n$p")
-      assert("""PartitionFilters: \[[^\]]*cell""".r
-        .findFirstIn(p).isDefined, s"nprobe=$nprobe plan:\n$p")
+      assert(scanned(served) == cellFiles(dir,
+        queries.flatMap(q => probes(q._2, nprobe)).toSet),
+        s"nprobe=$nprobe plan:\n$p")
     }
     // rebuild is bit-reproducible (no RNG anywhere in the pipeline)
     Similarity.writeIvfPqIndex(emb, dir, kCells = kCells, dims = 4,
@@ -355,12 +390,12 @@ class PipelineSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("ivfpqr").toString
     Similarity.writeIvfPqIndex(emb, dir, kCells = 3, dims = 4, m = 2,
       iters = 3, residual = true, kSub = 3)
-    // stored control-plane tables
+    // the stored quantizer, codebook and codes
     val cents = Similarity.readIvfCentroids(spark, dir)
-    val cbRows = spark.read.parquet(s"$dir/codebook")
+    val cbRows = Similarity.indexCodebook(spark, dir)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
         r.getLong(3)))
-    val codes = spark.read.parquet(s"$dir/codes")
+    val codes = indexRows(dir)
       .select(col("_vid"), col("_sub"), col("_cell"),
         col("cell").cast("int"))
       .collect().map(r => (r.getLong(0), r.getInt(1)) ->
@@ -384,15 +419,8 @@ class PipelineSpec extends AnyFunSuite {
     // serve == driver-side exact integer oracle at every nprobe
     val queries = Seq(0L -> vecs(0L).toSeq, 1L -> vecs(1L).toSeq,
       900L -> Seq(0.9f, 0.9f, 0.1f, 0.0f))
-    def probes(vec: Seq[Float], nprobe: Int): Seq[Int] = {
-      def d(a: Seq[Double], b: Seq[Double]) =
-        a.zip(b).map { case (x, y) => x * y }.sum
-      val q = vec.map(_.toDouble)
-      cents.zipWithIndex.map { case (c, ci) =>
-        val n = math.sqrt(d(c, c))
-        (ci, d(q, if (n == 0.0) c else c.map(_ / n)))
-      }.sortBy { case (ci, sc) => (-sc, ci) }.take(nprobe).map(_._1)
-    }
+    def probes(vec: Seq[Float], nprobe: Int): Seq[Int] =
+      probesOf(cents, vec, nprobe)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .orderBy(col("query_id"), col("adc_mu2").desc, col("vec_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -419,9 +447,9 @@ class PipelineSpec extends AnyFunSuite {
       assert(rows(served) == expected, s"nprobe=$nprobe")
       val plan = served.queryExecution.executedPlan.toString
       val scans = plan.linesIterator.filter(_.contains("FileScan")).toSeq
-      assert(scans.length == 1 && scans.head.contains("codes"), plan)
-      assert("""PartitionFilters: \[[^\]]*cell""".r
-        .findFirstIn(plan).isDefined, plan)
+      assert(scans.length == 1 && scans.head.contains("/cells/"), plan)
+      assert(scanned(served) == cellFiles(dir,
+        queries.flatMap(q => probes(q._2, nprobe)).toSet), plan)
     }
     // same code budget, raw vs residual: residual reconstruction must
     // land closer on a clustered corpus (the IVFADC point)
@@ -429,12 +457,12 @@ class PipelineSpec extends AnyFunSuite {
       .toString
     Similarity.writeIvfPqIndex(emb, dirRaw, kCells = 3, dims = 4,
       m = 2, iters = 3) // raw: codebook = per-coarse-cell means
-    val rawCb = spark.read.parquet(s"$dirRaw/codebook")
+    val rawCb = Similarity.indexCodebook(spark, dirRaw)
       .select(col("_i").cast("int"), col("_cell").cast("long"),
         col("_cmu").cast("long"))
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2))
       .toMap
-    val rawCodes = spark.read.parquet(s"$dirRaw/codes")
+    val rawCodes = indexRows(dirRaw)
       .select(col("_vid"), col("_sub").cast("int"),
         col("_cell").cast("long"))
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2))
@@ -460,7 +488,7 @@ class PipelineSpec extends AnyFunSuite {
     // integer means)
     Similarity.writeIvfPqIndex(emb, dir, kCells = 3, dims = 4, m = 2,
       iters = 3, residual = true, kSub = 3)
-    val again = spark.read.parquet(s"$dir/codes")
+    val again = indexRows(dir)
       .select(col("_vid"), col("_sub"), col("_cell"))
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2))
       .toMap
@@ -486,31 +514,28 @@ class PipelineSpec extends AnyFunSuite {
         kCells = 2, dims = 4, m = 2, iters = 2, residual = residual,
         kSub = 2)
       Similarity.appendToIvfPqIndex(emb.where(col("vec_id") >= 4), dirA)
-      // rebuild face: the SAME stored tables (centroids + codebook +
-      // meta) in a fresh dir, every vector appended — encoding is a
-      // pure function of (stored tables, vector), so the code rows
-      // must be identical
-      val dirB = java.nio.file.Files
-        .createTempDirectory(s"ivfpqb$residual").toString
-      for (part <- Seq("centroids", "codebook", "meta"))
-        spark.read.parquet(s"$dirA/$part")
-          .coalesce(1).write.parquet(s"$dirB/$part")
+      // rebuild face: the SAME stored header (quantizer, codebook,
+      // residual flag) in a fresh index, every vector appended —
+      // encoding is a pure function of (stored header, vector), so the
+      // code rows must be identical
+      val dirB = emptyTwin(dirA, s"ivfpqb$residual")
       Similarity.appendToIvfPqIndex(emb, dirB)
-      def codeRows(d: String) = spark.read.parquet(s"$d/codes")
+      def codeRows(d: String) = indexRows(d)
         .select(col("_vid"), col("_sub").cast("int"),
           col("_cell").cast("long"), col("cell").cast("int"))
         .collect().map(_.toString).sorted.toSeq
       assert(codeRows(dirA) == codeRows(dirB),
         s"residual=$residual: append diverged from rebuild")
-      // the appended index still serves with partition pruning (k may
-      // exceed the one probed cell's population — that's the nprobe
-      // recall knob, not an error)
+      // the appended index still serves from the probed cell's listed
+      // files only (k may exceed the one probed cell's population —
+      // that's the nprobe recall knob, not an error)
+      val qv = Seq(1.0f, 0.9f, 0.0f, 0.1f)
       val served = Similarity.ivfPqTopKFromIndex(spark, dirA,
-        Seq(900L -> Seq(1.0f, 0.9f, 0.0f, 0.1f)), k = 3, nprobe = 1)
-      val plan = served.queryExecution.executedPlan.toString
+        Seq(900L -> qv), k = 3, nprobe = 1)
       assert(served.count() >= 2, s"residual=$residual")
-      assert("""PartitionFilters: \[[^\]]*cell""".r
-        .findFirstIn(plan).isDefined, s"residual=$residual:\n$plan")
+      assert(scanned(served) == cellFiles(dirA, probesOf(
+        Similarity.readIvfCentroids(spark, dirA), qv, 1).toSet),
+        s"residual=$residual")
       // wrong-dims vectors FAIL the append loudly (per-row guard) —
       // they must never silently encode as null/truncated codes
       val bad = Seq((99L, Array(1.0f, 2.0f))).toDF("vec_id", "embedding")
@@ -526,10 +551,9 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("ivf-pq lifecycle: codes compaction heals replayed appends " +
+  test("ivf-pq lifecycle: codes compaction heals overlapping appends " +
       "back to the exact pre-duplicate serve at every nprobe, and " +
-      "retrain rebuilds bit-for-bit behind a whole-dir flip — both " +
-      "encodings") {
+      "retrain rebuilds bit-for-bit in one commit — both encodings") {
     val emb = Seq(
       (0L, Array(1.0f, 0.9f, 0.0f, 0.1f)),
       (1L, Array(0.9f, 1.0f, 0.1f, 0.0f)),
@@ -551,7 +575,7 @@ class PipelineSpec extends AnyFunSuite {
           .collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
     def codeRows(d: String): Seq[String] =
-      spark.read.parquet(s"$d/codes")
+      indexRows(d)
         .select(col("_vid"), col("_sub").cast("int"),
           col("_cell").cast("long"), col("cell").cast("int"))
         .collect().map(_.toString).sorted.toSeq
@@ -562,11 +586,11 @@ class PipelineSpec extends AnyFunSuite {
         iters = 2, residual = residual, kSub = 2)
       val before = serveAll(dir)
       val codesBefore = codeRows(dir)
-      // a crash-replayed append: the same batch commits twice —
+      // an overlapping batch: vectors 4 to 7 commit a second time —
       // duplicate code rows double the duplicated vectors' ADC sums
       Similarity.appendToIvfPqIndex(emb.where(col("vec_id") >= 4), dir)
       assert(codeRows(dir).size == codesBefore.size + 8,
-        s"residual=$residual: replay must have duplicated code rows")
+        s"residual=$residual: the overlap must have duplicated code rows")
       Similarity.compactIvfPqCodes(spark, dir)
       assert(codeRows(dir) == codesBefore,
         s"residual=$residual: compaction must restore the exact rows")
@@ -576,35 +600,30 @@ class PipelineSpec extends AnyFunSuite {
       Similarity.compactIvfPqCodes(spark, dir)
       assert(codeRows(dir) == codesBefore && serveAll(dir) == before,
         s"residual=$residual: compaction must be a no-op when clean")
-      // a missing live tree fails LOUDLY — absent codes/vectors is the
-      // mid-swap crash state, and a silent no-op would report a
-      // 'successful' heal over a broken index
+      // a missing index fails LOUDLY — a silent no-op would report a
+      // 'successful' compaction of a typo'd path
       val eNoCodes = intercept[IllegalArgumentException] {
         Similarity.compactIvfPqCodes(spark, s"$dir/definitely-missing")
       }
-      assert(eNoCodes.getMessage.contains("no codes tree"))
+      assert(eNoCodes.getMessage.contains("no index"))
       val eNoVecs = intercept[IllegalArgumentException] {
         Similarity.compactIvfVectors(spark, s"$dir/definitely-missing")
       }
-      assert(eNoVecs.getMessage.contains("no vectors tree"))
+      assert(eNoVecs.getMessage.contains("no index"))
       // retrain (new kCells) == a fresh writeIvfPqIndex over the same
-      // rows, every subtree bit-for-bit; encoding params carry over
+      // rows: the whole header (quantizer, codebook, residual flag,
+      // schema) and the codes bit-for-bit; encoding params carry over
       // from the stored index, never from the caller. The dir rides
-      // with a TRAILING SLASH: the temp siblings must normalize to
-      // true siblings, not nest inside the index (where the root
-      // rename would carry them along and every retrain would fail)
+      // with a TRAILING SLASH, which the paths must normalize
       Similarity.retrainIvfPqIndex(emb, dir + "/", kCells = 3,
         iters = 2)
       val fresh = java.nio.file.Files
         .createTempDirectory(s"ivfpqf$residual").toString
       Similarity.writeIvfPqIndex(emb, fresh, kCells = 3, dims = 4,
         m = 2, iters = 2, residual = residual, kSub = 2)
-      for (part <- Seq("centroids", "codebook", "meta")) {
-        def all(d: String) = spark.read.parquet(s"$d/$part")
-          .collect().map(_.toString).sorted.toSeq
-        assert(all(dir) == all(fresh),
-          s"residual=$residual: retrain $part diverged from fresh build")
-      }
+      assert(indexLog(dir).latest.get.header ==
+        indexLog(fresh).latest.get.header,
+        s"residual=$residual: retrain header diverged from fresh build")
       assert(codeRows(dir) == codeRows(fresh),
         s"residual=$residual: retrain codes diverged from fresh build")
       assert(serveAll(dir) == serveAll(fresh),
@@ -1072,11 +1091,11 @@ class PipelineSpec extends AnyFunSuite {
     Similarity.writeIvfIndex(emb, dir, kCells = 2, iters = 3)
     val q = Seq(1f, 0.05f, 0f, 0f)
     val top = Similarity.ivfTopKFromIndex(spark, dir, q, k = 5, nprobe = 1)
-    // the unprobed cell must disappear BEFORE IO: the cell predicate
-    // sits in PartitionFilters (directory pruning), not a row filter
-    val plan = top.queryExecution.executedPlan.toString
-    assert("""PartitionFilters: \[[^\]]*cell""".r
-      .findFirstIn(plan).isDefined, plan)
+    // the unprobed cell must disappear BEFORE IO: the scan reads
+    // exactly the probed cell's listed files
+    val probed = probesOf(Similarity.readIvfCentroids(spark, dir), q, 1)
+    assert(scanned(top) == cellFiles(dir, probed.toSet))
+    assert(cellFiles(dir, Set(0, 1)).size > scanned(top).size)
     val got = top.collect()
     assert(got.length == 5)
     assert(got.forall(_.getLong(0) % 2 == 0L),
@@ -1119,16 +1138,19 @@ class PipelineSpec extends AnyFunSuite {
         == serve(dir2, np).collect().map(_.toString).toSeq,
         s"append diverged from rebuild at nprobe=$np")
     }
-    // partition-level pruning survives the append
-    val plan = serve(dir, 1).queryExecution.executedPlan.toString
-    assert("""PartitionFilters: \[[^\]]*cell""".r
-      .findFirstIn(plan).isDefined, plan)
-    // a replayed (duplicate) append leaves double rows; compaction
-    // dedups on vec_id and serving returns to the rebuilt answers
+    // cell pruning survives the append: the scan reads exactly the
+    // probed cell's listed files, now two appends' worth
+    assert(scanned(serve(dir, 1)) == cellFiles(dir,
+      probesOf(Similarity.readIvfCentroids(spark, dir), q, 1).toSet))
+    // a replayed append is a no-op; an overlapping one leaves double
+    // rows, which compaction dedups on vec_id — serving returns to the
+    // rebuilt answers
     Similarity.appendToIvfIndex(rest, dir)
-    assert(spark.read.parquet(s"$dir/vectors").count() == 30)
+    assert(indexRows(dir).count() == 20)
+    Similarity.appendToIvfIndex(emb.where(col("vec_id") % 2 === 0), dir)
+    assert(indexRows(dir).count() == 30)
     Similarity.compactIvfVectors(spark, dir)
-    assert(spark.read.parquet(s"$dir/vectors").count() == 20)
+    assert(indexRows(dir).count() == 20)
     for (np <- Seq(1, 2)) {
       assert(serve(dir, np).collect().map(_.toString).toSeq
         == serve(dir2, np).collect().map(_.toString).toSeq,
@@ -1146,12 +1168,13 @@ class PipelineSpec extends AnyFunSuite {
     val rest = emb.where(col("vec_id") >= 10)
     val dir = java.nio.file.Files.createTempDirectory("ivfret").toString
     Similarity.writeIvfIndex(first, dir, kCells = 2, iters = 3)
-    // two appends, the second a replay — the retrain must dedup
-    // BEFORE training or the doubled rows bias the centroid means
+    // two appends, the second overlapping the first — the retrain must
+    // dedup BEFORE training or the doubled rows bias the centroid means
     Similarity.appendToIvfIndex(rest, dir)
-    Similarity.appendToIvfIndex(rest, dir)
+    Similarity.appendToIvfIndex(emb.where(col("vec_id") % 2 === 0), dir)
+    assert(indexRows(dir).count() == 30)
     Similarity.retrainIvfIndex(spark, dir, kCells = 2, iters = 3)
-    assert(spark.read.parquet(s"$dir/vectors").count() == 20)
+    assert(indexRows(dir).count() == 20)
     // no-RNG contract: retrain-in-place ≡ a fresh build over the
     // concatenated rows — centroids AND serving, bit for bit
     val dir3 = java.nio.file.Files.createTempDirectory("ivfret3")
@@ -1166,10 +1189,10 @@ class PipelineSpec extends AnyFunSuite {
       assert(a.collect().map(_.toString).toSeq
         == b.collect().map(_.toString).toSeq,
         s"retrain diverged from fresh build at nprobe=$np")
-      // directory pruning survives the whole-dir flip
+      // cell pruning survives the retrain
       if (np == 1)
-        assert("""PartitionFilters: \[[^\]]*cell""".r.findFirstIn(
-          a.queryExecution.executedPlan.toString).isDefined)
+        assert(scanned(a) == cellFiles(dir,
+          probesOf(Similarity.readIvfCentroids(spark, dir), q, 1).toSet))
     }
     // a missing index fails loudly, and the live dir is untouched
     val e = intercept[IllegalArgumentException] {

@@ -13,10 +13,10 @@ import graft.pipeline.Similarity
   *      same rows with STRING labels ride the legacy join + two
   *      aggregations (the generic face) — value-identical codes,
   *      different plans, read the walls;
-  *   2. the lifecycle verbs at scale: a crash-replayed append
+  *   2. the lifecycle verbs at scale: an overlapping append
   *      (duplicate (_vid, _sub) rows), `compactPqCodes` healing the
-  *      serve back to the exact pre-replay rows, and `retrainPqIndex`
-  *      ≈ a fresh build behind the whole-dir flip.
+  *      serve back to the exact pre-overlap rows, and `retrainPqIndex`
+  *      ≈ a fresh build in one commit.
   */
 object PqProbe {
   def main(args: Array[String]): Unit = {
@@ -45,7 +45,7 @@ object PqProbe {
       r
     }
     def codes(d: String): Seq[String] =
-      spark.read.parquet(s"$d/codes")
+      Similarity.indexRows(spark, d).get
         .select(col("_vid"), col("_sub").cast("int"),
           col("_cell").cast("long"))
         .collect().map(_.toString).sorted.toSeq
@@ -72,16 +72,16 @@ object PqProbe {
         .toSeq.sorted
     val before = serve()
     val codesBefore = codes(intDir)
-    timed("replayed append (half the corpus, already indexed)") {
+    timed("overlapping append (half the corpus, already indexed)") {
       Similarity.appendToPqIndex(emb.where(col("vec_id") % 2 === 0),
         intDir)
     }
-    require(codes(intDir).size > codesBefore.size, "replay wrote rows")
-    require(serve() != before, "replay must shift ADC scores")
+    require(codes(intDir).size > codesBefore.size, "overlap wrote rows")
+    require(serve() != before, "overlap must shift ADC scores")
     timed("compactPqCodes")(Similarity.compactPqCodes(spark, intDir))
     require(codes(intDir) == codesBefore && serve() == before,
-      "compaction must restore the exact pre-replay rows and serve")
-    println("   serve RESTORED to pre-replay")
+      "compaction must restore the exact pre-overlap rows and serve")
+    println("   serve RESTORED to pre-overlap")
     timed("retrainPqIndex")(Similarity.retrainPqIndex(emb, intDir))
     require(serve() == before, "retrain over the same rows ≡ rebuild")
     println("   retrain serve ≡ fresh build")

@@ -332,7 +332,7 @@ class SearchSpec extends AnyFunSuite {
     val scans = plan.linesIterator.filter(_.contains("FileScan")).toSeq
     assert(scans.nonEmpty, plan)
     assert(scans.forall(l => l.contains("/postings")
-      || l.contains("/stats") || l.contains("/vectors")), plan)
+      || l.contains("/stats") || l.contains("/cells/")), plan)
   }
 
   test("stored-index serve never reads corpus text: the only " +
