@@ -11,7 +11,7 @@ import graft.plan.Planner
 import graft.ql.{Parser, Query, TruncateStmt}
 import graft.stats.StatTiers
 import graft.streaming.Lifecycle
-import graft.util.{ControlCache, JobDesc}
+import graft.util.JobDesc
 
 /** The maintained stats + control tables of an ingested layout
   * (`Ingest.startWithStats`) — dp3's inner-node statistics and rootmap
@@ -138,55 +138,39 @@ final class Dp3Service(underlying: MessageCatalog,
       // the tier vouches for a scan only if EVERY unmasked ingest
       // version of the scanned tables that wrote data also wrote
       // partials into THIS stats table. That breaks in reachable ways
-      // — fieldStats enabled on a store with pre-existing versions, or
-      // an /import that appends a version without per-field partials —
+      // — fieldStats enabled on a store with earlier versions, or an
+      // /import that appends a version without per-field partials —
       // and a tier missing a version would prune buckets containing
       // that version's rows (the reference keeps chunks with missing
-      // stats; so must we). The gaps are cached per on-disk state of
-      // the two tables, so the check is a driver-side lookup: every
-      // gap of a scanned table must be hidden by its truncation
-      // watermark. Unprovable (no version column, unreadable table)
-      // => false => pruning off, results exact.
-      coverage = (s, producers, topic) =>
-        coverageGaps(s, st).exists { gaps =>
-          val scanned = producers.toSet
-          gaps.forall { case (p, t, v) =>
-            t != topic || !scanned(p) ||
-              truncatedVersion.get((p, t)).exists(v <= _)
-          }
-        })
+      // stats; so must we). Every gap of a scanned table must be
+      // hidden by its truncation watermark.
+      coverage = (s, producers, topic) => {
+        val scanned = producers.toSet
+        coverageGaps(s, st).forall { case (p, t, v) =>
+          t != topic || !scanned(p) ||
+            truncatedVersion.get((p, t)).exists(v <= _)
+        }
+      })
   }
 
-  /** The unmasked coverage gaps of a store: the control table's
-    * (producer, topic, ingest_version) triples with no partials in the
-    * table backing the statfilter; None when either table lacks those
-    * columns (coverage unprovable). Fingerprint-cached on both tables'
-    * directories ([[graft.util.ControlCache]]) — every version append,
-    * scrub and import lands fresh part files in both — so a warm
-    * service answers coverage without a Spark job. */
+  /** The coverage gaps of a store: the (producer, topic, ingest_version)
+    * triples of the versions the manifest header records as writing
+    * data but no partials to the table backing the statfilter. A store
+    * with no gap version answers from the header alone; otherwise the
+    * gap versions' tables come from their base-tier partials, once per
+    * committed manifest. */
   private def coverageGaps(spark: SparkSession, st: IngestStore)
-      : Option[Seq[(String, String, Long)]] = {
+      : Seq[(String, String, Long)] = {
     val cat = st.catalog
-    val dirs =
-      Seq(cat.controlDir, cat.fieldStatsDir.getOrElse(cat.statsDir)).map { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration) -> p
-      }
-    ControlCache.cachedAll("coverage-gaps", dirs) {
+    val gaps = graft.streaming.Ingest.gaps(cat.manifest(spark),
+      if (cat.fieldStatsDir.isDefined) "fstats" else "stats")
+    if (gaps.isEmpty) Nil
+    else cat.cached(spark, "coverage-gaps") {
       JobDesc(spark.sparkContext, "plan:coverage") {
-        val ctl = cat.control(spark)
-        val parts = cat.fieldStats.fold(cat.stats(spark))(_(spark))
-        val key = Seq("producer", "topic", "ingest_version")
-        if (!key.forall(ctl.columns.contains)
-            || !key.forall(parts.columns.contains)) None
-        else {
-          import org.apache.spark.sql.functions.broadcast
-          Some(ctl.select(key.map(col): _*).distinct()
-            .join(broadcast(parts.select(key.map(col): _*).distinct()),
-              key, "left_anti")
-            .collect().toSeq.map(r => (r.getString(0), r.getString(1),
-              r.getAs[Number](2).longValue)))
-        }
+        cat.stats(spark).where(col("ingest_version").isin(gaps: _*))
+          .select("producer", "topic", "ingest_version").distinct()
+          .collect().toSeq.map(r => (r.getString(0), r.getString(1),
+            r.getLong(2)))
       }
     }
   }

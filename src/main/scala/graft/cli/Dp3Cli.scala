@@ -33,8 +33,8 @@ import java.nio.file.{Files, Paths}
   * `server` verb lives Spark-side (construct a SparkSession +
   * `Dp3Service` + `Dp3Http` and block) — it needs a JVM with Spark on
   * the classpath, not an HTTP client, so it is deliberately not routed
-  * through this binary's verbs. (The library-level streaming tail is
-  * `graft.streaming.Ingest.tail`.)
+  * through this binary's verbs. (The library-level face of the same
+  * poll is `graft.api.Dp3Service.exportSince`.)
   */
 /** Contract a CLI plugin jar implements (the JVM mirror of the
   * reference's Go-plugin `PluginCmd` symbol, cli/cmd/root.go:50-80):

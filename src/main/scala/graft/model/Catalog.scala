@@ -260,42 +260,65 @@ final class TopicMapCatalog(topics: Map[String, DataFrame])
       .distinct().collect().map(_.getString(0)).sorted.toSeq
 }
 
-/** Catalog over a directory produced by `Ingest.startWithStats`:
-  * day-partitioned data plus the append-only stats and control tables.
-  * Producer discovery reads the kilobyte-scale control table — the
-  * reference's rootmap lookup (server/rootmap/sqlrootmap.go:427-461) —
-  * so `from *` planning touches no event data at any scale. */
+/** Catalog over a store written by `Ingest.startWithStats` /
+  * `Ingest.importMcap`: one manifest at `<dataDir>/_manifest` lists the
+  * (topic, day)-partitioned data and the stats, control and per-field
+  * stats trees in their own directories (the layout is documented on
+  * [[graft.streaming.Ingest]]). Every face resolves the newest manifest
+  * once through [[graft.util.ControlCache]] and reads only the files it
+  * lists, with the header's schema — no schema-inference job, no
+  * listing, and never a storage mutation — so a read that overlaps a
+  * commit sees the store before or after it. A topic scan reads only
+  * that topic's files. Producer discovery reads the kilobyte-scale
+  * control tree — the reference's rootmap lookup
+  * (server/rootmap/sqlrootmap.go:427-461) — so `from *` planning
+  * touches no event data at any scale. */
 final class IngestedCatalog(val dataDir: String, val statsDir: String,
     val controlDir: String, val fieldStatsDir: Option[String] = None)
     extends MessageCatalog with Serializable {
+  import graft.streaming.Ingest
 
-  def messages(spark: SparkSession): DataFrame =
-    spark.read.parquet(dataDir)
+  private def dirs = Map("data" -> dataDir, "stats" -> statsDir,
+    "control" -> controlDir) ++ fieldStatsDir.map("fstats" -> _)
 
-  def stats(spark: SparkSession): DataFrame =
-    spark.read.parquet(statsDir)
+  /** The newest committed manifest, or a loud failure. */
+  private[graft] def manifest(spark: SparkSession): graft.util.Manifest =
+    Ingest.committed(spark, dirs, "read")
+
+  private def tree(spark: SparkSession, name: String,
+      keep: graft.util.DataFile => Boolean = _ => true): DataFrame =
+    Ingest.read(spark, dirs, manifest(spark), name, keep)
+
+  /** `load`, computed once per committed manifest
+    * ([[graft.util.ControlCache]] on the manifest directory). */
+  private[graft] def cached[T](spark: SparkSession, what: String)
+      (load: => T): T = {
+    val dir = new org.apache.hadoop.fs.Path(dataDir, "_manifest")
+    graft.util.ControlCache.cachedAll(what, Seq(
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration) -> dir))(load)
+  }
+
+  def messages(spark: SparkSession): DataFrame = tree(spark, "data")
+
+  def stats(spark: SparkSession): DataFrame = tree(spark, "stats")
 
   /** Per-field stat partials (`Ingest.startWithStats` with
     * `fieldStats`) — the statfilter's pruning source. */
   def fieldStats: Option[SparkSession => DataFrame] =
-    fieldStatsDir.map(d => (s: SparkSession) => s.read.parquet(d))
+    fieldStatsDir.map(_ => (s: SparkSession) => tree(s, "fstats"))
 
-  def control(spark: SparkSession): DataFrame =
-    spark.read.parquet(controlDir)
+  def control(spark: SparkSession): DataFrame = tree(spark, "control")
 
   override def scanTopic(spark: SparkSession, topic: String): DataFrame =
-    messages(spark).where(col("topic") === topic)
+    tree(spark, "data", Ingest.topicOf(_) == topic)
+      .where(col("topic") === topic)
 
-  /** The control table is flat and append-only — every version and
-    * every scrub lands fresh part files — so its (producer, topic)
-    * pairs are fingerprint-cached ([[graft.util.ControlCache]]): a
-    * repeated `from *` plans without a Spark job. */
+  /** The control tree's (producer, topic) pairs, computed once per
+    * committed manifest: a repeated `from *` plans without a Spark
+    * job. */
   override def producers(spark: SparkSession,
       topics: Seq[String]): Seq[String] = {
-    val dir = new org.apache.hadoop.fs.Path(controlDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pairs = graft.util.ControlCache.cachedAll("producer-topic",
-        Seq(fs -> dir)) {
+    val pairs = cached(spark, "producer-topic") {
       control(spark).select("producer", "topic").distinct()
         .collect().map(r => (r.getString(0), r.getString(1))).toSeq
     }

@@ -453,11 +453,7 @@ object Similarity {
     * schema-inference job and no listing beyond the files named. */
   private def rowsOf(spark: SparkSession, dir: String, idx: VecIndex,
       files: Seq[DataFile]): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(idx.schema.filter(_.name != "cell") :+ idx.schema("cell")))
-    else spark.read.schema(idx.schema).option("basePath", s"$dir/$Cells")
-      .parquet(files.map(f => s"$dir/${f.path}"): _*).drop("v")
+    store(spark, dir).read(spark, Cells, idx.schema, files)
 
   /** The listed rows of the cells in `cells`. */
   private def cellRows(spark: SparkSession, dir: String, m: Manifest,
@@ -582,7 +578,9 @@ object Similarity {
       vecCol: String)(cents: => Seq[Seq[Double]]): Unit =
     rebuild(emb.sparkSession, dir, verb, Set.empty) { (_, commit) =>
       val c = cents
-      val rows = assignCells(emb, c, vecCol)
+      // clustered by cell, as the fold writes: one file per cell, not
+      // one per (input task, cell)
+      val rows = assignCells(emb, c, vecCol).repartition(col("cell"))
       commit(VecIndex("ivf", residual = false, rows.schema, c, None, Nil),
         rows)
     }

@@ -94,8 +94,7 @@ object CorpusDedup {
     * schema-inference job, and no listing beyond the files named. */
   private def rows(spark: SparkSession, dir: String, m: Manifest,
       files: Seq[DataFile]): DataFrame =
-    spark.read.schema(m.schema(Rows)).option("basePath", s"$dir/$Rows")
-      .parquet(files.map(f => s"$dir/${f.path}"): _*).drop("v")
+    sidecar(spark, dir).read(spark, Rows, m.schema(Rows), files)
 
   /** The append faces' read: the sidecar's rows of versions strictly
     * older than `version` from the newest manifest — None when there

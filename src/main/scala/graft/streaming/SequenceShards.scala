@@ -288,7 +288,7 @@ object SequenceShards {
     val folded = JobDesc(spark.sparkContext, "shards:compactDocs:docs") {
       log.write(prev.version + 1, "docs",
         listed(spark, rootDir, "docs", prev.schema("docs"), fold)
-          .drop("v").withColumn("version", lit(keepV))
+          .withColumn("version", lit(keepV))
           .repartitionByRange(nFiles, col("lane"), col("pk"))
           .sortWithinPartitions(col("lane"), col("pk")))
     }
@@ -454,14 +454,13 @@ object SequenceShards {
     * listing beyond the files named. */
   private def listed(spark: SparkSession, rootDir: String, tree: String,
       schema: StructType, files: Seq[DataFile]): DataFrame =
-    spark.read.schema(schema).option("basePath", s"$rootDir/$tree")
-      .parquet(files.map(f => s"$rootDir/${f.path}"): _*)
+    manifestLog(spark, rootDir).read(spark, tree, schema, files)
 
   /** Shard files as the writeSequenceShards rows plus `pack_bucket`. */
   private def shards(spark: SparkSession, rootDir: String, m: Manifest,
       files: Seq[DataFile]): DataFrame =
     listed(spark, rootDir, "shards", m.schema("shards"), files)
-      .drop("seq_seg", "v")
+      .drop("seq_seg")
 
   /** Store summary — ONE row per live lane: `(lane, n_segments,
     * n_files, bytes, n_sequences, seq_max)`. The nBuckets sizing

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -14,11 +14,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
 final case class DataFile(path: String, bytes: Long) {
   def tree: String = path.takeWhile(_ != '/')
 
-  /** The value of partition `key` in this file's path. */
-  def part(key: String): Long = path.split('/')
+  /** The value of partition `key` in this file's path, as written
+    * (escaped) in the directory name. */
+  def value(key: String): String = path.split('/')
     .collectFirst { case s if s.startsWith(s"$key=") =>
-      s.substring(key.length + 1).toLong }
+      s.substring(key.length + 1) }
     .getOrElse(throw new IllegalStateException(s"$path: no $key= directory"))
+
+  /** The value of the long partition `key` in this file's path. */
+  def part(key: String): Long = value(key).toLong
 }
 
 /** A committed manifest: version, the store's own header lines
@@ -36,6 +40,11 @@ final case class Manifest(version: Long, header: Seq[Seq[String]],
     DataType.fromJson(line(tag).head).asInstanceOf[StructType]
 
   def filesOf(tree: String): Seq[DataFile] = files.filter(_.tree == tree)
+
+  /** The directory the header freezes for each tree given one (`dir`
+    * lines): relative to the store root, or qualified. */
+  def dirs: Map[String, String] =
+    header.collect { case Seq("dir", t, d) => t -> d }.toMap
 }
 
 /** The versioned-manifest commit protocol of the store at `root`
@@ -45,7 +54,13 @@ final case class Manifest(version: Long, header: Seq[Seq[String]],
   * manifest lists. Layout: `_manifest/<v>` (the newest is live) and,
   * per data tree, `<tree>/<k1>=../<kn>=../v=<v>/part-*.parquet` — the
   * tree's partition directories, then innermost the version that wrote
-  * the files. `trees` maps each tree to its partition keys.
+  * the files. `trees` maps each tree to its partition keys. A tree may
+  * live in a directory of its own (`dirs`; a file line still names it
+  * `<tree>/<path under that directory>`): the first commit freezes its
+  * directory in the header (relative to the root when it is the root or
+  * a sibling of it, else qualified), and a log opened later with a
+  * different directory for it fails loudly. A tree the header does not
+  * name yet joins at the next commit.
   *
   * A verb [[open]]s (resolve the newest manifest `v`, finish a crashed
   * predecessor's clean, drop the uncommitted `v=<v+1>` directories),
@@ -58,21 +73,49 @@ final case class Manifest(version: Long, header: Seq[Seq[String]],
   * fails loudly at the create. The crash points are [[Maint.step]]s, so
   * MaintProtocolSpec's crash matrix enumerates them. */
 final class ManifestLog(root: Path, conf: Configuration,
-    trees: Map[String, Seq[String]]) {
+    trees: Map[String, Seq[String]], dirs: Map[String, Path] = Map.empty) {
   private val fs = root.getFileSystem(conf)
   private val dir = new Path(root, "_manifest")
   private def at(v: Long) = new Path(dir, v.toString)
   private def staged(v: Long) = new Path(dir, s".$v.staged")
+  private val frozen = dirs.map { case (t, d) => t -> named(d) }
 
-  /** Version `v`'s write directories in `tree`, relative to the root:
+  /** How the header names directory `d`: relative to the store root
+    * when it is the root or a sibling of it (so a moved or copied store
+    * keeps working), else qualified. */
+  private def named(d: Path): String = {
+    val (q, r) = (fs.makeQualified(d), fs.makeQualified(root))
+    if (q == r) "."
+    else if (q.getParent == r.getParent) s"../${q.getName}"
+    else q.toString
+  }
+
+  private def dirOf(tree: String): Path =
+    dirs.getOrElse(tree, new Path(root, tree))
+
+  /** A path relative to the store (`<tree>/<path under its dir>`). */
+  private def pathOf(rel: String): Path = rel.split("/", 2) match {
+    case Array(t) => dirOf(t)
+    case Array(t, rest) => new Path(dirOf(t), rest)
+  }
+
+  /** `m`, after checking the tree directories it froze against this
+    * log's. */
+  private def checked(m: Manifest): Manifest = {
+    for ((t, d) <- frozen; was <- m.dirs.get(t))
+      require(was == d, s"$root: tree $t lives in $was, not $d")
+    m
+  }
+
+  /** Version `v`'s write directories in `tree`, relative to the store:
     * one listing per partition directory. */
   private def writeDirs(tree: String, v: Long): Seq[String] =
-    if (!fs.exists(new Path(root, tree))) Nil
+    if (!fs.exists(dirOf(tree))) Nil
     else trees(tree).foldLeft(Seq(tree)) { (ds, k) =>
-      ds.flatMap(d => fs.listStatus(new Path(root, d)).toSeq
+      ds.flatMap(d => fs.listStatus(pathOf(d)).toSeq
         .map(_.getPath.getName).filter(_.startsWith(s"$k="))
         .map(n => s"$d/$n"))
-    }.map(d => s"$d/v=$v").filter(d => fs.exists(new Path(root, d)))
+    }.map(d => s"$d/v=$v").filter(d => fs.exists(pathOf(d)))
 
   private def versions: Seq[Long] =
     if (!fs.exists(dir)) Nil
@@ -94,7 +137,7 @@ final class ManifestLog(root: Path, conf: Configuration,
     * the manifest directory's fingerprint ([[ControlCache]]), so a warm
     * read costs one listing and no file read. */
   def latest: Option[Manifest] =
-    ControlCache.cached(fs, dir)(versions.lastOption.map(read))
+    ControlCache.cached(fs, dir)(versions.lastOption.map(read)).map(checked)
 
   /** A verb's entry: the newest manifest, after finishing what a
     * crashed predecessor left. */
@@ -104,7 +147,7 @@ final class ManifestLog(root: Path, conf: Configuration,
     for (m <- cur; old <- versions if old < v) supersede(verb, read(old), m)
     trees.keys.foreach { t =>
       drop(writeDirs(t, v + 1), cur.toSeq.flatMap(_.files))
-      fs.delete(new Path(root, s"$t/_temporary"), true)
+      fs.delete(new Path(dirOf(t), "_temporary"), true)
     }
     fs.delete(staged(v + 1), false)
     Maint.step(verb, "opened")
@@ -116,9 +159,12 @@ final class ManifestLog(root: Path, conf: Configuration,
   def commit(verb: String, prev: Option[Manifest],
       header: Seq[Seq[String]], files: Seq[DataFile]): Unit = {
     Maint.step(verb, "written")
-    val next = Manifest(prev.fold(0L)(_.version) + 1, header, files)
+    val dirLines = (header.collect { case Seq("dir", t, d) => t -> d }
+      .toMap ++ frozen).toSeq.sorted.map { case (t, d) => Seq("dir", t, d) }
+    val next = Manifest(prev.fold(0L)(_.version) + 1,
+      header.filterNot(_.head == "dir") ++ dirLines, files)
     val out = fs.create(staged(next.version), true)
-    try out.write((header ++ files.map(f =>
+    try out.write((next.header ++ files.map(f =>
         Seq("file", f.bytes.toString, f.path))).map(_.mkString("\t") + "\n")
       .mkString.getBytes(UTF_8))
     finally out.close()
@@ -146,13 +192,13 @@ final class ManifestLog(root: Path, conf: Configuration,
   /** Delete each of `paths` at the coarsest directory below its tree
     * that holds no `live` file. */
   private def drop(paths: Seq[String], live: Seq[DataFile]): Unit = {
-    def dirs(p: String) = {
+    def prefixes(p: String) = {
       val parts = p.split('/')
       (2 to parts.length).map(parts.take(_).mkString("/"))
     }
-    val liveDirs = live.flatMap(f => dirs(f.path)).toSet
-    paths.map(p => dirs(p).find(!liveDirs(_)).getOrElse(p)).distinct
-      .foreach(p => fs.delete(new Path(root, p), true))
+    val liveDirs = live.flatMap(f => prefixes(f.path)).toSet
+    paths.map(p => prefixes(p).find(!liveDirs(_)).getOrElse(p)).distinct
+      .foreach(p => fs.delete(pathOf(p), true))
   }
 
   /** Write `rows` (carrying `tree`'s partition columns) as version `v`'s
@@ -160,9 +206,10 @@ final class ManifestLog(root: Path, conf: Configuration,
     * tree and version. */
   def write(v: Long, tree: String, rows: DataFrame): Seq[DataFile] = {
     rows.withColumn("v", lit(v)).write.mode("append")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .partitionBy(trees(tree) :+ "v": _*)
-      .parquet(new Path(root, tree).toString)
-    writeDirs(tree, v).flatMap(d => fs.listStatus(new Path(root, d)).toSeq
+      .parquet(dirOf(tree).toString)
+    writeDirs(tree, v).flatMap(d => fs.listStatus(pathOf(d)).toSeq
       .filter { s =>
         val n = s.getPath.getName
         n.endsWith(".parquet") && !n.startsWith(".")
@@ -170,4 +217,19 @@ final class ManifestLog(root: Path, conf: Configuration,
       .map(s => DataFile(s"$d/${s.getPath.getName}", s.getLen)))
       .sortBy(_.path)
   }
+
+  /** `files` of `tree` read with `schema` under the tree's directory as
+    * basePath, so its partition columns survive (typed by `schema` where
+    * it names them, last as Spark orders them) and `v` is dropped: no
+    * schema-inference job, and no listing beyond the files named. */
+  def read(spark: SparkSession, tree: String, schema: StructType,
+      files: Seq[DataFile]): DataFrame =
+    if (files.isEmpty) {
+      val keys = trees(tree)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        StructType(schema.filterNot(f => keys.contains(f.name)) ++
+          keys.flatMap(k => schema.find(_.name == k))))
+    } else spark.read.schema(schema)
+      .option("basePath", dirOf(tree).toString)
+      .parquet(files.map(f => pathOf(f.path).toString): _*).drop("v")
 }

@@ -101,7 +101,8 @@ class Dp3CliSpec extends AnyFunSuite {
       cli("import", s"$tmp/in.mcap", "--producer", "cli-dev")
     assert(ci == 0, errI)
     assert(outI.trim == """{"version":1}""")
-    assert(spark.read.parquet(s"$tmp/data").count() == 3)
+    assert(new graft.model.IngestedCatalog(s"$tmp/data", s"$tmp/stats",
+      s"$tmp/control").messages(spark).count() == 3)
 
     // export a topic from the main catalog to a file; bytes parse as MCAP
     val outFile = s"$tmp/out.mcap"

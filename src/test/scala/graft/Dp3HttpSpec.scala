@@ -440,7 +440,7 @@ class Dp3HttpSpec extends AnyFunSuite {
         "/databases/default/producers/streamer/import",
         "not an mcap".getBytes)
       assert(bad.statusCode() == 400, bad.body())
-      assert(spark.read.parquet(s"$tmp/data").count() == 4)
+      assert(icat.messages(spark).count() == 4)
       // no spool files left behind
       val spool = java.nio.file.Paths.get(s"$tmp/import-spool")
       assert(!Files.exists(spool)

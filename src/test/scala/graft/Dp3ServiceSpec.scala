@@ -132,27 +132,19 @@ class Dp3ServiceSpec extends AnyFunSuite {
       .toDF("producer", "topic", "time", "seq", "value")
     val v2 = Seq(("p0", "click", 70L * 1000000000L, 3L, 4.0))
       .toDF("producer", "topic", "time", "seq", "value")
-    def ver(df: org.apache.spark.sql.DataFrame, v: Long) =
-      df.withColumn("ingest_version", lit(v))
-    ver(v1, 1).union(ver(v2, 2)).write.parquet(s"$base/data")
-    StatTiers.base(v1, StatTiers.BaseWidthNs)
-      .withColumn("ingest_version", lit(1L))
-      .unionByName(StatTiers.base(v2, StatTiers.BaseWidthNs)
-        .withColumn("ingest_version", lit(2L)))
-      .write.parquet(s"$base/stats")
-    Seq(("p0", "click", 1L, 1000L), ("p0", "click", 2L, 2000L))
-      .toDF("producer", "topic", "ingest_version", "ingest_time_ns")
-      .write.parquet(s"$base/control")
-
-    val cat = new graft.model.IngestedCatalog(
-      s"$base/data", s"$base/stats", s"$base/control")
+    TestSpark.ingest(base, 1L, v1)
+    Thread.sleep(5)
+    val between = System.currentTimeMillis() * 1000000L
+    Thread.sleep(5)
+    TestSpark.ingest(base, 2L, v2)
+    val cat = TestSpark.ingestedCatalog(base)
     val svc = new Dp3Service(cat, s => cat.messages(s),
       Some(graft.api.IngestStore(cat)))
 
-    // timestamp 1500 resolves to ingest version 1 via the control
-    // table (reference: sqlrootmap.go:372-404) — batch 1 disappears
-    // from queries AND statistics, batch 2 survives
-    svc.truncate(spark, "truncate p0 click 1500;")
+    // a timestamp between the two ingests resolves to ingest version 1
+    // via the control table (reference: sqlrootmap.go:372-404) — batch
+    // 1 disappears from queries AND statistics, batch 2 survives
+    svc.truncate(spark, s"truncate p0 click $between;")
     assert(svc.query(spark, "from p0 click;").count() == 1)
     val bins = svc.statRange(spark, 3600L * 1000000000L)
     assert(bins.agg(sum("msg_count")).head().getLong(0) == 1L)
@@ -174,16 +166,8 @@ class Dp3ServiceSpec extends AnyFunSuite {
       ("p0", "click", 70L * 1000000000L, 3L, 4.0),
       ("p0", "view", 75L * 1000000000L, 4L, 9.0))
       .toDF("producer", "topic", "time", "seq", "value")
-      .withColumn("ingest_version", lit(1L))
-    rows.write.parquet(s"$base/data")
-    StatTiers.base(rows, StatTiers.BaseWidthNs)
-      .withColumn("ingest_version", lit(1L))
-      .write.parquet(s"$base/stats")
-    Seq(("p0", "click", 1L, 1000L), ("p0", "view", 1L, 1000L))
-      .toDF("producer", "topic", "ingest_version", "ingest_time_ns")
-      .write.parquet(s"$base/control")
-    val cat = new graft.model.IngestedCatalog(
-      s"$base/data", s"$base/stats", s"$base/control")
+    TestSpark.ingest(base, 1L, rows)
+    val cat = TestSpark.ingestedCatalog(base)
     val stored = new Dp3Service(cat, s => cat.messages(s),
       Some(graft.api.IngestStore(cat)))
     val bare = new Dp3Service(cat, s => cat.messages(s))
@@ -214,20 +198,9 @@ class Dp3ServiceSpec extends AnyFunSuite {
       .toDF("producer", "topic", "time", "seq", "value")
     val v2 = Seq(("p0", "click", 70L * 1000000000L, 3L, 4.0))
       .toDF("producer", "topic", "time", "seq", "value")
-    def ver(df: org.apache.spark.sql.DataFrame, v: Long) =
-      df.withColumn("ingest_version", lit(v))
-    ver(v1, 1).union(ver(v2, 2)).write.parquet(s"$base/data")
-    StatTiers.base(v1, StatTiers.BaseWidthNs)
-      .withColumn("ingest_version", lit(1L))
-      .unionByName(StatTiers.base(v2, StatTiers.BaseWidthNs)
-        .withColumn("ingest_version", lit(2L)))
-      .write.parquet(s"$base/stats")
-    Seq(("p0", "click", 1L, 1000L), ("p0", "click", 2L, 2000L))
-      .toDF("producer", "topic", "ingest_version", "ingest_time_ns")
-      .write.parquet(s"$base/control")
-
-    val cat = new graft.model.IngestedCatalog(
-      s"$base/data", s"$base/stats", s"$base/control")
+    TestSpark.ingest(base, 1L, v1)
+    TestSpark.ingest(base, 2L, v2)
+    val cat = TestSpark.ingestedCatalog(base)
     val stored = new Dp3Service(cat, s => cat.messages(s),
       Some(graft.api.IngestStore(cat)))
     val bare = new Dp3Service(cat, s => cat.messages(s))
@@ -256,8 +229,9 @@ class Dp3ServiceSpec extends AnyFunSuite {
     import graft.stats.StatTiers
     val base = java.nio.file.Files.createTempDirectory("graft-statc")
       .toString
-    // version 2 wrote data but NO stat partials (stats enabled late, or
-    // an import that skipped them): its bucket is absent from the tier,
+    // version 2 wrote data but NO per-field partials (field stats
+    // enabled late, or an import that skipped them): its bucket is
+    // absent from the tier,
     // and pruning against an under-covering tier would drop v2's rows
     // as "provably empty" — a false negative the reference never
     // produces (missing stats keep the chunk). The coverage witness
@@ -267,18 +241,9 @@ class Dp3ServiceSpec extends AnyFunSuite {
       .toDF("producer", "topic", "time", "seq", "value")
     val v2 = Seq(("p0", "click", 70L * 1000000000L, 3L, 4.0))
       .toDF("producer", "topic", "time", "seq", "value")
-    def ver(df: org.apache.spark.sql.DataFrame, v: Long) =
-      df.withColumn("ingest_version", lit(v))
-    ver(v1, 1).union(ver(v2, 2)).write.parquet(s"$base/data")
-    StatTiers.base(v1, StatTiers.BaseWidthNs)
-      .withColumn("ingest_version", lit(1L))
-      .write.parquet(s"$base/stats") // v2's partials missing on purpose
-    Seq(("p0", "click", 1L, 1000L), ("p0", "click", 2L, 2000L))
-      .toDF("producer", "topic", "ingest_version", "ingest_time_ns")
-      .write.parquet(s"$base/control")
-
-    val cat = new graft.model.IngestedCatalog(
-      s"$base/data", s"$base/stats", s"$base/control")
+    TestSpark.ingest(base, 1L, v1, fieldStats = true)
+    TestSpark.ingest(base, 2L, v2) // v2's partials missing on purpose
+    val cat = TestSpark.ingestedCatalog(base, fieldStats = true)
     val stored = new Dp3Service(cat, s => cat.messages(s),
       Some(graft.api.IngestStore(cat)))
 
@@ -311,16 +276,8 @@ class Dp3ServiceSpec extends AnyFunSuite {
       ("p0", "click", 70L * 1000000000L, 4L, 4.0),
       ("p0", "view", 15L * 1000000000L, 5L, -3.0))
       .toDF("producer", "topic", "time", "seq", "value")
-      .withColumn("ingest_version", lit(1L))
-    rows.write.parquet(s"$base/data")
-    StatTiers.base(rows, StatTiers.BaseWidthNs)
-      .withColumn("ingest_version", lit(1L))
-      .write.parquet(s"$base/stats")
-    Seq(("p0", "click", 1L, 1000L), ("p0", "view", 1L, 1000L))
-      .toDF("producer", "topic", "ingest_version", "ingest_time_ns")
-      .write.parquet(s"$base/control")
-    val cat2 = new graft.model.IngestedCatalog(
-      s"$base/data", s"$base/stats", s"$base/control")
+    TestSpark.ingest(base, 1L, rows)
+    val cat2 = TestSpark.ingestedCatalog(base)
     val stored = new Dp3Service(cat2, s => cat2.messages(s),
       Some(graft.api.IngestStore(cat2)))
     val raw = new Dp3Service(cat2, s => cat2.messages(s))
@@ -448,9 +405,9 @@ class Dp3ServiceSpec extends AnyFunSuite {
     assert(svc.query(spark, ql).count() == 1)
     assert(svc.query(spark, "from * click;").count() == 3)
 
-    // every plan pays the data source's schema read; a prunable where
-    // adds at most the tier's schema read and the one qualifying-bucket
-    // collect — no coverage join, no second tier read, no broadcast
+    // a prunable where adds at most the one qualifying-bucket collect —
+    // no schema read, no coverage job, no second tier read, no
+    // broadcast
     val (_, bare) = JobLog.record(sc)(svc.query(spark, "from p0 click;"))
     val (df, planJobs) = JobLog.record(sc)(svc.query(spark, ql))
     val descs = planJobs.map(_.desc)
@@ -487,14 +444,11 @@ class Dp3ServiceSpec extends AnyFunSuite {
     val q1 = svc.query(spark, ql)
     assert(timePruned(q1))
     assert(times(q1) == Seq(70L * 1000000000L))
-    // version 2 lands data and control rows for p1 but no partials:
+    // version 2 lands data and control rows for p1 but no per-field
+    // partials:
     // the same service must see the gap and stop pruning
-    Seq(("p1", "click", 130L * 1000000000L, 4L, 5.0, 2L))
-      .toDF("producer", "topic", "time", "seq", "value", "ingest_version")
-      .write.mode("append").parquet(s"$base/data")
-    Seq(("p1", "click", 2L, 2000L))
-      .toDF("producer", "topic", "ingest_version", "ingest_time_ns")
-      .write.mode("append").parquet(s"$base/control")
+    TestSpark.ingest(base, 2L, Seq(("p1", "click", 130L * 1000000000L,
+      4L, 5.0)).toDF("producer", "topic", "time", "seq", "value"))
     val q2 = svc.query(spark, ql)
     assert(!timePruned(q2))
     assert(times(q2) == Seq(70L * 1000000000L, 130L * 1000000000L))
@@ -503,5 +457,80 @@ class Dp3ServiceSpec extends AnyFunSuite {
     val q3 = svc.query(spark, ql)
     assert(timePruned(q3))
     assert(times(q3) == Seq(70L * 1000000000L))
+  }
+
+  test("a warm QL scan on an ingested store launches one job, and the " +
+      "coverage check on a store with no gap version none") {
+    val (_, cat) = TestSpark.smallStore("graft-scanjobs")
+    val sc = spark.sparkContext
+    def service = new Dp3Service(cat, s => cat.messages(s),
+      Some(graft.api.IngestStore(cat)))
+    val svc = service
+    val ql = "from p0 click limit 2;"
+    assert(svc.query(spark, ql).collect().length == 2)
+    // no schema-inference or leaf-listing job: the manifest names the
+    // files and their schema
+    val (rows, jobs) = JobLog.record(sc)(svc.query(spark, ql).collect())
+    assert(rows.length == 2)
+    assert(jobs.size == 1, jobs.map(_.desc))
+    // a cold service over a cold cache answers coverage from the
+    // manifest header
+    graft.util.ControlCache.clear()
+    val (df, planJobs) = JobLog.record(sc)(service.query(spark,
+      "from p0 click where click.value > 3;"))
+    assert(!planJobs.map(_.desc).contains("plan:coverage"),
+      planJobs.map(_.desc))
+    assert(timePruned(df))
+  }
+
+  test("reads overlapping optimize and appendVersion at every protocol " +
+      "point see the pre- or the post-verb store, or throw") {
+    import spark.implicits._
+    import scala.util.Try
+    import graft.streaming.Ingest
+    // two topics, so the store stays readable while one partition is
+    // rewritten
+    def batch(v: Int) = (0 until 4).map { i =>
+      ("p0", if (i % 2 == 0) "click" else "view",
+        (v * 100 + i * 20).toLong * 1000000000L, (v * 10 + i).toLong,
+        (v + i).toDouble)
+    }.toDF("producer", "topic", "time", "seq", "value")
+      .withColumn("day", expr("time div 86400000000000"))
+    def append(base: String, v: Int): Unit = Ingest.appendVersion(batch(v),
+      v.toLong, s"$base/data", s"$base/stats", Some(s"$base/control"))
+    def answer(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    def check(verb: String, run: String => Unit): Unit = {
+      val base = java.nio.file.Files.createTempDirectory(
+        s"graft-overlap-$verb").toString
+      (1 to 3).foreach(append(base, _))
+      val cat = new graft.model.IngestedCatalog(s"$base/data",
+        s"$base/stats", s"$base/control")
+      val svc = new Dp3Service(cat, s => cat.messages(s),
+        Some(graft.api.IngestStore(cat)))
+      def reads() = Seq(svc.query(spark, "from p0 click;"),
+        svc.statRange(spark, 3600L * 1000000000L))
+      val pre = reads().map(answer)
+      val planned = reads()
+      val seen = scala.collection.mutable.ArrayBuffer[
+        (String, Seq[Try[Seq[String]]], Seq[Try[Seq[String]]])]()
+      graft.util.Maint.crashHook = (v, p) => if (v == verb) {
+        seen += ((p, Try(reads()).fold(e => Seq.fill(2)(
+          scala.util.Failure(e)), _.map(d => Try(answer(d)))),
+          planned.map(d => Try(answer(d)))))
+        ()
+      }
+      try run(base) finally graft.util.Maint.crashHook = (_, _) => ()
+      val post = reads().map(answer)
+      assert(seen.nonEmpty, s"$verb passed no protocol point")
+      for ((p, fresh, old) <- seen; got <- Seq(fresh, old);
+           (t, i) <- got.zipWithIndex)
+        assert(t.fold(_ => true, a => a == pre(i) || a == post(i)),
+          s"$verb: read $i at '$p' saw neither the pre- nor the " +
+            "post-verb store")
+    }
+    check("optimize", b => {
+      Ingest.optimize(spark, s"$b/data", maxFilesPerPartition = 1); () })
+    check("appendVersion", append(_, 4))
   }
 }

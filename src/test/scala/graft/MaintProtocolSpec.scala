@@ -27,7 +27,8 @@ import graft.util.Maint
   * fold), so the CorpusDedup sidecars are compared as the exact sorted
   * multiset of their live rows, read through the store's own read
   * face, and so are the stored vector indexes (with their manifest
-  * header: quantizer, codebook, append fingerprints); the BM25 verbs
+  * header: quantizer, codebook, append fingerprints) and the ingest
+  * store's four trees (through `IngestedCatalog`); the BM25 verbs
   * compare the served ranking. */
 class MaintProtocolSpec extends AnyFunSuite {
   private lazy val spark: SparkSession = TestSpark.spark
@@ -43,7 +44,8 @@ class MaintProtocolSpec extends AnyFunSuite {
       verb: String,
       setup: String => Unit,
       run: String => Unit,
-      answer: String => Seq[String])
+      answer: String => Seq[String],
+      tidy: String => Unit = _ => ())
 
   private def copyTree(src: JPath, dst: JPath): Unit = {
     Files.walk(src).forEach { p =>
@@ -93,51 +95,9 @@ class MaintProtocolSpec extends AnyFunSuite {
       sc.run(dir)
       assert(sc.answer(dir) == expected,
         s"${sc.verb}: answers diverged after crash at '$point' + re-run")
+      sc.tidy(dir)
     }
     fired.toSeq
-  }
-
-  /** The heal-path crash matrix: start every injection run from the
-    * MID-SWAP state (`park` renames the live tree into its trash
-    * sibling — exactly what a crash between a flip's two renames
-    * leaves), so the recorded points include the heal-* steps and a
-    * crash DURING the heal itself must also recover on re-run. The
-    * heal logic is the shared helper; `Ingest.scrubVersion`'s
-    * sidecar flip is its last caller. */
-  private def healCrashMatrix(sc: Scenario,
-      park: String => Unit): Unit = {
-    val pristine = Files.createTempDirectory(s"mainthealp-${sc.verb}")
-    sc.setup(pristine.toString)
-    val clean = freshCopy(pristine)
-    park(clean)
-    sc.run(clean) // heals, then completes
-    val expected = sc.answer(clean)
-    assert(expected.nonEmpty, s"${sc.verb}: empty heal-path answer")
-    val points = scala.collection.mutable.LinkedHashSet[String]()
-    Maint.crashHook = (v, p) => if (v == sc.verb) { points += p; () }
-    try { val d = freshCopy(pristine); park(d); sc.run(d) }
-    finally Maint.crashHook = (_, _) => ()
-    assert(points.exists(_.startsWith("heal")),
-      s"${sc.verb}: the parked state fired no heal steps — $points")
-    for (point <- points) {
-      val dir = freshCopy(pristine)
-      park(dir)
-      Maint.crashHook = (v, p) =>
-        if (v == sc.verb && p == point) throw CrashInjected(v, p)
-      try intercept[CrashInjected] { sc.run(dir) }
-      finally Maint.crashHook = (_, _) => ()
-      sc.run(dir)
-      assert(sc.answer(dir) == expected,
-        s"${sc.verb}: heal-path crash at '$point' did not recover")
-    }
-  }
-
-  private def parkDir(base: String, live: String, trash: String)
-      : Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(base).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new Path(s"$base/$live"), new Path(s"$base/$trash")))
   }
 
   // ---- exact-dedup sidecars (appendBatch history) -----------------------
@@ -678,47 +638,99 @@ class MaintProtocolSpec extends AnyFunSuite {
     assert(fired.count(_ == "committed") == 1, fired)
   }
 
-  // ---- ingest store maintenance (partition park/swap + sidecar flip) ----
+  // ---- ingest store (one manifest at <data>/_manifest) ------------------
+
+  private def ingestBatch(v: Int): DataFrame = (0 until 6).map { i =>
+    ("t0", "p", (v * 100 + i).toLong * 1000000000L,
+      (v * 1000 + i).toLong, i.toDouble)
+  }.toDF("topic", "producer", "time", "seq", "value")
 
   private def storeSetup(base: String): Unit =
-    (1 to 3).foreach { v =>
-      val batch = (0 until 6).map { i =>
-        ("t0", "p", (v * 100 + i).toLong * 1000000000L,
-          (v * 1000 + i).toLong, i.toDouble)
-      }.toDF("topic", "producer", "time", "seq", "value")
-        .withColumn("day", expr("time div 86400000000000"))
-      Ingest.appendVersion(batch, v.toLong, s"$base/data",
-        s"$base/stats", None, None)
-    }
+    (1 to 3).foreach(v =>
+      TestSpark.ingest(base, v.toLong, ingestBatch(v), fieldStats = true))
 
-  private def storeAnswer(base: String): Seq[String] =
-    sortedRows(spark.read.parquet(s"$base/data")
-      .select("topic", "producer", "time", "seq", "value",
-        "ingest_version")) ++
-      sortedRows(spark.read.parquet(s"$base/stats"))
-
-  test("scrubVersion: crash at every step heals on re-run") {
-    crashMatrix(Scenario("scrubVersion", storeSetup,
-      b => Ingest.scrubVersion(spark, 2L, s"$b/data", s"$b/stats",
-        None, None),
-      storeAnswer))
+  /** The ingest store's exact answer: the sorted row multisets of its
+    * data, stat-partial, per-field-partial and control trees, read
+    * through `IngestedCatalog` (the control rows' wall-clock stamp
+    * dropped). */
+  private def storeAnswer(base: String): Seq[String] = {
+    val cat = TestSpark.ingestedCatalog(base, fieldStats = true)
+    sortedRows(cat.messages(spark).select("topic", "producer", "time",
+      "seq", "value", "ingest_version")) ++
+      sortedRows(cat.stats(spark)) ++ sortedRows(cat.fieldStats.get(spark)) ++
+      sortedRows(cat.control(spark).drop("ingest_time_ns"))
   }
 
-  test("heal path itself: crashes DURING a heal-in-progress (the " +
-      "mid-swap starting state) recover on re-run, for scrubVersion's " +
-      "sidecar flip") {
-    healCrashMatrix(
-      Scenario("scrubVersion", storeSetup,
-        b => Ingest.scrubVersion(spark, 2L, s"$b/data", s"$b/stats",
-          None, None),
-        storeAnswer),
-      parkDir(_, "stats", "stats.scrub-trash"))
+  /** A tidy ingest store: the data dir holds only `_manifest/` (with one
+    * manifest) and `topic=` directories, and every tree's directory
+    * only the parquet files the manifest lists. */
+  private def assertIngestTidy(base: String): Unit = {
+    val m = TestSpark.ingestedCatalog(base, fieldStats = true)
+      .manifest(spark)
+    val top = new java.io.File(s"$base/data").list().toSeq
+    assert(top.forall(n => n == "_manifest" || n.startsWith("topic=")), top)
+    assert(new java.io.File(s"$base/data/_manifest").list()
+      .filterNot(_.startsWith(".")).toSeq == Seq(m.version.toString))
+    for (t <- Seq("data", "stats", "fstats", "control"))
+      assert(listing(s"$base/$t").map(_._1).filter(_.endsWith(".parquet"))
+        .filterNot(_.split('/').last.startsWith(".")).map(p => s"$t/$p")
+        .toSet == m.filesOf(t).map(_.path).toSet, t)
+  }
+
+  private def ingestMatrix(verb: String, run: String => Unit): Unit = {
+    val fired = crashMatrix(Scenario(verb, storeSetup, run, storeAnswer,
+      assertIngestTidy))
+    assert(fired.count(_ == "committed") == 1, fired)
+  }
+
+  // the re-run is the stream's replay of the batch
+  test("appendVersion: crash at every step heals on replay") {
+    ingestMatrix("appendVersion",
+      TestSpark.ingest(_, 4L, ingestBatch(4), fieldStats = true))
   }
 
   test("optimize: crash at every step heals on re-run") {
-    crashMatrix(Scenario("optimize", storeSetup,
-      b => { Ingest.optimize(spark, s"$b/data",
-        maxFilesPerPartition = 1); () },
-      storeAnswer))
+    ingestMatrix("optimize",
+      b => { Ingest.optimize(spark, s"$b/data", maxFilesPerPartition = 1); () })
+  }
+
+  test("importMcap: a crash at every step leaves the pre- or the " +
+      "post-import store, as the commit point decides, and the retry or " +
+      "the next verb leaves the post-import store tidy") {
+    val mcap = Files.createTempFile("maintimport", ".mcap")
+    val w = new graft.mcap.Mcap.Writer()
+    w.writeSchema(graft.mcap.Mcap.SchemaRec(1, "pkg/t", "ros1msg",
+      "int16 c".getBytes))
+    w.writeChannel(graft.mcap.Mcap.ChannelRec(0, 1, "t0", "ros1"))
+    for (t <- 1L to 4L)
+      w.writeMessage(graft.mcap.Mcap.MessageRec(0, t, t, t,
+        Array[Byte](t.toByte, 0)))
+    Files.write(mcap, w.finish())
+    def run(b: String): Unit = { Ingest.importMcap(spark, "p9",
+      mcap.toString, s"$b/data", s"$b/stats", s"$b/control",
+      Some((s"$b/fstats", Seq("value"), Nil))); () }
+    val pristine = Files.createTempDirectory("maintpristine-import")
+    storeSetup(pristine.toString)
+    val pre = storeAnswer(freshCopy(pristine))
+    val post = { val d = freshCopy(pristine); run(d); storeAnswer(d) }
+    assert(pre != post)
+    val fired = scala.collection.mutable.ArrayBuffer[String]()
+    Maint.crashHook = (v, p) => if (v == "importMcap") { fired += p; () }
+    try run(freshCopy(pristine)) finally Maint.crashHook = (_, _) => ()
+    assert(fired.count(_ == "committed") == 1, fired)
+    for (point <- fired.distinct) {
+      val dir = freshCopy(pristine)
+      Maint.crashHook = (v, p) =>
+        if (v == "importMcap" && p == point) throw CrashInjected(v, p)
+      try intercept[CrashInjected](run(dir))
+      finally Maint.crashHook = (_, _) => ()
+      val landed = fired.indexOf(point) >= fired.indexOf("committed")
+      assert(storeAnswer(dir) == (if (landed) post else pre), point)
+      if (landed) Ingest.optimize(spark, s"$dir/data",
+        maxFilesPerPartition = Int.MaxValue)
+      else run(dir)
+      assert(storeAnswer(dir) == post, point)
+      assertIngestTidy(dir)
+    }
   }
 }

@@ -10,10 +10,11 @@ import graft.tools.Inspect
 
 /** Incremental compaction (`Ingest.optimize`): only small-file
   * partitions rewrite, data is bit-identical, untouched partitions
-  * keep their files, and the rewritten files carry disjoint time
+  * keep their listed files, and the rewritten files carry disjoint time
   * ranges (the row-group-pruning contract). The reference's analogue
   * is the WAL manager's per-table incremental merge
-  * (server/treemgr/treemgr.go:821-961).
+  * (server/treemgr/treemgr.go:821-961). Stores are built through
+  * `Ingest.appendVersion`, one ingest version per batch.
   */
 class OptimizeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -21,51 +22,55 @@ class OptimizeSpec extends AnyFunSuite {
 
   private val day = 86400000000000L
 
-  private def files(dir: String): Set[String] = {
-    val d = new java.io.File(dir)
-    if (!d.exists()) Set.empty
-    else d.listFiles().map(_.getName)
-      .filter(n => n.endsWith(".parquet") && !n.startsWith("_")).toSet
+  /** A fresh store with each batch of (producer, topic, time, seq,
+    * value) rows appended as the next ingest version. */
+  private def store(batches: Seq[Seq[(String, String, Long, Long, Double)]])
+      : String = {
+    val base = Files.createTempDirectory("graft-opt").toString
+    batches.zipWithIndex.foreach { case (b, i) => TestSpark.ingest(base,
+      i + 1L, b.toDF("producer", "topic", "time", "seq", "value")) }
+    base
   }
 
-  test("optimize rewrites only small-file partitions, exactly") {
-    val out = Files.createTempDirectory("graft-opt").toString
-    // hot partition: 6 micro-batch appends of 1 row each, spread over
-    // the day so time slicing is observable
-    for (i <- 0 until 6)
-      Seq(("p0", "click", 1L * day + i * (day / 8) + 1L, i.toLong, i * 1.0))
-        .toDF("producer", "topic", "time", "seq", "value")
-        .withColumn("day", expr("time div 86400000000000"))
-        .write.mode("append").partitionBy("topic", "day").parquet(out)
-    // cold partition: one file, must not be touched
-    Seq(("p1", "error", 2L * day + 9L, 99L, 9.0))
-      .toDF("producer", "topic", "time", "seq", "value")
-      .withColumn("day", expr("time div 86400000000000"))
-      .write.mode("append").partitionBy("topic", "day").parquet(out)
+  private def rows(base: String): Seq[String] =
+    TestSpark.ingestedCatalog(base).messages(spark)
+      .collect().map(_.toString).sorted.toSeq
 
-    val before = spark.read.parquet(out).collect().toSet
-    val hotBefore = files(s"$out/topic=click/day=1")
-    val coldBefore = files(s"$out/topic=error/day=2")
+  /** The listed data files of partition (topic, day), with bytes. */
+  private def files(base: String, topic: String, d: Long)
+      : Set[graft.util.DataFile] =
+    TestSpark.ingestedCatalog(base).manifest(spark).filesOf("data")
+      .filter(f => Ingest.topicOf(f) == topic && f.part("day") == d).toSet
+
+  test("optimize rewrites only small-file partitions, exactly") {
+    // hot partition: 6 micro-batch appends of 1 row each, spread over
+    // the day so time slicing is observable; cold partition: one file,
+    // must not be touched
+    val base = store((0 until 6).map(i =>
+      Seq(("p0", "click", 1L * day + i * (day / 8) + 1L, i.toLong, i * 1.0))) :+
+      Seq(("p1", "error", 2L * day + 9L, 99L, 9.0)))
+    val before = rows(base)
+    val hotBefore = files(base, "click", 1L)
+    val coldBefore = files(base, "error", 2L)
     assert(hotBefore.size == 6 && coldBefore.size == 1)
 
-    val hotBytes = new java.io.File(s"$out/topic=click/day=1")
-      .listFiles().filter(_.getName.endsWith(".parquet"))
-      .map(_.length()).sum
     // target half the partition bytes per file → 2 output slices
-    val report = Ingest.optimize(spark, out, maxFilesPerPartition = 4,
-      targetBytesPerFile = (hotBytes + 1) / 2)
+    val hotBytes = hotBefore.toSeq.map(_.bytes).sum
+    val report = Ingest.optimize(spark, s"$base/data",
+      maxFilesPerPartition = 4, targetBytesPerFile = (hotBytes + 1) / 2)
     assert(report.map(r => (r.topic, r.day, r.filesBefore,
       r.targetFiles)) == Seq(("click", 1L, 6, 2)))
 
     // data unchanged, cold partition's files untouched, hot shrunk
-    assert(spark.read.parquet(out).collect().toSet == before)
-    assert(files(s"$out/topic=error/day=2") == coldBefore)
-    val hotAfter = files(s"$out/topic=click/day=1")
+    assert(rows(base) == before)
+    assert(files(base, "error", 2L) == coldBefore)
+    val hotAfter = files(base, "click", 1L)
     assert(hotAfter.size == 2 && hotAfter.intersect(hotBefore).isEmpty)
 
     // each rewritten file covers a disjoint time slice (footer check)
-    val rg = Inspect.rowGroups(spark, out)
+    val rg = Inspect.rowGroups(spark, s"$base/data")
       .where(col("topic") === "click").collect()
+    assert(rg.length == 2)
     val spans = rg.map(r => (r.getAs[Long]("time_min"),
       r.getAs[Long]("time_max"))).sortBy(_._1)
     assert(spans.sliding(2).forall {
@@ -74,49 +79,28 @@ class OptimizeSpec extends AnyFunSuite {
     })
 
     // second pass: nothing left to do
-    assert(Ingest.optimize(spark, out, maxFilesPerPartition = 4).isEmpty)
+    assert(Ingest.optimize(spark, s"$base/data",
+      maxFilesPerPartition = 4).isEmpty)
   }
 
-  test("optimize swap crash windows heal: a partition parked under " +
-      ".swap_old restores at the next pass, the stats ignore hidden " +
-      "debris trees, and no data is ever lost") {
-    import org.apache.hadoop.fs.Path
-    val out = Files.createTempDirectory("graft-optheal").toString
-    for (i <- 0 until 6)
-      Seq(("p0", "click", 1L * day + i * (day / 8) + 1L, i.toLong, i * 1.0))
-        .toDF("producer", "topic", "time", "seq", "value")
-        .withColumn("day", expr("time div 86400000000000"))
-        .write.mode("append").partitionBy("topic", "day").parquet(out)
-    val before = spark.read.parquet(out).collect().toSet
-    val fs = new Path(out).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // simulate the mid-swap crash: the live partition was parked
-    // (original -> .swap_old) but the optimized copy never renamed in
-    // — the old delete-then-rename shape lost this partition outright
-    val live = new Path(s"$out/topic=click/day=1")
-    val parked = new Path(s"$out/.swap_old/topic=click/day=1")
-    fs.mkdirs(parked.getParent)
-    assert(fs.rename(live, parked))
-    // plus crashed-pass debris the stats must not count
-    val debris = new Path(s"$out/.optimize_tmp/topic=click/day=1")
-    fs.mkdirs(debris.getParent)
-    Seq(("p9", "click", 1L * day + 5L, 7L, 0.0))
-      .toDF("producer", "topic", "time", "seq", "value")
-      .write.parquet(debris.toString)
-    val report = Ingest.optimize(spark, out, maxFilesPerPartition = 4)
-    // healed first, then optimized the restored 6-file partition;
-    // the debris rows never entered the stats or the store
-    assert(report.map(r => (r.topic, r.day, r.filesBefore))
-      == Seq(("click", 1L, 6)))
-    assert(spark.read.parquet(out).collect().toSet == before)
-    assert(!fs.exists(new Path(s"$out/.swap_old")))
+  test("optimize compacts a dp3-style topic whose partition directory " +
+      "name is escaped") {
+    val base = store((0 until 6).map(i =>
+      Seq(("p0", "/imu", 1L * day + i * 1000L, i.toLong, i * 1.0))))
+    val before = rows(base)
+    assert(files(base, "/imu", 1L).size == 6)
+    val report = Ingest.optimize(spark, s"$base/data",
+      maxFilesPerPartition = 4)
+    assert(report.map(r => (r.topic, r.day, r.filesBefore)) ==
+      Seq(("/imu", 1L, 6)))
+    assert(files(base, "/imu", 1L).size == 1)
+    assert(rows(base) == before)
   }
 
   test("property: random append histories optimize to the same data, " +
       "idempotently, cold partitions untouched") {
     val rnd = new scala.util.Random(20260813L)
     for (trial <- 0 until 3) {
-      val out = Files.createTempDirectory(s"graft-optp$trial").toString
       val topics = Seq("click", "error", "view")
       // random micro-batch history: 1-row appends scattered over
       // partitions, with some repeated identity keys
@@ -127,44 +111,35 @@ class OptimizeSpec extends AnyFunSuite {
         val seq = rnd.nextInt(8).toLong // collisions are duplicates
         ("p" + rnd.nextInt(3), t, time, seq, i * 1.0)
       }
-      appended.grouped(3).foreach { batch =>
-        batch.toDF("producer", "topic", "time", "seq", "value")
-          .withColumn("day", expr("time div 86400000000000"))
-          .write.mode("append").partitionBy("topic", "day").parquet(out)
-      }
+      val base = store(appended.grouped(3).toSeq)
       val threshold = 1 + rnd.nextInt(4)
-      val before = spark.read.parquet(out)
+      val before = TestSpark.ingestedCatalog(base).messages(spark)
         .dropDuplicates("producer", "topic", "time", "seq")
         .collect().map(_.toString).sorted.toSeq
-      val coldDirs = new java.io.File(out).listFiles()
-        .filter(_.isDirectory).flatMap(_.listFiles())
-        .filter(_.isDirectory)
-        .map(d => d.getPath -> files(d.getPath))
-        .filter(_._2.size <= threshold).toMap
-      val report = Ingest.optimize(spark, out,
+      val parts = TestSpark.ingestedCatalog(base).manifest(spark)
+        .filesOf("data").groupBy(f => (Ingest.topicOf(f), f.part("day")))
+      val cold = parts.filter(_._2.size <= threshold)
+      val report = Ingest.optimize(spark, s"$base/data",
         maxFilesPerPartition = threshold)
       // rewritten set = exactly the partitions over the threshold
-      report.foreach(r => assert(r.filesBefore > threshold))
+      assert(report.map(r => (r.topic, r.day)).toSet ==
+        parts.filter(_._2.size > threshold).keySet)
       // hot partitions post-state: dedup'd data identical
-      val after = spark.read.parquet(out)
-        .collect().map(_.toString).sorted.toSeq
+      val after = rows(base)
       assert(after == before, s"trial $trial data drift")
       // cold partitions keep their exact files
-      coldDirs.foreach { case (p, fs) => assert(files(p) == fs) }
+      cold.foreach { case ((t, d), fs) =>
+        assert(files(base, t, d) == fs.toSet) }
       // a second pass finds nothing (thresholds unchanged)
-      assert(Ingest.optimize(spark, out,
+      assert(Ingest.optimize(spark, s"$base/data",
         maxFilesPerPartition = threshold).isEmpty)
     }
   }
 
   test("optimize dedups on the identity key like the reference's merge") {
-    val out = Files.createTempDirectory("graft-opt2").toString
-    val row = ("p0", "click", 1L * day + 5L, 1L, 1.0)
-    for (_ <- 0 until 5) // the same row appended by 5 "batches"
-      Seq(row).toDF("producer", "topic", "time", "seq", "value")
-        .withColumn("day", expr("time div 86400000000000"))
-        .write.mode("append").partitionBy("topic", "day").parquet(out)
-    Ingest.optimize(spark, out, maxFilesPerPartition = 2)
-    assert(spark.read.parquet(out).count() == 1)
+    // the same row appended by 5 "batches"
+    val base = store(Seq.fill(5)(Seq(("p0", "click", 1L * day + 5L, 1L, 1.0))))
+    Ingest.optimize(spark, s"$base/data", maxFilesPerPartition = 2)
+    assert(TestSpark.ingestedCatalog(base).messages(spark).count() == 1)
   }
 }

@@ -1096,6 +1096,9 @@ class PipelineSpec extends AnyFunSuite {
     val probed = probesOf(Similarity.readIvfCentroids(spark, dir), q, 1)
     assert(scanned(top) == cellFiles(dir, probed.toSet))
     assert(cellFiles(dir, Set(0, 1)).size > scanned(top).size)
+    // the write clusters rows by cell: one file per cell
+    assert(scanned(top).size == 1)
+    assert(cellFiles(dir, Set(0, 1)).size == 2)
     val got = top.collect()
     assert(got.length == 5)
     assert(got.forall(_.getLong(0) % 2 == 0L),

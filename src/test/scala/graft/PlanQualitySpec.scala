@@ -453,12 +453,8 @@ class PlanQualitySpec extends AnyFunSuite {
       ("p0", "click", 10L * 1000000000L, 1L, 1.0),
       ("p0", "click", 70L * 1000000000L, 2L, 3.0)
     ).toDF("producer", "topic", "time", "seq", "value")
-    msgs.write.parquet(s"$base/data")
-    StatTiers.base(msgs, StatTiers.BaseWidthNs)
-      .withColumn("ingest_version", lit(1L))
-      .write.parquet(s"$base/stats")
-    val cat = new graft.model.IngestedCatalog(
-      s"$base/data", s"$base/stats", s"$base/control")
+    TestSpark.ingest(base, 1L, msgs)
+    val cat = TestSpark.ingestedCatalog(base)
     val svc = new graft.api.Dp3Service(cat, s => cat.messages(s),
       Some(graft.api.IngestStore(cat)))
     val bins = svc.statRange(spark, 3600L * 1000000000L)
@@ -474,13 +470,14 @@ class PlanQualitySpec extends AnyFunSuite {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft-ctl")
       .toString
-    Seq(("p0", "click", 1L, 1L), ("p1", "click", 1L, 1L))
-      .toDF("producer", "topic", "ingest_version", "ingest_time_ns")
-      .write.parquet(s"$base/control")
-    // dataDir deliberately nonexistent: if producer discovery touched
+    TestSpark.ingest(base, 1L, Seq(("p0", "click", 1L, 1L, 1.0),
+      ("p1", "click", 2L, 2L, 2.0))
+      .toDF("producer", "topic", "time", "seq", "value"))
+    val cat = TestSpark.ingestedCatalog(base)
+    // the data files deliberately deleted: if producer discovery touched
     // event data, this would throw
-    val cat = new graft.model.IngestedCatalog(
-      s"$base/does-not-exist", s"$base/stats", s"$base/control")
+    cat.manifest(spark).filesOf("data").foreach(f =>
+      new java.io.File(s"$base/${f.path}").delete())
     assert(cat.producers(spark, Seq("click")) == Seq("p0", "p1"))
   }
 

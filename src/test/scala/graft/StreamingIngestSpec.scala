@@ -90,7 +90,8 @@ class StreamingIngestSpec extends AnyFunSuite {
     q.awaitTermination(120000)
 
     import graft.stats.StatTiers
-    val served = StatTiers.mergePartials(spark.read.parquet(stats))
+    val cat = new graft.model.IngestedCatalog(out, stats, control)
+    val served = StatTiers.mergePartials(cat.stats(spark))
     val direct = StatTiers.base(rows, 60L * 1000000000L)
     def key(df: org.apache.spark.sql.DataFrame) =
       df.select("producer", "topic", "bucket", "msg_count", "num_min",
@@ -99,9 +100,9 @@ class StreamingIngestSpec extends AnyFunSuite {
 
     // every row, stat partial, and control entry carries the batch's
     // ingest version — the reference's versionstore counter
-    val data = spark.read.parquet(out)
+    val data = cat.messages(spark)
     assert(data.columns.contains("ingest_version"))
-    val ctl = spark.read.parquet(control)
+    val ctl = cat.control(spark)
     assert(ctl.columns.toSet.contains("ingest_version"))
     assert(ctl.select("producer", "topic").distinct().count() == 1)
     assert(ctl.agg(sum("msg_count")).head().getLong(0) == 3L)
@@ -129,13 +130,13 @@ class StreamingIngestSpec extends AnyFunSuite {
       fieldStats = Some((fstats, Seq("value"), Seq("props"))))
       .awaitTermination(120000)
 
+    val cat = new graft.model.IngestedCatalog(out, stats, control,
+      fieldStatsDir = Some(fstats))
     // the stored per-field partials carry text min/max + trigram words
-    val fcols = spark.read.parquet(fstats).columns.toSet
+    val fcols = cat.fieldStats.get(spark).columns.toSet
     assert(Set("props__tmin", "props__tmax", "props__trgm0",
       "props__trgm1", "value__min", "value__max").subsetOf(fcols))
 
-    val cat = new graft.model.IngestedCatalog(out, stats, control,
-      fieldStatsDir = Some(fstats))
     val svc = new graft.api.Dp3Service(cat, s => cat.messages(s),
       Some(graft.api.IngestStore(cat)))
     // trigram-backed string equality: only the alpha bucket survives
@@ -162,155 +163,138 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(key(served) == key(bare) && served.count() > 0)
   }
 
-  test("replayed ingest version is exactly-once: a half-committed " +
-      "attempt scrubs and rewrites, a committed one no-ops — slashy " +
-      "topics included") {
-    val base = Files.createTempDirectory("graft-replay").toString
-    val (out, stats, control) =
-      (s"$base/out", s"$base/stats", s"$base/control")
-    def batchDf(seqBase: Long) = Seq(
-      ("p0", "click", 10L * 1000000000L, seqBase, 1.0),
-      // a topic with '/' — partition-dir escaping must round-trip
-      // through the scrub's input_file_name-derived directory paths
-      ("p0", "/veh/pose", 20L * 1000000000L, seqBase + 1, 3.0),
-      ("p0", "/veh/pose", 100000L * 1000000000L, seqBase + 2, 5.0)
-    ).toDF("producer", "topic", "time", "seq", "value")
-      .withColumn("day", expr("time div 86400000000000"))
-    Ingest.appendVersion(batchDf(1L), 1L, out, stats, Some(control))
-    Ingest.appendVersion(batchDf(10L), 2L, out, stats, Some(control))
-    def snapshot() = (
-      spark.read.parquet(out)
-        .select("producer", "topic", "time", "seq", "ingest_version")
-        .collect().map(_.toString).sorted.toSeq,
-      spark.read.parquet(stats).collect().map(_.toString).sorted.toSeq,
-      spark.read.parquet(control)
-        .drop("ingest_time_ns") // wall-clock stamp, legitimately varies
-        .collect().map(_.toString).sorted.toSeq)
-    val committed = snapshot()
-    assert(committed._1.size == 6)
-    // committed replay (crash AFTER the commit point, before the
-    // checkpoint commit): intent gone, ledger has v2 — must no-op
-    Ingest.appendVersion(batchDf(10L), 2L, out, stats, Some(control))
-    assert(snapshot() == committed,
-      "a committed replay must change nothing")
-    // half-committed replay: resurrect the intent marker — as if the
-    // attempt crashed between its writes and the commit point — and
-    // re-deliver. The scrub must remove BOTH versions' duplicates of
-    // v2 rows (data, stat partials, control) before rewriting, ending
-    // at exactly one copy; the day=1 partition of /veh/pose is wholly
-    // owned by v2, exercising the delete-outright branch
-    val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // plant the debris a real crash leaves: the replayed attempt's
-    // DATA write landed (duplicate v2 rows on disk), sidecars did not
-    batchDf(10L).withColumn("ingest_version", lit(2L))
-      .write.mode("append").partitionBy("topic", "day").parquet(out)
-    assert(spark.read.parquet(out).count() == 9,
-      "the planted duplicates must be visible before the heal")
-    fs.mkdirs(new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(out), "_ingest_intent_v2"))
-    Ingest.appendVersion(batchDf(10L), 2L, out, stats, Some(control))
-    assert(snapshot() == committed,
-      "a half-committed replay must scrub then rewrite to one copy")
-    // a scrub of a version with no rows is a no-op (idempotence face)
-    Ingest.scrubVersion(spark, 99L, out, stats, Some(control), None)
-    assert(snapshot() == committed)
-    // and the store still answers correctly through the catalog path
-    assert(spark.read.parquet(out)
+  /** (producer, topic, time, seq) rows of ingest version `v`, with a
+    * slashy topic whose partition directory name is escaped. */
+  private def batchDf(seqBase: Long) = Seq(
+    ("p0", "click", 10L * 1000000000L, seqBase, 1.0),
+    ("p0", "/veh/pose", 20L * 1000000000L, seqBase + 1, 3.0),
+    ("p0", "/veh/pose", 100000L * 1000000000L, seqBase + 2, 5.0)
+  ).toDF("producer", "topic", "time", "seq", "value")
+    .withColumn("day", expr("time div 86400000000000"))
+
+  /** Data, stat-partial and control rows of a store, sorted (the
+    * control rows' wall-clock stamp dropped). */
+  private def snapshot(cat: graft.model.IngestedCatalog) = (
+    cat.messages(spark)
+      .select("producer", "topic", "time", "seq", "ingest_version")
+      .collect().map(_.toString).sorted.toSeq,
+    cat.stats(spark).collect().map(_.toString).sorted.toSeq,
+    cat.control(spark).drop("ingest_time_ns")
+      .collect().map(_.toString).sorted.toSeq)
+
+  // exactly one copy across data, stats and control; slashy topics
+  // round-trip
+  test("replay after a crash at written, staged or committed") {
+    val clean = Files.createTempDirectory("graft-replay").toString
+    def append(base: String, v: Long) = Ingest.appendVersion(
+      batchDf(v * 10L), v, s"$base/out", s"$base/stats",
+      Some(s"$base/control"))
+    def cat(base: String) = new graft.model.IngestedCatalog(
+      s"$base/out", s"$base/stats", s"$base/control")
+    append(clean, 1L); append(clean, 2L)
+    val want = snapshot(cat(clean))
+    assert(want._1.size == 6 && want._3.size == 4)
+    // a replay of a committed version is a no-op
+    append(clean, 2L)
+    assert(snapshot(cat(clean)) == want)
+    assert(cat(clean).messages(spark)
       .where(col("topic") === "/veh/pose").count() == 4)
+    for (point <- Seq("written", "staged", "committed")) {
+      val base = Files.createTempDirectory(s"graft-replay-$point").toString
+      append(base, 1L)
+      graft.util.Maint.crashHook = (v, p) =>
+        if (v == "appendVersion" && p == point)
+          throw new IllegalStateException(s"crash at $p")
+      try intercept[IllegalStateException](append(base, 2L))
+      finally graft.util.Maint.crashHook = (_, _) => ()
+      append(base, 2L) // the stream's replay of the same batch
+      assert(snapshot(cat(base)) == want, s"crash at $point")
+    }
   }
 
-  test("scrub crash windows heal: a stranded sidecar trash sibling, a " +
-      "completed-but-unflipped sidecar tmp, a half-swapped partition " +
-      "dir, and an empty first-version root — no silent history " +
-      "loss, no crash loop") {
-    import org.apache.hadoop.fs.Path
-    val base = Files.createTempDirectory("graft-scrubheal").toString
+  test("the catalog's four faces read the schemas the directory-read " +
+      "layout gave: names, order and types") {
+    val base = Files.createTempDirectory("graft-schemas").toString
+    val in = s"$base/in"
+    val rows = Seq(
+      ("p0", "click", 3600L * 1000000000L + 5L, 1L, 1.0, "alpha"),
+      ("p0", "/veh/pose", 9L * 3600L * 1000000000L, 2L, 2.0, "beta"))
+      .toDF("producer", "topic", "time", "seq", "value", "props")
+    rows.write.parquet(in)
+    Ingest.startWithStats(spark,
+      spark.readStream.schema(rows.schema).parquet(in), s"$base/out",
+      s"$base/stats", s"$base/cp", Some(s"$base/control"),
+      Some((s"$base/fstats", Seq("value"), Seq("props"))))
+      .awaitTermination(120000)
+    val cat = new graft.model.IngestedCatalog(s"$base/out",
+      s"$base/stats", s"$base/control", Some(s"$base/fstats"))
+    // as `spark.read.parquet(<dir>)` read each tree before the manifest
+    // layout (partition columns last, `day` an int)
+    assert(cat.messages(spark).schema.toDDL == "producer STRING,time " +
+      "BIGINT,seq BIGINT,value DOUBLE,props STRING,ts_watermark " +
+      "TIMESTAMP,ingest_version BIGINT,topic STRING,day INT")
+    assert(cat.stats(spark).schema.toDDL == "producer STRING,topic " +
+      "STRING,bucket BIGINT,msg_count BIGINT,num_count BIGINT,num_min " +
+      "DOUBLE,num_max DOUBLE,num_sum DECIMAL(38,6),min_time BIGINT," +
+      "max_time BIGINT,sketch MAP<INT, BIGINT>,width_ns BIGINT," +
+      "ingest_version BIGINT")
+    assert(cat.fieldStats.get(spark).schema.toDDL == "producer STRING," +
+      "topic STRING,bucket BIGINT,value__count BIGINT,value__min DOUBLE," +
+      "value__max DOUBLE,value__sum DECIMAL(38,6),value__sketch MAP<INT, " +
+      "BIGINT>,props__tmin STRING,props__tmax STRING,props__trgm0 BIGINT," +
+      "props__trgm1 BIGINT,msg_count BIGINT,min_time BIGINT,max_time " +
+      "BIGINT,width_ns BIGINT,ingest_version BIGINT")
+    assert(cat.control(spark).schema.toDDL == "producer STRING,topic " +
+      "STRING,msg_count BIGINT,min_time BIGINT,max_time BIGINT," +
+      "ingest_version BIGINT,ingest_time_ns BIGINT")
+    assert(cat.messages(spark).count() == 2)
+  }
+
+  test("a data dir holding parquet but no manifest fails every face " +
+      "loudly") {
+    val base = Files.createTempDirectory("graft-premanifest").toString
+    batchDf(1L).withColumn("ingest_version", lit(1L))
+      .write.partitionBy("topic", "day").parquet(s"$base/out")
+    val cat = new graft.model.IngestedCatalog(
+      s"$base/out", s"$base/stats", s"$base/control")
+    val faces: Seq[() => Any] = Seq(() => cat.messages(spark),
+      () => cat.stats(spark), () => cat.control(spark),
+      () => cat.producers(spark, Seq("click")),
+      () => Ingest.optimize(spark, s"$base/out"),
+      () => Ingest.appendVersion(batchDf(1L), 2L, s"$base/out",
+        s"$base/stats", Some(s"$base/control")))
+    for (f <- faces) {
+      val e = intercept[IllegalArgumentException](f())
+      assert(e.getMessage.contains("built before the manifest layout"),
+        e.getMessage)
+    }
+  }
+
+  test("every job of appendVersion, importMcap and optimize is named " +
+      "ingest:<verb>:<step>") {
+    val base = Files.createTempDirectory("graft-ingest-jobs").toString
     val (out, stats, control) =
       (s"$base/out", s"$base/stats", s"$base/control")
-    def batchDf(seqBase: Long) = Seq(
-      ("p0", "click", 10L * 1000000000L, seqBase, 1.0),
-      ("p0", "/veh/pose", 20L * 1000000000L, seqBase + 1, 3.0),
-      ("p0", "/veh/pose", 100000L * 1000000000L, seqBase + 2, 5.0)
-    ).toDF("producer", "topic", "time", "seq", "value")
-      .withColumn("day", expr("time div 86400000000000"))
-    Ingest.appendVersion(batchDf(1L), 1L, out, stats, Some(control))
-    Ingest.appendVersion(batchDf(10L), 2L, out, stats, Some(control))
-    def snapshot() = (
-      spark.read.parquet(out)
-        .select("producer", "topic", "time", "seq", "ingest_version")
-        .collect().map(_.toString).sorted.toSeq,
-      spark.read.parquet(stats).collect().map(_.toString).sorted.toSeq,
-      spark.read.parquet(control).drop("ingest_time_ns")
-        .collect().map(_.toString).sorted.toSeq)
-    val committed = snapshot()
-    val fs = new Path(out).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    def resurrectIntent(): Unit = fs.mkdirs(
-      new Path(new Path(out), "_ingest_intent_v2"))
-
-    // (1) sidecar mid-swap, tmp lost: live stats sit ONLY in the trash
-    // sibling (the crash between the flip's two renames). A bare
-    // absent-root return here permanently stranded v1's partials and
-    // rebuilt the sidecar with only v2's.
-    assert(fs.rename(new Path(stats), new Path(stats + ".scrub-trash")))
-    resurrectIntent()
-    Ingest.appendVersion(batchDf(10L), 2L, out, stats, Some(control))
-    assert(snapshot() == committed,
-      "trash-sibling heal must restore every version's sidecar history")
-    assert(!fs.exists(new Path(stats + ".scrub-trash")))
-
-    // (2) sidecar mid-swap, tmp present: live renamed away with the
-    // rewrite's tmp still on disk. The heal restores the TRASH (the
-    // full original) and re-runs this call's filter-rewrite, never
-    // completing the tmp — the rewrite is version-parameterized, so a
-    // crashed attempt's tmp could carry a different version's filter.
-    // Here the tmp deliberately filters the WRONG version (1, not the
-    // replay's 2): a tmp-completing heal would strand v2's partials
-    // and keep v1's stale copy; restore-and-rerun is invariant to it.
-    spark.read.parquet(stats).where(col("ingest_version") =!= 1L)
-      .write.parquet(stats + ".scrub")
-    assert(fs.rename(new Path(stats), new Path(stats + ".scrub-trash")))
-    resurrectIntent()
-    Ingest.appendVersion(batchDf(10L), 2L, out, stats, Some(control))
-    assert(snapshot() == committed,
-      "trash-restore heal must re-run this call's rewrite, never " +
-        "complete a crashed tmp whose version may differ")
-    assert(!fs.exists(new Path(stats + ".scrub")) &&
-      !fs.exists(new Path(stats + ".scrub-trash")))
-
-    // (3) data-tree mid-swap: one live partition dir sits ONLY under
-    // the shared .swap_old park root (the crash between original->
-    // park and rewritten->live). The old delete-then-rename shape
-    // lost the remainder here.
-    val topicDir = fs.listStatus(new Path(out))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("topic="))
-      .head.getPath
-    val dayDir = fs.listStatus(topicDir)
-      .filter(_.getPath.getName.startsWith("day=")).head.getPath
-    val parked = new Path(new Path(new Path(out), ".swap_old"),
-      s"${topicDir.getName}/${dayDir.getName}")
-    fs.mkdirs(parked.getParent)
-    assert(fs.rename(dayDir, parked))
-    resurrectIntent()
-    Ingest.appendVersion(batchDf(10L), 2L, out, stats, Some(control))
-    assert(snapshot() == committed,
-      "a half-swapped partition must heal from .swap_old, then re-scrub")
-    assert(!fs.exists(new Path(new Path(out), ".swap_old")))
-
-    // (4) first-version crash before any data committed: the root
-    // holds ONLY the intent marker — the scrub must treat the
-    // unreadable tree as nothing-to-scrub (an uncaught
-    // UNABLE_TO_INFER_SCHEMA here crash-looped the stream), and the
-    // rewrite must land v1 exactly once
-    val (out2, stats2, control2) =
-      (s"$base/out2", s"$base/stats2", s"$base/control2")
-    fs.mkdirs(new Path(new Path(out2), "_ingest_intent_v1"))
-    Ingest.appendVersion(batchDf(1L), 1L, out2, stats2, Some(control2))
-    assert(spark.read.parquet(out2).count() == 3)
-    assert(spark.read.parquet(control2)
-      .select("ingest_version").distinct().collect()
-      .map(_.getLong(0)).toSeq == Seq(1L))
+    val w = new graft.mcap.Mcap.Writer()
+    w.writeSchema(graft.mcap.Mcap.SchemaRec(1, "pkg/t", "ros1msg",
+      "int16 c".getBytes))
+    w.writeChannel(graft.mcap.Mcap.ChannelRec(0, 1, "click", "ros1"))
+    for (t <- 1L to 3L)
+      w.writeMessage(graft.mcap.Mcap.MessageRec(0, t, t, t,
+        Array[Byte](t.toByte, 0)))
+    Files.write(java.nio.file.Paths.get(s"$base/in.mcap"), w.finish())
+    val sc = spark.sparkContext
+    val (_, jobs) = JobLog.record(sc) {
+      Ingest.appendVersion(batchDf(1L), 1L, out, stats, Some(control))
+      Ingest.appendVersion(batchDf(10L), 2L, out, stats, Some(control))
+      Ingest.importMcap(spark, "p1", s"$base/in.mcap", out, stats, control)
+      Ingest.optimize(spark, out, maxFilesPerPartition = 1)
+    }
+    val descs = jobs.map(_.desc)
+    assert(descs.nonEmpty && descs.forall(_.nonEmpty), descs)
+    for (verb <- Seq("appendVersion", "importMcap", "optimize"))
+      assert(descs.exists(_.startsWith(s"ingest:$verb:")), descs)
+    assert(descs.forall(_.matches("ingest:[A-Za-z]+:[a-z]+")), descs)
   }
 
   test("import into a fieldStats store pads missing fields with typed " +
@@ -334,7 +318,9 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(v == 1L)
     // the partials carry the declared field shapes with null stats —
     // "no finite values", which the statfilter must treat as keep
-    val p = spark.read.parquet(fstats)
+    val cat = new graft.model.IngestedCatalog(out, stats, control,
+      fieldStatsDir = Some(fstats))
+    val p = cat.fieldStats.get(spark)
     assert(Set("props__tmin", "props__trgm0", "value__min")
       .subsetOf(p.columns.toSet))
     val row = p.where(col("ingest_version") === 1L).collect().head
@@ -343,8 +329,6 @@ class StreamingIngestSpec extends AnyFunSuite {
     // coverage is provable (the version wrote partials), pruning
     // engages, and a stats-backed filter stays EXACT: null stats keep
     // the bucket, the row predicate decides
-    val cat = new graft.model.IngestedCatalog(out, stats, control,
-      fieldStatsDir = Some(fstats))
     val svc = new graft.api.Dp3Service(cat, s => cat.messages(s),
       Some(graft.api.IngestStore(cat)))
     assert(svc.query(spark,

@@ -29,31 +29,40 @@ object TestSpark {
       .filter(_.contains("PushedFilters"))
       .exists(_.contains("GreaterThanOrEqual(time,"))
 
+  /** Append `df` (canonical columns) to the ingest store under `base`
+    * as ingest version `v`, through `Ingest.appendVersion`: data, stat
+    * partials and control rows, plus per-field `value` partials when
+    * `fieldStats`. */
+  def ingest(base: String, v: Long, df: DataFrame,
+      fieldStats: Boolean = false): Unit =
+    graft.streaming.Ingest.appendVersion(
+      df.withColumn("day", org.apache.spark.sql.functions.expr(
+        "time div 86400000000000")), v,
+      s"$base/data", s"$base/stats", Some(s"$base/control"),
+      Some((s"$base/fstats", Seq("value"), Seq.empty[String]))
+        .filter(_ => fieldStats))
+
+  /** The catalog of the ingest store under `base`, reading the
+    * per-field partials when `fieldStats`. */
+  def ingestedCatalog(base: String, fieldStats: Boolean = false)
+      : graft.model.IngestedCatalog =
+    new graft.model.IngestedCatalog(s"$base/data", s"$base/stats",
+      s"$base/control", Some(s"$base/fstats").filter(_ => fieldStats))
+
   /** An ingested store under a fresh temp dir (returned with its
     * catalog): `p0`'s click table with three rows in version 1 —
     * (10 s, 1.0) and (20 s, 2.0) in base bucket 0, (70 s, 4.0) in
-    * bucket 1 — plus the version's base-tier partials and control
-    * row. */
+    * bucket 1 — plus the version's base-tier and per-field `value`
+    * partials and control rows. */
   def smallStore(tag: String): (String, graft.model.IngestedCatalog) = {
     val s = spark
     import s.implicits._
-    import org.apache.spark.sql.functions.lit
-    import graft.stats.StatTiers
     val base = java.nio.file.Files.createTempDirectory(tag).toString
-    val v1 = Seq(("p0", "click", 10L * 1000000000L, 1L, 1.0),
+    ingest(base, 1L, Seq(("p0", "click", 10L * 1000000000L, 1L, 1.0),
       ("p0", "click", 20L * 1000000000L, 2L, 2.0),
       ("p0", "click", 70L * 1000000000L, 3L, 4.0))
-      .toDF("producer", "topic", "time", "seq", "value")
-      .withColumn("ingest_version", lit(1L))
-    v1.write.parquet(s"$base/data")
-    StatTiers.base(v1, StatTiers.BaseWidthNs)
-      .withColumn("ingest_version", lit(1L))
-      .write.parquet(s"$base/stats")
-    Seq(("p0", "click", 1L, 1000L))
-      .toDF("producer", "topic", "ingest_version", "ingest_time_ns")
-      .write.parquet(s"$base/control")
-    (base, new graft.model.IngestedCatalog(
-      s"$base/data", s"$base/stats", s"$base/control"))
+      .toDF("producer", "topic", "time", "seq", "value"), fieldStats = true)
+    (base, ingestedCatalog(base, fieldStats = true))
   }
 
   /** The reference's all-primitives fixture (reference:
