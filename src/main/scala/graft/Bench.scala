@@ -28,16 +28,8 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.util.LocalSession.defaultCores
+    val spark = graft.util.LocalSession(cpus)
     // Warm the JVM before timing anything: file-listing caches, parquet
     // reader, whole-stage codegen compiler, shuffle + window machinery.
     // Without this the alphabetically-first heavy query absorbs several
@@ -53,15 +45,12 @@ object Bench {
           Window.partitionBy(col("n_regionkey")).orderBy(col("c"))))
         .count()
     }
-    // Iterative operators (Dedup.clusters) hand back cache-backed
-    // results whose lifetime the consumer owns: free them once the
-    // action completes, then FAIL LOUDLY if anything is still pinned —
-    // a leak here silently taxes every later query's time (the r4
-    // bench doubled exactly this way).
+    // Registry entries drop their operators' pin handles (the harness
+    // sweeps): free the blocks once the action completes, then FAIL
+    // LOUDLY if anything is still pinned — a leak here silently taxes
+    // every later query's time (the r4 bench doubled exactly this way).
     def releaseCaches(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.sharedState.cacheManager.clearCache()
+      graft.util.LocalSession.sweep(spark)
       val leaked = spark.sparkContext.getPersistentRDDs
       require(leaked.isEmpty,
         s"persistent RDDs leaked past cleanup: ${leaked.keys.mkString(",")}")
@@ -102,7 +91,7 @@ object Bench {
     // (workload shared with the scale probes via ProbeGuard — one
     // audited copy, so a probe's canary is comparable to the bench's)
     def canary(): Double =
-      graft.util.ProbeGuard.canaryCpu(spark, cpus.toInt)
+      graft.util.ProbeGuard.canaryCpu(spark, cpus)
     // Second canary FACE: fixed parquet scan + one shuffle + agg.
     // The CPU canary cannot certify a run whose variance lives in the
     // filesystem, page cache, or task scheduling: round 14 ran
@@ -114,7 +103,7 @@ object Bench {
     // total comparisons divide by BOTH canaries to attribute drift.
     def canaryIo(): Double =
       graft.util.ProbeGuard.canaryIo(spark, s"$sfDir/orders.parquet",
-        "o_custkey", cpus.toInt)
+        "o_custkey", cpus)
     // 1-minute load average — the machine-contention tell. The r6
     // driver bench ran concurrently with a builder session and recorded
     // 54.9 s where an idle replication measures 19 s; emitting load

@@ -20,16 +20,7 @@ object PlanDump {
     val names = args.drop(2).toSeq
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
     for (name <- names) {
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query '$name'"))
@@ -45,9 +36,7 @@ object PlanDump {
         w.println(txt)
       } finally w.close()
       println(s"[plandump] wrote $f")
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.sharedState.cacheManager.clearCache()
+      graft.util.LocalSession.sweep(spark)
     }
     spark.stop()
   }

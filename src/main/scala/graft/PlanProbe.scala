@@ -13,23 +13,10 @@ object PlanProbe {
     val name = args(0)
     val sfDir =
       if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name'"))
-    def sweep(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.sharedState.cacheManager.clearCache()
-    }
+    def sweep(): Unit = graft.util.LocalSession.sweep(spark)
     // warm pass (JIT, codegen, file listings) — forced through the
     // full-column hash like Bench: a bare count() lets Catalyst
     // join-eliminate/prune exactly the subtrees being diagnosed, so

@@ -23,6 +23,10 @@ import graft.streaming.Lifecycle
   *    only become doubles at the end, via the same final expression;
   *  - approximate scores (cosine) are rounded to 6 dp BEFORE ranking;
   *  - every result carries its own ORDER BY keys.
+  *
+  * Pin contract: an entry returns only its frame. The pin handles of
+  * the operators it composes are dropped; the harness consumes the
+  * frame, then sweeps ([[graft.util.LocalSession.sweep]]).
   */
 object SparkEntry {
 
@@ -588,17 +592,17 @@ object SparkEntry {
 
     "d_jaccard_pairs" -> ((s, dir) =>
       Dedup.jaccardPairs(Tables.load(s, dir, "documents"), k = 3,
-        threshold = 0.5, maxDf = ShingleMaxDf)
+        threshold = 0.5, maxDf = ShingleMaxDf)._1
         .orderBy("id_a", "id_b")),
 
     "d_dedup_clusters" -> ((s, dir) => {
       // the full near-dup pipeline: pairs -> connected components ->
       // cluster representative (min id) per document
       val docs = Tables.load(s, dir, "documents")
-      val pairs = Dedup.jaccardPairs(docs, k = 3, threshold = 0.5,
+      val (pairs, _) = Dedup.jaccardPairs(docs, k = 3, threshold = 0.5,
         maxDf = ShingleMaxDf)
-      Dedup.clusters(docs.select("doc_id"), pairs)
-        .orderBy("doc_id")
+      val (labels, _) = Dedup.clusters(docs.select("doc_id"), pairs)
+      labels.orderBy("doc_id")
     }),
 
     "d_dedup_corpus" -> ((s, dir) => {
@@ -615,7 +619,7 @@ object SparkEntry {
       // intersection/union sizes + integer-ppm jaccard/containments
       // per source pair; candidate volume is |vocab| x G^2-bounded,
       // doc-count-independent (the pre-mix contamination report)
-      Dedup.corpusOverlap(Tables.load(s, dir, "documents"), k = 3)
+      Dedup.corpusOverlap(Tables.load(s, dir, "documents"), k = 3)._1
         .orderBy("group_a", "group_b")),
 
     "d_source_overlap_est" -> ((s, dir) =>
@@ -623,7 +627,7 @@ object SparkEntry {
       // pairwise source Jaccard from a G x 64 signature matrix — one
       // corpus pass, control-plane pair join (the large-G path)
       Dedup.corpusOverlapSketch(Tables.load(s, dir, "documents"),
-          k = 3, numHashes = 64)
+          k = 3, numHashes = 64)._1
         .orderBy("group_a", "group_b")),
 
     "d_semantic_dedup" -> ((s, dir) => {
@@ -671,7 +675,7 @@ object SparkEntry {
       Dedup.crossCorpusPairs(
         docs.where(col("doc_id") % 2 === 1),
         docs.where(col("doc_id") % 2 === 0),
-        k = 3, threshold = 0.5, maxDf = ShingleMaxDf)
+        k = 3, threshold = 0.5, maxDf = ShingleMaxDf)._1
         .orderBy("new_id", "ref_id")
     }),
 
@@ -707,13 +711,13 @@ object SparkEntry {
       val fresh = docs.where(col("doc_id") % 2 === 1)
         .unionByName(planted)
       Bloom.dedupAgainstCorpusBloom(fresh, ref, nBuckets = 64,
-        nWords = 4, kHashes = 4)
+        nWords = 4, kHashes = 4)._1
         .select("doc_id").orderBy("doc_id")
     }),
 
     "d_minhash_lsh" -> ((s, dir) =>
       Dedup.minhashLshCandidates(Tables.load(s, dir, "documents"),
-        k = 3, numHashes = 8, bands = 4, maxDf = ShingleMaxDf)
+        k = 3, numHashes = 8, bands = 4, maxDf = ShingleMaxDf)._1
         .orderBy("id_a", "id_b")),
 
     "d_simhash" -> ((s, dir) =>
@@ -730,14 +734,14 @@ object SparkEntry {
     // quadratic signature bucket
     "d_simhash_pairs" -> ((s, dir) =>
       Dedup.simhashPairs(Tables.load(s, dir, "documents"),
-        bands = 4, maxHamming = 1, maxBucket = 100)
+        bands = 4, maxHamming = 1, maxBucket = 100)._1
         .orderBy("id_a", "id_b")),
 
     // substring-level dedup: docs sharing >= 2 distinct 8-token window
     // fingerprints (the planted near-dups at sf0.01; no window is hot)
     "d_overlap_pairs" -> ((s, dir) =>
       Dedup.overlapPairs(Tables.load(s, dir, "documents"),
-        w = 8, minShared = 2L)
+        w = 8, minShared = 2L)._1
         .orderBy("id_a", "id_b")),
 
     // passage-level duplicate-text REMOVAL (Lee et al. 2021): every
@@ -812,7 +816,7 @@ object SparkEntry {
       // filter on survivors
       Similarity.srpCandidatePairs(Tables.load(s, dir, "embeddings"),
         dims = 64, nBits = 32, bands = 4, threshold = 0.3,
-        maxBucket = 600)
+        maxBucket = 600)._1
         .orderBy("id_a", "id_b")),
 
     // --- similarity search ----------------------------------------------
@@ -961,9 +965,9 @@ object SparkEntry {
       // (keeps 1) and soft weighting (keeps all, down-weighted);
       // survivors are the deterministic md5-salted per-key choice
       val docs = Tables.load(s, dir, "documents")
-      val pairs = Dedup.jaccardPairs(docs, k = 3, threshold = 0.5,
+      val (pairs, _) = Dedup.jaccardPairs(docs, k = 3, threshold = 0.5,
         maxDf = ShingleMaxDf)
-      val labels = Dedup.clusters(docs.select("doc_id"), pairs)
+      val (labels, _) = Dedup.clusters(docs.select("doc_id"), pairs)
       Curate.capPerKey(labels, keyCol = "cluster", cap = 2)
         .select("doc_id", "cluster").orderBy("doc_id")
     }),
@@ -973,9 +977,9 @@ object SparkEntry {
       // clusters of each size — the health report that decides
       // between hard dedup, capping, and soft weighting
       val docs = Tables.load(s, dir, "documents")
-      val pairs = Dedup.jaccardPairs(docs, k = 3, threshold = 0.5,
+      val (pairs, _) = Dedup.jaccardPairs(docs, k = 3, threshold = 0.5,
         maxDf = ShingleMaxDf)
-      Dedup.clusters(docs.select("doc_id"), pairs)
+      Dedup.clusters(docs.select("doc_id"), pairs)._1
         .groupBy(col("cluster")).agg(count(lit(1)).as("sz"))
         .groupBy(col("sz").as("cluster_size"))
         .agg(count(lit(1)).as("n_clusters"))
@@ -995,9 +999,9 @@ object SparkEntry {
       // size (weight_ppm = floor(1e6/|cluster|)) — the reweighting
       // alternative to dropping borderline near-dups
       val docs = Tables.load(s, dir, "documents")
-      val pairs = Dedup.jaccardPairs(docs, k = 3, threshold = 0.5,
+      val (pairs, _) = Dedup.jaccardPairs(docs, k = 3, threshold = 0.5,
         maxDf = ShingleMaxDf)
-      Dedup.softDedupWeights(docs.select("doc_id"), pairs)
+      Dedup.softDedupWeights(docs.select("doc_id"), pairs)._1
         .orderBy("doc_id")
     }),
 
@@ -1007,9 +1011,9 @@ object SparkEntry {
       // can never straddle splits (eval decontamination by
       // construction — a doc-keyed split leaks every duplicate pair)
       val docs = Tables.load(s, dir, "documents")
-      val pairs = Dedup.jaccardPairs(docs, k = 3, threshold = 0.5,
+      val (pairs, _) = Dedup.jaccardPairs(docs, k = 3, threshold = 0.5,
         maxDf = ShingleMaxDf)
-      val labels = Dedup.clusters(docs.select("doc_id"), pairs)
+      val (labels, _) = Dedup.clusters(docs.select("doc_id"), pairs)
       Sampling.split(labels,
           Seq("train" -> 0.8, "valid" -> 0.1, "test" -> 0.1),
           idCol = "cluster")
@@ -1146,14 +1150,14 @@ object SparkEntry {
         default = 0.75)
         .select("doc_id", "text", "lang", "source")
       val (kept, _) = Curate.dedupNearDup(curated, k = 3,
-        threshold = 0.5, maxDf = ShingleMaxDf) // caller-sweeps pin
+        threshold = 0.5, maxDf = ShingleMaxDf) // the harness sweeps
       // pin the surviving mixture: heavily-reduced (survivor rows of
       // id+text+lang) below an expensive subtree (gate + cluster BSP
       // + semi-join), with THREE control-plane consumers downstream
       // (BPE train collect, vocab collect, the final encode+pack) —
       // without it the whole chain re-executes per job. Measured
       // isolated A/B at sf0.1: 13.1 s unpinned vs 8.8-9.1 s pinned
-      // at equal canaries (~1.45x). Caller-sweeps, like every
+      // at equal canaries (~1.45x). The harness sweeps it, like every
       // registry pin.
       val (mixed, _) = graft.pipeline.Dedup.pinNow(
         Sampling.temperatureSample(kept, "lang"))
@@ -1547,7 +1551,7 @@ object SparkEntry {
       val docs = Tables.load(s, dir, "documents")
       Select.dsirWeightsPred(docs,
         col("source").isin("src1", "src3", "src5"),
-        buckets = 1024).orderBy("doc_id")
+        buckets = 1024)._1.orderBy("doc_id")
     }),
 
     // per-source scoring totals — what one genuine scoring pass
@@ -1560,7 +1564,7 @@ object SparkEntry {
       val docs = Tables.load(s, dir, "documents")
       Select.dsirWeightsPred(docs,
         col("source").isin("src1", "src3", "src5"),
-        buckets = 1024)
+        buckets = 1024)._1
         .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.streaming.CorpusDedup
@@ -36,21 +36,11 @@ object StreamMaintProbe {
     // where row-group splitting keeps scans parallel.
     val targetBytes =
       (if (args.length > 4) args(4).toLong else 1L) << 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.util.LocalSession.defaultCores
+    val spark = graft.util.LocalSession(cpus)
     val base = s"/tmp/graft_maint_probe_${System.nanoTime()}"
 
-    def sweep(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.sharedState.cacheManager.clearCache()
-    }
+    def sweep(): Unit = graft.util.LocalSession.sweep(spark)
     // live `version` values of a manifest store's tree: the files its
     // newest manifest lists, not the dirs on disk
     def versionCount(root: String, tree: String): Int =
@@ -100,9 +90,9 @@ object StreamMaintProbe {
         // window shift between them would otherwise read as a
         // compaction effect — bracket each curve with both canaries
         // and print them next to its decile means
-        val c0 = graft.util.ProbeGuard.canaryCpu(spark, cpus.toInt)
+        val c0 = graft.util.ProbeGuard.canaryCpu(spark, cpus)
         val io0 = graft.util.ProbeGuard.canaryIo(spark, docsPath,
-          "doc_id", cpus.toInt)
+          "doc_id", cpus)
         val times = (0 until nBatches).map { i =>
           val b = if (name == "semantic") vecBatch(i) else batchDf(i)
           val t0 = System.nanoTime()
@@ -115,9 +105,9 @@ object StreamMaintProbe {
             f"versions=${versionCount(s"$dir-side", "rows")}%d")
           dt
         }
-        val c1 = graft.util.ProbeGuard.canaryCpu(spark, cpus.toInt)
+        val c1 = graft.util.ProbeGuard.canaryCpu(spark, cpus)
         val io1 = graft.util.ProbeGuard.canaryIo(spark, docsPath,
-          "doc_id", cpus.toInt)
+          "doc_id", cpus)
         val dec = math.max(1, nBatches / 10)
         val means = times.grouped(dec).map(g => g.sum / g.size).toSeq
         println(s"[probe] $name $mode decile_means=" +
@@ -169,7 +159,7 @@ object StreamMaintProbe {
       val enc = docs.select(col("doc_id"),
         graft.pipeline.TextOps.md5TokenIds(col("text"), 997)
           .as("bpe_ids"))
-      val c0 = graft.util.ProbeGuard.canaryCpu(spark, cpus.toInt)
+      val c0 = graft.util.ProbeGuard.canaryCpu(spark, cpus)
       val tb = System.nanoTime()
       SequenceShards.appendBatch(spark, enc, 1L, store,
         seqLen = 128, nBuckets = 8, eosId = 997L, segSize = 256)
@@ -202,7 +192,7 @@ object StreamMaintProbe {
       }
       // steady-state curve over arbitrary splice positions
       val curve = cand.slice(1000, 1020).map(c => appendOne(c._1))
-      val c1 = graft.util.ProbeGuard.canaryCpu(spark, cpus.toInt)
+      val c1 = graft.util.ProbeGuard.canaryCpu(spark, cpus)
       println(f"[probe] shards build=$buildSec%.2f " +
         f"early_mean=${early.sum / early.size}%.2f " +
         f"late_mean=${late.sum / late.size}%.2f " +
@@ -227,7 +217,7 @@ object StreamMaintProbe {
       sweep()
       val vPost = docVersions()
       val postFold = cand.slice(1030, 1040).map(c => appendOne(c._1))
-      val c2 = graft.util.ProbeGuard.canaryCpu(spark, cpus.toInt)
+      val c2 = graft.util.ProbeGuard.canaryCpu(spark, cpus)
       println(f"[probe] shards fold=$foldSec%.2f " +
         f"versions=$vPre%d->$vPost%d " +
         f"prefold_mean=${preFold.sum / preFold.size}%.2f " +

@@ -1,8 +1,7 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
-
 import graft.tools.Inspect
+import graft.util.LocalSession
 
 /** The reference's local storage-inspection verbs (`dp3 treeinspect`,
   * `dp3 walinspect` — cli/cmd/treeinspect.go, walinspect.go) as one
@@ -30,13 +29,7 @@ object Dp3Inspect {
     }
     positional.toList match {
       case "tree" :: dir :: Nil =>
-        val spark = SparkSession.builder()
-          .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-          .appName("dp3-inspect")
-          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = LocalSession()
         try Inspect.printTree(spark, dir, Console.out,
           flags.get("--topic"))
         finally spark.stop()

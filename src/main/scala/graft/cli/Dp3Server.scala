@@ -1,9 +1,8 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
-
 import graft.api.{Dp3Http, Dp3Service, IngestStore}
 import graft.model.{EventsCatalog, IngestedCatalog}
+import graft.util.LocalSession
 
 /** The reference's `dp3 server` verb (reference: cli/cmd/server.go:38,
   * default port 8089): boot a local SparkSession, front a catalog with
@@ -24,19 +23,8 @@ object Dp3Server {
       case Array(k, v) if k.startsWith("--") => k -> v
     }.toMap
     val port = flags.getOrElse("--port", "8089").toInt
-    val cpus = flags.getOrElse("--cpus",
-      Runtime.getRuntime.availableProcessors().toString)
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("dp3-server")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(
+      flags.get("--cpus").fold(LocalSession.defaultCores)(_.toInt))
 
     val (svc, importTarget) = (flags.get("--ingest-dir"),
         flags.get("--events-dir")) match {

@@ -421,20 +421,18 @@ object BpeFunctions {
 
   def register(spark: SparkSession, table: BpeTable): String = {
     val name = countNameFor(table)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => {
-        // validate arity with a real message (the GopherFunctions.build
-        // discipline): a SQL-text caller with the wrong argument count
-        // must get an analysis-time complaint, never an internal
-        // NoSuchElementException from a bare exprs.head (the child's
-        // string type is checked by checkInputDataTypes)
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"$name expects exactly one argument (word), " +
-              s"got ${exprs.length}")
-        BpeTokenCount(exprs.head, table)
-      }, "scala_udf")
-    name
+    SessionFunctions.ensure(spark, name) { exprs =>
+      // validate arity with a real message (the GopherFunctions.build
+      // discipline): a SQL-text caller with the wrong argument count
+      // must get an analysis-time complaint, never an internal
+      // NoSuchElementException from a bare exprs.head (the child's
+      // string type is checked by checkInputDataTypes)
+      if (exprs.length != 1)
+        throw new IllegalArgumentException(
+          s"$name expects exactly one argument (word), " +
+            s"got ${exprs.length}")
+      BpeTokenCount(exprs.head, table)
+    }
   }
 
   /** BPE subword count of one word under `merges`, codegen'd; rank
@@ -453,15 +451,13 @@ object BpeFunctions {
   def registerIds(spark: SparkSession, table: BpeTable,
       vocab: BpeVocab): String = {
     val name = idsNameFor(table, vocab)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"$name expects exactly one argument (text), " +
-              s"got ${exprs.length}")
-        BpeEncodeIds(exprs.head, table, vocab)
-      }, "scala_udf")
-    name
+    SessionFunctions.ensure(spark, name) { exprs =>
+      if (exprs.length != 1)
+        throw new IllegalArgumentException(
+          s"$name expects exactly one argument (text), " +
+            s"got ${exprs.length}")
+      BpeEncodeIds(exprs.head, table, vocab)
+    }
   }
 
   /** BPE token-id sequence of one document under (merges, vocab),
@@ -481,15 +477,13 @@ object BpeFunctions {
 
   def registerDecode(spark: SparkSession, vocab: BpeVocab): String = {
     val name = decodeNameFor(vocab)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => {
-        if (exprs.length != 1)
-          throw new IllegalArgumentException(
-            s"$name expects exactly one argument (ids array), " +
-              s"got ${exprs.length}")
-        BpeDecodeIds(exprs.head, vocab)
-      }, "scala_udf")
-    name
+    SessionFunctions.ensure(spark, name) { exprs =>
+      if (exprs.length != 1)
+        throw new IllegalArgumentException(
+          s"$name expects exactly one argument (ids array), " +
+            s"got ${exprs.length}")
+      BpeDecodeIds(exprs.head, vocab)
+    }
   }
 
   /** Decoded token string of one id sequence under `vocabTokens`,

@@ -376,10 +376,8 @@ object GopherFunctions {
   }
 
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, build, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      repKeepName, buildRepKeep, "scala_udf")
+    SessionFunctions.ensure(spark, name)(build)
+    SessionFunctions.ensure(spark, repKeepName)(buildRepKeep)
   }
 
   /** struct of all 12 Gopher repetition signals, codegen'd */

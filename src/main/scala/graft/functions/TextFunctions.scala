@@ -102,8 +102,8 @@ object TextFunctions {
   val trgmName = "graft_trgm_masks"
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      trgmName, exprs => TrigramMasks(exprs.head), "scala_udf")
+    SessionFunctions.ensure(spark, trgmName)(
+      exprs => TrigramMasks(exprs.head))
 
   /** array<long> of the two 48-bit signature words, codegen'd. */
   def trgmMasks(text: Column): Column = {

@@ -306,10 +306,10 @@ object VectorFunctions {
 
   /** one-time, idempotent per-session registration */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      nameQ, exprs => DotQuantized(exprs(0), exprs(1)), "scala_udf")
+    SessionFunctions.ensure(spark, name)(
+      exprs => DotProduct(exprs(0), exprs(1)))
+    SessionFunctions.ensure(spark, nameQ)(
+      exprs => DotQuantized(exprs(0), exprs(1)))
   }
 
   /** dot(a, b) through the codegen'd native expression */
@@ -335,15 +335,13 @@ object VectorFunctions {
   def registerResidualCode(spark: SparkSession,
       table: ResidualCodebook): String = {
     val fname = residualCodeNameFor(table)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fname, exprs => {
-        if (exprs.length != 2)
-          throw new IllegalArgumentException(
-            s"$fname expects (sub, residual), got ${exprs.length} " +
-              s"argument${if (exprs.length == 1) "" else "s"}")
-        ResidualCode(exprs(0), exprs(1), table)
-      }, "scala_udf")
-    fname
+    SessionFunctions.ensure(spark, fname) { exprs =>
+      if (exprs.length != 2)
+        throw new IllegalArgumentException(
+          s"$fname expects (sub, residual), got ${exprs.length} " +
+            s"argument${if (exprs.length == 1) "" else "s"}")
+      ResidualCode(exprs(0), exprs(1), table)
+    }
   }
 
   /** argmin-L2 residual code id under `cb` ([sub][code][pos] µ-unit

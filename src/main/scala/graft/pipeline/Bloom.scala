@@ -101,10 +101,12 @@ object Bloom {
     * nBuckets = 1M) built once per corpus version with one map-side
     * combinable aggregation, then broadcast; the exact confirm join
     * touches only the hit fraction. The lexical-similarity sibling is
-    * [[Curate.dedupAgainstCorpus]]; this one is identity dedup. */
+    * [[Curate.dedupAgainstCorpus]]; this one is identity dedup.
+    * Returns [[dedupAgainstTier]]'s frame and pin handle: consume,
+    * then `release()`. */
   def dedupAgainstCorpusBloom(newDocs: DataFrame, refDocs: DataFrame,
       nBuckets: Int = 1024, nWords: Int = 4, kHashes: Int = 4,
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): (DataFrame, Dedup.PinHandle) = {
     val tier = bloomTier(refDocs, nBuckets, nWords, kHashes, textCol)
     val refFps = refDocs
       .select(TextOps.fingerprint(col(textCol)).as("_fp")).distinct()
@@ -120,19 +122,11 @@ object Bloom {
     * (bloom_bucket, bloom_w0..) built with the SAME
     * nBuckets/nWords/kHashes — partials are fine, bit_or-merged here;
     * `refFps` is the corpus fingerprint column `_fp` (need not be
-    * distinct). */
+    * distinct). Returns the surviving rows and the [[Dedup.PinHandle]]
+    * owning the pinned flagged batch: consume the frame, then
+    * `release()` — a streaming loop invoking this per micro-batch
+    * would otherwise accumulate pins for the life of the stream. */
   def dedupAgainstTier(newDocs: DataFrame, tier: DataFrame,
-      refFps: DataFrame, nBuckets: Int = 1024, nWords: Int = 4,
-      kHashes: Int = 4, textCol: String = "text"): DataFrame =
-    dedupAgainstTierOwned(newDocs, tier, refFps, nBuckets, nWords,
-      kHashes, textCol)._1
-
-  /** [[dedupAgainstTier]] plus the [[Dedup.PinHandle]] owning the
-    * pinned flagged batch — long-running callers (a streaming loop
-    * invoking this per micro-batch) MUST release after consuming or
-    * pins accumulate for the life of the stream; one-shot callers may
-    * use the plain variant and sweep. */
-  def dedupAgainstTierOwned(newDocs: DataFrame, tier: DataFrame,
       refFps: DataFrame, nBuckets: Int = 1024, nWords: Int = 4,
       kHashes: Int = 4, textCol: String = "text")
       : (DataFrame, Dedup.PinHandle) = {
@@ -152,8 +146,7 @@ object Bloom {
     // plan audit measured 8 source scans for the union-shaped
     // d_bloom_dedup batch). The pin is batch-sized by definition —
     // this operator exists to keep the CORPUS out of the join, not the
-    // batch. Caller sweeps (Bench/Verify releaseCaches) or releases
-    // the returned handle.
+    // batch. The caller releases the returned handle.
     val (flagged, pin) = Dedup.pinNow(joined.withColumn("_hit", hit))
     val clean = flagged.where(!col("_hit"))
     val confirmed = flagged.where(col("_hit"))

@@ -103,13 +103,13 @@ object Curate {
     * HERE (the BSP loop inside clusters runs eagerly, so the pairs are
     * fully consumed by the time it returns); the returned frame reads
     * the final label cache, whose handle the caller owns — consume,
-    * then `release()` (the [[Dedup.clustersOwned]] contract). */
+    * then `release()` (the [[Dedup.clusters]] contract). */
   def dedupNearDup(docs: DataFrame, k: Int, threshold: Double,
       maxDf: Int = Int.MaxValue, idCol: String = "doc_id",
       textCol: String = "text"): (DataFrame, Dedup.PinHandle) = {
-    val (pairs, pairsPin) = Dedup.jaccardPairsOwned(docs, k, threshold,
+    val (pairs, pairsPin) = Dedup.jaccardPairs(docs, k, threshold,
       idCol, textCol, maxDf = maxDf)
-    val (labels, labelsPin) = Dedup.clustersOwned(
+    val (labels, labelsPin) = Dedup.clusters(
       docs.select(col(idCol)), pairs, idCol)
     pairsPin.release() // consumed by the eager BSP loop above
     val canonical = labels.where(col(idCol) === col("cluster"))
@@ -129,7 +129,7 @@ object Curate {
       threshold: Double, maxDf: Int = Int.MaxValue,
       idCol: String = "doc_id", textCol: String = "text")
       : (DataFrame, Dedup.PinHandle) = {
-    val (pairs, pin) = Dedup.crossCorpusPairsOwned(newDocs, refDocs, k,
+    val (pairs, pin) = Dedup.crossCorpusPairs(newDocs, refDocs, k,
       threshold, idCol, textCol, maxDf = maxDf)
     // broadcast the flagged-id set EXPLICITLY: `pairs` descends from a
     // pinned LogicalRDD leaf, which carries no size statistics, so
@@ -162,7 +162,7 @@ object Curate {
       vecCol: String = "embedding"): (DataFrame, Dedup.PinHandle) = {
     val pairs = Similarity.cosineNearDupPairs(emb, threshold, cellCol,
       idCol, vecCol)
-    val (labels, labelsPin) = Dedup.clustersOwned(
+    val (labels, labelsPin) = Dedup.clusters(
       emb.select(col(idCol)), pairs, idCol)
     val canonical = labels.where(col(idCol) === col("cluster"))
       .select(col(idCol))

@@ -257,19 +257,9 @@ object Dedup {
     * exploded rows), each consumer explodes from the cache, and rows
     * carry their post-cap set size so the Jaccard denominator needs
     * no size aggregates or joins (see [[capArrays]]);
-    * the returned frame is therefore CACHE-BACKED and the caller owns
-    * the blocks' lifetime — consume, then release (Verify and Bench
-    * unpersist between queries), the same contract as [[clusters]].
-    * Library callers that don't sweep globally should use
-    * [[jaccardPairsOwned]] and `release()` the handle after consuming. */
+    * the returned frame is therefore CACHE-BACKED: it comes with the
+    * [[PinHandle]] owning the blocks — consume, then `release()`. */
   def jaccardPairs(df: DataFrame, k: Int, threshold: Double,
-      idCol: String = "doc_id", textCol: String = "text",
-      hashJoin: Boolean = true, maxDf: Int = Int.MaxValue): DataFrame =
-    jaccardPairsOwned(df, k, threshold, idCol, textCol, hashJoin, maxDf)._1
-
-  /** [[jaccardPairs]] plus the [[PinHandle]] owning the pinned
-    * exploded-shingle blocks: consume the frame, then `release()`. */
-  def jaccardPairsOwned(df: DataFrame, k: Int, threshold: Double,
       idCol: String = "doc_id", textCol: String = "text",
       hashJoin: Boolean = true, maxDf: Int = Int.MaxValue)
       : (DataFrame, PinHandle) = {
@@ -321,18 +311,10 @@ object Dedup {
     * sides together — boilerplate is hot regardless of which corpus it
     * sits in. In production the ref side's exploded shingle index is
     * the thing to persist between batches; here both sides derive from
-    * their frames. Returns (new_id, ref_id, jaccard); cache-backed —
-    * library callers use [[crossCorpusPairsOwned]] and `release()`. */
-  def crossCorpusPairs(newDocs: DataFrame, refDocs: DataFrame, k: Int,
-      threshold: Double, idCol: String = "doc_id",
-      textCol: String = "text", hashJoin: Boolean = true,
-      maxDf: Int = Int.MaxValue): DataFrame =
-    crossCorpusPairsOwned(newDocs, refDocs, k, threshold, idCol, textCol,
-      hashJoin, maxDf)._1
-
-  /** [[crossCorpusPairs]] plus the [[PinHandle]] owning the pinned
-    * two-sided shingle blocks: consume the frame, then `release()`. */
-  def crossCorpusPairsOwned(newDocs: DataFrame, refDocs: DataFrame,
+    * their frames. Returns (new_id, ref_id, jaccard) and the
+    * [[PinHandle]] owning the pinned two-sided shingle blocks: consume
+    * the frame, then `release()`. */
+  def crossCorpusPairs(newDocs: DataFrame, refDocs: DataFrame,
       k: Int, threshold: Double, idCol: String = "doc_id",
       textCol: String = "text", hashJoin: Boolean = true,
       maxDf: Int = Int.MaxValue): (DataFrame, PinHandle) = {
@@ -352,7 +334,7 @@ object Dedup {
     val refSide = capped.where(col("_side") === 0)
       .select(col("_id"), col("_n").as("nb"), explode(col("_arr")).as("sh"))
     val left = if (hashJoin) newSide.hint("shuffle_hash") else newSide
-    // the same length-filter join bound as [[jaccardPairsOwned]]
+    // the same length-filter join bound as [[jaccardPairs]]
     // (J >= t forces min/max set-size ratio >= t; t - 1e-6 slack
     // keeps the round-to-6 threshold boundary exact)
     val tSlack = threshold - 1e-6
@@ -399,30 +381,10 @@ object Dedup {
     *
     * Returns (group_a, group_b, common, union_size, jaccard_ppm,
     * cont_a_ppm, cont_b_ppm), one row per unordered group pair with at
-    * least one shared shingle; cache-backed — library callers use
-    * [[corpusOverlapOwned]] and `release()`. */
-  def corpusOverlap(df: DataFrame, k: Int, groupCol: String = "source",
-      textCol: String = "text", idCol: String = "doc_id",
-      maxGroups: Int = 1000): DataFrame =
-    corpusOverlapOwned(df, k, groupCol, textCol, idCol, maxGroups)._1
-
-  /** Exploded (group, shingle) rows — the ONE tokenize/shingle
-    * pipeline shared by the exact and sketch overlap faces, so their
-    * notions of "shingle" can never silently diverge. Spread by DOC
-    * id, not group: tokenize/shingle parallelism must scale with the
-    * corpus — G partitions would cap the expensive stage at |groups|
-    * tasks regardless of cluster size. */
-  private def groupShingles(df: DataFrame, k: Int, groupCol: String,
-      textCol: String, idCol: String): DataFrame =
-    spread(df.select(col(groupCol).as("_g"), col(idCol).as("_did"),
-        col(textCol)), "_did")
-      .select(col("_g"), TextOps.tokens(lower(col(textCol))).as("_toks"))
-      .select(col("_g"), explode(shinglesOfTokens(col("_toks"), k)).as("sh"))
-
-  /** [[corpusOverlap]] plus the [[PinHandle]] owning the pinned
+    * least one shared shingle, and the [[PinHandle]] owning the pinned
     * (group, shingle) index blocks: consume the frame, then
     * `release()`. */
-  def corpusOverlapOwned(df: DataFrame, k: Int,
+  def corpusOverlap(df: DataFrame, k: Int,
       groupCol: String = "source", textCol: String = "text",
       idCol: String = "doc_id", maxGroups: Int = 1000)
       : (DataFrame, PinHandle) = {
@@ -474,6 +436,19 @@ object Dedup {
         expr("common * 1000000L div sb.n").as("cont_b_ppm")) -> handle
   }
 
+  /** Exploded (group, shingle) rows — the ONE tokenize/shingle
+    * pipeline shared by the exact and sketch overlap faces, so their
+    * notions of "shingle" can never silently diverge. Spread by DOC
+    * id, not group: tokenize/shingle parallelism must scale with the
+    * corpus — G partitions would cap the expensive stage at |groups|
+    * tasks regardless of cluster size. */
+  private def groupShingles(df: DataFrame, k: Int, groupCol: String,
+      textCol: String, idCol: String): DataFrame =
+    spread(df.select(col(groupCol).as("_g"), col(idCol).as("_did"),
+        col(textCol)), "_did")
+      .select(col("_g"), TextOps.tokens(lower(col(textCol))).as("_toks"))
+      .select(col("_g"), explode(shinglesOfTokens(col("_toks"), k)).as("sh"))
+
   /** Sketch face of [[corpusOverlap]]: MinHash-ESTIMATED pairwise
     * group Jaccard from `numHashes` per-group signature components —
     * P(component match) = J, so matches/numHashes is an unbiased
@@ -509,37 +484,15 @@ object Dedup {
     * so no distinct pass is needed. Returns (group_a, group_b,
     * matches, est_jaccard_ppm) for pairs with at least one matching
     * component (est >= 1/H; pairs below that resolution emit
-    * nothing). */
-  def corpusOverlapSketch(df: DataFrame, k: Int, numHashes: Int = 64,
-      groupCol: String = "source", textCol: String = "text",
-      idCol: String = "doc_id",
-      maxLocalGroups: Int = 10000): DataFrame = {
-    val (out, handle, local) = corpusOverlapSketchImpl(df, k, numHashes,
-      groupCol, textCol, idCol, maxLocalGroups)
-    handle.release()
-    if (!local)
-      // releasing the pin before consumption would silently re-run
-      // the corpus pass once per self-join side (the exchange-reuse
-      // disease) — the plain face refuses the large-G path instead,
-      // like corpusOverlap's maxGroups guard
-      throw new IllegalArgumentException(
-        s"corpusOverlapSketch: group count exceeds " +
-          s"maxLocalGroups=$maxLocalGroups — use " +
-          "corpusOverlapSketchOwned (the pinned distributed pair " +
-          "join) and release() after consuming")
-    out
-  }
-
-  /** [[corpusOverlapSketch]] plus the [[PinHandle]] owning the pinned
-    * signature matrix on the large-G path. Two faces, picked by the
-    * MEASURED group count (one tiny count over the G-row signature
-    * frame, which the pin materializes anyway):
+    * nothing), and the [[PinHandle]] owning the pinned signature
+    * matrix. Two paths, picked by the MEASURED group count (one tiny
+    * count over the G-row signature frame, which the pin materializes
+    * anyway):
     *
     *  - G ≤ `maxLocalGroups`: the matrix collects into a LOCAL
     *    relation (exact stats → Catalyst broadcasts it; the pair join
     *    can never re-run the corpus pass) and the pin is released
-    *    before returning — the handle is a no-op and the PLAIN face
-    *    is leak-free.
+    *    before returning — the handle is a no-op.
     *  - G > `maxLocalGroups` (10^5 crawl domains): G × numHashes rows
     *    would be a multi-million-row LocalRelation — driver memory
     *    plus per-task serialization. The component rows instead
@@ -547,22 +500,11 @@ object Dedup {
     *    pair join runs as a shuffle-hash self-join (pinned leaves
     *    carry no stats, so the hint — not Catalyst's worst-case
     *    sort-merge — picks the join). The caller must consume the
-    *    result, then `release()`; the plain face cannot hold the pin
-    *    across consumption, so it REFUSES the large-G path (throws,
-    *    the corpusOverlap maxGroups precedent). */
-  def corpusOverlapSketchOwned(df: DataFrame, k: Int,
+    *    result, then `release()`. */
+  def corpusOverlapSketch(df: DataFrame, k: Int,
       numHashes: Int = 64, groupCol: String = "source",
       textCol: String = "text", idCol: String = "doc_id",
       maxLocalGroups: Int = 10000): (DataFrame, PinHandle) = {
-    val (out, handle, _) = corpusOverlapSketchImpl(df, k, numHashes,
-      groupCol, textCol, idCol, maxLocalGroups)
-    (out, handle)
-  }
-
-  private def corpusOverlapSketchImpl(df: DataFrame, k: Int,
-      numHashes: Int, groupCol: String, textCol: String,
-      idCol: String, maxLocalGroups: Int)
-      : (DataFrame, PinHandle, Boolean) = {
     require(numHashes >= 1 && numHashes <= 512,
       s"numHashes must be in [1, 512]: $numHashes")
     require(maxLocalGroups >= 1,
@@ -611,13 +553,13 @@ object Dedup {
           org.apache.spark.sql.types.LongType)))
       val comp = spark.createDataFrame(
         java.util.Arrays.asList(rows: _*), schema)
-      (pairsOf(comp, hinted = false), new PinHandle(() => ()), true)
+      (pairsOf(comp, hinted = false), new PinHandle(() => ()))
     } else {
       val comp = sig.select(col("_g"), explode(array(
         (0 until numHashes).map(i =>
           struct(lit(i).as("i"), col(s"_h$i").as("h"))): _*)).as("c"))
         .select(col("_g"), col("c.i").as("i"), col("c.h").as("h"))
-      (pairsOf(comp, hinted = true), handle, false)
+      (pairsOf(comp, hinted = true), handle)
     }
   }
 
@@ -659,23 +601,17 @@ object Dedup {
     * the signatures collided, so buckets larger than `maxBucket` are
     * dropped wholesale (the same broadcast-anti-join shape as
     * [[capDf]], but over (band, bucket) keys — docs × bands rows, far
-    * cheaper than exploded shingle text). */
+    * cheaper than exploded shingle text). Returns the candidates and
+    * the [[PinHandle]] owning the pinned exploded-shingle blocks:
+    * consume the frame, then `release()`. */
   def minhashLshCandidates(df: DataFrame, k: Int, numHashes: Int,
-      bands: Int, idCol: String = "doc_id", textCol: String = "text",
-      maxDf: Int = Int.MaxValue, maxBucket: Int = Int.MaxValue): DataFrame =
-    minhashLshCandidatesOwned(df, k, numHashes, bands, idCol, textCol,
-      maxDf, maxBucket)._1
-
-  /** [[minhashLshCandidates]] plus the [[PinHandle]] owning the pinned
-    * exploded-shingle blocks: consume the frame, then `release()`. */
-  def minhashLshCandidatesOwned(df: DataFrame, k: Int, numHashes: Int,
       bands: Int, idCol: String = "doc_id", textCol: String = "text",
       maxDf: Int = Int.MaxValue, maxBucket: Int = Int.MaxValue)
       : (DataFrame, PinHandle) = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rowsPerBand = numHashes / bands
     // pinned for the same reason as in jaccardPairs (hot-set agg +
-    // signature agg both consume it); result is cache-backed.
+    // signature agg both consume it); result is cache-backed
     val (sh0, handle) = pinNow(withShingles(df, k, idCol, textCol))
     val sh = capDf(sh0, maxDf)
     val sigCols = (0 until numHashes).map(i =>
@@ -721,18 +657,10 @@ object Dedup {
     * guard, broadcast anti-join), shuffled-hash self-join on the
     * 8-byte fp key (cheaper still than Jaccard's string shingles), one
     * pair aggregation. The exploded fp frame feeds the hot-set agg and
-    * both join sides, so it is pinned eagerly; the result is
-    * cache-backed — library callers use [[overlapPairsOwned]] and
-    * `release()` after consuming. */
+    * both join sides, so it is pinned eagerly; the result comes with
+    * the [[PinHandle]] owning those blocks: consume the frame, then
+    * `release()`. */
   def overlapPairs(df: DataFrame, w: Int, minShared: Long = 1L,
-      idCol: String = "doc_id", textCol: String = "text",
-      hashJoin: Boolean = true, maxDf: Int = Int.MaxValue): DataFrame =
-    overlapPairsOwned(df, w, minShared, idCol, textCol, hashJoin,
-      maxDf)._1
-
-  /** [[overlapPairs]] plus the [[PinHandle]] owning the pinned
-    * window-fingerprint blocks: consume the frame, then `release()`. */
-  def overlapPairsOwned(df: DataFrame, w: Int, minShared: Long = 1L,
       idCol: String = "doc_id", textCol: String = "text",
       hashJoin: Boolean = true, maxDf: Int = Int.MaxValue)
       : (DataFrame, PinHandle) = {
@@ -952,10 +880,12 @@ object Dedup {
     rebuildLines(docs, kept, lineSep, idCol, textCol)
   }
 
-  /** Ownership handle for pinned cache blocks. Returned by the
-    * `*Owned` variants so a library caller can free the blocks the
-    * moment the result is consumed, instead of relying on a global
-    * `getPersistentRDDs` sweep (which only Verify/Bench perform). */
+  /** Ownership handle for pinned cache blocks. Every pinning operator
+    * has ONE face returning `(DataFrame, PinHandle)`: the frame reads
+    * the pinned blocks, so the caller consumes it, then calls
+    * `release()` — the blocks are freed the moment the result is
+    * consumed. A harness that drops the handle (the `SparkEntry`
+    * registry) frees the blocks with [[graft.util.LocalSession.sweep]]. */
   final class PinHandle private[pipeline] (release0: () => Unit) {
     def release(): Unit = release0()
   }
@@ -1050,11 +980,9 @@ object Dedup {
     * no separate count job. (Non-final rounds add one small edge-
     * contraction job over pinned frames — 2r−1 jobs total, and the
     * contraction is what keeps r logarithmic.) Superseded rounds are
-    * unpersisted immediately. The returned frame reads the final round's cached
-    * blocks; the caller owns their lifetime (consume, then
-    * `spark.sharedState.cacheManager` / `getPersistentRDDs` cleanup —
-    * Verify and Bench do this between queries; library callers use
-    * [[clustersOwned]]).
+    * unpersisted immediately. The returned frame reads the final
+    * round's cached blocks and comes with the [[PinHandle]] owning
+    * them: consume the frame, then `release()`.
     *
     * The round is FUSED into two parallel joins feeding one
     * aggregation (r6 hardening): neighbor-min, identity, and
@@ -1093,13 +1021,6 @@ object Dedup {
     * above). */
   def clusters(ids: DataFrame, pairs: DataFrame,
       idCol: String = "doc_id", maxIters: Int = 50,
-      localMaxEdges: Int = 1 << 18): DataFrame =
-    clustersOwned(ids, pairs, idCol, maxIters, localMaxEdges)._1
-
-  /** [[clusters]] plus the [[PinHandle]] owning the final round's
-    * pinned label blocks: consume the frame, then `release()`. */
-  def clustersOwned(ids: DataFrame, pairs: DataFrame,
-      idCol: String = "doc_id", maxIters: Int = 50,
       localMaxEdges: Int = 1 << 18)
       : (DataFrame, PinHandle) = {
     val (df, h, _) = clustersCounted(ids, pairs, idCol, maxIters,
@@ -1107,7 +1028,7 @@ object Dedup {
     (df, h)
   }
 
-  /** [[clustersOwned]] plus the number of BSP rounds executed (the
+  /** [[clusters]] plus the number of BSP rounds executed (the
     * final changed==0 confirming round included). Exposed so specs can
     * PIN the expected round count: the loop's cost at bench scale is
     * fixed per-round job overhead, so an accidental extra round (e.g.
@@ -1138,7 +1059,7 @@ object Dedup {
     * loop. `localMaxEdges` bounds the DOUBLED edge rows (2 per pair);
     * `localMaxEdges = 0` disables the probe entirely (specs pinning
     * BSP round counts force this). The local path reports 0 rounds. */
-  def clustersCounted(ids: DataFrame, pairs: DataFrame,
+  private[graft] def clustersCounted(ids: DataFrame, pairs: DataFrame,
       idCol: String = "doc_id", maxIters: Int = 50,
       broadcastMaxIds: Long = 1L << 20,
       localMaxEdges: Int = 1 << 18)
@@ -1402,17 +1323,12 @@ object Dedup {
     * to divide into [[Sampling.weighted]]'s keep-probability or to
     * scale a loss/sampling prior downstream.
     *
-    * Returns (idCol, cluster, n_dups, weight_ppm); cache-backed like
-    * [[clusters]] — library callers use [[softDedupWeightsOwned]]. */
+    * Returns (idCol, cluster, n_dups, weight_ppm) and the
+    * [[PinHandle]] owning the final label blocks: consume the frame,
+    * then `release()`. */
   def softDedupWeights(ids: DataFrame, pairs: DataFrame,
-      idCol: String = "doc_id"): DataFrame =
-    softDedupWeightsOwned(ids, pairs, idCol)._1
-
-  /** [[softDedupWeights]] plus the [[PinHandle]] owning the final
-    * label blocks: consume the frame, then `release()`. */
-  def softDedupWeightsOwned(ids: DataFrame, pairs: DataFrame,
       idCol: String = "doc_id"): (DataFrame, PinHandle) = {
-    val (labels, handle) = clustersOwned(ids, pairs, idCol)
+    val (labels, handle) = clusters(ids, pairs, idCol)
     // groupBy-count + equi-join, NEVER a window over the cluster
     // label: a viral near-dup mega-cluster is this operator's hot key
     // by construction, and a window funnels all its rows through one
@@ -1490,19 +1406,10 @@ object Dedup {
     * wholesale (an n-row bucket emits n² candidates no matter why the
     * signatures collided) via the same broadcast-anti-join as [[capDf]].
     * The signature frame is tiny (one 32-char row per doc) but feeds
-    * BOTH self-join sides, so it is pinned eagerly; the result is
-    * cache-backed — library callers should use [[simhashPairsOwned]]
-    * and `release()` after consuming (same contract as
-    * [[jaccardPairs]]). */
+    * BOTH self-join sides, so it is pinned eagerly; the result comes
+    * with the [[PinHandle]] owning those blocks: consume the frame,
+    * then `release()`. */
   def simhashPairs(df: DataFrame, bits: Int = 32, bands: Int = 4,
-      maxHamming: Int = 3, idCol: String = "doc_id",
-      textCol: String = "text", maxBucket: Int = Int.MaxValue): DataFrame =
-    simhashPairsOwned(df, bits, bands, maxHamming, idCol, textCol,
-      maxBucket)._1
-
-  /** [[simhashPairs]] plus the [[PinHandle]] owning the pinned
-    * signature blocks: consume the frame, then `release()`. */
-  def simhashPairsOwned(df: DataFrame, bits: Int = 32, bands: Int = 4,
       maxHamming: Int = 3, idCol: String = "doc_id",
       textCol: String = "text", maxBucket: Int = Int.MaxValue)
       : (DataFrame, PinHandle) = {

@@ -53,7 +53,7 @@ object Select {
     gramsWith(df, idCol, textCol, None)
 
   /** [[grams]] optionally carrying a per-document boolean `_t` (the
-    * target-membership flag of [[dsirWeightsPredOwned]]) through the
+    * target-membership flag of [[dsirWeightsPred]]) through the
     * explode — the flag rides the ONE gram pass instead of funding a
     * second tokenize+hash pass over the target subset. */
   private def gramsWith(df: DataFrame, idCol: String, textCol: String,
@@ -88,19 +88,11 @@ object Select {
     * (3 raw + 2 target, measured 4.7 s warm at sf0.1 vs ~1.5 s for
     * one pass; AQE stage reuse never fired across the cr/totals/
     * scoring consumers). One pinned pass per corpus is deterministic
-    * where reuse is best-effort. Pin ownership follows the library's
-    * caller-sweeps contract (Bench/Verify release caches between
-    * queries; [[dsirWeightsOwned]] hands the handle to callers who
-    * want the blocks back sooner). */
+    * where reuse is best-effort. The frame comes with the
+    * [[Dedup.PinHandle]] owning the two pinned gram aggregations —
+    * release after the LAST consumption of the returned frame (it
+    * recomputes from lineage afterwards). */
   def dsirWeights(raw: DataFrame, target: DataFrame, buckets: Int,
-      idCol: String = "doc_id", textCol: String = "text",
-      salt: String = "dsir"): DataFrame =
-    dsirWeightsOwned(raw, target, buckets, idCol, textCol, salt)._1
-
-  /** [[dsirWeights]] plus the [[Dedup.PinHandle]] owning the two
-    * pinned gram aggregations — release after the LAST consumption of
-    * the returned frame (it recomputes from lineage afterwards). */
-  def dsirWeightsOwned(raw: DataFrame, target: DataFrame, buckets: Int,
       idCol: String = "doc_id", textCol: String = "text",
       salt: String = "dsir"): (DataFrame, Dedup.PinHandle) = {
     require(buckets >= 2, s"buckets must be >= 2: $buckets")
@@ -167,16 +159,9 @@ object Select {
     * quotients — the control-plane rule). One gram pass, one
     * control-plane collect, one scoring join: the two-corpus face
     * pays two gram passes and re-aggregates its pins per broadcast
-    * consumer. */
-  def dsirWeightsPred(raw: DataFrame, targetPred: Column, buckets: Int,
-      idCol: String = "doc_id", textCol: String = "text",
-      salt: String = "dsir"): DataFrame =
-    dsirWeightsPredOwned(raw, targetPred, buckets, idCol, textCol,
-      salt)._1
-
-  /** [[dsirWeightsPred]] plus the pin handle owning the single gram
-    * aggregation — release after the last consumption. */
-  def dsirWeightsPredOwned(raw: DataFrame, targetPred: Column,
+    * consumer. The frame comes with the pin handle owning the single
+    * gram aggregation — release after the last consumption. */
+  def dsirWeightsPred(raw: DataFrame, targetPred: Column,
       buckets: Int, idCol: String = "doc_id", textCol: String = "text",
       salt: String = "dsir"): (DataFrame, Dedup.PinHandle) = {
     require(buckets >= 2, s"buckets must be >= 2: $buckets")
@@ -232,7 +217,7 @@ object Select {
       k: Int, idCol: String = "doc_id", textCol: String = "text",
       salt: String = "dsir"): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    val (w, pin) = dsirWeightsPredOwned(raw, targetPred, buckets,
+    val (w, pin) = dsirWeightsPred(raw, targetPred, buckets,
       idCol, textCol, salt)
     val top = w.orderBy(col("weight_mu").desc, col(idCol).asc)
       .limit(k)
@@ -255,7 +240,7 @@ object Select {
       k: Int, idCol: String = "doc_id", textCol: String = "text",
       salt: String = "dsir"): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    val (w, pin) = dsirWeightsOwned(raw, target, buckets, idCol,
+    val (w, pin) = dsirWeights(raw, target, buckets, idCol,
       textCol, salt)
     val top = w.orderBy(col("weight_mu").desc, col(idCol).asc)
       .limit(k)

@@ -497,24 +497,31 @@ object Similarity {
     * or not at all. The batch's content fingerprint (an order-free XOR
     * of row hashes, plus the row count) joins the header, and a batch
     * whose fingerprint is already there is a replay of a committed
-    * append: a no-op, so a re-run after any crash adds no duplicate. */
+    * append: a no-op, so a re-run after any crash adds no duplicate.
+    * The batch is cached for the whole verb (the fingerprint job
+    * materializes it, `encode` reads it), so the fingerprint and the
+    * written rows come from ONE evaluation of its lineage. */
   private def append(batch: DataFrame, dir: String, verb: String,
-      family: String)(encode: VecIndex => DataFrame): Unit = {
+      family: String)(encode: (DataFrame, VecIndex) => DataFrame): Unit = {
     val spark = batch.sparkSession
     val sc = spark.sparkContext
     val log = store(spark, dir)
     val (prev, idx) = opened(spark, log, dir, verb, Set(family))
-    val fp = JobDesc(sc, s"vec:$verb:fingerprint") {
-      val r = batch.agg(expr("bit_xor(xxhash64(*))"), count(lit(1))).head()
-      s"${if (r.isNullAt(0)) 0L else r.getLong(0)}:${r.getLong(1)}"
-    }
-    if (!idx.batches.contains(fp)) {
-      val written = JobDesc(sc, s"vec:$verb:rows") {
-        log.write(prev.version + 1, Cells, encode(idx))
+    val b = batch.persist()
+    try {
+      val fp = JobDesc(sc, s"vec:$verb:fingerprint") {
+        val r = b.agg(expr("bit_xor(xxhash64(*))"), count(lit(1))).head()
+        s"${if (r.isNullAt(0)) 0L else r.getLong(0)}:${r.getLong(1)}"
       }
-      log.commit(verb, Some(prev),
-        idx.copy(batches = idx.batches :+ fp).header, prev.files ++ written)
-    }
+      if (!idx.batches.contains(fp)) {
+        val written = JobDesc(sc, s"vec:$verb:rows") {
+          log.write(prev.version + 1, Cells, encode(b, idx))
+        }
+        log.commit(verb, Some(prev),
+          idx.copy(batches = idx.batches :+ fp).header,
+          prev.files ++ written)
+      }
+    } finally b.unpersist()
   }
 
   /** THE compaction: every listed row rewritten with duplicates on
@@ -603,8 +610,8 @@ object Similarity {
     * enough that the frozen quantizer's cells go unbalanced. */
   def appendToIvfIndex(newEmb: DataFrame, dir: String,
       vecCol: String = "embedding"): Unit =
-    append(newEmb, dir, "appendToIvfIndex", "ivf")(idx =>
-      assignCells(newEmb, idx.cents, vecCol))
+    append(newEmb, dir, "appendToIvfIndex", "ivf")((emb, idx) =>
+      assignCells(emb, idx.cents, vecCol))
 
   /** Compact a [[writeIvfIndex]] index after many appends: one pass
     * over the listed rows, duplicates on (`idCol`, cell) dropped, into
@@ -1006,13 +1013,13 @@ object Similarity {
     * codes with [[compactPqCodes]]. */
   def appendToPqIndex(newEmb: DataFrame, dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    append(newEmb, dir, "appendToPqIndex", "pq") { idx =>
+    append(newEmb, dir, "appendToPqIndex", "pq") { (emb, idx) =>
       val cb = idx.cb
       // no cell column needed: encoding is a pure function of
       // (codebook, vector)
-      val rows = muRows(newEmb, cb.dims, "appendToPqIndex", idCol, vecCol,
+      val rows = muRows(emb, cb.dims, "appendToPqIndex", idCol, vecCol,
         None)
-      pqEncode(newEmb, rows, cb.frame(newEmb.sparkSession), cb.m,
+      pqEncode(emb, rows, cb.frame(emb.sparkSession), cb.m,
           cb.dims / cb.m, idCol, vecCol, "appendToPqIndex")
         .repartition(col("_vid"))
     }
@@ -1373,11 +1380,11 @@ object Similarity {
     * when drift unbalances the cells). */
   def appendToIvfPqIndex(newEmb: DataFrame, dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    append(newEmb, dir, "appendToIvfPqIndex", "ivfpq") { idx =>
-      ivfPqCodesOf(residualSubRows(newEmb, idx.cents, idx.cb.m,
+    append(newEmb, dir, "appendToIvfPqIndex", "ivfpq") { (emb, idx) =>
+      ivfPqCodesOf(residualSubRows(emb, idx.cents, idx.cb.m,
           idx.cb.dims / idx.cb.m, idCol, vecCol, "appendToIvfPqIndex",
           subtract = idx.residual),
-        idx.cb.local(newEmb.sparkSession), idx.cb.m, idx.residual)
+        idx.cb.local(emb.sparkSession), idx.cb.m, idx.residual)
         .repartition(col("cell"))
     }
 
@@ -1533,20 +1540,10 @@ object Similarity {
     * [[graft.pipeline.Dedup.simhashPairs]], and `maxBucket` guards the
     * quadratic blowup the same way. 100 TB shape: one row per
     * (vec, band) — never vecs² — and embeddings are only touched again
-    * for the exact filter on surviving candidates. */
+    * for the exact filter on surviving candidates. Returns the pairs
+    * and the [[Dedup.PinHandle]] owning the pinned signature blocks:
+    * consume the frame, then `release()`. */
   def srpCandidatePairs(emb: DataFrame, dims: Int, nBits: Int,
-      bands: Int, threshold: Double, maxBucket: Int = Int.MaxValue,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      salt: String = "graft"): DataFrame =
-    srpCandidatePairsOwned(emb, dims, nBits, bands, threshold,
-      maxBucket, idCol, vecCol, salt)._1
-
-  /** [[srpCandidatePairs]] plus the [[Dedup.PinHandle]] owning the
-    * pinned signature blocks: consume the frame, then `release()` —
-    * the same Owned discipline as the Dedup/Bloom/Select families, so
-    * long-running library callers outside Bench/Verify's global sweep
-    * can free the cache instead of accumulating pins. */
-  def srpCandidatePairsOwned(emb: DataFrame, dims: Int, nBits: Int,
       bands: Int, threshold: Double, maxBucket: Int = Int.MaxValue,
       idCol: String = "vec_id", vecCol: String = "embedding",
       salt: String = "graft"): (DataFrame, Dedup.PinHandle) = {
@@ -1558,8 +1555,8 @@ object Similarity {
     // self-join consumes the subtree from up to FOUR plans (both join
     // sides + the hot-bucket count's anti-join) — the plan audit
     // showed 4 signature passes over the raw embeddings with zero
-    // exchange reuse. One row per vector cached; caller sweeps
-    // (Bench/Verify releaseCaches between queries).
+    // exchange reuse. One row per vector cached; the caller releases
+    // the returned handle.
     val (sig, pin) = Dedup.pinNow(
       srpSignature(emb, srpPlanes(nBits, dims, salt), idCol, vecCol))
     val buckets0 = sig.select(col(idCol).as("_id"),

@@ -190,7 +190,7 @@ object CorpusDedup {
             throw new IllegalStateException(s"$verb: $tierDir has rows " +
               s"older than version $version but $fpDir has none"))
           val (s, p) = JobDesc(sc, s"dedup:$verb:prefilter") {
-            Bloom.dedupAgainstTierOwned(batch,
+            Bloom.dedupAgainstTier(batch,
               rows.select(col("bloom_bucket") +:
                 (0 until nWords).map(n => col(s"bloom_w$n")): _*),
               fps.select(col("_fp")), nBuckets, nWords, kHashes, textCol)

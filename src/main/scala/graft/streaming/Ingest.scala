@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{IntegerType, StructType}
@@ -32,8 +33,9 @@ import graft.util.{DataFile, JobDesc, Maint, Manifest, ManifestLog}
   *     stat partials, the per-field partials and the (producer, topic)
   *     registry rows.
   * The header holds each tree's read schema and qualified directory,
-  * the `ingested <N>` high-water mark, and per committed ingest version
-  * the trees it wrote. Every verb commits once: an ingest version's
+  * the `ingested <N>` high-water mark, the `batch <id>` of the newest
+  * committed stream micro-batch, and per committed ingest version the
+  * trees it wrote. Every verb commits once: an ingest version's
   * data, partials and control rows become visible together, and a
   * reader sees the store before or after a verb, never a mix. Readers
   * ([[graft.model.IngestedCatalog]]) read only listed files with the
@@ -78,8 +80,9 @@ object Ingest {
     * (StatTiers.tierFromPartials); associativity makes append-only
     * maintenance exact, no read-modify-write of the stats table.
     *
-    * Every batch is one INGEST VERSION (monotonic, = batchId + 1) —
-    * the analogue of the reference's versionstore counter
+    * Every batch is one INGEST VERSION (the header's `ingested` mark
+    * + 1, the counter [[importMcap]] shares) — the analogue of the
+    * reference's versionstore counter
     * (server/versionstore/versionstore.go:22-60). Data rows, stat
     * partials, and the control table all carry it, so truncation (hide
     * everything at or below a version) masks data AND statistics
@@ -108,7 +111,7 @@ object Ingest {
       .withColumn("day", expr("time div 86400000000000"))
     deduped.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendVersion(batch, batchId + 1, outDir, statsDir, controlDir,
+        appendVersion(batch, batchId, outDir, statsDir, controlDir,
           fieldStats)
       }
       .option("checkpointLocation", checkpointDir)
@@ -116,35 +119,52 @@ object Ingest {
       .start()
   }
 
-  /** Append one ingest version: data rows, base-tier stat partials,
-    * per-field partials and control rows, all stamped with `version`,
-    * written as the next manifest version and committed ONCE — the
-    * shared body of the streaming micro-batch path and the batch
-    * /import verb. `batch` must carry the canonical columns + `day`.
+  /** Append stream micro-batch `batchId` as one ingest version: data
+    * rows, base-tier stat partials, per-field partials and control
+    * rows, all stamped with the next ingest version, written as the
+    * next manifest version and committed ONCE. `batch` must carry the
+    * canonical columns + `day`.
     *
     * REPLAY-SAFE (the file sink's `_spark_metadata` idiom):
     * `foreachBatch` is at-least-once, so a crash between the commit and
-    * the checkpoint commit re-delivers this version. A `version` at or
-    * below the header's `ingested` mark is a replay of a committed
-    * version and does nothing; a crash before the commit leaves only
-    * unlisted files, which the next verb's open drops. */
-  private[graft] def appendVersion(batch: DataFrame, version: Long,
+    * the checkpoint commit re-delivers this batch. The header records
+    * the newest committed `batchId`; a batch at or below it is a replay
+    * of a committed batch: it is drained (so the stream's dedup state
+    * commits) and writes nothing. The replay key is the batch id, never
+    * the ingest version, so [[importMcap]] versions in between never
+    * mask a later batch. A crash before the commit leaves only unlisted
+    * files, which the next verb's open drops. */
+  private[graft] def appendVersion(batch: DataFrame, batchId: Long,
       outDir: String, statsDir: String,
       controlDir: Option[String],
       fieldStats: Option[(String, Seq[String], Seq[String])] = None)
       : Unit =
-    append("appendVersion", batch, version, outDir, statsDir, controlDir,
-      fieldStats)
+    append("appendVersion", batch, Some(batchId), outDir, statsDir,
+      controlDir, fieldStats)
 
-  private def append(verb: String, batch: DataFrame, version: Long,
+  /** The shared body of the stream and /import faces: appends `batch`
+    * as ingest version `ingested` + 1 and returns it, or None when
+    * `batchId` is a committed replay. */
+  private def append(verb: String, batch: DataFrame, batchId: Option[Long],
       outDir: String, statsDir: String, controlDir: Option[String],
-      fieldStats: Option[(String, Seq[String], Seq[String])]): Unit = {
+      fieldStats: Option[(String, Seq[String], Seq[String])])
+      : Option[Long] = {
     val spark = batch.sparkSession
     val store = log(spark, Map("data" -> outDir, "stats" -> statsDir) ++
       controlDir.map("control" -> _) ++ fieldStats.map("fstats" -> _._1))
     newest(spark, outDir, store, verb)
     val prev = store.open(verb)
-    if (prev.exists(ingested(_) >= version)) return // a committed replay
+    val replay = for (id <- batchId; m <- prev; b <- mark(m, "batch"))
+      yield b >= id
+    if (replay.contains(true)) {
+      // the rows are committed, but the stream's stateful dedup still
+      // commits its state per batch: a batch left unread fails the query
+      JobDesc(spark.sparkContext, s"ingest:$verb:replay") {
+        batch.write.format("noop").mode("overwrite").save()
+      }
+      return None
+    }
+    val version = prev.flatMap(mark(_, "ingested")).getOrElse(0L) + 1
     val next = prev.fold(0L)(_.version) + 1
     val b = batch.withColumn("ingest_version", lit(version))
     b.persist()
@@ -183,17 +203,20 @@ object Ingest {
         })
       }
       // the header: what it held, each written tree's read schema,
-      // the new `ingested` mark and the trees this version wrote
+      // the new `ingested` mark, the stream's batch mark and the trees
+      // this version wrote
+      val marks = Seq(Seq("ingested", version.toString)) ++
+        batchId.map(id => Seq("batch", id.toString))
       val kept = prev.fold(Seq.empty[Seq[String]])(_.header.filterNot(l =>
-        l.head == "ingested" || written.exists(_._1 == l.head)))
+        marks.exists(_.head == l.head) || written.exists(_._1 == l.head)))
       val wrote = written.collect { case (t, _, fs) if fs.nonEmpty => t }
       store.commit(verb, prev,
         kept ++ written.map { case (t, s, _) =>
-          Seq(t, readSchema(prev, t, s).json) } ++
-          Seq(Seq("ingested", version.toString)) ++
+          Seq(t, readSchema(prev, t, s).json) } ++ marks ++
           Seq("version" +: version.toString +: wrote)
             .filter(_ => wrote.nonEmpty),
         prev.fold(Seq.empty[DataFile])(_.files) ++ written.flatMap(_._3))
+      Some(version)
     } finally b.unpersist()
   }
 
@@ -258,10 +281,10 @@ object Ingest {
       m.filesOf(tree).filter(keep))
   }
 
-  /** The high-water mark: the newest committed ingest version. */
-  private def ingested(m: Manifest): Long =
-    m.header.collectFirst { case Seq("ingested", n) => n.toLong }
-      .getOrElse(0L)
+  /** A header mark: `ingested` (the newest committed ingest version)
+    * or `batch` (the newest committed stream batch id). */
+  private def mark(m: Manifest, name: String): Option[Long] =
+    m.header.collectFirst { case Seq(`name`, n) => n.toLong }
 
   /** The ingest versions that wrote data but no `tree` files. */
   private[graft] def gaps(m: Manifest, tree: String): Seq[Long] =
@@ -279,8 +302,8 @@ object Ingest {
     * dedup within the file on the dp3 identity key, and append ONE new
     * ingest version (data + stat partials + control row) in one
     * commit. The version is the header's `ingested` mark + 1 — the
-    * same monotonic counter the streaming path keeps via batchId, read
-    * from the manifest with no Spark job. Returns the version written.
+    * one monotonic counter the streaming path shares, read from the
+    * manifest with no Spark job. Returns the version written.
     * `fieldStats` mirrors `startWithStats`: a store maintaining
     * per-field partials must pass the same triple here, or the imported
     * version lacks field partials and the statfilter's coverage check
@@ -292,8 +315,6 @@ object Ingest {
       : Long = {
     require(producer.nonEmpty, "missing producer")
     require(path.nonEmpty, "missing path")
-    val version = 1L + newest(spark, outDir,
-      log(spark, Map("data" -> outDir)), "importMcap").fold(0L)(ingested)
     val loaded = graft.mcap.Mcap.load(spark, path)
       .withColumn("producer", lit(producer))
       .dropDuplicates("producer", "topic", "time", "seq")
@@ -305,9 +326,8 @@ object Ingest {
     val batch =
       if (loaded.columns.contains("value")) loaded
       else loaded.withColumn("value", lit(null).cast("double"))
-    append("importMcap", batch, version, outDir, statsDir,
-      Some(controlDir), fieldStats)
-    version
+    append("importMcap", batch, None, outDir, statsDir,
+      Some(controlDir), fieldStats).get
   }
 
   /** One rewritten partition in an [[optimize]] pass. */
@@ -379,9 +399,14 @@ object Ingest {
       .toDF("topic", "day", "_n_slices")
     val dayNs = 86400000000000L
     // the slice id is a contiguous time range within the day so each
-    // output file covers a disjoint time interval
+    // output file covers a disjoint time interval. Of an identity key
+    // that several versions wrote, the NEWEST copy survives: a
+    // truncation then hides the row only when it hides every copy.
     val rows = store.read(spark, "data", prev.schema("data"), redo)
-      .dropDuplicates("producer", "topic", "time", "seq")
+      .withColumn("_copy", row_number().over(Window
+        .partitionBy("producer", "topic", "time", "seq")
+        .orderBy(col("ingest_version").desc)))
+      .where(col("_copy") === 1)
       .join(broadcast(nSlices), Seq("topic", "day"))
       .withColumn("_slice", least(col("_n_slices") - 1,
         floor((col("time") - col("day") * dayNs)
@@ -389,7 +414,7 @@ object Ingest {
       .join(broadcast(slices), Seq("topic", "day", "_slice"))
       .repartition(total, col("_gid"))
       .sortWithinPartitions(col("time"), col("seq"))
-      .drop("_n_slices", "_slice", "_gid")
+      .drop("_copy", "_n_slices", "_slice", "_gid")
     val written = JobDesc(spark.sparkContext, "ingest:optimize:data") {
       store.write(prev.version + 1, "data", rows)
     }

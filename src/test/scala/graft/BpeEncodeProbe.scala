@@ -24,20 +24,8 @@ object BpeEncodeProbe {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val r = if (args.length > 1) args(1).toInt else 1000
     val chainToo = args.length > 2 && args(2) == "chain"
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def sweep(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.sharedState.cacheManager.clearCache()
-    }
+    val spark = graft.util.LocalSession()
+    def sweep(): Unit = graft.util.LocalSession.sweep(spark)
     val docs =
       if (sfDir != "synth") model.Tables.load(spark, sfDir, "documents")
       else {

@@ -16,14 +16,8 @@ object BucketFoldProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val nBuckets = if (args.length > 1) args(1).toInt else 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.util.LocalSession.defaultCores
+    val spark = graft.util.LocalSession(cpus)
     import graft.pipeline.Search
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -44,7 +38,7 @@ object BucketFoldProbe {
         .latest.get.files.groupBy(_.part("bucket").toInt)
         .map { case (b, fs) => b -> fs.size }
     }
-    val c0 = graft.util.ProbeGuard.canaryCpu(spark, cpus.toInt)
+    val c0 = graft.util.ProbeGuard.canaryCpu(spark, cpus)
     // tree A: incremental fold (threshold 1 => only the appended
     // buckets, which carry 2 files, fold)
     val a = s"/tmp/graft_bfold_probe_a_${System.nanoTime()}"
@@ -59,7 +53,7 @@ object BucketFoldProbe {
     val t1 = System.nanoTime()
     Search.compactBm25Index(spark, s"$b/bm25")
     val fullSec = (System.nanoTime() - t1) / 1e9
-    val c1 = graft.util.ProbeGuard.canaryCpu(spark, cpus.toInt)
+    val c1 = graft.util.ProbeGuard.canaryCpu(spark, cpus)
     // equivalence: both trees serve identically
     val q = Seq((1L, "alpha probe"), (2L, "vector stream hash"))
     val sa = Search.bm25TopKBatchFromIndex(spark, s"$a/bm25", q, 5)

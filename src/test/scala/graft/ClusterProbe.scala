@@ -14,24 +14,12 @@ object ClusterProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val passes = if (args.length > 1) args(1).toInt else 2
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def sweep(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.sharedState.cacheManager.clearCache()
-    }
+    val spark = graft.util.LocalSession()
+    def sweep(): Unit = graft.util.LocalSession.sweep(spark)
     for (p <- 1 to passes) {
       val docs = model.Tables.load(spark, sfDir, "documents")
       var t0 = System.nanoTime()
-      val pairs = pipeline.Dedup.jaccardPairs(docs, k = 3,
+      val (pairs, pairsPin) = pipeline.Dedup.jaccardPairs(docs, k = 3,
         threshold = 0.5, maxDf = 100)
       // materialize the pair list once so the edge-pin phase below
       // times ONLY the explode+pin, mirroring what clusters() pays
@@ -45,7 +33,7 @@ object ClusterProbe {
       t0 = System.nanoTime()
       val n = labels.groupBy("cluster").count().count()
       val tRead = (System.nanoTime() - t0) / 1e9
-      h.release(); sweep()
+      h.release(); pairsPin.release(); sweep()
       println(f"pass $p: pairs($nPairs)=$tPairs%.2f s " +
         f"loop($iters rounds)=$tLoop%.2f s read($n)=$tRead%.2f s")
     }

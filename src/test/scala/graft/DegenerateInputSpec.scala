@@ -25,6 +25,10 @@ class DegenerateInputSpec extends AnyFunSuite {
       StructType(Seq(StructField("doc_id", LongType),
         StructField("text", StringType))))
 
+  /** the row count of a pinning operator's frame, its pins released */
+  private def rows(face: (DataFrame, Dedup.PinHandle)): Long =
+    TestSpark.consume(face)(_.count())
+
   private def oneDoc: DataFrame =
     Seq((1L, "a single short document")).toDF("doc_id", "text")
 
@@ -70,16 +74,16 @@ class DegenerateInputSpec extends AnyFunSuite {
   test("round-12 additions: empty/singleton corpora flow through") {
     val withSrc = (df: DataFrame) => df.withColumn("source", lit("s0"))
     // overlap audits: one group (or none) -> no pair rows
-    assert(Dedup.corpusOverlap(withSrc(emptyDocs), k = 3).count() == 0)
-    assert(Dedup.corpusOverlap(withSrc(oneDoc), k = 3).count() == 0)
-    assert(Dedup.corpusOverlapSketch(withSrc(emptyDocs), k = 3,
-      numHashes = 8).count() == 0)
-    assert(Dedup.corpusOverlapSketch(withSrc(oneDoc), k = 3,
-      numHashes = 8).count() == 0)
+    assert(rows(Dedup.corpusOverlap(withSrc(emptyDocs), k = 3)) == 0)
+    assert(rows(Dedup.corpusOverlap(withSrc(oneDoc), k = 3)) == 0)
+    assert(rows(Dedup.corpusOverlapSketch(withSrc(emptyDocs), k = 3,
+      numHashes = 8)) == 0)
+    assert(rows(Dedup.corpusOverlapSketch(withSrc(oneDoc), k = 3,
+      numHashes = 8)) == 0)
     // soft dedup with no pairs: every doc a singleton at full weight
     val emptyPairs = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    val w = Dedup.softDedupWeights(oneDoc.select("doc_id"), emptyPairs)
-      .collect()
+    val w = TestSpark.consume(Dedup.softDedupWeights(
+      oneDoc.select("doc_id"), emptyPairs))(_.collect())
     assert(w.length == 1 && w.head.getAs[Long]("weight_ppm") == 1000000L)
     // temperature sampling: empty corpus errors cleanly (no strata to
     // license a cutoff), singleton keeps its row (rarest stratum)
@@ -146,15 +150,15 @@ class DegenerateInputSpec extends AnyFunSuite {
   test("dedup family: empty and singleton corpora") {
     assert(Dedup.exact(emptyDocs).count() == 0)
     assert(Dedup.exact(oneDoc).count() == 1)
-    assert(Dedup.jaccardPairs(emptyDocs, k = 3, threshold = 0.5)
-      .count() == 0)
-    assert(Dedup.jaccardPairs(oneDoc, k = 3, threshold = 0.5)
-      .count() == 0) // no pair from one doc
-    assert(Dedup.minhashLshCandidates(emptyDocs, k = 3, numHashes = 8,
-      bands = 4).count() == 0)
+    assert(rows(Dedup.jaccardPairs(emptyDocs, k = 3, threshold = 0.5))
+      == 0)
+    assert(rows(Dedup.jaccardPairs(oneDoc, k = 3, threshold = 0.5))
+      == 0) // no pair from one doc
+    assert(rows(Dedup.minhashLshCandidates(emptyDocs, k = 3,
+      numHashes = 8, bands = 4)) == 0)
     assert(Dedup.simhash(oneDoc).count() == 1)
-    assert(Dedup.simhashPairs(oneDoc).count() == 0)
-    assert(Dedup.overlapPairs(emptyDocs, w = 3).count() == 0)
+    assert(rows(Dedup.simhashPairs(oneDoc)) == 0)
+    assert(rows(Dedup.overlapPairs(emptyDocs, w = 3)) == 0)
   }
 
   test("clusters: empty pair set labels every id with itself") {
@@ -163,12 +167,9 @@ class DegenerateInputSpec extends AnyFunSuite {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("id_a", LongType),
         StructField("id_b", LongType))))
-    val got = Dedup.clusters(ids, noPairs).collect()
+    val got = TestSpark.consume(Dedup.clusters(ids, noPairs))(_.collect())
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((1L, 1L), (2L, 2L)))
-    // release what the iterative operator pinned
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
   }
 
   test("text ops: empty strings and empty corpora") {

@@ -11,21 +11,10 @@ object E2eProbe {
   def main(args: Array[String]): Unit = {
     val ref = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val big = if (args.length > 1) args(1) else "/tmp/sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.util.LocalSession.defaultCores
+    val spark = graft.util.LocalSession(cpus)
     val fn = SparkEntry.queries("t_e2e_dataloader")
-    def sweep(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.sharedState.cacheManager.clearCache()
-    }
+    def sweep(): Unit = graft.util.LocalSession.sweep(spark)
     def once(dir: String): (Double, Long) = {
       val t0 = System.nanoTime()
       val out = fn(spark, dir)
@@ -46,9 +35,9 @@ object E2eProbe {
     // disagreement, and its spread is printed so a contaminated leg
     // names itself
     import graft.util.ProbeGuard
-    val cCpu0 = ProbeGuard.canaryCpu(spark, cpus.toInt)
+    val cCpu0 = ProbeGuard.canaryCpu(spark, cpus)
     val cIo0 = ProbeGuard.canaryIo(spark, s"$ref/orders.parquet",
-      "o_custkey", cpus.toInt)
+      "o_custkey", cpus)
     def leg(dir: String): (Double, Double, Long) = {
       val counts = scala.collection.mutable.ArrayBuffer[Long]()
       val (sec, sp) = ProbeGuard.minOfThree(() => {
@@ -60,9 +49,9 @@ object E2eProbe {
     }
     val (rSec, rSp, n1) = leg(ref)
     val (bSec, bSp, m1) = leg(big)
-    val cCpu1 = ProbeGuard.canaryCpu(spark, cpus.toInt)
+    val cCpu1 = ProbeGuard.canaryCpu(spark, cpus)
     val cIo1 = ProbeGuard.canaryIo(spark, s"$ref/orders.parquet",
-      "o_custkey", cpus.toInt)
+      "o_custkey", cpus)
     println(f"[e2e-probe] ref($ref): $rSec%.2f s (sp=$rSp%.2f, " +
       f"$n1%d seqs)  big($big): $bSec%.2f s (sp=$bSp%.2f, $m1%d seqs)" +
       f"  ratio=${bSec / rSec}%.2f  canary=${math.min(cCpu0, cCpu1)}%.2f" +
@@ -122,7 +111,7 @@ object E2eProbe {
       })
     val (reSec, reSp) = epochLeg(refStore)
     val (beSec, beSp) = epochLeg(bigStore)
-    val cCpu2 = ProbeGuard.canaryCpu(spark, cpus.toInt)
+    val cCpu2 = ProbeGuard.canaryCpu(spark, cpus)
     println(f"[e2e-probe] readEpoch ref: $reSec%.2f s (sp=$reSp%.2f)" +
       f"  big: $beSec%.2f s (sp=$beSp%.2f)  ratio=${beSec / reSec}%.2f" +
       f"  canary=$cCpu2%.2f  load=${ProbeGuard.loadavg()}%.2f")

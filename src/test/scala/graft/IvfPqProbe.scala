@@ -20,15 +20,7 @@ object IvfPqProbe {
     val m = if (args.length > 2) args(2).toInt else 4
     val k = if (args.length > 3) args(3).toInt else 10
     val kSub = if (args.length > 4) args(4).toInt else 16
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select("vec_id", "embedding").cache()
     val n = emb.count()
@@ -50,8 +42,7 @@ object IvfPqProbe {
         dims = dims, m = m, iters = 3, residual = residual,
         kSub = kSub)
       val tBuild = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      graft.util.LocalSession.sweep(spark)
       val probes = Iterator.iterate(1)(_ * 2)
         .takeWhile(_ < kCells).toSeq :+ kCells
       val lines = probes.map { np =>
@@ -108,8 +99,7 @@ object IvfPqProbe {
       t = System.nanoTime()
       Similarity.retrainIvfPqIndex(emb, dir, kCells = kCells, iters = 3)
       val tRetrain = (System.nanoTime() - t) / 1e9
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      graft.util.LocalSession.sweep(spark)
       println(f"  lifecycle: overlap-append $tAppend%.1f s, " +
         f"compact $tCompact%.1f s (serve restored), " +
         f"retrain $tRetrain%.1f s")

@@ -136,6 +136,20 @@ class OptimizeSpec extends AnyFunSuite {
     }
   }
 
+  test("optimize keeps the newest copy of a key two versions wrote: a " +
+      "truncation of the older version hides none of them") {
+    def batch(base: Double) = (0 until 50).map(i =>
+      ("p0", "click", 1L * day + i * 1000L, i.toLong, base + i))
+    val base = store(Seq(batch(0.0), batch(1000.0)))
+    Ingest.optimize(spark, s"$base/data", maxFilesPerPartition = 1)
+    val visible = graft.streaming.Lifecycle.applyTruncations(
+      TestSpark.ingestedCatalog(base).messages(spark),
+      Seq(("p0", "click", 1L)).toDF("producer", "topic", "min_version"),
+      versionCol = "ingest_version")
+    assert(visible.select("seq", "value").as[(Long, Double)].collect()
+      .toMap == (0 until 50).map(i => i.toLong -> (1000.0 + i)).toMap)
+  }
+
   test("optimize dedups on the identity key like the reference's merge") {
     // the same row appended by 5 "batches"
     val base = store(Seq.fill(5)(Seq(("p0", "click", 1L * day + 5L, 1L, 1.0))))

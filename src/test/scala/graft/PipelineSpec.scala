@@ -9,6 +9,7 @@ import graft.pipeline.{Curate, Dedup, Multimodal, Sampling, Similarity, TextOps}
 class PipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+  import TestSpark.consume
 
   /** The live rows of the stored vector index at `dir`. */
   private def indexRows(dir: String) = Similarity.indexRows(spark, dir).get
@@ -65,8 +66,8 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("jaccard pairs finds the near-duplicate") {
-    val pairs = Dedup.jaccardPairs(docs, k = 3, threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val pairs = consume(Dedup.jaccardPairs(docs, k = 3, threshold = 0.5))(
+      _.collect()).map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 1L)))
     assert(pairs.contains((0L, 3L))) // exact dup: jaccard 1.0
     assert(!pairs.exists(p => p._1 == 2L || p._2 == 2L))
@@ -78,19 +79,18 @@ class PipelineSpec extends AnyFunSuite {
     // the ref's 0, 4 is clean (and too short to shingle at all)
     val ref = docs.where(col("doc_id").isin(0L, 2L))
     val fresh = docs.where(col("doc_id").isin(1L, 3L, 4L))
-    val pairs = Dedup.crossCorpusPairs(fresh, ref, k = 3,
-      threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
+    val pairs = consume(Dedup.crossCorpusPairs(fresh, ref, k = 3,
+      threshold = 0.5))(_.collect()).map(r => (r.getLong(0), r.getLong(1)))
+      .toSet
     assert(pairs == Set((1L, 0L), (3L, 0L)))
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
 
     val (kept, pin) = Curate.dedupAgainstCorpus(fresh, ref, k = 3,
       threshold = 0.5)
     assert(kept.select("doc_id").collect().map(_.getLong(0)).toSet
       == Set(4L))
     pin.release()
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == pinned)
   }
 
   test("pq ADC retrieval ranks same-cluster vectors first, excludes " +
@@ -719,8 +719,9 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("minhash lsh candidates include exact and near dups") {
-    val pairs = Dedup.minhashLshCandidates(docs, k = 3, numHashes = 8,
-      bands = 4).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val pairs = consume(Dedup.minhashLshCandidates(docs, k = 3,
+      numHashes = 8, bands = 4))(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 3L))) // identical signatures always collide
     assert(!pairs.exists(p => p._1 == 2L || p._2 == 2L))
   }
@@ -736,8 +737,8 @@ class PipelineSpec extends AnyFunSuite {
       (100L, "alpha beta gamma delta epsilon zeta"),
       (101L, "alpha beta gamma delta epsilon eta"))
     val corpus = (boiler ++ dups).toDF("doc_id", "text")
-    val cappedRows = Dedup.jaccardPairs(corpus, k = 3, threshold = 0.1,
-      maxDf = 4).collect()
+    val cappedRows = consume(Dedup.jaccardPairs(corpus, k = 3,
+      threshold = 0.1, maxDf = 4))(_.collect())
     val capped = cappedRows.map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped == Set((100L, 101L)))
     // post-cap SIZES: both intersections and denominators are over the
@@ -747,21 +748,21 @@ class PipelineSpec extends AnyFunSuite {
     // cross-corpus capping flows through the same capped pin: split
     // the same corpus and the boundary-crossing near-dup pair (and
     // nothing from the boilerplate herd) survives with the same value
-    val cross = Dedup.crossCorpusPairs(
+    val cross = consume(Dedup.crossCorpusPairs(
       corpus.where(col("doc_id") % 2 === 1),
       corpus.where(col("doc_id") % 2 === 0),
-      k = 3, threshold = 0.1, maxDf = 4).collect()
+      k = 3, threshold = 0.1, maxDf = 4))(_.collect())
     assert(cross.map(r => (r.getLong(0), r.getLong(1))).toSet
       == Set((101L, 100L)))
     assert(cross.head.getAs[Double]("jaccard") == 0.6)
     // uncapped the hot shingle alone materializes all 66 boilerplate
     // pairs (each at jaccard 1/7) — the cap is what removed them
-    val uncapped = Dedup.jaccardPairs(corpus, k = 3, threshold = 0.1)
-      .collect().length
+    val uncapped = consume(Dedup.jaccardPairs(corpus, k = 3,
+      threshold = 0.1))(_.collect()).length
     assert(uncapped >= 66)
     // same cap on the LSH path
-    val lsh = Dedup.minhashLshCandidates(corpus, k = 3, numHashes = 8,
-      bands = 4, maxDf = 4).collect()
+    val lsh = consume(Dedup.minhashLshCandidates(corpus, k = 3,
+      numHashes = 8, bands = 4, maxDf = 4))(_.collect())
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(lsh == Set((100L, 101L)))
   }
@@ -777,12 +778,12 @@ class PipelineSpec extends AnyFunSuite {
       (100L, "alpha beta gamma delta epsilon zeta"),
       (101L, "alpha beta gamma delta epsilon zeta"))
     val corpus = (herd ++ dups).toDF("doc_id", "text")
-    val uncapped = Dedup.minhashLshCandidates(corpus, k = 3,
-      numHashes = 8, bands = 4).collect()
+    val uncapped = consume(Dedup.minhashLshCandidates(corpus, k = 3,
+      numHashes = 8, bands = 4))(_.collect())
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(uncapped.size == 66 + 1) // full herd clique + the dup pair
-    val capped = Dedup.minhashLshCandidates(corpus, k = 3,
-      numHashes = 8, bands = 4, maxBucket = 4).collect()
+    val capped = consume(Dedup.minhashLshCandidates(corpus, k = 3,
+      numHashes = 8, bands = 4, maxBucket = 4))(_.collect())
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped == Set((100L, 101L)))
   }
@@ -794,7 +795,7 @@ class PipelineSpec extends AnyFunSuite {
     val ids = (0L until n.toLong).toDF("doc_id")
     val pairs = (0L until (n - 1).toLong).map(i => (i, i + 1))
       .toDF("id_a", "id_b")
-    val got = Dedup.clusters(ids, pairs).collect()
+    val got = consume(Dedup.clusters(ids, pairs))(_.collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == n && got.values.forall(_ == 0L))
   }
@@ -849,7 +850,7 @@ class PipelineSpec extends AnyFunSuite {
   test("soft-dedup weights: floor'd ppm of the cluster size, every doc kept") {
     val ids = Seq(0L, 1L, 2L, 3L, 4L, 5L).toDF("doc_id")
     val pairs = Seq((0L, 1L), (1L, 3L), (4L, 5L)).toDF("id_a", "id_b")
-    val frame = Dedup.softDedupWeights(ids, pairs)
+    val (frame, pin) = Dedup.softDedupWeights(ids, pairs)
     // plan gate: the per-cluster count is a groupBy + join, never a
     // window over the cluster label — a viral mega-cluster is this
     // operator's hot key by construction, and a window would funnel
@@ -857,7 +858,7 @@ class PipelineSpec extends AnyFunSuite {
     val plan = frame.queryExecution.executedPlan.toString
     assert(!plan.contains("Window"),
       s"softDedupWeights must not window over the cluster label:\n$plan")
-    val got = frame.collect()
+    val got = consume((frame, pin))(_.collect())
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("cluster"), r.getAs[Long]("n_dups"),
           r.getAs[Long]("weight_ppm"))).toMap
@@ -883,7 +884,7 @@ class PipelineSpec extends AnyFunSuite {
       ("B", "c d e"), ("B", "d e f"),
       ("C", "x y")).toDF("source", "text")
       .withColumn("doc_id", monotonically_increasing_id())
-    val rows = Dedup.corpusOverlap(df, k = 1).collect()
+    val rows = consume(Dedup.corpusOverlap(df, k = 1))(_.collect())
     assert(rows.length == 1, s"only A-B overlaps: ${rows.mkString(",")}")
     val r = rows.head
     assert(r.getAs[String]("group_a") == "A")
@@ -902,8 +903,8 @@ class PipelineSpec extends AnyFunSuite {
       ("B", "alpha beta gamma delta"), ("B", "beta gamma delta epsilon"),
       ("C", "one two three four five")).toDF("source", "text")
       .withColumn("doc_id", monotonically_increasing_id())
-    val rows = Dedup.corpusOverlapSketch(df, k = 2, numHashes = 16)
-      .collect()
+    val rows = consume(Dedup.corpusOverlapSketch(df, k = 2,
+      numHashes = 16))(_.collect())
     // A and B carry the same shingle set -> every component ties;
     // C shares nothing with either -> below the 1/H resolution
     assert(rows.length == 1, rows.mkString(","))
@@ -913,8 +914,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(r.getAs[Long]("matches") == 16L)
     assert(r.getAs[Long]("est_jaccard_ppm") == 1000000L)
     // determinism: salted md5 minhash, no RNG
-    val again = Dedup.corpusOverlapSketch(df, k = 2, numHashes = 16)
-      .collect()
+    val again = consume(Dedup.corpusOverlapSketch(df, k = 2,
+      numHashes = 16))(_.collect())
     assert(again.map(_.toString).sorted
       .sameElements(rows.map(_.toString).sorted))
   }
@@ -930,17 +931,19 @@ class PipelineSpec extends AnyFunSuite {
       "spark catalyst tungsten codegen shuffle broadcast")
     val dup = (0 until 20).map(i => (i.toLong, texts(i % 5)))
       .toDF("doc_id", "text")
-    val pairs = Dedup.jaccardPairs(dup, k = 3, threshold = 0.5)
-    val labels = Dedup.clusters(dup.select("doc_id"), pairs)
+    val (pairs, pairsPin) = Dedup.jaccardPairs(dup, k = 3, threshold = 0.5)
+    val (labels, labelsPin) = Dedup.clusters(dup.select("doc_id"), pairs)
     val split = Sampling.split(labels,
       Seq("train" -> 0.8, "valid" -> 0.1, "test" -> 0.1),
       idCol = "cluster")
-    val byDoc = split.collect().map(r => r.getAs[Long]("doc_id") ->
-      (r.getAs[Long]("cluster"), r.getAs[String]("split"))).toMap
+    val byDoc = consume((split, labelsPin))(_.collect())
+      .map(r => r.getAs[Long]("doc_id") ->
+        (r.getAs[Long]("cluster"), r.getAs[String]("split"))).toMap
     assert(byDoc.size == 20, "every doc is assigned exactly one split")
     // every near-dup pair lands in the same split (the leak-free
     // property a doc-keyed split violates for some of these 30 pairs)
-    val p = pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
+    val p = consume((pairs, pairsPin))(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1)))
     assert(p.nonEmpty)
     p.foreach { case (a, b) =>
       assert(byDoc(a)._2 == byDoc(b)._2,
@@ -1064,7 +1067,6 @@ class PipelineSpec extends AnyFunSuite {
     val pairs = (0L until 39L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val e = intercept[IllegalStateException] {
       Dedup.clusters(ids, pairs, maxIters = 2, localMaxEdges = 0)
-        .collect()
     }
     assert(e.getMessage.contains("did not converge"))
   }
@@ -1073,7 +1075,7 @@ class PipelineSpec extends AnyFunSuite {
     val ids = Seq(0L, 1L, 2L, 3L, 4L, 5L).toDF("doc_id")
     // component {0,1,3} via chain 0-1, 1-3; component {4,5}; 2 alone
     val pairs = Seq((0L, 1L), (1L, 3L), (4L, 5L)).toDF("id_a", "id_b")
-    val got = Dedup.clusters(ids, pairs).collect()
+    val got = consume(Dedup.clusters(ids, pairs))(_.collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(0L -> 0L, 1L -> 0L, 3L -> 0L, 2L -> 2L,
       4L -> 4L, 5L -> 4L))
@@ -1278,29 +1280,61 @@ class PipelineSpec extends AnyFunSuite {
     assert(kept == Set(3L, 5L, 7L))
   }
 
-  test("owned variants free their pinned blocks on release()") {
-    // the library-caller contract: consume the frame, release the
-    // handle, nothing stays pinned (no global sweep needed).
-    // Earlier tests in this suite use the NON-owned variants, whose
-    // contract is caller-sweeps — clear their leftovers first so the
-    // emptiness assertions below measure only this test's pins.
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    def assertReleases(run: => (org.apache.spark.sql.DataFrame,
-        Dedup.PinHandle)): Unit = {
-      val (frame, handle) = run
-      frame.count()
-      assert(spark.sparkContext.getPersistentRDDs.nonEmpty)
+  test("pin hygiene: every pinning face frees what it pinned on release()") {
+    // the one-face contract: consume the frame, release the handle, and
+    // the session's persistent RDDs are what they were before the call
+    // — no global sweep, whatever earlier tests left behind
+    import graft.pipeline.{Bloom, Select}
+    val withSrc = docs.withColumn("source",
+      when(col("doc_id") % 2 === 0, lit("even")).otherwise(lit("odd")))
+    val ids = docs.select("doc_id")
+    val pairs = Seq((0L, 1L), (1L, 3L)).toDF("id_a", "id_b")
+    val emb = Seq((0L, Seq(1f, 0f)), (1L, Seq(0.9f, 0.1f)),
+      (2L, Seq(0f, 1f))).toDF("vec_id", "embedding")
+    val tier = Bloom.bloomTier(docs.where(col("doc_id") < 2), nBuckets = 8,
+      nWords = 2, kHashes = 2)
+    val refFps = docs.where(col("doc_id") < 2)
+      .select(TextOps.fingerprint(col("text")).as("_fp"))
+    val faces: Seq[(String, () => (org.apache.spark.sql.DataFrame,
+        Dedup.PinHandle))] = Seq(
+      "jaccardPairs" -> (() => Dedup.jaccardPairs(docs, k = 3,
+        threshold = 0.5)),
+      "crossCorpusPairs" -> (() => Dedup.crossCorpusPairs(
+        docs.where(col("doc_id") % 2 === 1),
+        docs.where(col("doc_id") % 2 === 0), k = 3, threshold = 0.5)),
+      "corpusOverlap" -> (() => Dedup.corpusOverlap(withSrc, k = 3)),
+      "corpusOverlapSketch" -> (() => Dedup.corpusOverlapSketch(withSrc,
+        k = 3, numHashes = 8)),
+      "corpusOverlapSketch (distributed)" -> (() =>
+        Dedup.corpusOverlapSketch(withSrc, k = 3, numHashes = 8,
+          maxLocalGroups = 1)),
+      "minhashLshCandidates" -> (() => Dedup.minhashLshCandidates(docs,
+        k = 3, numHashes = 8, bands = 4)),
+      "overlapPairs" -> (() => Dedup.overlapPairs(docs, w = 3)),
+      "clusters" -> (() => Dedup.clusters(ids, pairs)),
+      "clusters (BSP)" -> (() => Dedup.clusters(ids, pairs,
+        localMaxEdges = 0)),
+      "softDedupWeights" -> (() => Dedup.softDedupWeights(ids, pairs)),
+      "simhashPairs" -> (() => Dedup.simhashPairs(docs)),
+      "dedupAgainstTier" -> (() => Bloom.dedupAgainstTier(docs, tier,
+        refFps, nBuckets = 8, nWords = 2, kHashes = 2)),
+      "dedupAgainstCorpusBloom" -> (() => Bloom.dedupAgainstCorpusBloom(
+        docs, docs.where(col("doc_id") < 2), nBuckets = 8, nWords = 2,
+        kHashes = 2)),
+      "dsirWeights" -> (() => Select.dsirWeights(docs,
+        docs.where(col("doc_id") < 2), buckets = 16)),
+      "dsirWeightsPred" -> (() => Select.dsirWeightsPred(docs,
+        col("doc_id") < 2, buckets = 16)),
+      "srpCandidatePairs" -> (() => Similarity.srpCandidatePairs(emb,
+        dims = 2, nBits = 4, bands = 2, threshold = 0.5)))
+    for ((name, face) <- faces) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val (frame, handle) = face()
+      frame.collect()
       handle.release()
-      // blocking=false: the unpersist unregisters synchronously even
-      // though block deletion is async
-      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+        s"$name left pinned RDDs behind its handle")
     }
-    assertReleases(Dedup.jaccardPairsOwned(docs, k = 3, threshold = 0.5))
-    assertReleases(Dedup.minhashLshCandidatesOwned(docs, k = 3,
-      numHashes = 8, bands = 4))
-    assertReleases(Dedup.simhashPairsOwned(docs))
-    assertReleases(Dedup.overlapPairsOwned(docs, w = 3))
   }
 
   test("simhash: identical docs identical hashes; near-dups close") {
@@ -1314,7 +1348,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("simhash pairs: exact dup at hamming 0, disjoint doc excluded") {
-    val got = Dedup.simhashPairs(docs).collect()
+    val got = consume(Dedup.simhashPairs(docs))(_.collect())
       .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
     assert(got((0L, 3L)) == 0L) // identical text, identical signature
     assert(!got.keys.exists(p => p._1 == 2L || p._2 == 2L))
@@ -1342,7 +1376,8 @@ class PipelineSpec extends AnyFunSuite {
       (100L, "alpha beta gamma delta epsilon zeta"),
       (101L, "alpha beta gamma delta epsilon zeta"))
     val corpus = (herd ++ dups).toDF("doc_id", "text")
-    val capped = Dedup.simhashPairs(corpus, maxBucket = 4).collect()
+    val capped = consume(Dedup.simhashPairs(corpus, maxBucket = 4))(
+      _.collect())
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped == Set((100L, 101L)))
   }
@@ -1356,7 +1391,8 @@ class PipelineSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
     // w=5: the 6-token passage holds 2 distinct 5-token windows, both
     // shared between docs 0 and 1 despite different offsets
-    val got = Dedup.overlapPairs(corpus, w = 5, minShared = 2L).collect()
+    val got = consume(Dedup.overlapPairs(corpus, w = 5, minShared = 2L))(
+      _.collect())
       .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
     assert(got == Map((0L, 1L) -> 2L))
   }
@@ -1371,11 +1407,12 @@ class PipelineSpec extends AnyFunSuite {
       (100L, "p q r s t u tail"),
       (101L, "p q r s t u other"))
     val corpus = (boiler ++ dups).toDF("doc_id", "text")
-    val uncapped = Dedup.overlapPairs(corpus, w = 5, minShared = 1L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val uncapped = consume(Dedup.overlapPairs(corpus, w = 5,
+      minShared = 1L))(_.collect()).map(r => (r.getLong(0), r.getLong(1)))
+      .toSet
     assert(uncapped.size >= 66)
-    val capped = Dedup.overlapPairs(corpus, w = 5, minShared = 1L,
-      maxDf = 4).collect()
+    val capped = consume(Dedup.overlapPairs(corpus, w = 5, minShared = 1L,
+      maxDf = 4))(_.collect())
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped == Set((100L, 101L)))
   }
@@ -1455,14 +1492,16 @@ class PipelineSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val exact = pairs(Similarity.cosineNearDupPairs(emb, 0.3, None)
       .select("id_a", "id_b"))
-    val srp4 = pairs(Similarity.srpCandidatePairs(emb, dims = 64,
-      nBits = 32, bands = 4, threshold = 0.3).select("id_a", "id_b"))
+    val srp4 = consume(Similarity.srpCandidatePairs(emb, dims = 64,
+      nBits = 32, bands = 4, threshold = 0.3))(
+      df => pairs(df.select("id_a", "id_b")))
     assert(srp4.subsetOf(exact)) // exact filter: no false positives
     // recall follows SRP theory, p = 1 - angle/pi per bit: at cos 0.3
     // (p ~ 0.6) 8-bit bands recall ~6% while 2-bit bands recall
     // ~99.9% — band width is the knob, which the widths must show
-    val srp16 = pairs(Similarity.srpCandidatePairs(emb, dims = 64,
-      nBits = 32, bands = 16, threshold = 0.3).select("id_a", "id_b"))
+    val srp16 = consume(Similarity.srpCandidatePairs(emb, dims = 64,
+      nBits = 32, bands = 16, threshold = 0.3))(
+      df => pairs(df.select("id_a", "id_b")))
     assert(srp16.subsetOf(exact))
     assert(srp4.subsetOf(srp16)) // narrower bands never lose pairs
     assert(srp16.size >= (exact.size * 9) / 10,
@@ -1873,10 +1912,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("dedupNearDup keeps one canonical copy per near-dup cluster " +
       "and releases every pin through its handle") {
-    // sweep first: earlier tests may leave pins legitimately (the
-    // non-Owned variants' contract is caller-sweeps)
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
     val base = "alpha beta gamma delta epsilon zeta eta theta"
     val corpus = Seq(
       (1L, base), (2L, base + " iota"),     // near-dups: keep 1
@@ -1888,7 +1924,7 @@ class PipelineSpec extends AnyFunSuite {
     val ids = kept.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L, 5L))
     handle.release()
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+    assert(spark.sparkContext.getPersistentRDDs.keySet == pinned,
       "dedupNearDup must not leak pinned blocks past its handle")
   }
 
@@ -2278,14 +2314,14 @@ class PipelineSpec extends AnyFunSuite {
     // the confirm join must still keep every non-identical doc.
     val ref = docs.where(col("doc_id").isin(0L, 2L))
     val fresh = docs.where(col("doc_id").isin(1L, 3L, 4L))
-    val kept = Bloom.dedupAgainstCorpusBloom(fresh, ref,
-      nBuckets = 4, nWords = 1, kHashes = 4)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val kept = consume(Bloom.dedupAgainstCorpusBloom(fresh, ref,
+      nBuckets = 4, nWords = 1, kHashes = 4))(
+      _.select("doc_id").collect()).map(_.getLong(0)).toSet
     assert(kept == Set(1L, 4L))
     // definite-negative fast path: an empty ref tier keeps everything
-    val keptAll = Bloom.dedupAgainstCorpusBloom(fresh,
-      ref.where(lit(false)), nBuckets = 4, nWords = 1, kHashes = 4)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val keptAll = consume(Bloom.dedupAgainstCorpusBloom(fresh,
+      ref.where(lit(false)), nBuckets = 4, nWords = 1, kHashes = 4))(
+      _.select("doc_id").collect()).map(_.getLong(0)).toSet
     assert(keptAll == Set(1L, 3L, 4L))
   }
 

@@ -22,15 +22,7 @@ object PqProbe {
   def main(args: Array[String]): Unit = {
     val bigDir = if (args.length > 0) args(0) else "/tmp/sf1"
     val passes = if (args.length > 1) args(1).toInt else 2
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
     val emb = spark.read.parquet(s"$bigDir/embeddings.parquet")
       .select("vec_id", "embedding", "label")
     val n = emb.count()

@@ -14,20 +14,8 @@ object ShingleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val passes = if (args.length > 1) args(1).toInt else 3
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def sweep(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      spark.sharedState.cacheManager.clearCache()
-    }
+    val spark = graft.util.LocalSession()
+    def sweep(): Unit = graft.util.LocalSession.sweep(spark)
     val docs = model.Tables.load(spark, sfDir, "documents")
     for (p <- 1 to passes) {
       var t0 = System.nanoTime()
@@ -45,7 +33,7 @@ object ShingleProbe {
       sweep()
       t0 = System.nanoTime()
       val nPairs = pipeline.Dedup.jaccardPairs(docs, k = 3,
-        threshold = 0.5, maxDf = 100).count()
+        threshold = 0.5, maxDf = 100)._1.count()
       val tPairs = (System.nanoTime() - t0) / 1e9
       sweep()
       println(f"pass $p: shingle-stage($n)=$tShingle%.2f s " +

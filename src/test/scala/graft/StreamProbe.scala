@@ -30,15 +30,7 @@ object StreamProbe {
     // operator's ground truth under the cells in force, before AND
     // after the swap
     val mode = if (args.length > 2) args(2) else "exact"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
     val base = java.nio.file.Files
       .createTempDirectory("graft-streamprobe").toString
     if (mode == "semantic") { semanticProbe(spark, sfDir, nBatches, base); return }

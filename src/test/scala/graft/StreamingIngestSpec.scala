@@ -297,6 +297,78 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(descs.forall(_.matches("ingest:[A-Za-z]+:[a-z]+")), descs)
   }
 
+  test("stream batches and /import share one ingest-version counter: a " +
+      "batch after an import lands with its stat partials") {
+    val base = Files.createTempDirectory("graft-mixed").toString
+    val (in, out, stats, control, cp) = (s"$base/in", s"$base/out",
+      s"$base/stats", s"$base/control", s"$base/cp")
+    val sec = 1000000000L
+    def land(rows: Seq[(String, String, Long, Long, Double)]): Unit =
+      rows.toDF("producer", "topic", "time", "seq", "value").coalesce(1)
+        .write.mode("append").parquet(in)
+    def trigger(): Unit = {
+      val q = Ingest.startWithStats(spark, spark.readStream
+          .schema(spark.read.parquet(in).schema).parquet(in),
+        out, stats, cp, Some(control))
+      q.awaitTermination(120000)
+      q.exception.foreach(e => throw e)
+    }
+    land(Seq(("p0", "click", 10 * sec, 1L, 1.0),
+      ("p0", "click", 20 * sec, 2L, 2.0)))
+    trigger() // batch 0
+    val w = new graft.mcap.Mcap.Writer()
+    w.writeSchema(graft.mcap.Mcap.SchemaRec(1, "pkg/t", "ros1msg",
+      "int16 c".getBytes))
+    w.writeChannel(graft.mcap.Mcap.ChannelRec(0, 1, "click", "ros1"))
+    for (t <- 1L to 3L)
+      w.writeMessage(graft.mcap.Mcap.MessageRec(0, t, 25 * sec + t,
+        25 * sec + t, Array[Byte](t.toByte, 0)))
+    Files.write(java.nio.file.Paths.get(s"$base/in.mcap"), w.finish())
+    assert(Ingest.importMcap(spark, "p1", s"$base/in.mcap", out, stats,
+      control) == 2L)
+    land(Seq(("p0", "click", 30 * sec, 3L, 3.0),
+      ("p2", "view", 40 * sec, 4L, 4.0)))
+    trigger() // batch 1: its own version, never a "replay" of the import
+    val cat = new graft.model.IngestedCatalog(out, stats, control)
+    val msgs = cat.messages(spark)
+    assert(msgs.count() == 7)
+    assert(msgs.where(col("producer") =!= "p1")
+      .select("seq", "ingest_version").as[(Long, Long)].collect().toSet ==
+      Set((1L, 1L), (2L, 1L), (3L, 3L), (4L, 3L)))
+    assert(cat.stats(spark).where(col("ingest_version") === 3L)
+      .select("producer").as[String].collect().toSet == Set("p0", "p2"))
+    // a replay of the committed batch 1 is still a no-op
+    Ingest.appendVersion(msgs.where(col("seq") === 3L)
+        .select("producer", "topic", "time", "seq", "value", "day"), 1L,
+      out, stats, Some(control))
+    assert(cat.messages(spark).count() == 7)
+  }
+
+  test("a stream batch re-delivered after its commit (the checkpoint " +
+      "commit lost) writes nothing and the stream goes on") {
+    val base = Files.createTempDirectory("graft-redeliver").toString
+    val (in, out, stats, cp) = (s"$base/in", s"$base/out",
+      s"$base/stats", s"$base/cp")
+    val rows = Seq(("p0", "click", 10L * 1000000000L, 1L, 1.0))
+      .toDF("producer", "topic", "time", "seq", "value")
+    rows.write.parquet(in)
+    def trigger(): Unit = {
+      val q = Ingest.startWithStats(spark,
+        spark.readStream.schema(rows.schema).parquet(in), out, stats, cp)
+      q.awaitTermination(120000)
+      q.exception.foreach(e => throw e)
+    }
+    trigger()
+    // the crash window: the store committed batch 0, the checkpoint
+    // did not, so the restarted query runs batch 0 again
+    Files.delete(java.nio.file.Paths.get(s"$cp/commits/0"))
+    Files.deleteIfExists(java.nio.file.Paths.get(s"$cp/commits/.0.crc"))
+    trigger()
+    val cat = new graft.model.IngestedCatalog(out, stats, s"$base/none")
+    assert(cat.messages(spark).count() == 1)
+    assert(cat.manifest(spark).version == 1L)
+  }
+
   test("import into a fieldStats store pads missing fields with typed " +
       "nulls: coverage provable, pruning exact") {
     val base = Files.createTempDirectory("graft-fpad").toString

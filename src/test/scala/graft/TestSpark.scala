@@ -6,20 +6,19 @@ import org.apache.spark.sql.types._
 /** One shared local session for all suites. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // plan-shape gates read PushedFilters/ReadSchema from the plan
-      // string; default 100-char metadata truncation hides the tail
-      .config("spark.sql.maxMetadataStringLength", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.util.LocalSession(4)
+    // plan-shape gates read PushedFilters/ReadSchema from the plan
+    // string; default 100-char metadata truncation hides the tail
+    s.conf.set("spark.sql.maxMetadataStringLength", "2000")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Consume a pinning operator's frame with `use`, then release its
+    * pin handle. */
+  def consume[A](face: (DataFrame, graft.pipeline.Dedup.PinHandle))(
+      use: DataFrame => A): A =
+    try use(face._1) finally face._2.release()
 
   /** Whether a planned QL query's parquet scans carry the statfilter's
     * pushed `time` range — the mark of an engaged bucket skip, for

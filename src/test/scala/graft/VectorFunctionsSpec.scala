@@ -43,6 +43,23 @@ class VectorFunctionsSpec extends AnyFunSuite {
       Seq(1.0, 1.0)))
   }
 
+  test("graft functions register once per session: building a column " +
+      "twice keeps the first builder") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import graft.functions.TextFunctions
+    val registry = spark.sessionState.functionRegistry
+    val id = FunctionIdentifier(TextFunctions.trgmName)
+    def entry() = (registry.lookupFunction(id).get,
+      registry.lookupFunctionBuilder(id).get)
+    TextFunctions.trgmMasks(lit("abc"))
+    val (info, builder) = entry()
+    TextFunctions.trgmMasks(lit("abd"))
+    // a re-registration would install a fresh ExpressionInfo (the
+    // builder lambda captures nothing, so it alone cannot tell)
+    assert(entry()._1 eq info)
+    assert(entry()._2 eq builder)
+  }
+
   test("dotQ sign decisions are fold-order free: integer sum equals " +
       "the reversed and shuffled accumulation") {
     // the double fold this replaced differed by ~1e-15 under

@@ -72,6 +72,32 @@ class VectorIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("an append evaluates its batch once: the fingerprint and the " +
+      "written rows share one evaluation") {
+    val ivf = tmp("vecbatch-ivf"); val pq = tmp("vecbatch-pq")
+    val ivfPq = tmp("vecbatch-ivfpq")
+    val first = emb.where(col("vec_id") < 8)
+    Similarity.writeIvfIndex(first, ivf, kCells = 2, iters = 2)
+    Similarity.writePqIndex(first, pq, dims = 4, m = 2)
+    Similarity.writeIvfPqIndex(first, ivfPq, kCells = 2, dims = 4, m = 2,
+      iters = 2)
+    val more = emb.where(col("vec_id") >= 8)
+    val appends: Seq[(String, DataFrame => Unit)] = Seq(
+      "appendToIvfIndex" -> (b => Similarity.appendToIvfIndex(b, ivf)),
+      "appendToPqIndex" -> (b => Similarity.appendToPqIndex(b, pq)),
+      "appendToIvfPqIndex" -> (b =>
+        Similarity.appendToIvfPqIndex(b, ivfPq)))
+    for ((verb, append) <- appends) {
+      // every evaluation of the batch's lineage ticks once per row
+      val acc = spark.sparkContext.longAccumulator(verb)
+      val batch = spark.createDataFrame(
+        more.rdd.map { r => acc.add(1); r }, more.schema)
+      append(batch)
+      assert(acc.value == more.count(), s"$verb evaluated its batch " +
+        s"${acc.value.toDouble / more.count()} times")
+    }
+  }
+
   test("serve job budget: a warm ivfTopKFromIndex runs exactly 1 job " +
       "and a warm ivfPqTopKFromIndex exactly 5 — no schema-inference " +
       "job, no leaf listing, no side-table read") {
