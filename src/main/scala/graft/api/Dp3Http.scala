@@ -43,7 +43,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Frames serialize through `df.toJSON.toLocalIterator` — one
   * partition resident driver-side at a time, streamed chunked to the
   * socket; the executors do all the query work, exactly the
-  * reference's one-response-one-writer shape. `/import` requires an
+  * reference's one-response-one-writer shape. Local frames (stat
+  * requests folded on the driver) serialize with no Spark job.
+  * `/import` requires an
   * [[Dp3Http.ImportTarget]] (the ingest directory triple) and appends
   * one ingest version per request via `Ingest.importMcap`; continuous
   * ingest keeps using the streaming pipeline directly.
@@ -268,13 +270,31 @@ final class Dp3Http(svc: Dp3Service, spark: SparkSession,
       s"""{"error":"${escape(msg)}"}""".getBytes(UTF_8))
 
   /** Stream a frame as NDJSON — one partition driver-resident at a
-    * time, chunked transfer (length 0 = unknown). */
+    * time, chunked transfer (length 0 = unknown). A frame the optimizer
+    * reduces to a local relation (a stat request folded on the driver,
+    * with the route's `where`s) is serialized by the optimizer itself:
+    * `to_json(struct(*))` over it folds to a local relation too, so its
+    * collect launches no job, where `toJSON.toLocalIterator` would run
+    * one per partition. Both write each row with Spark's JSON
+    * generator under the session's options, so the bytes are equal.
+    * Only a frame whose leaves are all local is optimized here: any
+    * other goes straight to `toJSON`, which plans it once. */
   private def respondNdjson(ex: HttpExchange, df: DataFrame): Unit = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.functions.{col, struct, to_json}
+    val qe = df.queryExecution
+    val local = qe.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation]) &&
+      qe.optimizedPlan.isInstanceOf[LocalRelation]
+    val lines =
+      if (local) df.select(to_json(struct(col("*")))).collect().iterator
+        .map(_.getString(0))
+      else df.toJSON.toLocalIterator().asScala
     ex.getResponseHeaders.set("Content-Type", "application/x-ndjson")
     ex.sendResponseHeaders(200, 0)
     val out = ex.getResponseBody
-    import scala.jdk.CollectionConverters._
-    df.toJSON.toLocalIterator().asScala.foreach { line =>
+    lines.foreach { line =>
       out.write(line.getBytes(UTF_8)); out.write('\n')
     }
     ex.close()
@@ -443,24 +463,25 @@ final class Dp3Http(svc: Dp3Service, spark: SparkSession,
             .flatMap(_.split(",")).filter(_.nonEmpty)
           val text = field("text").toSeq
             .flatMap(_.split(",")).filter(_.nonEmpty)
-          // the topic predicate applies exactly once, here, on both
-          // faces: topic is a grouping key of each, so Catalyst
-          // pushes the post-filter through the rollup to the tier
-          // scan — passing it to statRangeFields AS WELL (the first
-          // cut) stacked two identical predicates on that path
-          var df =
+          // the value-column face restricts topic/producer before its
+          // fold or rollup; on the per-field face topic is a grouping
+          // key, so Catalyst pushes the post-filter through the rollup
+          // to the tier scan — passing it to statRangeFields AS WELL
+          // (the first cut) stacked two identical predicates there
+          val start = num("start").getOrElse(0L)
+          val end = num("end").getOrElse(Long.MaxValue)
+          val df =
             if (numeric.nonEmpty || text.nonEmpty)
-              statSvc.statRangeFields(spark, gran, numeric, text,
-                topic = None,
-                startNs = num("start").getOrElse(0L),
-                endNs = num("end").getOrElse(Long.MaxValue))
-            else statSvc.statRange(spark, gran,
-              num("start").getOrElse(0L),
-              num("end").getOrElse(Long.MaxValue))
-          field("topic").foreach(t =>
-            df = df.where(org.apache.spark.sql.functions.col("topic") === t))
-          field("producer").foreach(pr => df =
-            df.where(org.apache.spark.sql.functions.col("producer") === pr))
+              Seq("topic", "producer").foldLeft(statSvc.statRangeFields(
+                  spark, gran, numeric, text, topic = None,
+                  startNs = start, endNs = end)) { (f, k) =>
+                field(k).fold(f)(v =>
+                  f.where(org.apache.spark.sql.functions.col(k) === v))
+              }
+            else statSvc.statistics(spark, gran, groupByProducer = true,
+              topics = field("topic").toSeq,
+              producers = field("producer").toSeq,
+              startNs = start, endNs = end)
           respondNdjson(ex, df)
 
         case ("POST", Seq("databases", db, "producers", producer,

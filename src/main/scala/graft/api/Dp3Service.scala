@@ -1,6 +1,7 @@
 package graft.api
 
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, max}
@@ -32,14 +33,21 @@ final case class IngestStore(catalog: IngestedCatalog)
   *   POST /export                     → export
   *   truncate statement               → truncate
   *
-  * Everything is lazy DataFrames — callers compose further or write
-  * out; nothing materializes on the driver.
+  * Every verb answers a DataFrame — callers compose further or write
+  * out. Query, export and listing frames are lazy Spark plans; nothing
+  * of them materializes on the driver.
   *
   * With an `IngestStore`, statRange/statistics are served from the
   * maintained base-tier partials — summary rows, never raw messages
   * (reference: server/tree/tree.go:214-258, "trillions of points under
-  * a second" from precomputed aggregates, doc/paper/dp3.tex:192-196) —
-  * and truncation follows the reference exactly: the statement's
+  * a second" from precomputed aggregates, doc/paper/dp3.tex:192-196).
+  * Within the catalog's driver budget those partials are resident on
+  * the driver, collected once per committed manifest
+  * ([[graft.model.IngestedCatalog.statRollup]]), and a stat request is
+  * folded there into a local frame with no Spark job — dp3's stat
+  * ranges "served mostly from RAM" (doc/paper/dp3.tex:406-413); above
+  * the budget the same rows come from a Spark plan over the partials.
+  * Truncation follows the reference exactly: the statement's
   * timestamp resolves via the control table to the latest ingest
   * version at or before it (server/rootmap/sqlrootmap.go:372-404), and
   * data, stats and exports hide everything at or below that version.
@@ -245,6 +253,17 @@ final class Dp3Service(underlying: MessageCatalog,
     (lo, hi)
   }
 
+  /** The base buckets [lo, hi) under the bins of `widthNs` that
+    * overlap [startNs, endNs). */
+  private def bucketRange(widthNs: Long, startNs: Long,
+      endNs: Long): (Long, Long) = {
+    val (lo, hi) = alignedRange(widthNs, startNs, endNs)
+    val b = StatTiers.BaseWidthNs
+    (math.floorDiv(lo, b),
+      if (hi >= Long.MaxValue - b) Long.MaxValue
+      else math.floorDiv(hi + b - 1, b))
+  }
+
   /** The maintained stat partials pruned to the buckets covering
     * [startNs, endNs) — summary rows only; the bucket-range predicate
     * prunes the stats scan. None without a store. */
@@ -252,14 +271,27 @@ final class Dp3Service(underlying: MessageCatalog,
       startNs: Long, endNs: Long,
       restrict: DataFrame => DataFrame): Option[DataFrame] =
     store.map { st =>
-      val (lo, hi) = alignedRange(widthNs, startNs, endNs)
-      val b = StatTiers.BaseWidthNs
-      val loBucket = math.floorDiv(lo, b)
-      val hiBucket =
-        if (hi >= Long.MaxValue - b) Long.MaxValue
-        else math.floorDiv(hi + b - 1, b)
+      val (loBucket, hiBucket) = bucketRange(widthNs, startNs, endNs)
       maskVersions(restrict(st.catalog.stats(spark)))
         .where(col("bucket") >= loBucket && col("bucket") < hiBucket)
+    }
+
+  /** A stat request folded on the driver from the store's resident
+    * partials ([[graft.stats.StatRollup]]): the rows of the Spark face
+    * (`serveFromPartials` over [[prunedPartials]], bins overlapping
+    * [startNs, endNs)) in its schema, as a local frame. The truncation
+    * mask applies as on the Spark face; `keep` is the request's
+    * (producer, topic) restriction. None without a store or over the
+    * catalog's driver budget. */
+  private def folded(spark: SparkSession, widthNs: Long, startNs: Long,
+      endNs: Long, byProducer: Boolean,
+      keep: ((String, String)) => Boolean): Option[DataFrame] =
+    store.flatMap(_.catalog.statRollup(spark)).map { rollup =>
+      val (loBucket, hiBucket) = bucketRange(widthNs, startNs, endNs)
+      val rows = rollup.serve(widthNs, loBucket, hiBucket, startNs, endNs,
+        byProducer, keep, truncatedVersion.readOnlySnapshot().toMap)
+      spark.createDataFrame(rows.asJava,
+        graft.stats.StatRollup.schema(byProducer))
     }
 
   /** /statrange: flat per-bin stat records at the requested
@@ -268,23 +300,17 @@ final class Dp3Service(underlying: MessageCatalog,
     * Returns every bin OVERLAPPING [startNs, endNs), like the
     * reference's tree descent (tree.go:237).
     *
-    * Served entirely on the columnar sketch-row path (round 13):
-    * stats roll up via primitive HashAggregate, quantiles via the
-    * exploded (kb, c) row face — no ObjectHashAggregate and no
-    * interpreted UDF anywhere in the plan (Dp3ServiceSpec gates the
-    * shape), matching the reference's "served mostly from RAM"
-    * flagship surface. */
+    * The records of [[statistics]] per producer and topic: a store
+    * within its driver budget answers from the resident partials with
+    * no Spark job ([[folded]]). Otherwise the request is served on the
+    * columnar sketch-row path (round 13): stats roll up via primitive
+    * HashAggregate, quantiles via the exploded (kb, c) row face — no
+    * ObjectHashAggregate and no interpreted UDF anywhere in the plan
+    * (Dp3ServiceSpec gates the shape). */
   def statRange(spark: SparkSession, granularityNs: Long,
-      startNs: Long = 0L, endNs: Long = Long.MaxValue): DataFrame = {
-    val width = StatTiers.pickTierWidth(granularityNs)
-    val served =
-      prunedPartials(spark, width, startNs, endNs, identity) match {
-        case Some(partials) => StatTiers.serveFromPartials(partials, width)
-        case None => StatTiers.serveFromMessages(
-          binAligned(spark, width, startNs, endNs), width)
-      }
-    served.where(col("start_ns") < endNs && col("end_ns") > startNs)
-  }
+      startNs: Long = 0L, endNs: Long = Long.MaxValue): DataFrame =
+    statistics(spark, granularityNs, groupByProducer = true,
+      startNs = startNs, endNs = endNs)
 
   /** /statrange with the reference's per-field surface (the reference
     * serves statistics for every flattened schema field —
@@ -313,13 +339,9 @@ final class Dp3Service(underlying: MessageCatalog,
         // the all-codegen split path: non-sketch columns roll up via
         // primitive aggregates, quantiles via the per-field (kb, c)
         // row face — no typed aggregator on the serving surface
-        val (lo, hi) = alignedRange(width, startNs, endNs)
-        val b = StatTiers.BaseWidthNs
-        val hiBucket = if (hi >= Long.MaxValue - b) Long.MaxValue
-          else math.floorDiv(hi + b - 1, b)
+        val (loBucket, hiBucket) = bucketRange(width, startNs, endNs)
         var partials = partials0
-          .where(col("bucket") >= math.floorDiv(lo, b)
-            && col("bucket") < hiBucket)
+          .where(col("bucket") >= loBucket && col("bucket") < hiBucket)
         topic.foreach(t => partials = partials
           .where(col("topic") === t))
         StatTiers.serveFieldsFromPartials(partials, width,
@@ -338,10 +360,12 @@ final class Dp3Service(underlying: MessageCatalog,
   /** /statistics: merged bins with the reference's parameter surface —
     * topic/producer restriction, time range, granularity,
     * groupByProducer (reference: server/treemgr/treemgr.go:384-501).
-    * Served as flat stat records (incl. quantiles) on the same
-    * columnar path as [[statRange]]; producer-merged bins just drop
+    * Served as flat stat records (incl. quantiles): from the resident
+    * partials ([[folded]]), or on the columnar path [[statRange]]
+    * describes. The topic/producer restriction selects the partials
+    * before the fold or the rollup. Producer-merged bins just drop
     * `producer` from the grouping keys — quantile sketches merge by
-    * summing (kb, c) rows across producers, all codegen. */
+    * summing (kb, c) counts across producers. */
   def statistics(spark: SparkSession, granularityNs: Long,
       groupByProducer: Boolean,
       topics: Seq[String] = Nil, producers: Seq[String] = Nil,
@@ -356,15 +380,20 @@ final class Dp3Service(underlying: MessageCatalog,
         m = m.where(col("producer").isin(producers: _*))
       m
     }
-    val served =
-      prunedPartials(spark, width, startNs, endNs, restrict) match {
-        case Some(partials) =>
-          StatTiers.serveFromPartials(partials, width, keys = keys)
-        case None => StatTiers.serveFromMessages(
-          restrict(binAligned(spark, width, startNs, endNs)), width,
-          keys = keys)
-      }
-    served.where(col("start_ns") < endNs && col("end_ns") > startNs)
+    val keep = (pt: (String, String)) =>
+      (topics.isEmpty || topics.contains(pt._2)) &&
+        (producers.isEmpty || producers.contains(pt._1))
+    folded(spark, width, startNs, endNs, groupByProducer, keep).getOrElse {
+      val served =
+        prunedPartials(spark, width, startNs, endNs, restrict) match {
+          case Some(partials) =>
+            StatTiers.serveFromPartials(partials, width, keys = keys)
+          case None => StatTiers.serveFromMessages(
+            restrict(binAligned(spark, width, startNs, endNs)), width,
+            keys = keys)
+        }
+      served.where(col("start_ns") < endNs && col("end_ns") > startNs)
+    }
   }
 
   /** /statistics/available */

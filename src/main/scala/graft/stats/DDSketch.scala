@@ -43,11 +43,17 @@ object DDSketch extends Serializable {
     }
   }
 
+  /** A key's representative value — THE key→value function of every
+    * face: [[graft.stats.StatTiers.sketchKeyValue]] is its column form
+    * and the driver fold ([[StatRollup]]) calls it. `StrictMath.pow`,
+    * because Spark's `pow` is `StrictMath.pow` in both its interpreted
+    * and its generated code; `math.pow` (`java.lang.Math.pow`, a JIT
+    * intrinsic) differs from it in the last bit for some keys. */
   def bucketValue(key: Int): Double = {
     if (key == 0) 0.0
     else {
       val k = math.abs(key) - 1073741824
-      val v = 2.0 * math.pow(Gamma, k) / (Gamma + 1)
+      val v = 2.0 * StrictMath.pow(Gamma, k) / (Gamma + 1)
       if (key > 0) v else -v
     }
   }
@@ -66,20 +72,34 @@ object DDSketch extends Serializable {
 
   /** Quantile estimate: walk sign-ordered buckets to rank q*(n-1). */
   def quantile(sketch: Map[Int, Long], q: Double): Double = {
-    val total = sketch.valuesIterator.sum
-    if (total == 0) return Double.NaN
-    val rank = math.max(0L, math.ceil(q * (total - 1)).toLong)
     // ordering by key is ordering by value: negative keys ascend toward
     // zero, then zero, then positive keys ascend
     val sorted = sketch.toArray.sortBy(_._1)
-    var acc = 0L
-    var i = 0
-    while (i < sorted.length) {
-      acc += sorted(i)._2
-      if (acc > rank) return bucketValue(sorted(i)._1)
-      i += 1
+    quantiles(sorted.map(_._1), sorted.map(_._2), Seq(q)).head
+  }
+
+  /** Quantile estimates of a sketch given as key-ascending (kb, c)
+    * arrays — THE rank walk of every face: for each q, the value of
+    * the first key whose running count exceeds rank
+    * max(0, ceil(q·(n−1))) (the window cumsum of
+    * [[graft.stats.StatTiers.serveQuantileRows]]); NaN when the sketch
+    * counts nothing. */
+  def quantiles(kb: Array[Int], c: Array[Long], qs: Seq[Double])
+      : Seq[Double] = {
+    val total = c.sum
+    qs.map { q =>
+      if (total == 0) Double.NaN
+      else {
+        val rank = math.max(0L, math.ceil(q * (total - 1)).toLong)
+        var acc = c(0)
+        var i = 0
+        while (acc <= rank && i < kb.length - 1) {
+          i += 1
+          acc += c(i)
+        }
+        bucketValue(kb(i))
+      }
     }
-    bucketValue(sorted.last._1)
   }
 
   // --- Spark typed aggregators ------------------------------------------

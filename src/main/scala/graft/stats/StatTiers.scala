@@ -393,7 +393,10 @@ object StatTiers {
     * the double read costs nothing while keeping every stage in
     * whole-stage codegen. Value-identical to
     * [[tierFromPartials]] + [[serve]] (associativity on the stats,
-    * the window-cumsum ≡ the map walk on quantiles). */
+    * the window-cumsum ≡ the map walk on quantiles), and to the driver
+    * fold [[StatRollup.serve]], which answers an ingest store's stat
+    * requests within its driver budget — this plan is the face above
+    * the budget and for partials that are not a store's. */
   def serveFromPartials(partials: DataFrame, widthNs: Long,
       quantiles: Seq[Double] = DefaultQuantiles,
       keys: Seq[String] = Seq("producer", "topic")): DataFrame = {
@@ -504,10 +507,13 @@ object StatTiers {
   // lost because the wide tier needed a join to re-attach the other
   // stats; a quantile-only serving plan has nothing to join.)
 
-  /** [[DDSketch.bucketOf]] as a builtin-function column (bit-identical:
-    * both sides are java.lang.Math log/ceil on the same operands).
-    * NaN/Inf/null → null, so a `where(isNotNull)` drops skipped
-    * samples exactly like the typed aggregator does. */
+  /** [[DDSketch.bucketOf]] as a builtin-function column. Not
+    * bit-identical: Spark's `log` is `StrictMath.log` and bucketOf's is
+    * `java.lang.Math.log`, so a value within an ulp of a bucket
+    * boundary γ^k can land in the neighbouring bucket (66 of the 18003
+    * values at and one ulp around γ^k, |k| <= 3000; none of 2·10^7
+    * random values). NaN/Inf/null → null, so a `where(isNotNull)`
+    * drops skipped samples exactly like the typed aggregator does. */
   def sketchKey(v: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column = {
     val a = abs(v)
@@ -519,7 +525,9 @@ object StatTiers {
         .otherwise(-(k + lit(1073741824))))
   }
 
-  /** [[DDSketch.bucketValue]] as a builtin-function column. */
+  /** [[DDSketch.bucketValue]] as a builtin-function column —
+    * bit-identical: Spark's `pow` is `StrictMath.pow`, as is
+    * bucketValue's. */
   def sketchKeyValue(kq: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column = {
     val g = DDSketch.Gamma

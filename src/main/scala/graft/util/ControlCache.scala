@@ -17,7 +17,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * single-writer maintenance contract already freezes between
   * rewrites; every fresh JVM reloads them from storage, and a rewrite
   * in THIS JVM invalidates by fingerprint, not by writer cooperation.
-  * Query results never pass through here.
+  * Query results never pass through here. The one exception is an
+  * ingest store's stat partials ([[graft.stats.StatRollup]]): a
+  * committed manifest's partials are immutable, so they are held as
+  * the inputs stat requests fold on the driver — one entry per store,
+  * replaced when a commit changes the manifest fingerprint, and only
+  * for stores whose listed stats stay within the catalog's driver
+  * budget.
   *
   * Consistency bound: the fingerprint is read immediately before use,
   * so a cached value can only be stale if an EXTERNAL process

@@ -115,16 +115,44 @@ class DDSketchSpec extends AnyFunSuite {
         val got = served(key)
         qs.zipWithIndex.foreach { case (q, i) =>
           val want = DDSketch.quantile(m, q)
-          // 2-ulp tolerance: Math.pow's JIT intrinsic and its
-          // interpreted (StrictMath-backed) fallback may differ by
-          // 1 ulp between call sites of the SAME JVM. Bucket
-          // SELECTION is pinned exactly by the set equality above;
-          // this only tolerates the value reconstruction's last bit
-          // (round(x, 6) downstream absorbs it everywhere it ships).
-          assert(math.abs(got(i) - want) <= 2 * math.ulp(want),
-            s"$key q=$q: ${got(i)} vs $want")
+          // exact: both faces map the selected key to its value with
+          // StrictMath.pow (bucketValue and Spark's pow)
+          assert(got(i) == want, s"$key q=$q: ${got(i)} vs $want")
         }
       } else assert(!served.contains(key))
+    }
+  }
+
+  test("bucketValue equals Spark's sketchKeyValue bit for bit for key " +
+      "0 and every |k| <= 3000, in generated and in interpreted code") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, when}
+    import graft.stats.StatTiers
+    val offset = 1073741824
+    val keys = 0 +: (-3000 to 3000).flatMap(k =>
+      Seq(k + offset, -(k + offset)))
+    def values(df: DataFrame): Map[Int, Double] =
+      df.select(col("kb"), StatTiers.sketchKeyValue(col("kb"))).collect()
+        .map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    // generated code: the keys are a column of a range scan
+    val id = col("id")
+    val generated = values(spark.range(keys.size).select(
+      when(id === 0, 0)
+        .when(id <= 6001, id - 3001 + offset)
+        .otherwise(-(id - 9002 + offset)).cast("int").as("kb")))
+    // interpreted: the optimizer evaluates a projection of a local
+    // relation on the driver
+    val interpreted = values(keys.toDF("kb"))
+    for (got <- Seq(generated, interpreted)) {
+      assert(got.keySet == keys.toSet)
+      val off = keys.filter(k => java.lang.Double.doubleToRawLongBits(
+        got(k)) != java.lang.Double.doubleToRawLongBits(
+        DDSketch.bucketValue(k)))
+      if (off.nonEmpty) fail(s"${off.size} keys differ, e.g. " +
+        off.take(3).map(k => s"$k: ${got(k)} vs ${DDSketch.bucketValue(k)}")
+          .mkString(", "))
     }
   }
 

@@ -278,18 +278,21 @@ class Dp3ServiceSpec extends AnyFunSuite {
       .toDF("producer", "topic", "time", "seq", "value")
     TestSpark.ingest(base, 1L, rows)
     val cat2 = TestSpark.ingestedCatalog(base)
+    // over the driver budget: the store is served by the Spark face
+    cat2.statRollupBudget = 0L
     val stored = new Dp3Service(cat2, s => cat2.messages(s),
       Some(graft.api.IngestStore(cat2)))
     val raw = new Dp3Service(cat2, s => cat2.messages(s))
     val gran = 3600L * 1000000000L
     val a = stored.statRange(spark, gran)
     val b = raw.statRange(spark, gran)
-    // round-13 gate: the serving surface never runs the typed
+    // round-13 gate: the Spark serving faces never run the typed
     // aggregator (ObjectHashAggregate + kryo) or an interpreted
     // quantile UDF — both branches are codegen shapes
     for (df <- Seq(a, b, stored.statistics(spark, gran,
         groupByProducer = false))) {
       val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("HashAggregate"), p)
       assert(!p.contains("ObjectHashAggregate"), p)
       assert(!p.contains("ScalaUDF"), p)
     }
@@ -311,8 +314,7 @@ class Dp3ServiceSpec extends AnyFunSuite {
       && r.getLong(2) == 0L).get
     val want50 = graft.stats.DDSketch.quantile(m, 0.5)
     val got50 = clickBin0.getDouble(clickBin0.fieldIndex("p50"))
-    assert(math.abs(got50 - want50) <= 2 * math.ulp(want50),
-      s"p50 $got50 vs $want50")
+    assert(got50 == want50, s"p50 $got50 vs $want50")
     assert(got.forall(r => !r.isNullAt(r.fieldIndex("p50"))))
   }
 
@@ -508,14 +510,22 @@ class Dp3ServiceSpec extends AnyFunSuite {
         s"$base/stats", s"$base/control")
       val svc = new Dp3Service(cat, s => cat.messages(s),
         Some(graft.api.IngestStore(cat)))
-      def reads() = Seq(svc.query(spark, "from p0 click;"),
-        svc.statRange(spark, 3600L * 1000000000L))
+      // the stat reads are served from the driver-resident partials
+      def reads() = {
+        val stats = Seq(svc.statRange(spark, 3600L * 1000000000L),
+          svc.statistics(spark, 3600L * 1000000000L,
+            groupByProducer = true))
+        stats.foreach(d => assert(d.queryExecution.optimizedPlan
+          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical
+            .LocalRelation]))
+        svc.query(spark, "from p0 click;") +: stats
+      }
       val pre = reads().map(answer)
       val planned = reads()
       val seen = scala.collection.mutable.ArrayBuffer[
         (String, Seq[Try[Seq[String]]], Seq[Try[Seq[String]]])]()
       graft.util.Maint.crashHook = (v, p) => if (v == verb) {
-        seen += ((p, Try(reads()).fold(e => Seq.fill(2)(
+        seen += ((p, Try(reads()).fold(e => Seq.fill(3)(
           scala.util.Failure(e)), _.map(d => Try(answer(d)))),
           planned.map(d => Try(answer(d)))))
         ()

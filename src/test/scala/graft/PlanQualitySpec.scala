@@ -457,9 +457,41 @@ class PlanQualitySpec extends AnyFunSuite {
     val cat = TestSpark.ingestedCatalog(base)
     val svc = new graft.api.Dp3Service(cat, s => cat.messages(s),
       Some(graft.api.IngestStore(cat)))
+    // the serving path reads ONLY summary rows — this is the property
+    // that makes a year-wide request at 100 TB sub-second. Within the
+    // driver budget, the one `plan:statcache` load scans exactly the
+    // stats files the manifest lists
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.optimizedPlan.foreach {
+          case l: LogicalRelation => l.relation match {
+            case h: HadoopFsRelation => h.inputFiles.foreach(scanned.add)
+            case _ => ()
+          }
+          case _ => ()
+        }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val (rows, jobs) = try JobLog.record(spark.sparkContext)(
+        svc.statRange(spark, 3600L * 1000000000L).collect())
+      finally spark.listenerManager.unregister(listener)
+    assert(jobs.map(_.desc) == Seq("plan:statcache"))
+    import scala.jdk.CollectionConverters._
+    def local(f: String) = new org.apache.hadoop.fs.Path(f).toUri.getPath
+    val listed = cat.manifest(spark).filesOf("stats")
+      .map(f => local(s"$base/${f.path}")).sorted
+    assert(listed.nonEmpty)
+    assert(scanned.asScala.toSeq.map(local).sorted == listed)
+    assert(rows.map(_.getAs[Long]("msg_count")).sum == 2L)
+    // over the budget the Spark face serves, and its plan still reads
+    // the stats tree alone
+    cat.statRollupBudget = 0L
     val bins = svc.statRange(spark, 3600L * 1000000000L)
-    // the serving plan reads ONLY summary rows — this is the property
-    // that makes a year-wide request at 100 TB sub-second
     assert(bins.inputFiles.nonEmpty)
     assert(bins.inputFiles.forall(_.contains("/stats")),
       bins.inputFiles.mkString(", "))
