@@ -43,8 +43,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Frames serialize through `df.toJSON.toLocalIterator` — one
   * partition resident driver-side at a time, streamed chunked to the
   * socket; the executors do all the query work, exactly the
-  * reference's one-response-one-writer shape. Local frames (stat
-  * requests folded on the driver) serialize with no Spark job.
+  * reference's one-response-one-writer shape. An unlimited QL answer
+  * within [[graft.plan.Planner.emitBudget]] is ONE partition, so it
+  * costs one result job and is driver-resident whole while it streams;
+  * a larger one keeps its range partitions. Local frames (stat requests
+  * folded on the driver) serialize with no Spark job.
   * `/import` requires an
   * [[Dp3Http.ImportTarget]] (the ingest directory triple) and appends
   * one ingest version per request via `Ingest.importMcap`; continuous
@@ -270,9 +273,11 @@ final class Dp3Http(svc: Dp3Service, spark: SparkSession,
       s"""{"error":"${escape(msg)}"}""".getBytes(UTF_8))
 
   /** Stream a frame as NDJSON — one partition driver-resident at a
-    * time, chunked transfer (length 0 = unknown). A frame the optimizer
-    * reduces to a local relation (a stat request folded on the driver,
-    * with the route's `where`s) is serialized by the optimizer itself:
+    * time (the whole answer for a QL answer the planner emits as one
+    * partition), chunked transfer (length 0 = unknown). A frame the
+    * optimizer reduces to a local relation (a stat request folded on
+    * the driver, with the route's `where`s) is serialized by the
+    * optimizer itself:
     * `to_json(struct(*))` over it folds to a local relation too, so its
     * collect launches no job, where `toJSON.toLocalIterator` would run
     * one per partition. Both write each row with Spark's JSON

@@ -123,24 +123,20 @@ final class Dp3Service(underlying: MessageCatalog,
   private def messages(spark: SparkSession): DataFrame =
     maskAll(rawMessages(spark))
 
-  /** The maintained stat partials adapted to the statfilter's
-    * per-field naming — write-time statistics powering plan-time chunk
-    * skips, exactly the reference's statfilter-during-descent
-    * (server/tree/iterator.go:173-199). A per-FIELD partials table
-    * (`Ingest.startWithStats(fieldStats = ...)`) already carries the
-    * statfilter column shapes, including text min/max and trigram
+  /** The maintained stat partials in the statfilter's per-field naming
+    * — write-time statistics powering plan-time chunk skips, exactly
+    * the reference's statfilter-during-descent
+    * (server/tree/iterator.go:173-199), already in memory like its
+    * inner nodes: within the catalog's driver budget the tier is
+    * resident ([[graft.model.IngestedCatalog.statFilterTier]]), so a
+    * warm pruned query's statfilter launches no Spark job. A per-FIELD
+    * partials table (`Ingest.startWithStats(fieldStats = ...)`) carries
+    * the statfilter column shapes, including text min/max and trigram
     * words, so every stats-backed field prunes; without one, the base
     * tier's `value` min/max is adapted. Version masks apply either way
     * so truncated batches stop vouching for their buckets. */
   private def statSource: Option[Planner.StatSource] = store.map { st =>
-    Planner.StatSource(
-      st.catalog.fieldStats match {
-        case Some(fs) => s => maskVersions(fs(s))
-        case None => s => maskVersions(st.catalog.stats(s)).select(
-          col("producer"), col("topic"), col("bucket"),
-          col("num_min").as("value__min"),
-          col("num_max").as("value__max"))
-      },
+    Planner.StatSource(s => maskVersions(st.catalog.statFilterTier(s)),
       StatTiers.BaseWidthNs,
       // StatSource's coverage contract, verified rather than assumed:
       // the tier vouches for a scan only if EVERY unmasked ingest

@@ -171,8 +171,10 @@ object Export {
     * appearance order. Driver-side single stream by construction —
     * this IS the reference's output shape (one HTTP response through
     * one writer); `toLocalIterator` pulls a partition at a time, so
-    * driver memory is one partition, not the result. For unbounded
-    * exports use [[writeMcapParts]]. */
+    * the rows the driver holds are one partition — the whole answer
+    * for a QL answer the planner emits as one partition
+    * ([[graft.plan.Planner.emitBudget]]) — beside the stream it
+    * returns. For unbounded exports use [[writeMcapParts]]. */
   def mcap(df: DataFrame, dataCols: Seq[String]): Array[Byte] =
     mcap(df, dataCols, explain = false)
 

@@ -305,27 +305,70 @@ final class IngestedCatalog(val dataDir: String, val statsDir: String,
   /** The driver budget on the stats bytes a manifest lists: a store
     * within it has its partials resident on the driver
     * ([[statRollup]]). Derived from this JVM's heap
-    * ([[IngestedCatalog.statRollupBudget]]); a seam for specs, no
-    * option sets it. */
-  private[graft] var statRollupBudget: Long =
-    IngestedCatalog.statRollupBudget(Runtime.getRuntime.maxMemory)
+    * ([[IngestedCatalog.budget]]); a seam for specs, no option sets
+    * it. */
+  private[graft] var statRollupBudget: Long = IngestedCatalog.budget(
+    Runtime.getRuntime.maxMemory, IngestedCatalog.HeapPerStatsByte)
 
-  /** The stats tree's partials resident on the driver, collected once
-    * per committed manifest by one `plan:statcache` job; None when the
-    * manifest lists more than [[statRollupBudget]] bytes of them, and
-    * a stat request is served through Spark instead. */
-  private[graft] def statRollup(spark: SparkSession)
-      : Option[graft.stats.StatRollup] =
-    if (manifest(spark).filesOf("stats").map(_.bytes).sum
-        > statRollupBudget) None
-    else Some(cached(spark, "stat-rollup") {
-      graft.util.JobDesc(spark.sparkContext, "plan:statcache") {
-        graft.stats.StatRollup(stats(spark))
-      }
+  /** `load` resident on the driver: computed once per committed manifest
+    * by one `plan:statcache` job when the manifest lists at most
+    * `budget` bytes of `tree`; None above the budget. `load` must read
+    * the manifest itself: the cache takes the manifest's fingerprint
+    * before it runs `load`, so a commit in between costs one reload on
+    * the next request, where rows of `m` would be kept under the newer
+    * fingerprint. */
+  private def resident[T](spark: SparkSession, m: graft.util.Manifest,
+      tree: String, what: String, budget: Long)(load: => T): Option[T] =
+    if (m.filesOf(tree).map(_.bytes).sum > budget) None
+    else Some(cached(spark, s"$what ${dirs(tree)}") {
+      graft.util.JobDesc(spark.sparkContext, "plan:statcache")(load)
     })
 
+  /** The stats tree's partials resident on the driver ([[resident]]);
+    * None over [[statRollupBudget]], and a stat request is served
+    * through Spark instead. */
+  private[graft] def statRollup(spark: SparkSession)
+      : Option[graft.stats.StatRollup] =
+    resident(spark, manifest(spark), "stats", "stat-rollup",
+      statRollupBudget)(graft.stats.StatRollup(stats(spark)))
+
+  /** The driver budget on the listed bytes of the tree backing the
+    * statfilter: within it, [[statFilterTier]] is resident on the
+    * driver. The smaller of the heap rule ([[IngestedCatalog.budget]])
+    * and [[IngestedCatalog.FilterCrossoverBytes]]; a seam for specs, no
+    * option sets it. */
+  private[graft] var statFilterBudget: Long = math.min(
+    IngestedCatalog.budget(Runtime.getRuntime.maxMemory,
+      IngestedCatalog.HeapPerFilterByte),
+    IngestedCatalog.FilterCrossoverBytes)
+
+  /** The statfilter's tier: the per-field partials when the store keeps
+    * them, else the stats tree's `num_min`/`num_max` as
+    * `value__min`/`value__max` — either way only the keys,
+    * `ingest_version` and the columns [[graft.stats.StatFilter]] reads.
+    * Within [[statFilterBudget]] it is [[resident]], like the stat
+    * rollup, as one local frame: the statfilter's filters fold into a
+    * local relation and its collect launches no job. Over the budget it
+    * is the Spark plan over the tree's files. */
+  private[graft] def statFilterTier(spark: SparkSession): DataFrame = {
+    val name = if (fieldStatsDir.isDefined) "fstats" else "stats"
+    def face(m: graft.util.Manifest): DataFrame = {
+      val t = Ingest.read(spark, dirs, m, name, _ => true)
+      if (fieldStatsDir.isDefined)
+        t.select(graft.stats.StatFilter.tierColumns(t.columns).map(col): _*)
+      else t.select(col("producer"), col("topic"), col("bucket"),
+        col("ingest_version"), col("num_min").as("value__min"),
+        col("num_max").as("value__max"))
+    }
+    val m = manifest(spark)
+    resident(spark, m, name, "statfilter-tier", statFilterBudget)(
+      new IngestedCatalog.LocalTier(face(manifest(spark))))
+      .fold(face(m))(_.in(spark))
+  }
+
   /** Per-field stat partials (`Ingest.startWithStats` with
-    * `fieldStats`) — the statfilter's pruning source. */
+    * `fieldStats`) — the statfilter's pruning source and the stored
+    * face of `statRangeFields`. */
   def fieldStats: Option[SparkSession => DataFrame] =
     fieldStatsDir.map(_ => (s: SparkSession) => tree(s, "fstats"))
 
@@ -350,18 +393,58 @@ final class IngestedCatalog(val dataDir: String, val statsDir: String,
 }
 
 object IngestedCatalog {
+  /** The listed bytes of a tree whose driver-resident form retains at
+    * most 1/16 of a driver heap of `maxHeap` bytes, at `heapPerByte`
+    * heap bytes per listed byte (the measured factors below; the stat
+    * rollup's is about 24 MiB under `-Xmx3g`). A load briefly holds the
+    * collected rows beside the resident form. */
+  def budget(maxHeap: Long, heapPerByte: Long): Long =
+    maxHeap / 16 / heapPerByte
+
   /** Driver heap a [[graft.stats.StatRollup]] retains per listed stats
     * byte, rounded up. Spark's `SizeEstimator` over the rollup against
     * the manifest's stats bytes read 4.3 on the `serve` bench store
     * (307 KB listed) and 6.7, 7.2 and 6.0 on stores of 2, 40 and 3000
     * values per base bucket and table (0.4–1.6 MB listed). */
-  private val HeapPerStatsByte = 8L
+  val HeapPerStatsByte = 8L
 
-  /** The listed stats bytes whose rollup retains at most 1/16 of a
-    * driver heap of `maxHeap` bytes: about 24 MiB under `-Xmx3g`. The
-    * load briefly holds the collected rows beside the rollup. */
-  def statRollupBudget(maxHeap: Long): Long =
-    maxHeap / 16 / HeapPerStatsByte
+  /** Driver heap a resident statfilter tier ([[LocalTier]]) retains per
+    * listed byte of its tree, rounded up: Spark's `SizeEstimator` over
+    * its local relation's rows read 16.3–16.8 on stores of 2 values per
+    * base bucket and table (32k–128k tier rows, 0.95–3.9 MB listed). */
+  val HeapPerFilterByte = 17L
+
+  /** The listed bytes of the statfilter's tree above which the Spark
+    * face plans a pruned scan faster than a resident tier. A resident
+    * tier filters ALL its rows on the driver for every pruned scan
+    * (interpreted, about 1.4 µs a row), while the Spark face pays one
+    * job whose cost hardly grows with the tier. Warm planning of a
+    * pruned query, median ms resident vs Spark face (4-core VM, 16
+    * producers × 4 topics, 2 values per base bucket and table, 31 B
+    * listed per tier row): 77–102 vs 95–117 at 0.95 MB, 140–172 vs
+    * 101–140 at 2.0 MB, 199–236 vs 104–115 at 3.9 MB. Sparse buckets
+    * put the most tier rows in a listed byte, so the cutover is theirs:
+    * denser tiers still gain somewhat above it (40 values per bucket,
+    * 84 B per row: 57–63 vs 86–113 at 1.6 MB). */
+  val FilterCrossoverBytes: Long = 1L << 20
+
+  /** A statfilter tier on the driver: its rows collected once and held
+    * as the local frame over them, so a request derives its filters
+    * from that frame without encoding the rows again. Rebuilt from the
+    * held rows only for another session. */
+  private[graft] final class LocalTier(face: DataFrame) {
+    @volatile private var frame: DataFrame =
+      face.sparkSession.createDataFrame(face.collectAsList(), face.schema)
+
+    def in(spark: SparkSession): DataFrame = {
+      val f = frame
+      if (f.sparkSession eq spark) f
+      else {
+        frame = spark.createDataFrame(f.collectAsList(), f.schema)
+        frame
+      }
+    }
+  }
 }
 
 /** Plain loaders for the TPC-H-ish driver tables. */

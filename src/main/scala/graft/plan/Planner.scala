@@ -26,6 +26,19 @@ import graft.ql._
   *   _mj       — merge tie-break: producer-major, child-minor index
   *               (reference: merge_node.go:47-49);
   *   emit_side — 0 = left/scan, 1 = as-of right.
+  *
+  * The answer is one stream in that order, like dp3's merge node
+  * (server/executor/merge_node.go:46-54). Without a `limit`, an answer
+  * whose scans fit [[Planner.emitBudget]] is emitted through one
+  * single-partition exchange and one sort task: a global sort would
+  * range-partition instead, and the range partitioner's sampling job
+  * re-executes the whole child stage. A larger answer keeps the global
+  * sort, whose range partitions a consumer pulls one at a time. With a
+  * `limit` the sort plans as one top-k job.
+  *
+  * Where a stat source backs a scanned field, the scan prunes to the
+  * buckets that may match ([[graft.stats.StatFilter.pruneScan]]); a
+  * resident tier answers that at plan time without a Spark job.
   */
 final class Planner(catalog: MessageCatalog,
     stats: Option[Planner.StatSource] = None) extends Serializable {
@@ -108,7 +121,13 @@ final class Planner(catalog: MessageCatalog,
       else
         Seq(col("emit_time").asc, col("_mj").asc, col("emit_side").asc,
           col("seq").asc)
-    var out = merged.orderBy(ord: _*)
+    // a single-partition child satisfies the sort's ordered
+    // distribution: no range exchange, so no sampling job re-runs the
+    // child stage (see the class doc)
+    var out =
+      if (q.limit.isEmpty && Planner.emitsWhole(spark, merged))
+        merged.repartition(1).orderBy(ord: _*)
+      else merged.orderBy(ord: _*)
     q.offset.foreach(o => out = out.offset(o.toInt))
     q.limit.foreach(n => out = out.limit(n.toInt))
     out
@@ -332,6 +351,29 @@ final class Planner(catalog: MessageCatalog,
 /** AST-level helpers shared by the DataFrame compiler and the plan
   * renderer (mirroring reference plan.go's pre-compile traversals). */
 object Planner {
+
+  /** The scanned bytes up to which an unlimited answer is emitted as
+    * ONE partition: 1/16 of the smaller of `spark.driver.maxResultSize`
+    * (0 = no cap) and the driver heap. One partition is one task
+    * result, which the driver holds whole while a consumer drains it
+    * and which must fit `maxResultSize`; the 16 leaves room for rows
+    * that outgrow their compressed files. About 64 MiB at the default
+    * 1 GiB cap. */
+  def emitBudget(maxResultSize: Long, maxHeap: Long): Long =
+    (if (maxResultSize > 0) math.min(maxResultSize, maxHeap)
+     else maxHeap) / 16
+
+  /** Whether `df`'s answer fits [[emitBudget]]: the listed bytes of
+    * every leaf of its plan, read off the analyzed plan with no job. A
+    * leaf of unknown size counts as the session's default size, i.e.
+    * too big. */
+  private[graft] def emitsWhole(spark: SparkSession, df: DataFrame)
+      : Boolean = {
+    val scanned = df.queryExecution.analyzed.collectLeaves()
+      .map(_.stats.sizeInBytes).sum
+    scanned <= emitBudget(spark.sparkContext.getConf.getSizeAsBytes(
+      "spark.driver.maxResultSize", "1g"), Runtime.getRuntime.maxMemory)
+  }
 
   /** Per-operator counters from an instrumented run — the reference
     * NodeStats triple (tuples out / bytes out / elapsed,

@@ -27,17 +27,26 @@ object DDSketch extends Serializable {
   /** relative accuracy 0.01 — matches statistics.go:130 */
   val Alpha = 0.01
   val Gamma: Double = (1 + Alpha) / (1 - Alpha)
-  private val logGamma = math.log(Gamma)
+  /** ln γ, the divisor of the key function on every face (the
+    * columnar [[graft.stats.StatTiers.sketchKey]] takes it as a
+    * literal) */
+  val LogGamma: Double = StrictMath.log(Gamma)
   /** |x| below this maps to the zero bucket (shared with the
     * columnar [[graft.stats.StatTiers.sketchKey]] face) */
   val MinValue = 1e-9
 
+  /** A value's key — THE value→key function of every face:
+    * [[graft.stats.StatTiers.sketchKey]] is its column form.
+    * `StrictMath.log`, because Spark's `log` is `StrictMath.log` in both
+    * its interpreted and its generated code; `math.log` (a JIT
+    * intrinsic) puts some values within an ulp of a boundary γ^k in the
+    * neighbouring bucket. */
   def bucketOf(x: Double): Int = {
     if (x.isNaN || x.isInfinite) return Int.MinValue // sentinel: skip
     val a = math.abs(x)
     if (a < MinValue) 0
     else {
-      val k = math.ceil(math.log(a) / logGamma).toInt
+      val k = math.ceil(StrictMath.log(a) / LogGamma).toInt
       // shift by 1 so bucket 0 stays reserved for zero; sign-fold
       if (x > 0) k + 1073741824 else -(k + 1073741824)
     }

@@ -134,6 +134,16 @@ object StatFilter {
       checkableOp && backed
   }
 
+  /** The columns of a per-field tier that [[compile]] can read — every
+    * field's `__min`/`__max` and `__tmin`/`__tmax`/`__trgm<w>` — plus
+    * the keys and `ingest_version` (the truncation mask): a resident
+    * tier holds no sketch, sum or count. */
+  def tierColumns(columns: Seq[String]): Seq[String] = {
+    val keys = Set("producer", "topic", "bucket", "ingest_version")
+    val stat = raw".+__(min|max|tmin|tmax|trgm\d+)".r
+    columns.filter(c => keys(c) || stat.matches(c))
+  }
+
   /** Qualifying (producer, topic, bucket) rows of a tier under a where
     * clause — the buckets a scan must still visit. */
   def qualifyingBuckets(tier: DataFrame, where: Expr): DataFrame =
@@ -143,7 +153,10 @@ object StatFilter {
   /** Qualifying time ranges [start, end) in ns: the distinct
     * qualifying buckets coalesced into maximal runs. One driver-side
     * collect of the bucket column — control-plane summary rows, no
-    * shuffle (dedup and sort happen on the driver) — run under the
+    * shuffle (dedup and sort happen on the driver). On a resident tier
+    * (a local frame, [[graft.model.IngestedCatalog.statFilterTier]])
+    * the filter folds into a local relation and the collect launches
+    * no job; on a Spark tier it is one small job under the
     * `plan:statfilter` job description. */
   def qualifyingRanges(tier: DataFrame, where: Expr, widthNs: Long)
       : Seq[(Long, Long)] = {
@@ -197,14 +210,15 @@ object StatFilter {
     *
     * The tier is read once here (the range collect). In a real
     * deployment the tier is a STORED summary table written at ingest
-    * (the reference's nodestore statistics), so that read is a
-    * kilobyte scan; if deriving the tier on the fly, persist it first.
-    * Consulting the stats costs one small job at plan time regardless
-    * of outcome — the same stats walk the reference's tree descent
-    * performs — so the tier width should be chosen coarse enough that
-    * buckets hold many rows; a tier with ~1 row per bucket (sparse
-    * data under a fine width) makes the walk cost comparable to just
-    * scanning. */
+    * (the reference's nodestore statistics); if deriving the tier on
+    * the fly, persist it first. A store's tier within the driver budget
+    * is resident, like the reference's in-memory inner nodes, and the
+    * walk runs on the driver with no Spark job; a Spark tier costs one
+    * small job at plan time regardless of outcome. Either way the walk
+    * visits every bucket of the scanned tables, so the tier width
+    * should be chosen coarse enough that buckets hold many rows; a tier
+    * with ~1 row per bucket (sparse data under a fine width) makes the
+    * walk cost comparable to just scanning. */
   def pruneScan(scan: DataFrame, tier: DataFrame, where: Expr,
       widthNs: Long, timeCol: String = "time", maxRanges: Int = 64)
       : DataFrame = {

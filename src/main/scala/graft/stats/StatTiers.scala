@@ -507,17 +507,15 @@ object StatTiers {
   // lost because the wide tier needed a join to re-attach the other
   // stats; a quantile-only serving plan has nothing to join.)
 
-  /** [[DDSketch.bucketOf]] as a builtin-function column. Not
-    * bit-identical: Spark's `log` is `StrictMath.log` and bucketOf's is
-    * `java.lang.Math.log`, so a value within an ulp of a bucket
-    * boundary γ^k can land in the neighbouring bucket (66 of the 18003
-    * values at and one ulp around γ^k, |k| <= 3000; none of 2·10^7
-    * random values). NaN/Inf/null → null, so a `where(isNotNull)`
-    * drops skipped samples exactly like the typed aggregator does. */
+  /** [[DDSketch.bucketOf]] as a builtin-function column —
+    * bit-identical: Spark's `log` is `StrictMath.log`, as is
+    * bucketOf's, and both divide by [[DDSketch.LogGamma]].
+    * NaN/Inf/null → null, so a `where(isNotNull)` drops skipped samples
+    * exactly like the typed aggregator does. */
   def sketchKey(v: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column = {
     val a = abs(v)
-    val k = ceil(log(a) / lit(math.log(DDSketch.Gamma))).cast("int")
+    val k = ceil(log(a) / lit(DDSketch.LogGamma)).cast("int")
     when(isnan(v) || a === Double.PositiveInfinity,
         lit(null).cast("int"))
       .when(a < lit(DDSketch.MinValue), lit(0))

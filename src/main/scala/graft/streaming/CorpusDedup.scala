@@ -523,41 +523,6 @@ object CorpusDedup {
         .select(col("_id")).distinct()
   }
 
-  /** Start the streaming semantic dedup ([[appendBatchSemantic]] per
-    * micro-batch; same checkpoint/replay contract as [[start]]). */
-  def startSemantic(spark: SparkSession, stream: DataFrame,
-      corpusDir: String, vecDir: String, checkpointDir: String,
-      cents: Seq[Seq[Double]], threshold: Double,
-      idCol: String = "vec_id", vecCol: String = "embedding")
-      : StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendBatchSemantic(spark, batch, batchId + 1, corpusDir,
-          vecDir, cents, threshold, idCol, vecCol)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** Start the streaming near-dup dedup ([[appendBatchNearDup]] per
-    * micro-batch; same checkpoint/replay contract as [[start]]). */
-  def startNearDup(spark: SparkSession, stream: DataFrame,
-      corpusDir: String, postingsDir: String, checkpointDir: String,
-      k: Int = 3, threshold: Double = 0.5,
-      maxDf: Int = Int.MaxValue, nBuckets: Int = 256,
-      idCol: String = "doc_id", textCol: String = "text")
-      : StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendBatchNearDup(spark, batch, batchId + 1, corpusDir,
-          postingsDir, k, threshold, maxDf, nBuckets, idCol, textCol)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
   /** THE sidecar maintenance commit, shared by the five maintenance
     * verbs: open the newest manifest, write the rewritten rows as
     * manifest version `v+1`'s files, and commit once — readers see the

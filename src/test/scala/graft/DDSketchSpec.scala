@@ -156,6 +156,34 @@ class DDSketchSpec extends AnyFunSuite {
     }
   }
 
+  test("bucketOf equals Spark's sketchKey at every boundary gamma^k and " +
+      "one ulp either side, |k| <= 3000, in generated and in " +
+      "interpreted code") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    import graft.stats.StatTiers
+    val xs = (-3000 to 3000).flatMap { k =>
+      val b = StrictMath.pow(DDSketch.Gamma, k)
+      Seq(math.nextDown(b), b, math.nextUp(b))
+    }.flatMap(x => Seq(x, -x))
+    def keys(df: DataFrame): Seq[(Double, Int)] =
+      df.select(col("x"), StatTiers.sketchKey(col("x"))).collect()
+        .map(r => r.getDouble(0) -> r.getInt(1)).toSeq
+    // generated code: a projection over an RDD scan; interpreted: the
+    // optimizer evaluates a projection of a local relation on the driver
+    val generated = keys(spark.sparkContext.parallelize(xs, 4).toDF("x"))
+    val interpreted = keys(xs.toDF("x"))
+    for (got <- Seq(generated, interpreted)) {
+      assert(got.map(_._1) == xs)
+      val off = got.filter { case (x, k) => DDSketch.bucketOf(x) != k }
+      if (off.nonEmpty) fail(s"${off.size} of ${xs.size} values differ, " +
+        "e.g. " + off.take(3).map { case (x, k) =>
+          s"$x: ${DDSketch.bucketOf(x)} vs $k" }.mkString(", "))
+    }
+  }
+
   test("tier rollup equals direct aggregation (spark)") {
     val spark = TestSpark.spark
     import graft.stats.StatTiers

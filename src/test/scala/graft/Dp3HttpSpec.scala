@@ -466,26 +466,83 @@ class Dp3HttpSpec extends AnyFunSuite {
 
   test("every Spark job a /query request launches names its route or " +
       "plan step") {
-    val (_, cat) = TestSpark.smallStore("graft-http-desc")
+    val (base, resident) = TestSpark.smallStore("graft-http-desc")
+    // over the driver budget the statfilter runs its Spark face
+    val cat = TestSpark.ingestedCatalog(base, fieldStats = true)
+    cat.statFilterBudget = 0L
+    def descsOf(c: graft.model.IngestedCatalog): Seq[String] = {
+      val h = new Dp3Http(new Dp3Service(c, s => c.messages(s),
+        Some(graft.api.IngestStore(c))), spark).start()
+      try {
+        val (r, jobs) = JobLog.record(spark.sparkContext) {
+          client.send(HttpRequest.newBuilder(URI.create(
+            s"http://127.0.0.1:${h.boundPort}/databases/default/query"))
+            .POST(HttpRequest.BodyPublishers.ofString(
+              """{"query": "from p0 click where click.value > 3;"}"""))
+            .build(), HttpResponse.BodyHandlers.ofString())
+        }
+        assert(r.statusCode() == 200, r.body())
+        assert(r.body().linesIterator.size == 1)
+        val descs = jobs.map(_.desc)
+        assert(descs.nonEmpty && descs.forall(_.nonEmpty), descs)
+        assert(descs.forall(d => d.startsWith("http:")
+          || d.startsWith("plan:")), descs)
+        descs
+      } finally h.stop()
+    }
+    val descs = descsOf(cat)
+    assert(descs.contains("http:query") && descs.contains(
+      "plan:statfilter"), descs)
+    // within the budget the first query loads the resident tier, and the
+    // statfilter itself launches no job
+    val loaded = descsOf(resident)
+    assert(loaded.contains("http:query") && loaded.contains(
+      "plan:statcache") && !loaded.contains("plan:statfilter"), loaded)
+  }
+
+  test("warm /query requests launch 1 / 2 / 2 / 3 / 3 jobs for scan / " +
+      "filter / merge / star / asof; no unlimited answer range-" +
+      "partitions, and each data file scan runs in one stage") {
+    val (_, cat) = TestSpark.robotStore("graft-http-budget")
     val ssvc = new Dp3Service(cat, s => cat.messages(s),
       Some(graft.api.IngestStore(cat)))
     val h = new Dp3Http(ssvc, spark).start()
-    try {
-      val (r, jobs) = JobLog.record(spark.sparkContext) {
-        client.send(HttpRequest.newBuilder(URI.create(
-          s"http://127.0.0.1:${h.boundPort}/databases/default/query"))
-          .POST(HttpRequest.BodyPublishers.ofString(
-            """{"query": "from p0 click where click.value > 3;"}"""))
-          .build(), HttpResponse.BodyHandlers.ofString())
-      }
+    val (a, b) = (300L * 1000000000L, 900L * 1000000000L)
+    val budget = Seq(
+      "scan" -> (s"from p1 between $a and $b imu limit 200;", 1),
+      "filter" -> ("from p1 imu where imu.value > 2.5;", 2),
+      "merge" -> (s"from p1 between $a and $b imu, odom;", 2),
+      "star" -> (s"from * between $a and $b gps, diag;", 3),
+      "asof" -> (s"from p1 between $a and $b gps precedes imu " +
+        "by less than 500 milliseconds;", 3))
+    def send(ql: String): Int = {
+      val r = client.send(HttpRequest.newBuilder(URI.create(
+        s"http://127.0.0.1:${h.boundPort}/databases/default/query"))
+        .POST(HttpRequest.BodyPublishers.ofString(
+          s"""{"query": "$ql"}""")).build(),
+        HttpResponse.BodyHandlers.ofString())
       assert(r.statusCode() == 200, r.body())
-      assert(r.body().linesIterator.size == 1)
-      val descs = jobs.map(_.desc)
-      assert(descs.nonEmpty && descs.forall(_.nonEmpty), descs)
-      assert(descs.contains("http:query") && descs.contains(
-        "plan:statfilter"), descs)
-      assert(descs.forall(d => d.startsWith("http:")
-        || d.startsWith("plan:")), descs)
+      r.body().linesIterator.size
+    }
+    try {
+      // warm: the producer list, coverage and statfilter tier are
+      // cached from here
+      budget.foreach { case (_, (ql, _)) => send(ql) }
+      val seen = budget.map { case (cls, (ql, _)) =>
+        val (rows, jobs) = JobLog.record(spark.sparkContext)(send(ql))
+        assert(rows > 0, cls)
+        val scans = jobs.flatMap(_.fileScans)
+        val ranged = !ql.contains("limit") && ssvc.query(spark, ql)
+          .queryExecution.executedPlan.toString.toLowerCase
+          .contains("rangepartitioning")
+        (cls, jobs.size, scans.nonEmpty && scans.distinct == scans, ranged)
+      }
+      assert(seen.map(s => s._1 -> s._2) ==
+        budget.map { case (cls, (_, n)) => cls -> n }, seen)
+      assert(seen.forall(_._3), seen)
+      assert(!seen.exists(_._4), seen)
+      // the filter's budget holds with its scan pruned by the statfilter
+      assert(TestSpark.timePruned(ssvc.query(spark, budget(1)._2._1)))
     } finally h.stop()
   }
 }

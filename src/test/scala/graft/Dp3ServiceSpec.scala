@@ -399,6 +399,8 @@ class Dp3ServiceSpec extends AnyFunSuite {
 
   test("a warm service plans QL without redundant Spark jobs") {
     val (_, cat) = TestSpark.smallStore("graft-jobs")
+    // over the driver budget: the statfilter runs its Spark face
+    cat.statFilterBudget = 0L
     val svc = new Dp3Service(cat, s => cat.messages(s),
       Some(graft.api.IngestStore(cat)))
     val sc = spark.sparkContext
@@ -431,6 +433,48 @@ class Dp3ServiceSpec extends AnyFunSuite {
     // several producers keep the broadcast index join (O(1) plan)
     assert(svc.query(spark, "from p0, p1 click;").queryExecution
       .executedPlan.toString.contains("BroadcastExchange"))
+  }
+
+  test("the statfilter tier is resident: a warm pruned query launches " +
+      "no plan:statfilter job, the first after an append one " +
+      "plan:statcache load, and it answers what the Spark face does") {
+    import spark.implicits._
+    val S = 1000000000L
+    val (base, cat) = TestSpark.smallStore("graft-resident")
+    val spk = TestSpark.ingestedCatalog(base, fieldStats = true)
+    spk.statFilterBudget = 0L
+    def service(c: graft.model.IngestedCatalog) =
+      new Dp3Service(c, s => c.messages(s), Some(graft.api.IngestStore(c)))
+    val (svc, fallback) = (service(cat), service(spk))
+    val sc = spark.sparkContext
+    val qls = Seq("from p0 click where click.value > 3;",
+      "from p0 click where click.value <= 2;",
+      "from p0 click where click.value > 9;")
+    def answer(s: Dp3Service, ql: String) = s.query(spark, ql)
+      .select("time", "seq").collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toSeq
+    val (_, cold) = JobLog.record(sc)(svc.query(spark, qls.head))
+    assert(cold.map(_.desc) == Seq("plan:statcache"))
+    for (ql <- qls) {
+      // planning a warm query launches no job at all
+      val (df, jobs) = JobLog.record(sc)(svc.query(spark, ql))
+      assert(jobs.isEmpty, jobs.map(_.desc))
+      assert(timePruned(df) == timePruned(fallback.query(spark, ql)), ql)
+      assert(answer(svc, ql) == answer(fallback, ql), ql)
+    }
+    assert(answer(svc, qls.head) == Seq((70L * S, 3L)))
+    assert(timePruned(svc.query(spark, qls.head)))
+    val (_, spkJobs) = JobLog.record(sc)(fallback.query(spark, qls.head))
+    assert(spkJobs.map(_.desc).count(_ == "plan:statfilter") == 1)
+    // an append commits a new manifest: the next query loads it once
+    TestSpark.ingest(base, 2L, Seq(("p0", "click", 130L * S, 4L, 5.0))
+      .toDF("producer", "topic", "time", "seq", "value"), fieldStats = true)
+    val (_, loads) = JobLog.record(sc)(svc.query(spark, qls.head))
+    assert(loads.map(_.desc) == Seq("plan:statcache"))
+    val (_, warm) = JobLog.record(sc)(svc.query(spark, qls.head))
+    assert(warm.isEmpty, warm.map(_.desc))
+    assert(answer(svc, qls.head) == Seq((70L * S, 3L), (130L * S, 4L)))
+    assert(answer(svc, qls.head) == answer(fallback, qls.head))
   }
 
   test("the cached coverage witness follows appends and truncation on " +
@@ -518,14 +562,17 @@ class Dp3ServiceSpec extends AnyFunSuite {
         stats.foreach(d => assert(d.queryExecution.optimizedPlan
           .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical
             .LocalRelation]))
-        svc.query(spark, "from p0 click;") +: stats
+        // the pruned query reads the resident statfilter tier
+        Seq(svc.query(spark, "from p0 click;"),
+          svc.query(spark, "from p0 click where click.value > 2;")) ++ stats
       }
       val pre = reads().map(answer)
       val planned = reads()
+      assert(timePruned(planned(1)))
       val seen = scala.collection.mutable.ArrayBuffer[
         (String, Seq[Try[Seq[String]]], Seq[Try[Seq[String]]])]()
       graft.util.Maint.crashHook = (v, p) => if (v == verb) {
-        seen += ((p, Try(reads()).fold(e => Seq.fill(3)(
+        seen += ((p, Try(reads()).fold(e => Seq.fill(4)(
           scala.util.Failure(e)), _.map(d => Try(answer(d)))),
           planned.map(d => Try(answer(d)))))
         ()
@@ -542,5 +589,39 @@ class Dp3ServiceSpec extends AnyFunSuite {
     check("optimize", b => {
       Ingest.optimize(spark, s"$b/data", maxFilesPerPartition = 1); () })
     check("appendVersion", append(_, 4))
+  }
+
+  test("a statfilter tier load that overlaps a commit keeps no rows of " +
+      "the older manifest: the next pruned query sees the committed " +
+      "version") {
+    import spark.implicits._
+    val S = 1000000000L
+    spark.sparkContext.hadoopConfiguration.set("fs.hooked.impl",
+      classOf[HookedLocalFs].getName)
+    val base = "hooked://" +
+      java.nio.file.Files.createTempDirectory("graft-tier-race")
+    def version(v: Long, sec: Long, x: Double): Unit =
+      TestSpark.ingest(base, v, Seq(("p0", "click", sec * S, v, x))
+        .toDF("producer", "topic", "time", "seq", "value"),
+        fieldStats = true)
+    version(1L, 10L, 1.0)
+    val cat = TestSpark.ingestedCatalog(base, fieldStats = true)
+    val svc = new Dp3Service(cat, s => cat.messages(s),
+      Some(graft.api.IngestStore(cat)))
+    val ql = "from p0 click where click.value > 3;"
+    def times() = svc.query(spark, ql).select("time").collect()
+      .map(_.getLong(0)).toSeq
+    // warm: version 1's tier is resident, and nothing qualifies
+    assert(times().isEmpty)
+    // version 2 commits between the manifest the tier call reads first
+    // (the first listing of the manifest directory) and the
+    // fingerprint its cache takes (the second)
+    HookedLocalFs.arm("_manifest", 2)(version(2L, 130L, 5.0))
+    val fired =
+      try { cat.statFilterTier(spark); HookedLocalFs.fired }
+      finally HookedLocalFs.disarm()
+    assert(fired, "the commit did not overlap the tier load")
+    assert(times() == Seq(130L * S))
+    assert(timePruned(svc.query(spark, ql)))
   }
 }

@@ -4,15 +4,19 @@ import org.apache.spark.{ListenerBusDrain, SparkContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Test-scope job recorder: a listener that logs each Spark job's
-  * description, stage count, input bytes and span, with the listener
-  * bus drained before and after the recorded block so the log holds
-  * exactly the jobs the block launched. JobAuditProbe prints from it;
+  * description, stage count, input bytes, file scans and span, with the
+  * listener bus drained before and after the recorded block so the log
+  * holds exactly the jobs the block launched. JobAuditProbe prints from it;
   * specs assert job budgets and descriptions with it. */
 object JobLog {
   final class Job(val id: Int, val desc: String, val t0: Long) {
     @volatile var stages = 0
     @volatile var input = 0L
     @volatile var tEnd = 0L
+    /** The RDD ids of the file scans each completed stage ran, stage
+      * by stage: a scan that a job re-executes (a range partitioner's
+      * sampling pass, say) shows up twice. */
+    @volatile var fileScans = Vector.empty[Int]
   }
 
   /** Runs `body` and returns its result with the jobs it launched, in
@@ -37,6 +41,8 @@ object JobLog {
             job.stages += 1
             job.input += e.stageInfo.taskMetrics.inputMetrics.bytesRead
             job.tEnd = System.nanoTime()
+            job.fileScans ++= e.stageInfo.rddInfos
+              .filter(_.name == "FileScanRDD").map(_.id)
           }
     }
     // events queued before the block must not reach this listener

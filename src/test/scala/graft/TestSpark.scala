@@ -64,6 +64,31 @@ object TestSpark {
     (base, ingestedCatalog(base, fieldStats = true))
   }
 
+  /** A robot-log ingest store under a fresh temp dir (returned with its
+    * catalog): producers p0..p3, each with `imu`, `odom`, `gps` and
+    * `diag` messages every 2, 3, 5 and 6 s over 30 min — so timestamps
+    * collide across topics and producers — with seeded gaussian
+    * `value`s and a unique `seq` per message, ingested as two versions
+    * (the two 15-min halves) with per-field `value` partials. */
+  def robotStore(tag: String): (String, graft.model.IngestedCatalog) = {
+    val s = spark
+    import s.implicits._
+    val base = java.nio.file.Files.createTempDirectory(tag).toString
+    val rnd = new scala.util.Random(7)
+    val rows = (for {
+      p <- 0 until 4
+      (t, every) <- Seq("imu" -> 2, "odom" -> 3, "gps" -> 5, "diag" -> 6)
+      sec <- 0 until 1800 by every
+    } yield (s"p$p", t, sec * 1000000000L, rnd.nextGaussian()))
+      .zipWithIndex.map { case ((p, t, time, v), i) =>
+        (p, t, time, i.toLong, v) }
+    for (v <- 1 to 2)
+      ingest(base, v.toLong, rows.filter(_._3 / 900000000000L == v - 1)
+        .toDF("producer", "topic", "time", "seq", "value"),
+        fieldStats = true)
+    (base, ingestedCatalog(base, fieldStats = true))
+  }
+
   /** The reference's all-primitives fixture (reference:
     * server/executor/executor_test.go:327-388 prepTmgr2): topics t0..t9,
     * 5 messages each, every numeric field = message index c,
