@@ -116,8 +116,6 @@ final class Dp3Service(underlying: MessageCatalog,
     override def producers(spark: SparkSession,
         topics: Seq[String]): Seq[String] =
       underlying.producers(spark, topics)
-    override def truncationVersion(producer: String,
-        topic: String): Long = underlying.truncationVersion(producer, topic)
   }
 
   private def messages(spark: SparkSession): DataFrame =

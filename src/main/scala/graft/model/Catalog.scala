@@ -51,11 +51,6 @@ trait MessageCatalog {
   /** Producers that own any of the given topics — backs `from *`
     * (reference: server/plan/plan.go:366-400). */
   def producers(spark: SparkSession, topics: Seq[String]): Seq[String]
-
-  /** Minimum retained version per (producer, topic) — data at or below
-    * is invisible (reference truncation: server/tree/iterator.go:175).
-    * Default: nothing truncated. */
-  def truncationVersion(producer: String, topic: String): Long = -1L
 }
 
 /** Catalog over the driver testdata `events` table, interpreted as a

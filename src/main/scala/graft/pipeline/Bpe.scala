@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.JobDesc
+
 /** Byte-pair-encoding subword tokenizer (Sennrich, Haddow & Birch,
   * "Neural Machine Translation of Rare Words with Subword Units",
   * ACL 2016 — the public algorithm behind GPT/Llama-style token
@@ -111,6 +113,7 @@ object Bpe {
   def train(docs: DataFrame, nMerges: Int, textCol: String = "text",
       localMaxVocab: Int = 1 << 17): Seq[(String, String)] = {
     require(nMerges >= 0, s"nMerges >= 0: $nMerges")
+    val sc = docs.sparkSession.sparkContext
     val base = docs
       .select(explode(regexp_extract_all(lower(col(textCol)),
         lit(WordRe), lit(0))).as("w"))
@@ -129,9 +132,9 @@ object Bpe {
       // the +1 distinguishes at-bound from over-bound; clamp so a
       // force-everything Int.MaxValue doesn't overflow to a negative
       // limit
-      val probe = wf
+      val probe = JobDesc(sc, "bpe:train:vocab")(wf
         .limit(if (localMaxVocab == Int.MaxValue) localMaxVocab
-               else localMaxVocab + 1).collect()
+               else localMaxVocab + 1).collect())
       if (probe.length <= localMaxVocab) {
         pin.release()
         return trainLocal(
@@ -146,7 +149,7 @@ object Bpe {
     try {
       var done = false
       while (!done && merges.size < nMerges) {
-        val top = wf
+        val top = JobDesc(sc, "bpe:train:round")(wf
           .select(col("f"), split(trim(col("enc")), "  ").as("s"))
           .where(size(col("s")) >= 2)
           .select(col("f"), explode(expr(
@@ -156,7 +159,7 @@ object Bpe {
           .select(col("f"), col("p.a").as("a"), col("p.b").as("b"))
           .groupBy(col("a"), col("b")).agg(sum(col("f")).as("c"))
           .orderBy(col("c").desc, col("a").asc, col("b").asc)
-          .limit(1).collect()
+          .limit(1).collect())
         // wf's pin is materialized now — its parent is safe to drop
         prevPin.foreach(_.release())
         prevPin = None

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.util.JobDesc
+
 /** Deduplication operators for training-data pipelines, from exact to
   * approximate. All hashing is md5-based and salt-deterministic so
   * results are engine-portable (oracle-checkable) AND stable across
@@ -1064,6 +1066,7 @@ object Dedup {
       broadcastMaxIds: Long = 1L << 20,
       localMaxEdges: Int = 1 << 18)
       : (DataFrame, PinHandle, Int) = {
+    val sc = ids.sparkSession.sparkContext
     // both edge directions from ONE evaluation of the pairs DAG: a
     // union of two selects re-runs the (expensive) upstream pair
     // pipeline per branch; exploding a 2-struct array doubles the rows
@@ -1103,11 +1106,12 @@ object Dedup {
     if (localMaxEdges > 0 && localOrd.isDefined) {
       // clamp: a force-everything Int.MaxValue must not overflow the
       // +1 into a negative limit
-      val probe = edges
+      val probe = JobDesc(sc, "dedup:clusters:edges")(edges
         .limit(if (localMaxEdges == Int.MaxValue) localMaxEdges
-               else localMaxEdges + 1).collect()
+               else localMaxEdges + 1).collect())
       if (probe.length <= localMaxEdges) {
-        localComponents(ids, probe, idCol, localOrd.get) match {
+        JobDesc(sc, "dedup:clusters:local")(
+            localComponents(ids, probe, idCol, localOrd.get)) match {
           case Some(res) =>
             edgesRdd.unpersist(blocking = false)
             return res
@@ -1133,7 +1137,9 @@ object Dedup {
     // (corpus-scale graphs — labels are doc-count-sized) the loop
     // keeps the partitioned joins: a 100 TB label table cannot ride a
     // broadcast, and there the per-round work is data-bound anyway.
-    val bcastLabels = labelsRdd.count() <= broadcastMaxIds
+    val bcastLabels =
+      JobDesc(sc, "dedup:clusters:labels")(labelsRdd.count()) <=
+        broadcastMaxIds
     def asBcast(df: DataFrame): DataFrame =
       if (bcastLabels) broadcast(df) else df
     val idT = labels.schema("label").dataType
@@ -1185,7 +1191,8 @@ object Dedup {
         }
       val (pinned, rdd) = pin(round)
       // materializes the cache AND counts convergence in one job
-      changed = pinned.where(col("label") =!= col("_old")).count()
+      changed = JobDesc(sc, "dedup:clusters:round")(
+        pinned.where(col("label") =!= col("_old")).count())
       labelsRdd.unpersist(blocking = false)
       labels = pinned.select(col("node").as("id"), col("label"))
       labelsRdd = rdd
@@ -1211,7 +1218,7 @@ object Dedup {
             .where(col("src") =!= col("dst")))
         // the materializing count doubles as the quotient-collapse
         // test that switches later rounds to the jump-only plan
-        val remaining = cRdd.count()
+        val remaining = JobDesc(sc, "dedup:clusters:contract")(cRdd.count())
         edgesRdd.unpersist(blocking = false)
         edges = cEdges
         edgesRdd = cRdd

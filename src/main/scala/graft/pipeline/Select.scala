@@ -154,9 +154,9 @@ object Select {
     * target's tokenize + md5 pass disappears entirely, and the
     * per-bucket (cr, ct) table — at most `buckets` rows by
     * construction — collects ONCE and the lambda table derives in
-    * plain driver Scala (`java.lang.Math.log`/`floor` are the
-    * identical functions codegen emits over the identical IEEE
-    * quotients — the control-plane rule). One gram pass, one
+    * plain driver Scala ([[lamMu]]: the identical IEEE quotients
+    * through StrictMath.log, the function Spark's `log` evaluates —
+    * the control-plane rule). One gram pass, one
     * control-plane collect, one scoring join: the two-corpus face
     * pays two gram passes and re-aggregates its pins per broadcast
     * consumer. The frame comes with the pin handle owning the single
@@ -182,14 +182,8 @@ object Select {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val nr = bRows.map(_._2).sum
     val nt = bRows.map(_._3).sum
-    val bl = buckets.toLong
-    // identical expression tree to the Spark face: one ln of a
-    // quotient of exact-integer-derived doubles, floored to micro-units
-    def lamMu(cr: Long, ct: Long): Long =
-      math.floor(math.log(((ct + 1.0) / (nt + bl)) /
-        ((cr + 1.0) / (nr + bl))) * 1000000.0).toLong
     val lamRows = bRows.map { case (b, cr, ct) =>
-      org.apache.spark.sql.Row(b, lamMu(cr, ct))
+      org.apache.spark.sql.Row(b, lamMu(cr, ct, nr, nt, buckets.toLong))
     }
     val lamSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("_b",
@@ -210,6 +204,14 @@ object Select {
         coalesce(col("_w"), lit(0L)).as("weight_mu"))
     (out, rawPin)
   }
+
+  /** One bucket's `lam_mu` on the driver — the identical expression
+    * tree to [[dsirWeights]]' Spark face: one ln of a quotient of
+    * exact-integer-derived doubles, floored to micro-units
+    * ([[TextOps.mu6]]). */
+  private[graft] def lamMu(cr: Long, ct: Long, nr: Long, nt: Long,
+      bl: Long): Long =
+    TextOps.mu6(((ct + 1.0) / (nt + bl)) / ((cr + 1.0) / (nr + bl)))
 
   /** [[dsirSelect]] on the [[dsirWeightsPred]] single-pass shape —
     * row-identical to `dsirSelect(raw, raw.where(targetPred), …)`. */

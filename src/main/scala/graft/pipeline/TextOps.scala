@@ -152,6 +152,14 @@ object TextOps {
                         element_at($charsCol, i + 2)))
         ELSE CAST(array() AS ARRAY<STRING>) END""")
 
+  /** `floor(1e6 · ln(x))`: the driver face of Spark's
+    * `floor(log(x) * 1000000.0)`, bit for bit. Spark's `log` is
+    * `StrictMath.log` (fdlibm) in codegen and interpreted eval alike;
+    * `Math.log` may be a JIT intrinsic that differs from it in the last
+    * ulp, enough to move a floor that sits on a micro-unit boundary. */
+  private[graft] def mu6(x: Double): Long =
+    math.floor(StrictMath.log(x) * 1000000.0).toLong
+
   /** A trained naive-Bayes language model: `grams` = (g, lang, mu) —
     * integer micro-unit log P(trigram | lang) for OBSERVED pairs —
     * and `langs` = (lang, prior_mu, fallback_mu), the doc-frequency
@@ -195,8 +203,9 @@ object TextOps {
     // measured 4 passes, 6.1 s at sf0.1) and even after collecting
     // the counts, materializing the control-plane frames cost ~1.6 s
     // of job overhead PER SCORING CALL. Driver math is exact-identical
-    // to the Spark expressions it replaces: java.lang.Math.log is the
-    // same function codegen emits, over the same IEEE quotients.
+    // to the Spark expressions it replaces: [[mu6]] takes the same
+    // IEEE quotients through StrictMath.log, the function Spark's
+    // `log` evaluates in generated and interpreted code alike.
     // `maxVocab` guards the collect: "bounded by charset³" fails on
     // CJK/unicode corpora where distinct char trigrams scale with the
     // corpus — past the cap, train on a sample or a restricted
@@ -219,7 +228,6 @@ object TextOps {
     val tot = cgl.groupBy(_._2).map { case (l, rs) =>
       l -> rs.map(_._3).sum }
     val v = cgl.map(_._1).distinct.length.toLong
-    def mu6(x: Double): Long = math.floor(math.log(x) * 1000000.0).toLong
     val gramRows = cgl.map { case (g, l, c) =>
       Row(g, l, mu6((c + 1.0) / (tot(l) + v)))
     }

@@ -272,14 +272,6 @@ final class Planner(catalog: MessageCatalog,
             src.widthNs)
       }
     }
-    // truncation masks apply per (producer, topic) regardless of how
-    // many producers the query names
-    val truncs = producers
-      .map(p => p -> catalog.truncationVersion(p, e.topic))
-      .filter(_._2 >= 0)
-    truncs.foreach { case (p, v) =>
-      df = df.where(!(col("producer") === p && col("seq") <= v))
-    }
     df
   }
 

@@ -16,8 +16,9 @@ import graft.util.{DataFile, JobDesc, Maint, Manifest, ManifestLog}
   * (log_time, sequence), server/mcap/filter_merge_iterator.go:14-37).
   *
   * Spark gives the WAL discipline for free: the checkpoint IS the WAL,
-  * micro-batches ARE the insert batches, and exactly-once file-sink
-  * semantics replace the single-writer-per-table worker pool.
+  * micro-batches ARE the insert batches, and a replay-safe manifest
+  * commit per batch ([[appendVersion]]) replaces the reference's
+  * single-writer-per-table worker pool.
   *
   * The store ([[startWithStats]], [[importMcap]]) is ONE [[ManifestLog]]
   * whose manifest lives at `<dataDir>/_manifest` — dp3's versioned root
@@ -57,21 +58,6 @@ object Ingest {
         expr("time div 1000")))
       .withWatermark("ts_watermark", "10 minutes")
       .dropDuplicatesWithinWatermark("producer", "topic", "time", "seq")
-
-  /** Start the ingest pipeline: canonical message stream → dedup →
-    * day-partitioned parquet. */
-  def start(spark: SparkSession, stream: DataFrame, outDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val deduped = dedupe(stream)
-      .withColumn("day", expr("time div 86400000000000"))
-    deduped.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .partitionBy("topic", "day")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
 
   /** Ingest with stat-tier maintenance: every micro-batch appends its
     * data AND its base-tier partial aggregates (the reference computes

@@ -1,13 +1,14 @@
-package graft
+package graft.util
 
 import org.apache.spark.{ListenerBusDrain, SparkContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** Test-scope job recorder: a listener that logs each Spark job's
+/** The job recorder: a listener that logs each Spark job's
   * description, stage count, input bytes, file scans and span, with the
   * listener bus drained before and after the recorded block so the log
-  * holds exactly the jobs the block launched. JobAuditProbe prints from it;
-  * specs assert job budgets and descriptions with it. */
+  * holds exactly the jobs the block launched. [[graft.Bench.measure]]
+  * records every registry entry's warm run with it; specs assert job
+  * budgets and descriptions with it. */
 object JobLog {
   final class Job(val id: Int, val desc: String, val t0: Long) {
     @volatile var stages = 0

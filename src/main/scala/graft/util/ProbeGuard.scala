@@ -4,12 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The measurement self-defense shared by Bench and the scale probes
-  * (E2eProbe, StreamMaintProbe): fixed machine canaries, the load
-  * probe, and the min-of-three tie-break. Bench numbers on this class
+  * (StreamMaintProbe, BucketFoldProbe): fixed machine canaries and the
+  * load probe; Bench's min-of-three tie-break lives in
+  * [[graft.Bench.measure]]. Bench numbers on this class
   * of host drift 1.3-1.5x with host state on byte-identical code —
   * the r17/r18 phantom-regression lesson — so every probe that prints
   * a wall-clock number must carry its own contamination evidence
-  * (canaries + per-leg spread), or a cross-round reader cannot tell
+  * (canaries + spread), or a cross-round reader cannot tell
   * host drift from a code regression. One copy here; Bench delegates.
   */
 object ProbeGuard {
@@ -53,27 +54,4 @@ object ProbeGuard {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.mkString.split(" ")(0).toDouble finally src.close()
     } catch { case _: Throwable => -1.0 }
-
-  /** Bench's min-of-three tie-break for one probe leg: two timed
-    * runs, a third ONLY when they disagree past `bound`. Returns
-    * (min seconds, final spread = max/min over the runs kept) — a
-    * spread still past the bound marks the leg host-contaminated
-    * (rerun it before reading a cross-round diff as a regression). */
-  def minOfThree(run: () => Double, bound: Double = 1.3)
-      : (Double, Double) = {
-    // a non-positive sample is a degenerate/failed run, not a fast
-    // one: an unguarded max/min would print Infinity/NaN spread (and
-    // trigger a pointless third run) — floor the denominator so the
-    // spread stays finite and the cross-round reader sees a huge
-    // (contaminated) ratio instead of a poisoned field
-    def spread(vs: Seq[Double]): Double =
-      vs.max / math.max(vs.min, 1e-9)
-    val a = run()
-    val b = run()
-    val two = Seq(a, b)
-    val vs =
-      if (spread(two) > bound) two :+ run()
-      else two
-    (vs.min, spread(vs))
-  }
 }

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.{Dp3Http, Dp3Service}
 import graft.model.EventsCatalog
+import graft.util.JobLog
 
 /** End-to-end HTTP surface over localhost against the sf0.001 catalog —
   * the reference's route table (server/routes/routes.go:49-72) driven

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.api.Dp3Service
 import graft.model.EventsCatalog
 import graft.TestSpark.timePruned
+import graft.util.JobLog
 
 /** The facade mirroring the reference's endpoint set — one smoke per
   * verb over the sf0.001 events table. */

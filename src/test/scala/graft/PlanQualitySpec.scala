@@ -8,6 +8,7 @@ import graft.model.EventsCatalog
 import graft.plan.Planner
 import graft.stats.StatTiers
 import graft.streaming.Lifecycle
+import graft.util.JobLog
 
 /** Physical-plan quality gates: the properties that make these
   * operators survive a 100 TB scale-up must be visible in the plan —
@@ -161,7 +162,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // pinned pair pipeline, never a sort-merge of a second scan
     assert(scans("d_cross_dedup", "documents.parquet") <= 1)
     // e2e dataloader (r21 audit): the chain's ONE corpus read happens
-    // into the mixture pin at fn-call time (JobAuditProbe measured
+    // into the mixture pin at fn-call time (a job audit measured
     // documents.parquet bytes read exactly once per run), and the BPE
     // model is collected control-plane — so the final pack plan reads
     // NO parquet at all; every leaf is the pinned RDD
@@ -523,4 +524,36 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(av.where(col("field") === "props")
       .select("stat").distinct().count() == 2)
   }
+
+  // Bench.measure is the one per-entry harness: its layer record is
+  // the warm run's Spark jobs, it repeats exactly, and it lands in
+  // BENCH_DETAIL.json next to the seconds. Job counts are pinned: they
+  // do not drift with the host.
+  for ((name, want) <- Seq("q_scan" -> 3, "q_asof" -> 6))
+    test(s"Bench.measure on $name: the recorded jobs equal a JobLog " +
+        "record of the forced run, repeat across warm runs, and reach " +
+        "the detail JSON") {
+      val fn = SparkEntry.queries(name)
+      val m1 = Bench.measure(spark, sfDir, name, fn)
+      val m2 = Bench.measure(spark, sfDir, name, fn)
+      val (_, jobs) = JobLog.record(spark.sparkContext)(
+        Bench.forced(fn(spark, sfDir)).collect())
+      graft.util.LocalSession.sweep(spark)
+      assert(m1.sec > 0 && m1.spread >= 1.0)
+      assert(m1.jobs.size == want, m1.jobCounts)
+      assert(m2.jobCounts == m1.jobCounts)
+      assert(m2.stages == m1.stages && m2.inputBytes == m1.inputBytes)
+      assert(jobs.map(_.desc) == m1.jobs.map(_.desc))
+      assert(jobs.map(_.stages).sum == m1.stages)
+      val detail = Bench.detailJson(Seq(m1), "{}")
+      val entry = ("\"" + name + "\":\\{(.*)\\},\"_meta\"").r
+        .findFirstMatchIn(detail).map(_.group(1))
+      assert(entry.isDefined, detail)
+      val recorded = "\"jobs\":\\{([^}]*)\\}".r
+        .findFirstMatchIn(entry.get).map(_.group(1)).get
+        .split(",").map(_.split(":").last.toInt).sum
+      assert(recorded == want, detail)
+      assert(entry.get.contains(s""""stages":${m1.stages},""") &&
+        entry.get.contains(s""""input_bytes":${m1.inputBytes}"""), detail)
+    }
 }

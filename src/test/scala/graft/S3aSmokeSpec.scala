@@ -22,8 +22,8 @@ import graft.streaming.Ingest
   * }}}
   *
   * What it exercises when enabled: the exact code paths the file://
-  * suites cover — streaming [[Ingest.start]] (checkpoint + sink on the
-  * object store) and [[graft.model.Catalog]]'s parquet FOOTER probe
+  * suites cover — streaming [[Ingest.startWithStats]] (checkpoint,
+  * manifest and store trees on the object store) and [[graft.model.Catalog]]'s parquet FOOTER probe
   * (which reads the file directly through the SESSION Hadoop conf, the
   * round-11 fix — a bare `new Configuration()` has no s3a credentials
   * and this spec is what would catch that regression on a real store).
@@ -52,6 +52,7 @@ class S3aSmokeSpec extends AnyFunSuite {
     withS3a { base =>
       import spark.implicits._
       val in = s"$base/in"; val out = s"$base/out"; val cp = s"$base/cp"
+      val stats = s"$base/stats"; val control = s"$base/control"
       val day = 86400000000000L
       val rows = Seq(
         ("p0", "click", 1L * day + 5L, 1L, 1.0),
@@ -60,8 +61,10 @@ class S3aSmokeSpec extends AnyFunSuite {
       ).toDF("producer", "topic", "time", "seq", "value")
       rows.write.parquet(in)
       val stream = spark.readStream.schema(rows.schema).parquet(in)
-      Ingest.start(spark, stream, out, cp).awaitTermination(300000)
-      val got = spark.read.parquet(out)
+      Ingest.startWithStats(spark, stream, out, stats, cp,
+        controlDir = Some(control)).awaitTermination(300000)
+      val got = new graft.model.IngestedCatalog(out, stats, control)
+        .messages(spark)
       assert(got.count() == 2)
       assert(got.select("day").distinct().count() == 2)
     }

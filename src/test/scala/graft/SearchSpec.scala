@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Search
+import graft.util.JobLog
 
 /** BM25 retrieval on crafted micro-fixtures: hand-computed ranking,
   * the batch ≡ single contract, idf ordering, and the scale-shape

@@ -10,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.{Dp3Http, Dp3Service, IngestStore}
 import graft.model.IngestedCatalog
+import graft.util.JobLog
 
 /** `/statrange` and `/statistics` on an ingest store served from the
   * driver-resident partials ([[graft.stats.StatRollup]]): the same rows

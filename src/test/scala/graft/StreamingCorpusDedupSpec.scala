@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.{Dedup, TextOps}
 import graft.streaming.CorpusDedup
+import graft.util.JobLog
 
 /** Streaming incremental corpus dedup: accept-first-occurrence over a
   * micro-batched document stream, equivalent to batch exact dedup over

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.streaming.{Ingest, Lifecycle}
+import graft.util.JobLog
 
 /** Structured-Streaming ingest: watermarked dedup on the dp3 identity
   * key and day-partitioned layout (reference WAL/merge semantics:
@@ -19,6 +20,7 @@ class StreamingIngestSpec extends AnyFunSuite {
   test("streaming ingest dedups on (producer, topic, time, seq)") {
     val base = Files.createTempDirectory("graft-ingest").toString
     val in = s"$base/in"; val out = s"$base/out"; val cp = s"$base/cp"
+    val stats = s"$base/stats"; val control = s"$base/control"
 
     val day = 86400000000000L
     val rows = Seq(
@@ -30,10 +32,11 @@ class StreamingIngestSpec extends AnyFunSuite {
     rows.write.parquet(in)
 
     val stream = spark.readStream.schema(rows.schema).parquet(in)
-    val q = Ingest.start(spark, stream, out, cp)
-    q.awaitTermination(120000)
+    Ingest.startWithStats(spark, stream, out, stats, cp,
+      controlDir = Some(control)).awaitTermination(120000)
 
-    val got = spark.read.parquet(out)
+    val got = new graft.model.IngestedCatalog(out, stats, control)
+      .messages(spark)
     assert(got.count() == 3)
     assert(got.select("day").distinct().count() == 2)
     // partition layout is (topic, day)

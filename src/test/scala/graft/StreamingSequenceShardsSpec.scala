@@ -9,6 +9,7 @@ import scala.jdk.CollectionConverters._
 import graft.export.Export
 import graft.pipeline.{Dedup, Sampling, TextOps}
 import graft.streaming.{CorpusDedup, SequenceShards}
+import graft.util.JobLog
 
 /** The incremental dataloader tail: streamed shard maintenance must be
   * indistinguishable from batch packSequences + writeSequenceShards

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.Similarity
+import graft.util.JobLog
 
 /** The stored vector index's job discipline: every eager job of its
   * verbs is named, and a warm serve runs only the serve's own scan —
