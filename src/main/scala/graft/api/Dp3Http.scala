@@ -101,27 +101,11 @@ final class Dp3Http(svc: Dp3Service, spark: SparkSession,
   // accepted-query set out of the box (`neighbors` parses but errors,
   // server/executor/executor.go:206-207). The engine's `neighbors`
   // extension stays on by default at the library/planner faces; a
-  // deployment that wants it over HTTP passes strictParity = false
-  // OR sets `-Dgraft.http.strictParity=false` (a no-redeploy escape
-  // hatch for deployments that relied on the pre-r19 lenient default
-  // — the property, when SET, overrides this constructor argument).
-  // The deployment-wide `graft.ql.strictParity` system property still
-  // forces strict everywhere, never the reverse; precedence here is
-  // ql-force-strict > http property > constructor argument. Only the
-  // EXACT values "true"/"false" override the constructor — a
-  // malformed flag ("1", "yes", a typo) falls back to the ctor
-  // argument instead of silently flipping to the LENIENT surface
-  // (the unsafe direction for a deployment that meant to force
-  // strict).
+  // deployment that wants it over HTTP passes strictParity = false.
+  // The deployment-wide `graft.ql.strictParity` system property forces
+  // strict everywhere, this face included, never the reverse.
   private def effectiveStrict: Boolean =
-    graft.ql.Parser.strictParityDefault || {
-      Option(System.getProperty("graft.http.strictParity"))
-        .map(_.trim.toLowerCase) match {
-        case Some("true") => true
-        case Some("false") => false
-        case _ => strictParity
-      }
-    }
+    graft.ql.Parser.strictParityDefault || strictParity
 
   /** The reference's demo auth on MUTATING routes only — delete and
     * both imports (routes.go:63-69, mw.WithSharedKeyAuth): with a key

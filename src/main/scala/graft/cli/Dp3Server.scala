@@ -1,7 +1,10 @@
 package graft.cli
 
+import org.apache.spark.sql.SparkSession
+
 import graft.api.{Dp3Http, Dp3Service, IngestStore}
 import graft.model.{EventsCatalog, IngestedCatalog}
+import graft.streaming.Ingest
 import graft.util.LocalSession
 
 /** The reference's `dp3 server` verb (reference: cli/cmd/server.go:38,
@@ -13,10 +16,27 @@ import graft.util.LocalSession
   *
   * `--ingest-dir` serves a `startWithStats`/`importMcap` layout
   * (`DIR/data`, `DIR/stats`, `DIR/control`) with stats served from
-  * maintained partials and /import enabled; `--events-dir` fronts a
-  * driver-testdata events directory (read-only analytics, no import).
+  * maintained partials and /import enabled ([[ingestService]]);
+  * `--events-dir` fronts a driver-testdata events directory (read-only
+  * analytics, no import).
   */
 object Dp3Server {
+
+  /** The service and /import target of the ingest store under `dir`. A
+    * store kept with per-field partials is served with them: their
+    * directory and fields come from its manifest
+    * ([[Ingest.fieldStatsOf]]), so text predicates prune, per-field
+    * /statrange reads the stored partials, and every /import commits
+    * the version's field partials. */
+  def ingestService(spark: SparkSession, dir: String)
+      : (Dp3Service, Dp3Http.ImportTarget) = {
+    val target = Dp3Http.ImportTarget(s"$dir/data", s"$dir/stats",
+      s"$dir/control", Ingest.fieldStatsOf(spark, s"$dir/data"))
+    val cat = new IngestedCatalog(target.dataDir, target.statsDir,
+      target.controlDir, target.fieldStats.map(_._1))
+    (new Dp3Service(cat, s => cat.messages(s),
+      store = Some(IngestStore(cat))), target)
+  }
 
   def main(args: Array[String]): Unit = {
     val flags = args.sliding(2, 2).collect {
@@ -29,12 +49,8 @@ object Dp3Server {
     val (svc, importTarget) = (flags.get("--ingest-dir"),
         flags.get("--events-dir")) match {
       case (Some(dir), _) =>
-        val cat = new IngestedCatalog(s"$dir/data", s"$dir/stats",
-          s"$dir/control")
-        (new Dp3Service(cat, s => cat.messages(s),
-          store = Some(IngestStore(cat))),
-          Some(Dp3Http.ImportTarget(s"$dir/data", s"$dir/stats",
-            s"$dir/control")))
+        val (svc, target) = ingestService(spark, dir)
+        (svc, Some(target))
       case (None, Some(sfDir)) =>
         val cat = new EventsCatalog(sfDir)
         (new Dp3Service(cat, s => cat.messages(s)), None)

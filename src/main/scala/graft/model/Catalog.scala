@@ -278,7 +278,7 @@ final class IngestedCatalog(val dataDir: String, val statsDir: String,
 
   /** The newest committed manifest, or a loud failure. */
   private[graft] def manifest(spark: SparkSession): graft.util.Manifest =
-    Ingest.committed(spark, dirs, "read")
+    Ingest.log(spark, dirs).committed("read")
 
   private def tree(spark: SparkSession, name: String,
       keep: graft.util.DataFile => Boolean = _ => true): DataFrame =

@@ -903,11 +903,22 @@ object Dedup {
     * The plan CUT (rebuilding a leaf frame over the RDD) is the point:
     * [[clusters]]' round-N plan would otherwise contain round-N-1's
     * full lineage, growing analysis time linearly and making Catalyst's
-    * cache-plan matching load-bearing. For single-query multi-consumer
-    * frames (no plan growth) the columnar [[pinNow]] is used instead. */
+    * cache-plan matching load-bearing. [[pinLazy]] and [[pinNow]] are
+    * its handle faces. */
   private def pin(df: DataFrame): (DataFrame, RDD[Row]) = {
     val rdd = df.rdd.persist(StorageLevel.MEMORY_AND_DISK)
     (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
+  }
+
+  /** [[pin]] as a handle, WITHOUT eager materialization: for loop
+    * states whose first (and only concurrent) consumer is a
+    * control-plane collect — that job materializes the cache and the
+    * eager count would be a second pass for nothing (the capArrays
+    * fusion discipline). Use [[pinNow]] when several stages of one
+    * query read the pin concurrently. */
+  private[graft] def pinLazy(df: DataFrame): (DataFrame, PinHandle) = {
+    val (f, rdd) = pin(df)
+    (f, new PinHandle(() => { rdd.unpersist(blocking = false); () }))
   }
 
   /** pin + materialize NOW. A lazily-pinned frame that is a leaf of
@@ -917,9 +928,9 @@ object Dedup {
     * outliers). One cheap eager job up front makes every downstream
     * read a cache hit.
     *
-    * Default storage is `RDD[Row]` pinning ([[pin]]), NOT Tungsten
-    * columnar `df.persist` — this was A/B-measured at sf0.1 on a
-    * quiesced 32-core box (SPARK_GRAFT_ONLY=d_dedup_clusters,
+    * Storage is `RDD[Row]` pinning ([[pin]]), NOT Tungsten columnar
+    * `df.persist` — this was A/B-measured at sf0.1 on a quiesced
+    * 32-core box (SPARK_GRAFT_ONLY=d_dedup_clusters,
     * d_jaccard_pairs,d_minhash_lsh): rows 7.0 s total (clusters 3.2,
     * jaccard 2.5, minhash 1.3) vs columnar 12.1 s (6.5 / 3.8 / 1.8).
     * Columnar loses despite smaller blocks because every downstream
@@ -927,38 +938,12 @@ object Dedup {
     * and the exploded shingle frame is consumed FOUR times per query
     * by row-oriented operators (hash-join build/probe, aggregation) —
     * the repeated decode costs more than the InternalRow↔Row
-    * conversion the RDD path pays once at cache-write time. Columnar
-    * remains available behind GRAFT_PIN_COLUMNAR=1 for re-measurement
-    * on engines where the consumers stay columnar end-to-end. */
-  /** [[pin]] as a handle, WITHOUT eager materialization: for loop
-    * states whose first (and only concurrent) consumer is a
-    * control-plane collect — that job materializes the cache and the
-    * eager count would be a second pass for nothing (the capArrays
-    * fusion discipline). Use [[pinNow]] when several stages of one
-    * query read the pin concurrently. Honors the same
-    * GRAFT_PIN_COLUMNAR re-measurement flag as [[pinNow]]. */
-  private[graft] def pinLazy(df: DataFrame): (DataFrame, PinHandle) =
-    if (columnarPin) {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      (p, new PinHandle(() => { p.unpersist(blocking = false); () }))
-    } else {
-      val (f, rdd) = pin(df)
-      (f, new PinHandle(() => { rdd.unpersist(blocking = false); () }))
-    }
-
-  private[graft] def pinNow(df: DataFrame): (DataFrame, PinHandle) =
-    if (columnarPin) {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      (p, new PinHandle(() => { p.unpersist(blocking = false); () }))
-    } else {
-      val (f, rdd) = pin(df)
-      rdd.count()
-      (f, new PinHandle(() => { rdd.unpersist(blocking = false); () }))
-    }
-
-  private def columnarPin: Boolean =
-    sys.env.get("GRAFT_PIN_COLUMNAR").contains("1")
+    * conversion the RDD path pays once at cache-write time. */
+  private[graft] def pinNow(df: DataFrame): (DataFrame, PinHandle) = {
+    val (f, rdd) = pin(df)
+    rdd.count()
+    (f, new PinHandle(() => { rdd.unpersist(blocking = false); () }))
+  }
 
   /** Connected-component clustering of near-duplicate pairs: every id
     * is labeled with the smallest id reachable through the pair graph
@@ -1049,8 +1034,12 @@ object Dedup {
     * (~1.4 s of small jobs at sf0.1 for 2 rounds + contraction). The
     * edge pin's materialization is FUSED with a bounded
     * `limit(n+1).collect()` probe (the capArrays discipline: the same
-    * job caches the blocks and returns the rows), so the size check
-    * costs zero extra jobs on either path. At or under the bound the
+    * action caches the blocks and returns the rows), so the size check
+    * costs zero extra actions on either path. Counts here are per
+    * action, not per Spark job: `limit(n+1).collect()` goes through
+    * Spark's incremental take, which can launch more than one job (the
+    * Bench ledger at sf0.1 records 2 `dedup:clusters:edges` jobs for
+    * d_dedup_clusters). At or under the bound the
     * labels come from driver union-find (min-id per component —
     * identical labels by construction, spec-pinned equivalent; a
     * membership guard keeps BSP for graphs violating pairs ⊆ ids×ids,
@@ -1244,7 +1233,7 @@ object Dedup {
     * label and doesn't transitively connect its neighbors, while
     * union-find would merge the whole component under it and could
     * elect a non-id as the min. The membership check is FUSED into
-    * the labels pin's forcing job (zero extra jobs): the broadcast
+    * the labels pin's forcing action (zero extra actions): the broadcast
     * map relation carries EVERY endpoint node (self-labels included)
     * so a join hit marks membership, and the one forcing aggregate
     * both materializes the cache and counts distinct hit ids — fewer
@@ -1303,7 +1292,9 @@ object Dedup {
           col("_lbl").isNotNull.as("_hit")))
     // ONE action: materializes the pin AND counts distinct member
     // endpoints (count_distinct skips the null the hit-less `when`
-    // leaves, and collapses duplicate ids rather than overcounting)
+    // leaves, and collapses duplicate ids rather than overcounting).
+    // One action, not one job: the Bench ledger at sf0.1 records 4
+    // `dedup:clusters:local` jobs for d_dedup_clusters
     val hits = pinned
       .agg(count_distinct(when(col("_hit"), col("id"))))
       .collect()(0).getLong(0)

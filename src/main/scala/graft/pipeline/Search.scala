@@ -345,7 +345,7 @@ object Search {
       targetBytesPerFile: Long = 128L << 20): Unit = {
     val verb = "appendToBm25Index"
     val log = manifestLog(newDocs.sparkSession, dir)
-    val prev = committed(log.open(verb), verb, dir)
+    val prev = log.openCommitted(verb)
     val meta = Bm25Meta(prev)
     indexBatch(newDocs, log, verb, Some(prev), meta.nBuckets,
       Some(meta.schema), prev.files, meta.stats, idCol, textCol,
@@ -405,7 +405,7 @@ object Search {
     val (qdf, allTerms) = queryTermsDf(spark, queries)
     // the manifest is fingerprint-cached (ControlCache): a warm serve
     // costs one listing of `_manifest`, no Spark job, no tree walk
-    val m = committed(manifestLog(spark, dir).latest, "bm25Serve", dir)
+    val m = manifestLog(spark, dir).committed("bm25Serve")
     val meta = Bm25Meta(m)
     // the terms' bucket set, derived with the SAME engine function
     // that placed them — XxHash64Function IS what codegen emits for
@@ -463,16 +463,9 @@ object Search {
   private def manifestLog(spark: org.apache.spark.sql.SparkSession,
       dir: String) =
     new ManifestLog(new Path(dir), spark.sparkContext.hadoopConfiguration,
-      Map("postings" -> Seq("bucket")))
+      Map("postings" -> Seq("bucket")), kind = "BM25 index")
 
   private def bucketOf(f: DataFile): Int = f.part("bucket").toInt
-
-  /** The committed manifest, or a loud failure: append, compact and
-    * serve need an index (a typo'd dir must never become a fresh one). */
-  private def committed(m: Option[Manifest], verb: String,
-      dir: String): Manifest =
-    m.getOrElse(throw new IllegalArgumentException(
-      s"$verb: no BM25 manifest under $dir — not a writeBm25Index layout"))
 
   /** Index `docs` into the next version's write directory and commit
     * it alongside the `kept` files and stats partials. The stored
@@ -508,7 +501,7 @@ object Search {
       verb: String, targetBytesPerFile: Long)(
       due: (Seq[DataFile], Bm25Meta) => (Set[Int], Boolean)): Seq[Int] = {
     val log = manifestLog(spark, dir)
-    val prev = committed(log.open(verb), verb, dir)
+    val prev = log.openCommitted(verb)
     val meta = Bm25Meta(prev)
     val (buckets, foldDue) = due(prev.files, meta)
     val (redo, keep) = prev.files.partition(f => buckets(bucketOf(f)))

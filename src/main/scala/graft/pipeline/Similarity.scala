@@ -410,43 +410,22 @@ object Similarity {
 
   private def store(spark: SparkSession, dir: String): ManifestLog =
     new ManifestLog(new Path(dir), spark.sparkContext.hadoopConfiguration,
-      Map(Cells -> Seq("cell")))
+      Map(Cells -> Seq("cell")), kind = "index")
 
-  /** The manifest `m` of the index at `dir`, parsed, for `face`, which
-    * takes `families`. No manifest fails loudly: a dir holding anything
-    * but this layout's trees is an index built before the manifest
-    * layout, anything else is no index. */
-  private def checked(spark: SparkSession, dir: String, face: String,
-      families: Set[String], m: Option[Manifest]): (Manifest, VecIndex) = {
-    val man = m.getOrElse(throw new IllegalArgumentException(
-      if (preManifest(spark, dir)) preManifestMsg(face, dir)
-      else s"$face: no index at $dir"))
-    val idx = VecIndex(man)
+  /** Manifest `m` parsed, for `face`, which takes `families`. */
+  private def checked(face: String, families: Set[String],
+      m: Manifest): (Manifest, VecIndex) = {
+    val idx = VecIndex(m)
     require(families(idx.family),
-      s"$face: $dir holds a ${idx.family} index, not ${families.mkString("/")}")
-    (man, idx)
+      s"$face: a ${idx.family} index, not ${families.mkString("/")}")
+    (m, idx)
   }
 
-  private def preManifest(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { s =>
-      val n = s.getPath.getName
-      !n.startsWith(".") && n != "_manifest" && n != Cells
-    }
-  }
-
-  private def preManifestMsg(face: String, dir: String): String =
-    s"$face: $dir holds a vector index built before the manifest " +
-      "layout — rebuild it with this version"
-
-  /** A maintenance verb's entry: the index `dir` holds, after the
-    * crashed predecessor's leftovers are tidied. */
-  private def opened(spark: SparkSession, log: ManifestLog, dir: String,
-      verb: String, families: Set[String]): (Manifest, VecIndex) = {
-    checked(spark, dir, verb, families, log.latest)
-    checked(spark, dir, verb, families, log.open(verb))
-  }
+  /** The committed index at `dir`, for read face `face`, which takes
+    * `families`; a fresh or pre-manifest dir fails loudly. */
+  private def committed(spark: SparkSession, dir: String, face: String,
+      families: Set[String]): (Manifest, VecIndex) =
+    checked(face, families, store(spark, dir).committed(face))
 
   /** `files` of the index, read with the header's row schema under the
     * cells tree's basePath (`cell` comes from the path): no
@@ -475,12 +454,8 @@ object Similarity {
     val sc = spark.sparkContext
     val log = store(spark, dir)
     val prev =
-      if (families.nonEmpty) Some(opened(spark, log, dir, verb, families)._1)
-      else {
-        require(log.latest.nonEmpty || !preManifest(spark, dir),
-          preManifestMsg(verb, dir))
-        log.open(verb)
-      }
+      if (families.isEmpty) log.open(verb)
+      else Some(checked(verb, families, log.openCommitted(verb))._1)
     JobDesc(sc, s"vec:$verb:train") {
       build(prev, (idx, rows) => {
         val written = JobDesc(sc, s"vec:$verb:rows") {
@@ -506,7 +481,7 @@ object Similarity {
     val spark = batch.sparkSession
     val sc = spark.sparkContext
     val log = store(spark, dir)
-    val (prev, idx) = opened(spark, log, dir, verb, Set(family))
+    val (prev, idx) = checked(verb, Set(family), log.openCommitted(verb))
     val b = batch.persist()
     try {
       val fp = JobDesc(sc, s"vec:$verb:fingerprint") {
@@ -536,7 +511,7 @@ object Similarity {
   private def fold(spark: SparkSession, dir: String, verb: String,
       family: String, key: Seq[String]): Unit = {
     val log = store(spark, dir)
-    val (prev, idx) = opened(spark, log, dir, verb, Set(family))
+    val (prev, idx) = checked(verb, Set(family), log.openCommitted(verb))
     val files = prev.filesOf(Cells)
     val nFiles = Maint.sizedFileCount(files.map(_.bytes).sum, 128L << 20)
     val written = JobDesc(spark.sparkContext, s"vec:$verb:rows") {
@@ -559,8 +534,8 @@ object Similarity {
     * types. */
   private[graft] def indexCodebook(spark: SparkSession,
       dir: String): DataFrame =
-    checked(spark, dir, "indexCodebook", Set("pq", "ivfpq"),
-      store(spark, dir).latest)._2.cb.frame(spark)
+    committed(spark, dir, "indexCodebook", Set("pq", "ivfpq"))
+      ._2.cb.frame(spark)
 
   /** Persist an IVF index: the coarse quantizer in the manifest header
     * and the corpus rows partitioned by cell (the stored-index layout
@@ -597,8 +572,7 @@ object Similarity {
     * no Spark job. */
   def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[Seq[Double]] =
-    checked(spark, dir, "readIvfCentroids", Set("ivf", "ivfpq"),
-      store(spark, dir).latest)._2.cents
+    committed(spark, dir, "readIvfCentroids", Set("ivf", "ivfpq"))._2.cents
 
   /** Incrementally add vectors to a stored IVF index: assign each new
     * vector with the STORED quantizer (deterministic — the same cell a
@@ -662,8 +636,7 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding")
       : DataFrame = {
     require(k >= 1 && nprobe >= 1, s"k >= 1, nprobe >= 1")
-    val (m, idx) = checked(spark, dir, "ivfTopKFromIndex", Set("ivf"),
-      store(spark, dir).latest)
+    val (m, idx) = committed(spark, dir, "ivfTopKFromIndex", Set("ivf"))
     val q = queryVec.map(_.toDouble)
     val probed = probeCellsOf(idx.cents, q, nprobe)
     val qn = math.sqrt(dotL(q, q))
@@ -1065,8 +1038,8 @@ object Similarity {
       : DataFrame = {
     require(queries.nonEmpty, "empty query set")
     require(k >= 1, "k must be >= 1")
-    val (m, idx) = checked(spark, dir, "pqTopKFromIndex",
-      Set("pq", "ivfpq"), store(spark, dir).latest)
+    val (m, idx) =
+      committed(spark, dir, "pqTopKFromIndex", Set("pq", "ivfpq"))
     val lut = spark.createDataFrame(
       java.util.Arrays.asList(pqLutRows(idx.cb.local(spark), queries): _*),
       pqLutSchema)
@@ -1442,8 +1415,8 @@ object Similarity {
       nprobe: Int = 1): DataFrame = {
     require(queries.nonEmpty, "empty query set")
     require(k >= 1 && nprobe >= 1, "k >= 1, nprobe >= 1")
-    val (man, idx) = checked(spark, dir, "ivfPqTopKFromIndex", Set("ivfpq"),
-      store(spark, dir).latest)
+    val (man, idx) =
+      committed(spark, dir, "ivfPqTopKFromIndex", Set("ivfpq"))
     val cents = idx.cents
     val cb = idx.cb.local(spark)
     val dims = idx.cb.dims

@@ -447,15 +447,13 @@ object Planner {
     * planner consults before pruning a scan of `producers` × `topic`
     * — return true only when every unmasked data version of those
     * tables has stat partials in this tier (Dp3Service verifies this
-    * against its control table; see its statSource). The default
-    * asserts coverage, which is correct for tiers derived from the
-    * very frame being scanned, but a PARTIAL tier supplied here with
-    * the default witness corrupts results — callers who cannot prove
-    * coverage must pass `(_, _, _) => false` (pruning off). */
+    * against its control table; see its statSource). The witness has
+    * no default: a PARTIAL tier with an always-true witness corrupts
+    * results, so callers who cannot prove coverage pass
+    * `(_, _, _) => false` (pruning off). */
   final case class StatSource(tier: SparkSession => DataFrame,
       widthNs: Long,
-      coverage: (SparkSession, Seq[String], String) => Boolean =
-        (_, _, _) => true)
+      coverage: (SparkSession, Seq[String], String) => Boolean)
 
   private[plan] def flattenMerge(sel: Select): Seq[Select] = sel match {
     case MergeSel(l, r) => flattenMerge(l) ++ flattenMerge(r)

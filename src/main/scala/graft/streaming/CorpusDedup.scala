@@ -87,7 +87,7 @@ object CorpusDedup {
 
   private def sidecar(spark: SparkSession, dir: String): ManifestLog =
     new ManifestLog(new Path(dir), spark.sparkContext.hadoopConfiguration,
-      Map(Rows -> Seq("version")))
+      Map(Rows -> Seq("version")), kind = "dedup sidecar")
 
   /** `files` of a sidecar, read with the manifest's schema under the
     * tree's basePath (`version` survives as a long): no
@@ -100,24 +100,14 @@ object CorpusDedup {
     * older than `version` from the newest manifest — None when there
     * are none (no corpus yet). A replay never sees its own version's
     * rows, so it re-derives the same survivors. Lists and reads only;
-    * fails loudly on a dir built before the manifest layout. */
-  private def older(spark: SparkSession, dir: String, version: Long,
-      face: String): Option[DataFrame] = {
-    val m = sidecar(spark, dir).latest
-    if (m.isEmpty) {
-      val p = new Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(!fs.exists(p) || !fs.listStatus(p).exists { st =>
-          val n = st.getPath.getName
-          n.startsWith("version=") || n.endsWith(".parquet")
-        }, s"$face: $dir holds a sidecar built before the manifest " +
-          "layout — rebuild it with this version")
-    }
-    m.flatMap { m =>
+    * fails loudly on a dir built before the manifest layout
+    * ([[ManifestLog.latest]]). */
+  private def older(spark: SparkSession, dir: String,
+      version: Long): Option[DataFrame] =
+    sidecar(spark, dir).latest.flatMap { m =>
       val files = m.filesOf(Rows).filter(_.part("version") < version)
       if (files.isEmpty) None else Some(rows(spark, dir, m, files))
     }
-  }
 
   /** The append faces' sidecar write: `df`'s rows become `version`'s
     * files in one commit that drops the files the newest manifest
@@ -182,11 +172,11 @@ object CorpusDedup {
     val batch = graft.pipeline.Dedup.canonicalPerFingerprint(batch0,
       TextOps.fingerprint(col(textCol)), idCol)
     val (survivors, tierPin) =
-      older(spark, tierDir, version, verb) match {
+      older(spark, tierDir, version) match {
         case Some(rows) =>
           // the fingerprints commit before the tier, so older tier rows
           // imply older fingerprints
-          val fps = older(spark, fpDir, version, verb).getOrElse(
+          val fps = older(spark, fpDir, version).getOrElse(
             throw new IllegalStateException(s"$verb: $tierDir has rows " +
               s"older than version $version but $fpDir has none"))
           val (s, p) = JobDesc(sc, s"dedup:$verb:prefilter") {
@@ -308,7 +298,7 @@ object CorpusDedup {
     }
     try {
       val flagged: DataFrame =
-        older(spark, postingsDir, version, verb) match {
+        older(spark, postingsDir, version) match {
           case None =>
             arr.select(col("_id")).limit(0) // typed-empty: no corpus yet
           case Some(rows) =>
@@ -462,7 +452,7 @@ object CorpusDedup {
     }
     try {
       val flagged: DataFrame =
-        older(spark, vecDir, version, verb) match {
+        older(spark, vecDir, version) match {
           case None =>
             arr.select(col("_id")).limit(0) // typed-empty: no corpus yet
           case Some(rows) =>
@@ -536,15 +526,18 @@ object CorpusDedup {
     * still see every older row. Otherwise every listed file is
     * rewritten with its `version`. `shape` re-clusters the rows into
     * `nFiles` output files, sized from the rewritten files' manifest
-    * bytes ([[Maint.sizedFileCount]]). A dir with no manifest (never
-    * written, or built before the manifest layout) is left untouched.
-    * Single-writer with respect to the append faces. */
+    * bytes ([[Maint.sizedFileCount]]). A fresh dir is a no-op; one
+    * built before the manifest layout fails loudly, untouched
+    * ([[ManifestLog.open]]). Single-writer with respect to the append
+    * faces. */
   private def rewrite(spark: SparkSession, dir: String, verb: String,
       targetBytesPerFile: Long, fold: Boolean)(
       shape: (DataFrame, Int) => DataFrame): Unit = {
     val log = sidecar(spark, dir)
-    if (log.latest.isEmpty) return
-    val prev = log.open(verb).get
+    val prev = log.open(verb) match {
+      case Some(m) => m
+      case None => return
+    }
     val files = prev.filesOf(Rows)
     val versions = files.map(_.part("version")).distinct.sorted
     val (redo, version) =

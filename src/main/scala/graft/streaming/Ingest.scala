@@ -138,7 +138,6 @@ object Ingest {
     val spark = batch.sparkSession
     val store = log(spark, Map("data" -> outDir, "stats" -> statsDir) ++
       controlDir.map("control" -> _) ++ fieldStats.map("fstats" -> _._1))
-    newest(spark, outDir, store, verb)
     val prev = store.open(verb)
     val replay = for (id <- batchId; m <- prev; b <- mark(m, "batch"))
       yield b >= id
@@ -227,35 +226,27 @@ object Ingest {
 
   /** The ingest store whose trees live in `dirs` (`data` is the store
     * root, which holds `_manifest`). */
-  private def log(spark: SparkSession, dirs: Map[String, String])
+  private[graft] def log(spark: SparkSession, dirs: Map[String, String])
       : ManifestLog =
     new ManifestLog(new Path(dirs("data")),
       spark.sparkContext.hadoopConfiguration, Trees,
-      dirs.map { case (t, d) => t -> new Path(d) })
+      dirs.map { case (t, d) => t -> new Path(d) }, "ingest store")
 
-  /** The newest manifest of `store` (None: never written); fails loudly
-    * on a data dir that holds parquet but no manifest. */
-  private def newest(spark: SparkSession, dataDir: String,
-      store: ManifestLog, face: String): Option[Manifest] = {
-    val m = store.latest
-    if (m.isEmpty) {
-      val root = new Path(dataDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(!fs.exists(root) || !fs.listStatus(root).exists { st =>
-          val n = st.getPath.getName
-          n.startsWith("topic=") || n.endsWith(".parquet")
-        }, s"ingest $face: $dataDir holds a store built before the " +
-          "manifest layout — rebuild it with this version")
-    }
-    m
-  }
-
-  /** The newest manifest of the store in `dirs`, or a loud failure. */
-  private[graft] def committed(spark: SparkSession,
-      dirs: Map[String, String], face: String): Manifest =
-    newest(spark, dirs("data"), log(spark, dirs), face).getOrElse(
-      throw new IllegalArgumentException(s"ingest $face: no manifest " +
-        s"under ${dirs("data")} — not an ingest store"))
+  /** The `fieldStats` triple the store rooted at `dataDir` keeps, read
+    * back from its newest manifest: the `fstats` tree's directory (its
+    * `dir` line) and the numeric (`<f>__sketch`) and text (`<f>__tmin`)
+    * fields of its schema. None for a fresh store or one kept without
+    * per-field partials. */
+  private[graft] def fieldStatsOf(spark: SparkSession, dataDir: String)
+      : Option[(String, Seq[String], Seq[String])] =
+    log(spark, Map("data" -> dataDir)).latest
+      .filter(_.header.exists(_.head == "fstats")).map { m =>
+        val cols = m.schema("fstats").fieldNames.toSeq
+        def fields(suffix: String) =
+          cols.filter(_.endsWith(suffix)).map(_.stripSuffix(suffix))
+        (new Path(new Path(dataDir), m.dirs("fstats")).toString,
+          fields("__sketch"), fields("__tmin"))
+      }
 
   /** The files of `tree` in `m` that `keep` selects, read with the
     * header's schema. */
@@ -341,9 +332,10 @@ object Ingest {
   def optimize(spark: SparkSession, dir: String,
       maxFilesPerPartition: Int = 4,
       targetBytesPerFile: Long = 128L << 20): Seq[OptimizeReport] = {
-    val store = log(spark, committed(spark, Map("data" -> dir), "optimize")
-      .dirs.map { case (t, d) => t -> new Path(new Path(dir), d).toString })
-    val prev = store.open("optimize").get
+    val store = log(spark, log(spark, Map("data" -> dir))
+      .committed("optimize").dirs
+      .map { case (t, d) => t -> new Path(new Path(dir), d).toString })
+    val prev = store.openCommitted("optimize")
     val parts = prev.filesOf("data")
       .groupBy(f => (f.value("topic"), f.part("day")))
     val targets = parts.collect { case ((t, d), fs)

@@ -92,10 +92,6 @@ object SequenceShards {
     val verb = "sequenceShards"
     val sc = spark.sparkContext
     val log = manifestLog(spark, rootDir)
-    val fs = new Path(rootDir).getFileSystem(sc.hadoopConfiguration)
-    require(log.latest.nonEmpty || !fs.exists(new Path(rootDir, "meta")),
-      s"$verb: $rootDir holds a store built before the manifest layout " +
-        "— rebuild it with this version")
     val prev = log.open(verb)
     val next = prev.fold(0L)(_.version) + 1
     // the packing contract is STORE STATE, not a per-call argument
@@ -268,16 +264,18 @@ object SequenceShards {
     * in its lane). Output files sized ceil(bytes/target) from the
     * manifest's byte counts and range-clustered (lane, pk) so the
     * metadata pass's lane-IN and the suffix read's pk bound keep their
-    * row-group prunes. A dir with no manifest (never written) is a
-    * no-op. Single-writer with respect to appendBatch, like every
-    * compaction here. */
+    * row-group prunes. A fresh dir is a no-op; one built before the
+    * manifest layout fails loudly, untouched ([[ManifestLog.open]]).
+    * Single-writer with respect to appendBatch, like every compaction
+    * here. */
   def compactDocs(spark: SparkSession, rootDir: String,
       targetBytesPerFile: Long = 128L << 20): Unit = {
     val verb = "compactDocs"
     val log = manifestLog(spark, rootDir)
-    // no manifest: never written, or built before the manifest layout
-    if (log.latest.isEmpty) return
-    val prev = log.open(verb).get
+    val prev = log.open(verb) match {
+      case Some(m) => m
+      case None => return
+    }
     val docs = prev.filesOf("docs")
     val versions = docs.map(_.part("version")).distinct.sorted
     if (versions.length <= 2) return // nothing strictly-older to fold
@@ -354,7 +352,7 @@ object SequenceShards {
     * identical schema to [[graft.export.Export.writeSequenceShards]]
     * output (the internal `seq_seg` bucketing column is dropped). */
   def read(spark: SparkSession, rootDir: String): DataFrame = {
-    val m = committed(spark, rootDir, "read")
+    val m = manifestLog(spark, rootDir).committed("read")
     shards(spark, rootDir, m, m.filesOf("shards"))
   }
 
@@ -373,7 +371,7 @@ object SequenceShards {
     * lane domain. */
   def readEpoch(spark: SparkSession, rootDir: String, epoch: Long)
       : DataFrame = {
-    val m = committed(spark, rootDir, "readEpoch")
+    val m = manifestLog(spark, rootDir).committed("readEpoch")
     val (nLanes, salt) = packing(m)
     stampEpoch(shards(spark, rootDir, m, m.filesOf("shards")), nLanes,
       salt, epoch)
@@ -408,7 +406,7 @@ object SequenceShards {
     require(numWorkers >= 1, s"numWorkers must be >= 1: $numWorkers")
     require(worker >= 0 && worker < numWorkers,
       s"worker must be in [0, $numWorkers): $worker")
-    val m = committed(spark, rootDir, "readEpochSlice")
+    val m = manifestLog(spark, rootDir).committed("readEpochSlice")
     val (nLanes, salt) = packing(m)
     val mine = Sampling.epochLaneOrder(nLanes, epoch, salt).zipWithIndex
       .collect { case (l, i) if i % numWorkers == worker => l }
@@ -435,19 +433,11 @@ object SequenceShards {
     (c(1).toInt, c(3))
   }
 
+  /** The store at `rootDir`; its read faces resolve the newest manifest
+    * once each ([[ManifestLog.committed]]). */
   private def manifestLog(spark: SparkSession, rootDir: String) =
     new ManifestLog(new Path(rootDir), spark.sparkContext.hadoopConfiguration,
-      Trees)
-
-  /** The newest manifest, resolved once per read face through
-    * [[graft.util.ControlCache]], or a loud failure: a typo'd dir, or a
-    * store built before the manifest layout. */
-  private def committed(spark: SparkSession, rootDir: String,
-      face: String): Manifest =
-    manifestLog(spark, rootDir).latest.getOrElse(
-      throw new IllegalArgumentException(s"sequenceShards $face: no " +
-        s"manifest under $rootDir — not a SequenceShards store, or one " +
-        "built before the manifest layout"))
+      Trees, kind = "sequence-shard store")
 
   /** `files` of `tree`, read with `schema` under the tree's basePath
     * (its partition columns survive): no schema-inference job, and no
@@ -476,7 +466,7 @@ object SequenceShards {
     * non-null long. Reads one manifest, like [[read]]. */
   def stats(spark: SparkSession, rootDir: String): DataFrame = {
     import spark.implicits._
-    val m = committed(spark, rootDir, "stats")
+    val m = manifestLog(spark, rootDir).committed("stats")
     val files = m.filesOf("shards")
     val layout = files.groupBy(_.part("pack_bucket")).toSeq.map {
         case (lane, fl) => (lane, fl.map(_.part("seq_seg")).distinct.size

@@ -69,11 +69,22 @@ final case class Manifest(version: Long, header: Seq[Seq[String]],
   * files only `v` listed, and manifest `v`, are deleted. Every crash
   * leaves either `v` live (the new files unlisted) or `v+1` live (the
   * clean unfinished); the next [[open]] tidies both. Readers
-  * ([[latest]]) only list and read. Single-writer: a racing writer
-  * fails loudly at the create. The crash points are [[Maint.step]]s, so
-  * MaintProtocolSpec's crash matrix enumerates them. */
+  * ([[latest]], [[committed]]) only list and read. Single-writer: a
+  * racing writer fails loudly at the create. The crash points are
+  * [[Maint.step]]s, so MaintProtocolSpec's crash matrix enumerates them.
+  *
+  * THE no-manifest rule, applied by every face before it returns or
+  * tidies anything: a root with no committed manifest is FRESH when
+  * every data file under it and under its tree directories lies inside
+  * a `v=1` directory — the first version's uncommitted writes, which
+  * [[open]] drops. Any other data file (hidden and `_`-prefixed entries
+  * are not data) means a store built before the manifest layout, and
+  * the face fails loudly, naming the store's `kind`. So a crash inside
+  * a store's first commit heals on the re-run, and a legacy layout is
+  * never read as empty or tidied. */
 final class ManifestLog(root: Path, conf: Configuration,
-    trees: Map[String, Seq[String]], dirs: Map[String, Path] = Map.empty) {
+    trees: Map[String, Seq[String]], dirs: Map[String, Path] = Map.empty,
+    kind: String = "store") {
   private val fs = root.getFileSystem(conf)
   private val dir = new Path(root, "_manifest")
   private def at(v: Long) = new Path(dir, v.toString)
@@ -133,16 +144,52 @@ final class ManifestLog(root: Path, conf: Configuration,
       files.map(l => DataFile(l.last, l(l.length - 2).toLong)))
   }
 
-  /** The newest committed manifest (None: never committed). Cached on
+  /** The newest committed manifest; None for a fresh store, and a loud
+    * failure for a pre-manifest one (the no-manifest rule). Cached on
     * the manifest directory's fingerprint ([[ControlCache]]), so a warm
     * read costs one listing and no file read. */
-  def latest: Option[Manifest] =
-    ControlCache.cached(fs, dir)(versions.lastOption.map(read)).map(checked)
+  def latest: Option[Manifest] = resolve("read")
 
-  /** A verb's entry: the newest manifest, after finishing what a
-    * crashed predecessor left. */
-  def open(verb: String): Option[Manifest] = {
-    val cur = latest
+  /** The newest committed manifest, for a face that needs one: a fresh
+    * or pre-manifest store fails loudly. */
+  def committed(face: String): Manifest =
+    resolve(face).getOrElse(throw new IllegalArgumentException(
+      s"$face: no $kind at $root"))
+
+  /** A verb's entry: the newest manifest (None: a fresh store), after
+    * finishing what a crashed predecessor left. */
+  def open(verb: String): Option[Manifest] = tidy(verb, resolve(verb))
+
+  /** [[open]] for a verb that needs a commit: a fresh or pre-manifest
+    * store fails loudly before anything is tidied. */
+  def openCommitted(verb: String): Manifest =
+    tidy(verb, Some(committed(verb))).get
+
+  private def resolve(face: String): Option[Manifest] = {
+    val m = ControlCache.cached(fs, dir)(versions.lastOption.map(read))
+    if (m.isEmpty) preManifest.foreach { f =>
+      throw new IllegalArgumentException(s"$face: the $kind at $root was " +
+        s"built before the manifest layout ($f lies outside a version " +
+        "directory) — rebuild it with this version")
+    }
+    m.map(checked)
+  }
+
+  /** The first data file under the root or a tree directory that lies
+    * outside every `v=1` directory, if any. */
+  private def preManifest: Option[Path] = {
+    def under(d: Path): Option[Path] = fs.listStatus(d).iterator
+      .filterNot { s =>
+        val n = s.getPath.getName
+        n.startsWith(".") || n.startsWith("_") || s.isDirectory && n == "v=1"
+      }
+      .map(s => if (s.isDirectory) under(s.getPath) else Some(s.getPath))
+      .collectFirst { case Some(p) => p }
+    (root +: trees.keys.toSeq.map(dirOf)).distinct.filter(fs.exists)
+      .iterator.map(under).collectFirst { case Some(p) => p }
+  }
+
+  private def tidy(verb: String, cur: Option[Manifest]): Option[Manifest] = {
     val v = cur.fold(0L)(_.version)
     for (m <- cur; old <- versions if old < v) supersede(verb, read(old), m)
     trees.keys.foreach { t =>

@@ -88,39 +88,15 @@ class Dp3HttpSpec extends AnyFunSuite {
       val ex = post2("/databases/default/query",
         """{"query": "explain from p3 click neighbors error;"}""")
       assert(ex.statusCode() == 200, ex.body())
+      // the deployment-wide ql force-strict property wins over an
+      // opted-in constructor
+      System.setProperty("graft.ql.strictParity", "true")
+      try {
+        val forced = post2("/databases/default/query",
+          """{"query": "from p3 click neighbors error;"}""")
+        assert(forced.statusCode() == 400, forced.body())
+      } finally System.clearProperty("graft.ql.strictParity")
     } finally h2.stop()
-    // the no-redeploy escape hatch: -Dgraft.http.strictParity=false
-    // relaxes the DEFAULT server without code changes (the pre-r19
-    // lenient behavior for deployments that relied on it); the
-    // property is read per-request, so the running server honors it
-    System.setProperty("graft.http.strictParity", "false")
-    try {
-      val relaxed = post("/databases/default/query",
-        """{"query": "from p3 click neighbors error;"}""")
-      assert(relaxed.statusCode() == 200, relaxed.body())
-    } finally System.clearProperty("graft.http.strictParity")
-    // and the deployment-wide ql force-strict property wins over BOTH
-    // the http property and an opted-in constructor
-    System.setProperty("graft.ql.strictParity", "true")
-    System.setProperty("graft.http.strictParity", "false")
-    try {
-      val forced = post("/databases/default/query",
-        """{"query": "from p3 click neighbors error;"}""")
-      assert(forced.statusCode() == 400, forced.body())
-    } finally {
-      System.clearProperty("graft.ql.strictParity")
-      System.clearProperty("graft.http.strictParity")
-    }
-    // a MALFORMED http property ("1", "yes", a typo) falls back to
-    // the constructor default instead of silently flipping the wire
-    // surface lenient — the unsafe direction for a deployment that
-    // meant to force strict
-    System.setProperty("graft.http.strictParity", "1")
-    try {
-      val malformed = post("/databases/default/query",
-        """{"query": "from p3 click neighbors error;"}""")
-      assert(malformed.statusCode() == 400, malformed.body())
-    } finally System.clearProperty("graft.http.strictParity")
     // the dp3-style plan sexp renders the dir like precedes/succeeds
     val q = graft.ql.Parser.parse("from p3 click neighbors error;")
       .asInstanceOf[graft.ql.Query]

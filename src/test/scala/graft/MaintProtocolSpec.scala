@@ -102,8 +102,11 @@ class MaintProtocolSpec extends AnyFunSuite {
 
   // ---- exact-dedup sidecars (appendBatch history) -----------------------
 
-  private def exactSetup(base: String): Unit =
-    (0 until 4).foreach { i =>
+  private def exactSetup(base: String): Unit = exactSetup(base, 4)
+
+  /** The first `n` batches of [[exactSetup]]'s history. */
+  private def exactSetup(base: String, n: Int): Unit =
+    (0 until n).foreach { i =>
       val b = Seq((i * 10L, s"doc number $i alpha beta gamma"),
         (i * 10L + 1, s"doc number $i delta epsilon zeta"))
         .toDF("doc_id", "text")
@@ -128,6 +131,13 @@ class MaintProtocolSpec extends AnyFunSuite {
   test("compactTier: crash at every step heals on re-run") {
     sidecarMatrix("compactTier", exactSetup, "tier",
       b => CorpusDedup.compactTier(spark, s"$b/tier", nWords = 2))
+  }
+
+  test("appendBatch into empty sidecars: a crash at every step of the " +
+      "fp and the tier commit heals on replaying the batch") {
+    for (sidecar <- Seq("fp", "tier"))
+      sidecarMatrix(s"appendBatch:$sidecar", _ => (), sidecar,
+        b => { exactSetup(b, 1); () })
   }
 
   test("compactFp: crash at every step heals on re-run") {
@@ -322,6 +332,11 @@ class MaintProtocolSpec extends AnyFunSuite {
     val fired = crashMatrix(Scenario(verb, setup, run,
       b => indexAnswer(s"$b/$idx")))
     assert(fired.count(_ == "committed") == 1, fired)
+  }
+
+  test("writeIvfIndex into an empty dir: crash at every step heals on " +
+      "re-run") {
+    vecMatrix("writeIvfIndex", _ => (), "ivf", ivfSetup)
   }
 
   test("compactIvfVectors: crash at every step heals on re-run") {
@@ -576,6 +591,13 @@ class MaintProtocolSpec extends AnyFunSuite {
         s"$b/bm25"))
   }
 
+  test("writeBm25Index into an empty dir: crash at every step heals on " +
+      "re-run") {
+    bm25Matrix("writeBm25Index", _ => (),
+      b => graft.pipeline.Search.writeBm25Index(bm25Docs, s"$b/bm25",
+        nBuckets = 4))
+  }
+
   test("writeBm25Index over an index: crash at every step heals on " +
       "re-run") {
     bm25Matrix("writeBm25Index", bm25Setup,
@@ -585,52 +607,53 @@ class MaintProtocolSpec extends AnyFunSuite {
 
   // ---- incremental sequence shards (one manifest per verb) --------------
 
+  private def shardDocs(ids: Seq[Long]) = ids.map(i => (i,
+    Array.tabulate((i % 5).toInt + 1)(j => (i + j).toInt)))
+    .toDF("doc_id", "bpe_ids")
+
+  /** Append `ids` as batch `v` of the shard store under `base`. */
+  private def shardAppend(base: String, ids: Seq[Long], v: Long): Unit = {
+    graft.streaming.SequenceShards.appendBatch(spark, shardDocs(ids), v,
+      s"$base/sq", seqLen = 6, nBuckets = 3, eosId = 0L)
+    ()
+  }
+
+  private def shardAnswer(base: String): Seq[String] =
+    sortedRows(graft.streaming.SequenceShards.read(spark, s"$base/sq")
+      .select(col("pack_bucket").cast("long"), col("seq_idx"),
+        col("n_docs"), col("starts").cast("array<int>"),
+        col("ids").cast("array<int>")))
+
   test("sequenceShards appendBatch: crash at every step heals on " +
       "replaying the batch (the stream's own recovery path)") {
-    def mk(ids: Seq[Long]) = ids.map(i => (i,
-      Array.tabulate((i % 5).toInt + 1)(j => (i + j).toInt)))
-      .toDF("doc_id", "bpe_ids")
-    def setup(base: String): Unit =
-      Seq(0L until 12L, 12L until 24L).zipWithIndex.foreach {
-        case (ids, i) =>
-          graft.streaming.SequenceShards.appendBatch(spark, mk(ids),
-            i + 1L, s"$base/sq", seqLen = 6, nBuckets = 3, eosId = 0L)
-      }
-    def answer(base: String): Seq[String] =
-      sortedRows(graft.streaming.SequenceShards.read(spark, s"$base/sq")
-        .select(col("pack_bucket").cast("long"), col("seq_idx"),
-          col("n_docs"), col("starts").cast("array<int>"),
-          col("ids").cast("array<int>")))
+    def setup(base: String): Unit = {
+      shardAppend(base, 0L until 12L, 1L)
+      shardAppend(base, 12L until 24L, 2L)
+    }
     val fired = crashMatrix(Scenario("sequenceShards", setup,
-      b => { graft.streaming.SequenceShards.appendBatch(spark,
-        mk(24L until 36L), 3L, s"$b/sq", seqLen = 6, nBuckets = 3,
-        eosId = 0L); () },
-      answer))
+      shardAppend(_, 24L until 36L, 3L), shardAnswer))
+    assert(fired.count(_ == "committed") == 1, fired)
+  }
+
+  test("sequenceShards appendBatch into an empty dir: crash at every " +
+      "step heals on replaying the batch") {
+    val fired = crashMatrix(Scenario("sequenceShards", _ => (),
+      shardAppend(_, 0L until 12L, 1L), shardAnswer))
     assert(fired.count(_ == "committed") == 1, fired)
   }
 
   test("sequenceShards compactDocs (docs sidecar flip): crash at " +
       "every step heals on re-run") {
-    def mk(ids: Seq[Long]) = ids.map(i => (i,
-      Array.tabulate((i % 5).toInt + 1)(j => (i + j).toInt)))
-      .toDF("doc_id", "bpe_ids")
     def setup(base: String): Unit =
       Seq(0L until 12L, 12L until 24L, 24L until 36L).zipWithIndex
-        .foreach { case (ids, i) =>
-          graft.streaming.SequenceShards.appendBatch(spark, mk(ids),
-            i + 1L, s"$base/sq", seqLen = 6, nBuckets = 3, eosId = 0L)
-        }
+        .foreach { case (ids, i) => shardAppend(base, ids, i + 1L) }
     // the answer carries BOTH faces a duplicate/lost doc row would
     // corrupt: the docs sidecar's content (offset inputs) and the
     // derived shard rows
     def answer(base: String): Seq[String] =
       sortedRows(spark.read.parquet(s"$base/sq/docs")
         .select(col("doc_id"), col("lane").cast("long"),
-          col("pk"), col("n"))) ++
-      sortedRows(graft.streaming.SequenceShards.read(spark, s"$base/sq")
-        .select(col("pack_bucket").cast("long"), col("seq_idx"),
-          col("n_docs"), col("starts").cast("array<int>"),
-          col("ids").cast("array<int>")))
+          col("pk"), col("n"))) ++ shardAnswer(base)
     val fired = crashMatrix(Scenario("compactDocs", setup,
       b => graft.streaming.SequenceShards.compactDocs(spark,
         s"$b/sq"),
@@ -694,9 +717,13 @@ class MaintProtocolSpec extends AnyFunSuite {
       b => { Ingest.optimize(spark, s"$b/data", maxFilesPerPartition = 1); () })
   }
 
-  test("importMcap: a crash at every step leaves the pre- or the " +
-      "post-import store, as the commit point decides, and the retry or " +
-      "the next verb leaves the post-import store tidy") {
+  /** importMcap's crash matrix over the store `setup` builds: a crash
+    * at every point leaves the pre- or the post-import store, as the
+    * commit point decides, and the retry (before the commit) or the next
+    * verb (after it) leaves the post-import store, tidy. `answer` reads a
+    * store, `tidy` checks one. */
+  private def importMatrix(setup: String => Unit, answer: String => Seq[String],
+      tidy: String => Unit): Unit = {
     val mcap = Files.createTempFile("maintimport", ".mcap")
     val w = new graft.mcap.Mcap.Writer()
     w.writeSchema(graft.mcap.Mcap.SchemaRec(1, "pkg/t", "ros1msg",
@@ -710,9 +737,9 @@ class MaintProtocolSpec extends AnyFunSuite {
       mcap.toString, s"$b/data", s"$b/stats", s"$b/control",
       Some((s"$b/fstats", Seq("value"), Nil))); () }
     val pristine = Files.createTempDirectory("maintpristine-import")
-    storeSetup(pristine.toString)
-    val pre = storeAnswer(freshCopy(pristine))
-    val post = { val d = freshCopy(pristine); run(d); storeAnswer(d) }
+    setup(pristine.toString)
+    val pre = answer(freshCopy(pristine))
+    val post = { val d = freshCopy(pristine); run(d); answer(d) }
     assert(pre != post)
     val fired = scala.collection.mutable.ArrayBuffer[String]()
     Maint.crashHook = (v, p) => if (v == "importMcap") { fired += p; () }
@@ -725,12 +752,44 @@ class MaintProtocolSpec extends AnyFunSuite {
       try intercept[CrashInjected](run(dir))
       finally Maint.crashHook = (_, _) => ()
       val landed = fired.indexOf(point) >= fired.indexOf("committed")
-      assert(storeAnswer(dir) == (if (landed) post else pre), point)
+      assert(answer(dir) == (if (landed) post else pre), point)
       if (landed) Ingest.optimize(spark, s"$dir/data",
         maxFilesPerPartition = Int.MaxValue)
       else run(dir)
-      assert(storeAnswer(dir) == post, point)
-      assertIngestTidy(dir)
+      assert(answer(dir) == post, point)
+      tidy(dir)
     }
+  }
+
+  test("importMcap: a crash at every step leaves the pre- or the " +
+      "post-import store, as the commit point decides, and the retry or " +
+      "the next verb leaves the post-import store tidy") {
+    importMatrix(storeSetup, storeAnswer, assertIngestTidy)
+  }
+
+  /** A store's answer, empty while nothing is committed. */
+  private def committedAnswer(base: String): Seq[String] =
+    Ingest.log(spark, Map("data" -> s"$base/data")).latest
+      .fold(Seq.empty[String])(_ => storeAnswer(base))
+
+  /** A tidy store holding exactly one ingest version. */
+  private def assertOneVersion(base: String): Unit = {
+    assertIngestTidy(base)
+    val m = TestSpark.ingestedCatalog(base, fieldStats = true)
+      .manifest(spark)
+    assert(m.header.collect { case "version" +: v +: _ => v } == Seq("1"),
+      m.header)
+  }
+
+  // a crash inside a fresh store's first commit leaves only `v=1`
+  // directories, which the replay's open drops
+  test("the first appendVersion and the first importMcap into an empty " +
+      "store: a crash at every step heals on replay, to a tidy store " +
+      "holding that one version") {
+    val fired = crashMatrix(Scenario("appendVersion", _ => (),
+      TestSpark.ingest(_, 1L, ingestBatch(1), fieldStats = true),
+      storeAnswer, assertOneVersion))
+    assert(fired.count(_ == "committed") == 1, fired)
+    importMatrix(_ => (), committedAnswer, assertOneVersion)
   }
 }

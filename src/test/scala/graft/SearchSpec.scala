@@ -244,7 +244,7 @@ class SearchSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException] {
       Search.compactBm25Index(spark, s"$dir/definitely-missing")
     }
-    assert(e.getMessage.contains("not a writeBm25Index layout"))
+    assert(e.getMessage.contains("no BM25 index at"))
     // an append to a typo'd dir fails the same way and creates nothing
     intercept[IllegalArgumentException] {
       Search.appendToBm25Index(odds, s"$dir-definitely-missing")

@@ -577,7 +577,10 @@ class StreamingCorpusDedupSpec extends AnyFunSuite {
         .toSeq.sorted
     }
     val before = tree()
-    CorpusDedup.compactPostings(spark, legacy)
+    val exCompact = intercept[IllegalArgumentException] {
+      CorpusDedup.compactPostings(spark, legacy)
+    }
+    assert(exCompact.getMessage.contains("built before the manifest layout"))
     assert(tree() == before, "the compaction touched a pre-manifest dir")
     val ex = intercept[IllegalArgumentException] {
       CorpusDedup.appendBatchNearDup(spark,

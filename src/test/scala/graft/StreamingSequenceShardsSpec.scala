@@ -374,8 +374,8 @@ class StreamingSequenceShardsSpec extends AnyFunSuite {
   test("start() drives a non-default segSize store (the streaming " +
       "face forwards the full packing contract) and the streamed " +
       "state equals the batch pack; a pre-manifest store fails " +
-      "loudly at every face but compactDocs, which leaves it " +
-      "untouched; hashBucketLocal is the byte-identical driver twin " +
+      "loudly at every face, compactDocs included, and none of them " +
+      "touches it; hashBucketLocal is the byte-identical driver twin " +
       "of hashBucket") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val dir = root()
@@ -394,7 +394,7 @@ class StreamingSequenceShardsSpec extends AnyFunSuite {
       "streamed (segSize=4) ≠ batch pack")
     // a store built before the manifest layout (meta table, shard
     // and docs trees, no manifest): every face fails with the designed
-    // message, and none of them — compactDocs included — touches it
+    // message, and none of them touches it
     val legacy = root()
     Seq((SeqLen, Lanes, 0L, "graft", 8192))
       .toDF("seq_len", "n_buckets", "eos_id", "salt", "seg_size")
@@ -411,13 +411,13 @@ class StreamingSequenceShardsSpec extends AnyFunSuite {
       () => SequenceShards.read(spark, legacy),
       () => SequenceShards.readEpoch(spark, legacy, 1L),
       () => SequenceShards.readEpochSlice(spark, legacy, 1L, 0, 2),
-      () => SequenceShards.stats(spark, legacy))
+      () => SequenceShards.stats(spark, legacy),
+      () => SequenceShards.compactDocs(spark, legacy))
     faces.foreach { face =>
       val e = intercept[IllegalArgumentException](face())
       assert(e.getMessage.contains("before the manifest layout"),
         e.getMessage)
     }
-    SequenceShards.compactDocs(spark, legacy)
     assert(files(legacy) == before, "a face changed a pre-manifest store")
     // the probe's driver-side pk derivation must agree with the
     // engine's lane/pk column bit-for-bit
